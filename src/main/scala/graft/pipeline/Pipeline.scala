@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.core._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -40,9 +41,14 @@ object Pipeline {
                           checkpointed: Seq[Dataset[DocResult]]) {
     /** Release the per-depth checkpoint blocks once the outputs have been
       * consumed (written/aggregated). Long-lived sessions that run many
-      * pipelines must call this or the block manager fills up. */
+      * pipelines must call this or the block manager fills up. A
+      * `localCheckpoint`ed Dataset is not in the cache manager, so
+      * `Dataset.unpersist` would not free it: the pinned blocks belong to
+      * the RDD its plan scans. */
     def cleanup(): Unit =
-      checkpointed.foreach(ds => try ds.unpersist(false) catch { case _: Exception => () })
+      checkpointed.foreach(_.queryExecution.logical.collect {
+        case r: LogicalRDD => r.rdd
+      }.foreach(_.unpersist(false)))
   }
 
   /** Join the raw-span table with the blob store to form the initial work
@@ -91,6 +97,9 @@ object Pipeline {
       duration_ms = (System.nanoTime() - t0) / 1000000L)
     DocResult(meta, spans, children)
   }
+
+  private def payloadBytes(b: Array[Byte]): Long =
+    if (b == null) 0L else b.length.toLong
 
   /** Size-aware rebalance: partition count from total payload bytes
     * (capped), rows spread by doc_id hash; keeps every task under
@@ -166,8 +175,7 @@ object Pipeline {
         val extracted = balanced.mapPartitions(_.map { p =>
           val r = processOne(p)
           childCount.add(r.children.size)
-          r.children.foreach(c => childBytes.add(
-            if (c.bytes == null) 0L else c.bytes.length.toLong))
+          r.children.foreach(c => childBytes.add(payloadBytes(c.bytes)))
           r
         })
         // Materialize AND truncate the logical plan — the local-mode
@@ -220,14 +228,31 @@ object Pipeline {
     * a kill between the four writes and the marker left half a level on
     * disk. Unlike localCheckpoint this survives executor AND driver loss.
     *
+    * Each level is extracted exactly once: the extraction is persisted
+    * and materialized by its one `count()` (the summary's `level-docs`),
+    * while accumulators on that pass measure the level's input bytes and
+    * its children's count and bytes. The four component writes then read
+    * the cache. Files are sized by bytes, not inherited from the input's
+    * partitioning — every write task pays a fixed cost (Hadoop conf
+    * deserialization, a parquet compressor buffer, permission calls), so
+    * a file per source partition made the commit, not extraction, the
+    * level's cost:
+    *   - spans, meta and lineage get `inputBytes / targetPartitionBytes + 1`
+    *     files;
+    *   - children get [[partitionCountFor]] files for their count and
+    *     bytes: the next level's extraction scans those files, one task
+    *     per file below the scan's split size, so sizing them for that
+    *     level keeps its parallelism (and its per-task payload bound)
+    *     without a shuffle.
+    * Lineage `partition_id` is the extraction task's partition.
+    *
     * All bookkeeping goes through `org.apache.hadoop.fs.FileSystem` — the
     * same layer the parquet data rides — so the snapshotDir may be local,
     * HDFS, or S3A.
     *
     * The terminal condition is data, not a sentinel: a committed level
-    * whose manifest shows zero children rows (read from parquet footers
-    * at commit time, no extra job) ends both the first run and any
-    * resume.
+    * whose snapshot summary records zero children rows (footer stats at
+    * commit time, no extra job) ends both the first run and any resume.
     *
     * @param maxDepthOverride stop early (used by tests to simulate a kill
     *   between levels). */
@@ -244,45 +269,44 @@ object Pipeline {
     var snaps = SnapshotTable.snapshots(spark, snapshotDir)
     def levelSnap(d: Int): Option[SnapshotTable.Snapshot] =
       snaps.find(_.summary.get("depth").contains(d.toString))
-    def childrenRows(s: SnapshotTable.Snapshot): Long =
-      s.summary.get("children-rows").map(_.toLong).getOrElse(
-        SnapshotTable.addedFiles(spark, snapshotDir, s.id, "children")
-          .map(_.rows).sum)
     while (!done && depth <= maxDepth) {
-      levelSnap(depth) match {
-        case Some(s) =>
-          // committed by a previous (possibly killed) run: resume from it
-          if (childrenRows(s) == 0L) done = true
-          else pending = SnapshotTable
-            .readAdded(spark, snapshotDir, s.id, "children").as[PendingDoc]
-        case None =>
-          val cur = pending.persist(StorageLevel.MEMORY_AND_DISK_SER)
-          val n = cur.count()
-          val results = cur.mapPartitions(_.map(processOne))
-            .persist(StorageLevel.MEMORY_AND_DISK_SER)
-          val lineage = results.mapPartitions { it =>
-            val pid = TaskContext.getPartitionId()
-            it.map(r => LineageRow(pid, r.meta.doc_id, r.meta.ingestor,
-              r.meta.processing_status, r.meta.depth))
+      // a level a previous (possibly killed) run committed is not redone
+      if (levelSnap(depth).isEmpty) {
+        val sc = spark.sparkContext
+        val inBytes = sc.longAccumulator(s"durableInBytes_$depth")
+        val childCount = sc.longAccumulator(s"durableChildren_$depth")
+        val childBytes = sc.longAccumulator(s"durableChildBytes_$depth")
+        val results = pending.mapPartitions { it =>
+          val pid = TaskContext.getPartitionId()
+          it.map { p =>
+            inBytes.add(payloadBytes(p.bytes))
+            val r = processOne(p)
+            childCount.add(r.children.size)
+            r.children.foreach(c => childBytes.add(payloadBytes(c.bytes)))
+            (pid, r)
           }
-          val children = results.flatMap(_.children)
-            .persist(StorageLevel.MEMORY_AND_DISK_SER)
-          val meta = SnapshotTable.append(spark, snapshotDir, Map(
-            "spans" -> results.flatMap(_.spans).toDF(),
-            "meta" -> results.map(_.meta).toDF(),
-            "lineage" -> lineage.toDF(),
-            "children" -> children.toDF()),
+        }.persist(StorageLevel.MEMORY_AND_DISK_SER)
+        try {
+          val n = results.count()
+          val files = (inBytes.value / cfg.targetPartitionBytes + 1).toInt
+          val childFiles =
+            partitionCountFor(spark, childCount.value, childBytes.value, cfg)
+          snaps = SnapshotTable.append(spark, snapshotDir, Map(
+            "spans" -> results.flatMap(_._2.spans).toDF().coalesce(files),
+            "meta" -> results.map(_._2.meta).toDF().coalesce(files),
+            "lineage" -> results.map { case (pid, r) =>
+              LineageRow(pid, r.meta.doc_id, r.meta.ingestor,
+                r.meta.processing_status, r.meta.depth)
+            }.toDF().coalesce(files),
+            "children" -> results.flatMap(_._2.children).toDF().coalesce(childFiles)),
             summary = Map("depth" -> depth.toString, "level-docs" -> n.toString))
-          snaps = meta.snapshots
-          val committed = levelSnap(depth).get
-          if (childrenRows(committed) == 0L) done = true
-          else pending = SnapshotTable
-            .readAdded(spark, snapshotDir, committed.id, "children")
-            .as[PendingDoc]
-          children.unpersist(false)
-          results.unpersist(false)
-          cur.unpersist(false)
+            .snapshots
+        } finally results.unpersist(false)
       }
+      val s = levelSnap(depth).get
+      if (SnapshotTable.addedRows(spark, snapshotDir, s, "children") == 0L) done = true
+      else pending = SnapshotTable
+        .readAdded(spark, snapshotDir, s.id, "children").as[PendingDoc]
       depth += 1
     }
     // outputs = snapshot-scoped reads over every committed level's files

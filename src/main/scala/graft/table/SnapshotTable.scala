@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** From-scratch snapshot-log table format, shaped after the public Apache
   * Iceberg table spec (v1/v2, iceberg.apache.org/spec) and its
@@ -70,11 +71,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - DIVERGES in serialization, deliberately: manifests are JSON, not
   *    Avro `manifest-file`/`manifest-list` entries; the snapshot's
   *    manifest list is inlined into the metadata JSON instead of a
-  *    separate manifest-list file; table metadata carries no
-  *    `format-version`/`schemas`/`partition-specs` fields (components
-  *    stand in for partition identity; schema rides in the parquet
-  *    footers). An Iceberg reader would open `v<N>.metadata.json` but
-  *    reject it at field validation.
+  *    separate manifest-list file. Schemas ride in the (immutable)
+  *    manifests as Spark schema JSON, one per component, instead of the
+  *    metadata file's `schemas` list with schema ids — so the metadata
+  *    JSON does not grow with every snapshot; record counts ride in the
+  *    snapshot summaries, still JSON. Table metadata carries no
+  *    `schemas`/`partition-specs` fields (components stand in for
+  *    partition identity). An Iceberg reader would open
+  *    `v<N>.metadata.json` but reject it at field validation. Manifests
+  *    written before schemas were recorded carry none; reads of those
+  *    fall back to inferring the schema from the parquet footers.
   *  - DIVERGES in stats: per-file row/byte counts only (from parquet
   *    footers at commit time); no per-column bounds/null counts, so a
   *    scan here prunes by component + snapshot, not by column range.
@@ -93,6 +99,12 @@ object SnapshotTable {
   final case class Snapshot(id: Long, parentId: Long, seq: Long,
                             operation: String, manifests: Vector[String],
                             summary: Map[String, String])
+
+  /** One immutable manifest: the files a snapshot added and each added
+    * component's Spark schema JSON (empty for manifests written before
+    * schemas were recorded). */
+  private final case class Manifest(entries: Vector[DataFileEntry],
+                                    schemas: Map[String, String])
 
   final case class Meta(tableUuid: String, lastSeq: Long,
                         currentSnapshotId: Long, snapshots: Vector[Snapshot]) {
@@ -135,11 +147,14 @@ object SnapshotTable {
       s""""current-snapshot-id":${m.currentSnapshotId},"snapshots":$snaps}"""
   }
 
-  private def manifestJson(entries: Seq[DataFileEntry]): String =
-    entries.map { e =>
+  private def manifestJson(m: Manifest): String =
+    m.entries.map { e =>
       s"""{"path":${jStr(e.path)},"component":${jStr(e.component)},""" +
         s""""rows":${e.rows},"bytes":${e.bytes}}"""
-    }.mkString("""{"entries":[""", ",", "]}")
+    }.mkString("""{"entries":[""", ",", "],") +
+      m.schemas.toVector.sortBy(_._1)
+        .map { case (c, j) => s"${jStr(c)}:${jStr(j)}" }
+        .mkString(""""schemas":{""", ",", "}}")
 
   import graft.extract.JsonMini
   private def fld(o: Any, k: String): Any = o match {
@@ -169,11 +184,17 @@ object SnapshotTable {
       asLong(fld(root, "current-snapshot-id")), snaps)
   }
 
-  private def parseManifest(s: String): Vector[DataFileEntry] =
-    fld(JsonMini.parse(s), "entries").asInstanceOf[Vector[Any]].map { e =>
+  private def parseManifest(s: String): Manifest = {
+    val root = JsonMini.parse(s)
+    val entries = fld(root, "entries").asInstanceOf[Vector[Any]].map { e =>
       DataFileEntry(asStr(fld(e, "path")), asStr(fld(e, "component")),
         asLong(fld(e, "rows")), asLong(fld(e, "bytes")))
     }
+    val schemas = root.asInstanceOf[JsonMini.JObj].fields.collectFirst {
+      case ("schemas", o: JsonMini.JObj) => o.fields.map { case (c, j) => c -> asStr(j) }.toMap
+    }.getOrElse(Map.empty[String, String])
+    Manifest(entries, schemas)
+  }
 
   private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -226,9 +247,23 @@ object SnapshotTable {
     try r.getRecordCount finally r.close()
   }
 
+  /** Summary key of a snapshot's exact row total for `component`, recorded
+    * at commit from the footer stats (Iceberg's `added-records`). */
+  def rowsKey(component: String): String = s"$component-rows"
+
+  /** Rows `snap` added to `component`: its summary total, or — for
+    * snapshots committed before totals were recorded — the sum of its
+    * manifest's footer stats. */
+  def addedRows(spark: SparkSession, location: String, snap: Snapshot,
+                component: String): Long =
+    snap.summary.get(rowsKey(component)).map(_.toLong).getOrElse(
+      addedFiles(spark, location, snap.id, component).map(_.rows).sum)
+
   /** Append `parts` (component name → DataFrame) as ONE atomic snapshot.
-    * Returns the committed metadata. Retries `maxAttempts` times on
-    * version conflicts, rebasing onto the winner's snapshot chain. */
+    * Each component's schema goes into the manifest and its row total into
+    * the summary under [[rowsKey]]. Returns the committed metadata.
+    * Retries `maxAttempts` times on version conflicts, rebasing onto the
+    * winner's snapshot chain. */
   def append(spark: SparkSession, location: String,
              parts: Map[String, DataFrame],
              summary: Map[String, String] = Map.empty,
@@ -243,7 +278,8 @@ object SnapshotTable {
 
     // 1. write data files under fresh UUID dirs (invisible until commit)
     val uuid = java.util.UUID.randomUUID().toString
-    val entries = parts.toVector.sortBy(_._1).flatMap { case (component, df) =>
+    val components = parts.toVector.sortBy(_._1)
+    val entries = components.flatMap { case (component, df) =>
       val rel = s"data/$uuid-$component"
       df.write.mode("errorifexists").parquet(s"$location/$rel")
       val files = fs.listStatus(new Path(root, rel))
@@ -256,8 +292,12 @@ object SnapshotTable {
 
     // 2. immutable manifest for this snapshot's added files
     val manifestRel = s"metadata/manifest-$uuid.json"
-    writeText(fs, new Path(root, manifestRel), manifestJson(entries),
-      overwrite = false)
+    val schemas = components.map { case (c, df) => c -> df.schema.json }.toMap
+    writeText(fs, new Path(root, manifestRel),
+      manifestJson(Manifest(entries, schemas)), overwrite = false)
+    val fullSummary = summary ++ components.map { case (c, _) =>
+      rowsKey(c) -> entries.filter(_.component == c).map(_.rows).sum.toString
+    }
 
     // 3. optimistic metadata swap
     var attempt = 0
@@ -271,7 +311,7 @@ object SnapshotTable {
       val seq = base.map(_.lastSeq + 1).getOrElse(1L)
       val snap = Snapshot(snapId, parent.map(_.id).getOrElse(-1L), seq,
         "append", parent.map(_.manifests).getOrElse(Vector.empty) :+ manifestRel,
-        summary)
+        fullSummary)
       val next = Meta(
         base.map(_.tableUuid).getOrElse(java.util.UUID.randomUUID().toString),
         seq, snapId, base.map(_.snapshots).getOrElse(Vector.empty) :+ snap)
@@ -304,61 +344,73 @@ object SnapshotTable {
     sys.error("unreachable")
   }
 
-  /** All data files of `component` live at the given (default: current)
-    * snapshot. */
-  def dataFiles(spark: SparkSession, location: String, component: String,
-                asOf: Option[Long] = None): Vector[DataFileEntry] = {
-    val (fs, root) = fsFor(spark, location)
+  private def snapshotOf(spark: SparkSession, location: String,
+                         asOf: Option[Long]): Snapshot = {
     val meta = load(spark, location)
       .getOrElse(throw new java.io.FileNotFoundException(
         s"no committed snapshot table at $location"))
-    val snap = asOf match {
+    asOf match {
       case Some(id) => meta.snapshot(id).getOrElse(
         throw new NoSuchElementException(s"snapshot $id not in $location"))
       case None => meta.current.getOrElse(
         throw new NoSuchElementException(s"table $location has no snapshot"))
     }
-    snap.manifests
-      .flatMap(m => parseManifest(readText(fs, new Path(root, m))))
-      .filter(_.component == component)
   }
+
+  /** The files of `component` the given manifests list, with the schema
+    * the newest of them recorded for it (None: infer from the footers). */
+  private def plan(spark: SparkSession, location: String,
+                   manifests: Vector[String], component: String)
+      : (Vector[DataFileEntry], Option[StructType]) = {
+    val (fs, root) = fsFor(spark, location)
+    val ms = manifests.map(m => parseManifest(readText(fs, new Path(root, m))))
+    (ms.flatMap(_.entries).filter(_.component == component),
+     ms.reverseIterator.flatMap(_.schemas.get(component)).nextOption()
+       .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
+  }
+
+  private def scan(spark: SparkSession, location: String,
+                   planned: (Vector[DataFileEntry], Option[StructType]),
+                   missing: => String): DataFrame = {
+    val (entries, schema) = planned
+    require(entries.nonEmpty, missing)
+    schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(entries.map(e => s"$location/${e.path}"): _*)
+  }
+
+  /** All data files of `component` live at the given (default: current)
+    * snapshot. */
+  def dataFiles(spark: SparkSession, location: String, component: String,
+                asOf: Option[Long] = None): Vector[DataFileEntry] =
+    plan(spark, location, snapshotOf(spark, location, asOf).manifests, component)._1
 
   /** Snapshot-scoped read: plans exactly the files the snapshot's
     * manifests list — file-level pruning from one metadata read, the
-    * Iceberg planning path. Empty component → empty DataFrame (schema
-    * from any schema-bearing file of the component, else error). */
+    * Iceberg planning path — under the schema they recorded, so no
+    * Spark job runs until the caller's action. */
   def read(spark: SparkSession, location: String, component: String,
-           asOf: Option[Long] = None): DataFrame = {
-    val files = dataFiles(spark, location, component, asOf)
-      .map(e => s"$location/${e.path}")
-    require(files.nonEmpty,
+           asOf: Option[Long] = None): DataFrame =
+    scan(spark, location,
+      plan(spark, location, snapshotOf(spark, location, asOf).manifests, component),
       s"component '$component' has no data files at $location" +
         asOf.map(id => s" snapshot $id").getOrElse(""))
-    spark.read.parquet(files: _*)
-  }
 
   /** Data files ADDED by exactly one snapshot (its own manifest, not its
     * ancestors') — the incremental-scan planning path. */
   def addedFiles(spark: SparkSession, location: String, snapshotId: Long,
-                 component: String): Vector[DataFileEntry] = {
-    val (fs, root) = fsFor(spark, location)
-    val meta = load(spark, location).getOrElse(
-      throw new java.io.FileNotFoundException(s"no table at $location"))
-    val snap = meta.snapshot(snapshotId).getOrElse(
-      throw new NoSuchElementException(s"snapshot $snapshotId not in $location"))
-    parseManifest(readText(fs, new Path(root, snap.manifests.last)))
-      .filter(_.component == component)
-  }
+                 component: String): Vector[DataFileEntry] =
+    plan(spark, location, addedManifest(spark, location, snapshotId), component)._1
+
+  private def addedManifest(spark: SparkSession, location: String,
+                            snapshotId: Long): Vector[String] =
+    Vector(snapshotOf(spark, location, Some(snapshotId)).manifests.last)
 
   /** Incremental read: only the rows one snapshot appended. */
   def readAdded(spark: SparkSession, location: String, snapshotId: Long,
-                component: String): DataFrame = {
-    val files = addedFiles(spark, location, snapshotId, component)
-      .map(e => s"$location/${e.path}")
-    require(files.nonEmpty,
+                component: String): DataFrame =
+    scan(spark, location,
+      plan(spark, location, addedManifest(spark, location, snapshotId), component),
       s"snapshot $snapshotId added no '$component' files at $location")
-    spark.read.parquet(files: _*)
-  }
 
   /** Summary of the current snapshot (resume bookkeeping reads this). */
   def currentSummary(spark: SparkSession, location: String): Map[String, String] =
@@ -376,7 +428,7 @@ object SnapshotTable {
       case None => Set.empty
       case Some(m) =>
         m.snapshots.flatMap(_.manifests).distinct
-          .flatMap(mp => parseManifest(readText(fs, new Path(root, mp))))
+          .flatMap(mp => parseManifest(readText(fs, new Path(root, mp))).entries)
           .map(e => e.path.split('/')(1)).toSet // data/<dir>/<file>
     }
     var removed = 0

@@ -228,6 +228,58 @@ class PipelineSpec extends AnyFunSuite {
       .count() == 1)
   }
 
+  test("durable layout: one spans/meta/lineage file per level, children sized for the next level") {
+    import spark.implicits._
+    import graft.table.SnapshotTable
+    import org.apache.spark.sql.functions.{coalesce, count, length, lit, sum}
+    val inner = CorpusGen.renderZip(Seq(("deep.txt", "deepest body".getBytes)))
+    val zip = CorpusGen.renderZip(Seq(("in.txt", "zipped body".getBytes),
+      ("nested.zip", inner)))
+    val p = pending(("d1", "a.html", "<html><body><p>web</p></body></html>".getBytes),
+      ("d2", "b.zip", zip)).repartition(4)
+    val loc = "file:" + java.nio.file.Files.createTempDirectory("graft-layout")
+    Pipeline.runDurable(spark, p, loc)
+    val snaps = SnapshotTable.snapshots(spark, loc)
+    assert(snaps.map(_.summary("depth")) == Vector("0", "1", "2"))
+    assert(snaps.map(_.summary("level-docs")) == Vector("2", "2", "1"))
+    snaps.foreach { s =>
+      Seq("spans", "meta", "lineage").foreach { c =>
+        assert(SnapshotTable.addedFiles(spark, loc, s.id, c).size == 1,
+          s"depth ${s.summary("depth")} $c")
+      }
+      val children = SnapshotTable.readAdded(spark, loc, s.id, "children").as[PendingDoc]
+      val (childRows, childBytes) = children
+        .select(count(lit(1)), coalesce(sum(length($"bytes")), lit(0L)))
+        .as[(Long, Long)].head()
+      assert(SnapshotTable.addedFiles(spark, loc, s.id, "children").size <=
+        Pipeline.partitionCountFor(spark, childRows, childBytes, Pipeline.Config()))
+      Seq("spans", "meta", "lineage", "children").foreach { c =>
+        assert(s.summary(SnapshotTable.rowsKey(c)).toLong ==
+          SnapshotTable.readAdded(spark, loc, s.id, c).count(), s"depth ${s.summary("depth")} $c")
+      }
+    }
+    // lineage keeps the extraction task's partition, not the file's
+    val pids = SnapshotTable.read(spark, loc, "lineage").as[LineageRow]
+      .collect().filter(_.depth == 0).map(_.partition_id).toSet
+    val expected = p.mapPartitions { it =>
+      val pid = org.apache.spark.TaskContext.getPartitionId()
+      it.map(_ => pid)
+    }.collect().toSet
+    assert(pids == expected)
+  }
+
+  test("cleanup releases every RDD the in-memory run pinned") {
+    val sc = spark.sparkContext
+    val inner = CorpusGen.renderZip(Seq(("deep.txt", "deep text".getBytes)))
+    val outer = CorpusGen.renderZip(Seq(("nested.zip", inner)))
+    val before = sc.getPersistentRDDs.keySet
+    val out = Pipeline.run(spark, pending(("p1", "p1.zip", outer)))
+    assert(out.meta.count() == 3)
+    assert(sc.getPersistentRDDs.keySet != before, "the run pinned nothing")
+    out.cleanup()
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("resume: committed docs are skipped, failures are retried (left_anti recovery)") {
     import spark.implicits._
     val p = pending(

@@ -133,4 +133,76 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(meta.currentSnapshotId == meta.snapshots.last.id)
     assert(meta.lastSeq == 2L)
   }
+
+  /** Spark jobs `f` starts, counted from the listener bus. */
+  private def jobsStartedBy[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("schemas ride in manifests: planning a read starts no Spark job, time travel keeps its schema") {
+    import spark.implicits._
+    val loc = freshLoc()
+    val m1 = SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2)))
+    val m2 = SnapshotTable.append(spark, loc,
+      Map("rows" -> Seq((3, "c")).toDF("id", "tag")))
+    val (cur, j1) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    val (old, j2) = jobsStartedBy(
+      SnapshotTable.read(spark, loc, "rows", asOf = Some(m1.currentSnapshotId)))
+    val (added, j3) = jobsStartedBy(
+      SnapshotTable.readAdded(spark, loc, m2.currentSnapshotId, "rows"))
+    assert((j1, j2, j3) == ((0, 0, 0)))
+    assert(old.columns.toSeq == Seq("id"))
+    assert(cur.columns.toSeq == Seq("id", "tag"))
+    assert(cur.as[(Int, String)].collect().sorted.toSeq ==
+      Seq((1, null), (2, null), (3, "c")))
+    assert(added.as[(Int, String)].collect().toSeq == Seq((3, "c")))
+    // the summary carries exact per-component row totals
+    val snaps = SnapshotTable.snapshots(spark, loc)
+    assert(snaps.map(_.summary(SnapshotTable.rowsKey("rows"))) == Vector("2", "1"))
+  }
+
+  test("a manifest without a schema (older layout) still reads, by inference") {
+    val loc = freshLoc()
+    val root = new org.apache.hadoop.fs.Path(loc)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    df(7, 8).coalesce(1).write.parquet(s"$loc/data/legacy-rows")
+    val file = fs.listStatus(new org.apache.hadoop.fs.Path(root, "data/legacy-rows"))
+      .find(_.getPath.getName.endsWith(".parquet")).get
+    def put(rel: String, text: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(root, rel), false)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    put("metadata/manifest-legacy.json",
+      s"""{"entries":[{"path":"data/legacy-rows/${file.getPath.getName}",""" +
+        s""""component":"rows","rows":2,"bytes":${file.getLen}}]}""")
+    put("metadata/v1.metadata.json",
+      """{"format-version":1,"table-uuid":"legacy","last-sequence-number":1,""" +
+        """"current-snapshot-id":1,"snapshots":[{"snapshot-id":1,""" +
+        """"parent-snapshot-id":-1,"sequence-number":1,"operation":"append",""" +
+        """"manifests":["metadata/manifest-legacy.json"],"summary":{}}]}""")
+    val (rows, jobs) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    assert(jobs >= 1, "a schema-less manifest should be read through inference")
+    assert(rows.collect().map(_.getInt(0)).sorted.toVector == Vector(7, 8))
+    assert(SnapshotTable.readAdded(spark, loc, 1L, "rows").count() == 2)
+    // no summary total recorded: the row count comes from the manifest
+    val snap = SnapshotTable.snapshots(spark, loc).head
+    assert(SnapshotTable.addedRows(spark, loc, snap, "rows") == 2L)
+    // a later append on top of the old layout records its schema again
+    SnapshotTable.append(spark, loc, Map("rows" -> df(9)))
+    val (all, j) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    assert(j == 0)
+    assert(all.collect().map(_.getInt(0)).sorted.toVector == Vector(7, 8, 9))
+  }
 }
