@@ -1090,11 +1090,7 @@ object SparkEntry {
       val kept = TextOps.curateCorpus(s, corpus, "doc_id", "text", "lang",
         "source", "n_chars", bench, cap = 10,
         rates = Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1,
-        salt = "graft",
-        // multi-action composition (the survivor set feeds packSequences,
-        // which runs its own prefix-sum actions): cut the verdict lineage
-        // so each action stops paying the nested-plan description cost
-        cutLineage = true)
+        salt = "graft")
       // 6. pack the survivors into 512-position training contexts
       val survivors = corpus
         .join(kept.select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")

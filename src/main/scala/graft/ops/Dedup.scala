@@ -50,35 +50,28 @@ object Dedup {
     * the verify join here is written so either prefilter slots in front
     * of it unchanged.
     *
-    * CONTRACT: the returned DataFrame is left persisted
-    * (MEMORY_AND_DISK_SER) — it was materialized to release the
-    * prior-hash cache, and dropping the persist would recompute the whole
-    * bloom path on next use. The CALLER must `unpersist(false)` it once
-    * consumed (Bench/Soak do; Verify sweeps `getPersistentRDDs`). */
+    * The result comes back pinned: see [[Pin]] for the contract. */
   def dedupAgainst(spark: org.apache.spark.sql.SparkSession,
                    prior: DataFrame, batch: DataFrame,
                    idCol: String, textCol: String,
                    fpp: Double = 0.01): DataFrame = {
     import spark.implicits._
-    val priorH = prior.select(xxhash64(col(textCol)).as("h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val n = math.max(priorH.count(), 1L)
-    val bf = priorH.stat.bloomFilter("h", n, fpp)
-    val bcast = spark.sparkContext.broadcast(bf)
-    val candidates = batch
-      .select(col(idCol).cast("long").as("id"), xxhash64(col(textCol)).as("h"))
-      .as[(Long, Long)]
-      .filter(t => bcast.value.mightContainLong(t._2))
-      .toDF("id", "h")
-    val dup = candidates.join(priorH, Seq("h"), "left_semi")
-      .select(col("id")).withColumn("is_dup", lit(true))
-    val out = batch.select(col(idCol).cast("long").as("id"))
-      .join(dup, Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_dup"), lit(false)).as("is_dup"))
-    out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      .count() // materialize before releasing the prior-hash cache
-    priorH.unpersist(false)
-    out
+    Pin.scoped { pins =>
+      val (priorH, nPrior) =
+        pins(prior.select(xxhash64(col(textCol)).as("h")).distinct())
+      val bf = priorH.stat.bloomFilter("h", math.max(nPrior, 1L), fpp)
+      val bcast = spark.sparkContext.broadcast(bf)
+      val candidates = batch
+        .select(col(idCol).cast("long").as("id"), xxhash64(col(textCol)).as("h"))
+        .as[(Long, Long)]
+        .filter(t => bcast.value.mightContainLong(t._2))
+        .toDF("id", "h")
+      val dup = candidates.join(priorH, Seq("h"), "left_semi")
+        .select(col("id")).withColumn("is_dup", lit(true))
+      Pin(batch.select(col(idCol).cast("long").as("id"))
+        .join(dup, Seq("id"), "left")
+        .select(col("id"), coalesce(col("is_dup"), lit(false)).as("is_dup")))._1
+    }
   }
 
   /** Snapshot diff — the change set between two corpus versions, the
@@ -250,12 +243,9 @@ object Dedup {
     * signatures (256 bytes per pair, no text ever rides the pair join) —
     * the 100 TB mode when near-dup density makes the pair count itself
     * quadratic-ish (see the sig8 branch comment for the estimator).
-    * CONTRACT (sig8 only): the pair result comes back persisted AND
-    * materialized (the internal signature cache must release before
-    * return, and sig8 callers run several actions over the pairs); the
-    * caller `unpersist(false)`s it once consumed — [[dedupCorpus]] does,
-    * Verify/Bench sweep `getPersistentRDDs`. Exact-verify results stay
-    * fully lazy as before.
+    * A sig8 result comes back pinned (see [[Pin]]): its signature pin must
+    * release before return, and sig8 callers run several actions over the
+    * pairs. Exact-verify results stay fully lazy.
     *
     * `pairing`: "all" (default) enumerates every in-bucket pair — the
     * oracle-grade contract; "star" links members to the bucket's min-id
@@ -286,21 +276,10 @@ object Dedup {
         minhashSignatureOph(sh.iterator.map(hashToken), k)
       else minhashSignature(sh.iterator.map(hashToken), k)
     }
-    // sig8 verification consumes the SAME per-doc signature twice (band
-    // keys + verifier bytes) and the upstream doc subtree may itself be
-    // expensive — compute the signature pass ONCE, pinned (r6; previously
-    // the signature ran once for banding and again for the sig8 table,
-    // and re-ran per downstream action on the unpersisted result). The
-    // exact-verify mode has a single signature consumer (band keys; the
-    // verifier re-reads text), so it stays fully lazy.
-    val sigsCached =
-      if (verify == "sig8")
-        Some(docs.mapPartitions(_.flatMap { case (id, text) =>
-          val sig = sigOf(text)
-          if (sig == null) Iterator.empty else Iterator.single((id, sig))
-        }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-      else None
-    sigsCached.foreach(_.count()) // pin before the two consumers race
+    val sigRows = docs.mapPartitions(_.flatMap { case (id, text) =>
+      val sig = sigOf(text)
+      if (sig == null) Iterator.empty else Iterator.single((id, sig))
+    })
     def bandKeys(idSig: Iterator[(Long, Array[Long])]): Iterator[(Int, Long, Long)] =
       idSig.flatMap { case (id, sig) =>
         (0 until bands).iterator.map { b =>
@@ -310,59 +289,53 @@ object Dedup {
           (b, h, id)
         }
       }
-    // band keys per doc
-    val banded = (sigsCached match {
-      case Some(sigs) => sigs.mapPartitions(bandKeys)
-      case None => docs.mapPartitions(it => bandKeys(it.flatMap {
-        case (id, text) =>
-          val sig = sigOf(text)
-          if (sig == null) Iterator.empty else Iterator.single((id, sig))
-      }))
-    }).toDF("band", "bucket", "id")
-
     val guardW = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "bucket")
-    val candidates = pairing match {
-      case "all" =>
-        // bucket self-join → ALL candidate pairs (dedup across bands).
-        // Columns are renamed per side: alias-only self-joins misresolve
-        // the l/r attributes (same attribute ids on both sides).
-        val guarded =
-          if (maxBucket == Int.MaxValue) banded
-          else banded.withColumn("_n", count(lit(1)).over(guardW))
-            .filter(col("_n") <= maxBucket).drop("_n")
-        val lSide = guarded.toDF("band", "bucket", "id_a")
-        val rSide = guarded.toDF("band", "bucket", "id_b")
-        lSide.join(rSide, Seq("band", "bucket"))
-          .filter($"id_a" < $"id_b")
-          .select($"id_a", $"id_b")
-          .distinct()
-      case "star" =>
-        // link every bucket member to the bucket's min id — O(n) rows per
-        // bucket instead of the self-join's O(n²), on the SAME
-        // (band, bucket) exchange the guard window sorted. Near-identical
-        // template groups agree on most of their bands, so all-pairs
-        // materializes ~b·n²/2 pre-distinct rows per group (measured 75 GB
-        // of shuffle at 4M docs); the star links are b·n and still connect
-        // every cluster transitively — the corpus-dedup contract
-        // (union-find over links), not the enumerate-every-pair contract.
-        // Recall note: a member is kept only if it verifies against the
-        // cluster REPRESENTATIVE (single-link star) — the standard trade.
-        // The maxBucket guard count and the representative min ride ONE
-        // window pass over the same partition spec (r6; two windows cost
-        // a second sort of every bucket) — the guard drops buckets whole,
-        // so min-over-bucket is unchanged by fusing.
-        val withStats =
-          if (maxBucket == Int.MaxValue)
-            banded.withColumn("rep", min(col("id")).over(guardW))
-          else banded.withColumn("_n", count(lit(1)).over(guardW))
-            .withColumn("rep", min(col("id")).over(guardW))
-            .filter(col("_n") <= maxBucket)
-        withStats.filter(col("id") =!= col("rep"))
-          .select(col("rep").as("id_a"), col("id").as("id_b"))
-          .distinct()
-      case other =>
-        throw new IllegalArgumentException(s"pairing mode: $other")
+    // candidate (id_a, id_b) pairs from the per-doc signatures
+    def candidatesOf(sigs: org.apache.spark.sql.Dataset[(Long, Array[Long])]): DataFrame = {
+      val banded = sigs.mapPartitions(bandKeys).toDF("band", "bucket", "id")
+      pairing match {
+        case "all" =>
+          // bucket self-join → ALL candidate pairs (dedup across bands).
+          // Columns are renamed per side: alias-only self-joins misresolve
+          // the l/r attributes (same attribute ids on both sides).
+          val guarded =
+            if (maxBucket == Int.MaxValue) banded
+            else banded.withColumn("_n", count(lit(1)).over(guardW))
+              .filter(col("_n") <= maxBucket).drop("_n")
+          val lSide = guarded.toDF("band", "bucket", "id_a")
+          val rSide = guarded.toDF("band", "bucket", "id_b")
+          lSide.join(rSide, Seq("band", "bucket"))
+            .filter($"id_a" < $"id_b")
+            .select($"id_a", $"id_b")
+            .distinct()
+        case "star" =>
+          // link every bucket member to the bucket's min id — O(n) rows per
+          // bucket instead of the self-join's O(n²), on the SAME
+          // (band, bucket) exchange the guard window sorted. Near-identical
+          // template groups agree on most of their bands, so all-pairs
+          // materializes ~b·n²/2 pre-distinct rows per group (measured 75 GB
+          // of shuffle at 4M docs); the star links are b·n and still connect
+          // every cluster transitively — the corpus-dedup contract
+          // (union-find over links), not the enumerate-every-pair contract.
+          // Recall note: a member is kept only if it verifies against the
+          // cluster REPRESENTATIVE (single-link star) — the standard trade.
+          // The maxBucket guard count and the representative min ride ONE
+          // window pass over the same partition spec (r6; two windows cost
+          // a second sort of every bucket) — the guard drops buckets whole,
+          // so min-over-bucket is unchanged by fusing.
+          val withStats =
+            if (maxBucket == Int.MaxValue)
+              banded.withColumn("rep", min(col("id")).over(guardW))
+            else banded.withColumn("_n", count(lit(1)).over(guardW))
+              .withColumn("rep", min(col("id")).over(guardW))
+              .filter(col("_n") <= maxBucket)
+          withStats.filter(col("id") =!= col("rep"))
+            .select(col("rep").as("id_a"), col("id").as("id_b"))
+            .distinct()
+        case other =>
+          throw new IllegalArgumentException(s"pairing mode: $other")
+      }
     }
 
     verify match {
@@ -384,7 +357,7 @@ object Dedup {
             graft.core.TextUtil.tokens(text).toIndexedSeq, shingleN)
           (id, sh.iterator.map(hashToken).toArray.sorted)
         }).toDF("id", "sh")
-        candidates
+        candidatesOf(sigRows)
           .join(sets.toDF("id_a", "sh_a"), "id_a")
           .join(sets.toDF("id_b", "sh_b"), "id_b")
           .select($"id_a", $"id_b", $"sh_a", $"sh_b") // USING joins reorder columns
@@ -416,32 +389,29 @@ object Dedup {
         // docs), while sig8 is O(k) per pair with std-err ≈ √(J(1-J)/k)
         // ≈ 0.035 at k=128, J=0.8. Estimator: Ĵ = (f − 1/256)/(1 − 1/256)
         // where f = matching-byte fraction.
-        val sig8s = sigsCached.get
-          .map { case (id, sig) => (id, sig.map(v => (v & 0xff).toByte)) }
-          .toDF("id", "sig")
-        val res = candidates
-          .join(sig8s.toDF("id_a", "sig_a"), "id_a")
-          .join(sig8s.toDF("id_b", "sig_b"), "id_b")
-          .select($"id_a", $"id_b", $"sig_a", $"sig_b")
-          .as[(Long, Long, Array[Byte], Array[Byte])]
-          .mapPartitions(_.map { case (a, b, sa, sb) =>
-            var m = 0; var i = 0
-            val n = math.min(sa.length, sb.length)
-            while (i < n) { if (sa(i) == sb(i)) m += 1; i += 1 }
-            val f = if (n > 0) m.toDouble / n else 0.0
-            val est = math.max(0.0, (f - 1.0 / 256) / (1 - 1.0 / 256))
-            (a, b, est)
-          })
-          .toDF("id_a", "id_b", "jaccard")
-          .filter($"jaccard" >= threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        // materialize the (pair-sized) result so the signature cache can
-        // release NOW — sig8 callers iterate over the pairs (limit-count,
-        // union-find collect), and an unpersisted result would re-run the
-        // whole band+verify chain per action
-        res.count()
-        sigsCached.foreach(_.unpersist(false))
-        res
+        // The signature pass feeds both the band keys and the verifier
+        // bytes, so it is computed once, pinned.
+        Pin.scoped { pins =>
+          val sigs = pins(sigRows.toDF("id", "sig"))._1.as[(Long, Array[Long])]
+          val sig8s = sigs
+            .map { case (id, sig) => (id, sig.map(v => (v & 0xff).toByte)) }
+            .toDF("id", "sig")
+          Pin(candidatesOf(sigs)
+            .join(sig8s.toDF("id_a", "sig_a"), "id_a")
+            .join(sig8s.toDF("id_b", "sig_b"), "id_b")
+            .select($"id_a", $"id_b", $"sig_a", $"sig_b")
+            .as[(Long, Long, Array[Byte], Array[Byte])]
+            .mapPartitions(_.map { case (a, b, sa, sb) =>
+              var m = 0; var i = 0
+              val n = math.min(sa.length, sb.length)
+              while (i < n) { if (sa(i) == sb(i)) m += 1; i += 1 }
+              val f = if (n > 0) m.toDouble / n else 0.0
+              val est = math.max(0.0, (f - 1.0 / 256) / (1 - 1.0 / 256))
+              (a, b, est)
+            })
+            .toDF("id_a", "id_b", "jaccard")
+            .filter($"jaccard" >= threshold))._1
+        }
 
       case other =>
         throw new IllegalArgumentException(s"verify mode: $other")
@@ -573,7 +543,8 @@ object Dedup {
     *     cluster's min id.
     *
     * Output: (id, representative, keep) — `keep` marks the one survivor
-    * per near-dup cluster (the min id); filter on it to dedup.
+    * per near-dup cluster (the min id); filter on it to dedup. It comes
+    * back pinned: see [[Pin]] for the contract.
     *
     * Recall caveat: the default `pairing="star"` verifies members only
     * against each bucket's min-id representative, so a transitive chain
@@ -599,47 +570,28 @@ object Dedup {
     // full hash + groupBy collapse (r6: the stage profile showed the
     // exact collapse executing twice at ~2.6 s each on the tile bench).
     val bodyRep = withHash.groupBy("h").agg(min(col("id")).as("rep"))
-    val idToRep = withHash.select(col("id"), col("h"))
-      .join(bodyRep, "h").select(col("id"), col("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    idToRep.count()
-    // representative texts via an id-semi-join against the cached map —
-    // no second groupBy over the corpus
-    val reps = docs.join(
-      idToRep.filter(col("id") === col("rep")).select(col("id")),
-      Seq("id"), "left_semi")
-    // pin the pair set: connectedComponents runs two actions over it (the
-    // fast-path bound probe + the union-find collect / per-iteration
-    // joins) — unpinned, each action re-ran the whole signature + band
-    // + verify chain (r6; sig8 results arrive pinned from minhashLsh)
-    val pairs = minhashLsh(spark, reps, "id", "text", threshold, params,
-      maxBucket = maxBucket, verify = verify, pairing = pairing)
-    val pinned =
-      if (verify == "sig8") pairs
-      else {
-        val p = pairs
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        p.count()
-        p
-      }
-    val links = pinned.select(col("id_a"), col("id_b"))
-    val comp = connectedComponents(spark, links)
-    // materialize the (narrow, corpus-rows × 17 B) verdict before
-    // releasing the internal caches — comp itself is cache-independent
-    // (driver union-find result or eager localCheckpoints), and the
-    // caller's action then reads the pinned verdict instead of re-running
-    // the collapse. CONTRACT: the result comes back persisted; the caller
-    // unpersists once consumed (Verify/Bench sweep getPersistentRDDs).
-    val out = idToRep
-      .join(comp.withColumnRenamed("id", "rep"), Seq("rep"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("rep")).as("representative"))
-      .withColumn("keep", col("id") === col("representative"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    out.count()
-    pinned.unpersist(false)
-    idToRep.unpersist(false)
-    out
+    Pin.scoped { pins =>
+      val (idToRep, _) = pins(withHash.select(col("id"), col("h"))
+        .join(bodyRep, "h").select(col("id"), col("rep")))
+      // representative texts via an id-semi-join against the pinned map —
+      // no second groupBy over the corpus
+      val reps = docs.join(
+        idToRep.filter(col("id") === col("rep")).select(col("id")),
+        Seq("id"), "left_semi")
+      // pin the pair set: connectedComponents reads it by action, and
+      // unpinned each action re-ran the whole signature + band + verify
+      // chain (sig8 results arrive pinned from minhashLsh)
+      val pairs = minhashLsh(spark, reps, "id", "text", threshold, params,
+        maxBucket = maxBucket, verify = verify, pairing = pairing)
+      val pinned = if (verify == "sig8") pins.hold(pairs) else pins(pairs)._1
+      val comp = connectedComponents(spark,
+        pinned.select(col("id_a"), col("id_b")))
+      Pin(idToRep
+        .join(comp.withColumnRenamed("id", "rep"), Seq("rep"), "left")
+        .select(col("id"),
+          coalesce(col("component"), col("rep")).as("representative"))
+        .withColumn("keep", col("id") === col("representative")))._1
+    }
   }
 
   /** Connected components over undirected (id_a, id_b) link rows — the
@@ -677,9 +629,13 @@ object Dedup {
     // dedup link sets small relative to corpus size, so most calls take
     // the fast path and giant graphs still distribute. The labels are
     // identical either way (min reachable id), so oracles don't care.
-    if (localThreshold > 0 &&
-        edges.limit(localThreshold.toInt + 1).count() <= localThreshold) {
-      val es = edges.as[(Long, Long)].collect()
+    // One bounded collect decides the path: at most localThreshold + 1
+    // rows, and an overflow falls through to the iterative path.
+    val es =
+      if (localThreshold > 0)
+        edges.as[(Long, Long)].limit(localThreshold.toInt + 1).collect()
+      else Array.empty[(Long, Long)]
+    if (localThreshold > 0 && es.length <= localThreshold) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x0: Long): Long = {
         var x = x0

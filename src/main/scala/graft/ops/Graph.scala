@@ -50,74 +50,70 @@ object Graph {
       // yield a negative/garbage grain instead of the footgun-free default
       else if (n > Long.MaxValue / 1000000L) Long.MaxValue / 2
       else math.max(1000000L, n * 1000000L)
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val nEdges = e.count()
-    if (nEdges <= maxLocalEdges) {
-      // small-graph fast path (the connectedComponents pattern): ten
-      // distributed iterations over a toy graph are pure per-job
-      // scheduling latency (measured ~1 s/iteration at 500 nodes), so
-      // bounded edge sets compute on the driver with the IDENTICAL
-      // integer recurrence — bit-equal output by construction
-      import spark.implicits._
-      val es = e.as[(Long, Long)].collect()
-      e.unpersist()
-      val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val n = ids.length.toLong
-      val sc = derivedScale(n)
-      val idx = ids.zipWithIndex.toMap
-      val outdeg = new Array[Long](ids.length)
-      es.foreach { case (s, _) => outdeg(idx(s)) += 1 }
-      val base = math.floor((100L - dampingPct) * sc.toDouble / (100L * n)).toLong
-      var r = Array.fill(ids.length)(math.floor(sc.toDouble / n).toLong)
-      var it = 0
-      while (it < iterations) {
-        val sums = new Array[Long](ids.length)
-        es.foreach { case (s, d) =>
-          val si = idx(s)
-          sums(idx(d)) += math.floor(r(si).toDouble / outdeg(si)).toLong
+    Pin.scoped { pins =>
+      val (e, nEdges) = pins(edges.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst"))
+        .distinct())
+      if (nEdges <= maxLocalEdges) {
+        // small-graph fast path (the connectedComponents pattern): ten
+        // distributed iterations over a toy graph are pure per-job
+        // scheduling latency (measured ~1 s/iteration at 500 nodes), so
+        // bounded edge sets compute on the driver with the IDENTICAL
+        // integer recurrence — bit-equal output by construction
+        import spark.implicits._
+        val es = e.as[(Long, Long)].collect()
+        val ids = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
+        val n = ids.length.toLong
+        val sc = derivedScale(n)
+        val idx = ids.zipWithIndex.toMap
+        val outdeg = new Array[Long](ids.length)
+        es.foreach { case (s, _) => outdeg(idx(s)) += 1 }
+        val base = math.floor((100L - dampingPct) * sc.toDouble / (100L * n)).toLong
+        var r = Array.fill(ids.length)(math.floor(sc.toDouble / n).toLong)
+        var it = 0
+        while (it < iterations) {
+          val sums = new Array[Long](ids.length)
+          es.foreach { case (s, d) =>
+            val si = idx(s)
+            sums(idx(d)) += math.floor(r(si).toDouble / outdeg(si)).toLong
+          }
+          r = Array.tabulate(ids.length)(i =>
+            base + math.floor(dampingPct.toLong * sums(i) / 100.0).toLong)
+          it += 1
         }
-        r = Array.tabulate(ids.length)(i =>
-          base + math.floor(dampingPct.toLong * sums(i) / 100.0).toLong)
-        it += 1
+        ids.zip(r).toSeq.toDF("id", "r")
+      } else {
+        val (nodes, n) = pins(e.select(col("src").as("id"))
+          .union(e.select(col("dst").as("id"))).distinct())
+        val sc = derivedScale(n)
+        if (sc / math.max(n, 1L) < 100L)
+          System.err.println(s"[graft] pageRank: only ${sc / math.max(n, 1L)} " +
+            s"micro-units per node ($n nodes, scale=$sc) — truncation will " +
+            "flatten ranks; pass scale >= 100 * nodeCount (or 0 for auto)")
+        val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
+        val base = math.floor((100L - dampingPct) * sc.toDouble / (100L * n)).toLong
+        var ranks = nodes.withColumn("r", lit(math.floor(sc.toDouble / n).toLong))
+        var i = 1
+        while (i <= iterations) {
+          // per-edge contribution floor(r/d); floor of a long/long double
+          // division is exact below 2^53
+          val contribs = ranks
+            .join(outdeg, ranks("id") === outdeg("src"))
+            .select(col("src"), floor(col("r") * lit(1.0) / col("d"))
+              .cast("long").as("c"))
+            .join(e, "src")
+            .select(col("dst"), col("c"))
+          val sums = contribs.groupBy("dst").agg(sum(col("c")).as("s"))
+          ranks = nodes.join(sums, nodes("id") === sums("dst"), "left")
+            .select(col("id"),
+              (lit(base) + floor(lit(dampingPct.toLong) * coalesce(col("s"), lit(0L))
+                / lit(100.0)).cast("long")).as("r"))
+          // cut the growing plan the same way connectedComponents does
+          if (i % 3 == 0 || i == iterations) ranks = ranks.localCheckpoint()
+          i += 1
+        }
+        ranks
       }
-      return ids.zip(r).toSeq.toDF("id", "r")
     }
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val n = nodes.count()
-    val sc = derivedScale(n)
-    if (sc / math.max(n, 1L) < 100L)
-      System.err.println(s"[graft] pageRank: only ${sc / math.max(n, 1L)} " +
-        s"micro-units per node ($n nodes, scale=$sc) — truncation will " +
-        "flatten ranks; pass scale >= 100 * nodeCount (or 0 for auto)")
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
-    val base = math.floor((100L - dampingPct) * sc.toDouble / (100L * n)).toLong
-    var ranks = nodes.withColumn("r", lit(math.floor(sc.toDouble / n).toLong))
-    var i = 1
-    while (i <= iterations) {
-      // per-edge contribution floor(r/d); floor of a long/long double
-      // division is exact below 2^53
-      val contribs = ranks
-        .join(outdeg, ranks("id") === outdeg("src"))
-        .select(col("src"), floor(col("r") * lit(1.0) / col("d"))
-          .cast("long").as("c"))
-        .join(e, "src")
-        .select(col("dst"), col("c"))
-      val sums = contribs.groupBy("dst").agg(sum(col("c")).as("s"))
-      ranks = nodes.join(sums, nodes("id") === sums("dst"), "left")
-        .select(col("id"),
-          (lit(base) + floor(lit(dampingPct.toLong) * coalesce(col("s"), lit(0L))
-            / lit(100.0)).cast("long")).as("r"))
-      // cut the growing plan the same way connectedComponents does
-      if (i % 3 == 0 || i == iterations) ranks = ranks.localCheckpoint()
-      i += 1
-    }
-    e.unpersist()
-    nodes.unpersist()
-    ranks
   }
 }

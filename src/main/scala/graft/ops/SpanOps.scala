@@ -95,14 +95,13 @@ object SpanOps {
     * string (the shape's id type).
     *
     * Single-pass contract: the input is consumed by two jobs (boiler
-    * discovery, strip), so the projected input persists across them —
+    * discovery, strip), so the projected input is pinned across them —
     * UNLESS the caller's frame is already cached (`docs.storageLevel`
     * probe), in which case re-deriving the narrow projection from the
     * caller's cache is cheaper than writing a second full copy of the
     * span table into the block manager (r6; the Bench tile passes a
-    * persisted table and paid the double-cache). Internal pins release
-    * before return; the STRIPPED RESULT comes back persisted+materialized
-    * — the caller unpersists once consumed.
+    * persisted table and paid the double-cache). The stripped result
+    * comes back pinned: see [[Pin]] for the contract.
     *
     * Execution paths (r6): BOTH discovery and strip are pure codegen'd
     * column expressions — per-doc distinct `xxhash64` hashes explode for
@@ -125,67 +124,58 @@ object SpanOps {
       .select(col(idCol).cast("string").as(idCol), col(spansCol).as(spansCol))
     val inputCached =
       docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val base =
-      if (inputCached) projected
-      else projected
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // null-text spans are never boilerplate candidates and never strip
-    // (parity with the exploded stripBoilerplate, where xxhash64(null)
-    // is SQL-null and drops out of both the df count and the match)
-    val isTextWithBody = (sp: Column) =>
-      sp.getField("kind") === "text" && sp.getField("text").isNotNull
-    val hashes = base.select(explode(array_distinct(transform(
-      filter(col(spansCol), isTextWithBody),
-      sp => xxhash64(sp.getField("text"))))).as("h"))
-    val boiler = hashes.groupBy("h").agg(count(lit(1)).as("ddf"))
-      .filter(col("ddf") >= minDocs)
-      .select("h").as[Long]
-      .head(maxBoilerHashes + 1)
-    require(boiler.length <= maxBoilerHashes,
-      s"boilerplate set exceeds $maxBoilerHashes hashes — this corpus " +
-        "needs the join-based stripBoilerplate (unbounded verdict side)")
-    val stripped =
-      if (boiler.isEmpty)
-        // nothing to strip — still a FRESH projection (base may itself be
-        // the internal pin, which releases below; aliasing it as the
-        // returned cache would unpersist the result)
-        base.select(col(idCol), col(spansCol))
-      else if (boiler.length <= maxExprSet) {
-        // codegen'd in-set probe (the optimizer converts the in-list to
-        // an InSet hash probe past its conversion threshold); realistic
-        // boilerplate heads are tens-to-thousands of spans
-        val keep = (sp: Column) => !(isTextWithBody(sp) &&
-          xxhash64(sp.getField("text")).isin(boiler.toIndexedSeq: _*))
-        base.select(col(idCol), filter(col(spansCol), keep).as(spansCol))
-      } else {
-        // giant verdict set: broadcast a sorted primitive array probed by
-        // binary search, not an immutable Set[Long] — at the 5M-hash
-        // bound the boxed set costs hundreds of MB on the driver and
-        // every executor copy, the long[] 40 MB flat. Hash parity with
-        // the discovery pass: the candidate hashes are computed by the
-        // SAME SQL xxhash64 in a companion column, zipped back to the
-        // spans in one typed map (Long.MinValue = not-a-candidate
-        // sentinel — a genuine hash landing on it is kept, the same
-        // 2^-64-class trade the hash identity already makes).
-        val sorted = boiler.sorted
-        val bc = spark.sparkContext.broadcast(sorted)
-        base.select(col(idCol), col(spansCol),
-            transform(col(spansCol), sp =>
-              coalesce(when(isTextWithBody(sp),
-                xxhash64(sp.getField("text"))), lit(Long.MinValue))).as("_hs"))
-          .as[(String, Seq[Span], Seq[Long])]
-          .map { case (id, spans, hs) =>
-            (id, spans.iterator.zip(hs.iterator).filter { case (_, h) =>
-              h == Long.MinValue ||
-                java.util.Arrays.binarySearch(bc.value, h) < 0
-            }.map(_._1).toSeq)
-          }.toDF(idCol, spansCol)
-      }
-    val out = stripped
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    out.count() // pin the stripped result, then release the input pin
-    if (!inputCached) base.unpersist(false)
-    out
+    Pin.scoped { pins =>
+      val base = if (inputCached) projected else pins(projected)._1
+      // null-text spans are never boilerplate candidates and never strip
+      // (parity with the exploded stripBoilerplate, where xxhash64(null)
+      // is SQL-null and drops out of both the df count and the match)
+      val isTextWithBody = (sp: Column) =>
+        sp.getField("kind") === "text" && sp.getField("text").isNotNull
+      val hashes = base.select(explode(array_distinct(transform(
+        filter(col(spansCol), isTextWithBody),
+        sp => xxhash64(sp.getField("text"))))).as("h"))
+      val boiler = hashes.groupBy("h").agg(count(lit(1)).as("ddf"))
+        .filter(col("ddf") >= minDocs)
+        .select("h").as[Long]
+        .head(maxBoilerHashes + 1)
+      require(boiler.length <= maxBoilerHashes,
+        s"boilerplate set exceeds $maxBoilerHashes hashes — this corpus " +
+          "needs the join-based stripBoilerplate (unbounded verdict side)")
+      val stripped =
+        if (boiler.isEmpty) base.select(col(idCol), col(spansCol))
+        else if (boiler.length <= maxExprSet) {
+          // codegen'd in-set probe (the optimizer converts the in-list to
+          // an InSet hash probe past its conversion threshold); realistic
+          // boilerplate heads are tens-to-thousands of spans
+          val keep = (sp: Column) => !(isTextWithBody(sp) &&
+            xxhash64(sp.getField("text")).isin(boiler.toIndexedSeq: _*))
+          base.select(col(idCol), filter(col(spansCol), keep).as(spansCol))
+        } else {
+          // giant verdict set: broadcast a sorted primitive array probed by
+          // binary search, not an immutable Set[Long] — at the 5M-hash
+          // bound the boxed set costs hundreds of MB on the driver and
+          // every executor copy, the long[] 40 MB flat. Hash parity with
+          // the discovery pass: the candidate hashes are computed by the
+          // SAME SQL xxhash64 in a companion column, zipped back to the
+          // spans in one typed map (Long.MinValue = not-a-candidate
+          // sentinel — a genuine hash landing on it is kept, the same
+          // 2^-64-class trade the hash identity already makes).
+          val sorted = boiler.sorted
+          val bc = spark.sparkContext.broadcast(sorted)
+          base.select(col(idCol), col(spansCol),
+              transform(col(spansCol), sp =>
+                coalesce(when(isTextWithBody(sp),
+                  xxhash64(sp.getField("text"))), lit(Long.MinValue))).as("_hs"))
+            .as[(String, Seq[Span], Seq[Long])]
+            .map { case (id, spans, hs) =>
+              (id, spans.iterator.zip(hs.iterator).filter { case (_, h) =>
+                h == Long.MinValue ||
+                  java.util.Arrays.binarySearch(bc.value, h) < 0
+              }.map(_._1).toSeq)
+            }.toDF(idCol, spansCol)
+        }
+      Pin(stripped)._1
+    }
   }
 
   /** Render the interleaved spans into model-input text: text spans in

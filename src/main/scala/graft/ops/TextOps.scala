@@ -153,92 +153,83 @@ object TextOps {
     *
     * Two-pass contract (the round-4 recompute fix): the corpus text is
     * tokenized exactly TWICE — once in the rolling-hash position flatMap
-    * (persisted, explicitly materialized so the dup aggregation and the
-    * coverage join read the cache instead of racing to recompute it) and
-    * once in the final rewrite pass, which is inherent (the rewrite must
-    * read the text). Both internal caches (positions, covered-starts)
-    * release before return; the REWRITTEN RESULT is what comes back
-    * persisted+materialized, so the caller holds the release handle
-    * (unpersist once consumed — a cache the caller cannot reach is a
-    * leak in any long-lived session). */
+    * (pinned, so the dup aggregation and the coverage join read the
+    * cache instead of racing to recompute it) and once in the final
+    * rewrite pass, which is inherent (the rewrite must read the text).
+    * The rewritten result comes back pinned: see [[Pin]]. */
   def stripDupSubstrings(spark: org.apache.spark.sql.SparkSession,
                          df: DataFrame, idCol: String, textCol: String,
                          n: Int = 20): DataFrame = {
     import spark.implicits._
     val docs = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    val positions = docs.as[(Long, String)]
-      .flatMap { case (id, t) =>
-        val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-        if (toks.length < n) Iterator.empty
-        else {
-          // polynomial rolling hash over per-token hashes: O(tokens)
-          // instead of materializing a 20-token string per position
-          // (O(tokens × n) char churn); wrapping Long arithmetic is
-          // deterministic everywhere
-          val B = 0x100000001b3L
-          var bPow = 1L // B^(n-1)
-          var j = 1
-          while (j < n) { bPow *= B; j += 1 }
-          val th = new Array[Long](toks.length)
+    Pin.scoped { pins =>
+      val (positions, _) = pins(docs.as[(Long, String)]
+        .flatMap { case (id, t) =>
+          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
+          if (toks.length < n) Iterator.empty
+          else {
+            // polynomial rolling hash over per-token hashes: O(tokens)
+            // instead of materializing a 20-token string per position
+            // (O(tokens × n) char churn); wrapping Long arithmetic is
+            // deterministic everywhere
+            val B = 0x100000001b3L
+            var bPow = 1L // B^(n-1)
+            var j = 1
+            while (j < n) { bPow *= B; j += 1 }
+            val th = new Array[Long](toks.length)
+            var i = 0
+            while (i < toks.length) {
+              th(i) = graft.core.TextUtil.fnv64(toks(i)); i += 1
+            }
+            var h = 0L
+            i = 0
+            while (i < n) { h = h * B + th(i); i += 1 }
+            val first = (id, 0, h)
+            val rest = (1 to toks.length - n).iterator.map { s =>
+              h = (h - th(s - 1) * bPow) * B + th(s + n - 1)
+              (id, s, h)
+            }
+            Iterator(first) ++ rest
+          }
+        }
+        .toDF("id", "s", "h"))
+      val dup = positions.select("id", "h").distinct()
+        .groupBy("h").agg(count(lit(1)).as("nd"))
+        .filter(col("nd") >= 2)
+        .select("h")
+      // dup-carrying docs only — small; the position pin releases early
+      val (covered, _) = pins(positions.join(dup, "h")
+        .groupBy("id")
+        .agg(collect_list(col("s")).as("starts")))
+      positions.unpersist(false)
+      val nn = n
+      Pin(docs.join(covered, Seq("id"), "left")
+        .select(col("id"), col("text"), coalesce(col("starts"),
+          array().cast("array<int>")).as("starts"))
+        .as[(Long, String, Seq[Int])]
+        .mapPartitions(_.map { case (id, t, starts) =>
+          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
+          val cov = new Array[Boolean](toks.length)
+          starts.foreach { s =>
+            var j = s
+            val end = math.min(s + nn, toks.length)
+            while (j < end) { cov(j) = true; j += 1 }
+          }
+          val kept = new StringBuilder
+          var removed = 0L
           var i = 0
           while (i < toks.length) {
-            th(i) = graft.core.TextUtil.fnv64(toks(i)); i += 1
+            if (cov(i)) removed += 1
+            else {
+              if (kept.nonEmpty) kept.append(' ')
+              kept.append(toks(i))
+            }
+            i += 1
           }
-          var h = 0L
-          i = 0
-          while (i < n) { h = h * B + th(i); i += 1 }
-          val first = (id, 0, h)
-          val rest = (1 to toks.length - n).iterator.map { s =>
-            h = (h - th(s - 1) * bPow) * B + th(s + n - 1)
-            (id, s, h)
-          }
-          Iterator(first) ++ rest
-        }
-      }
-      .toDF("id", "s", "h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    positions.count() // the single discovery tokenize; both uses read cache
-    val dup = positions.select("id", "h").distinct()
-      .groupBy("h").agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= 2)
-      .select("h")
-    val covered = positions.join(dup, "h")
-      .groupBy("id")
-      .agg(collect_list(col("s")).as("starts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    covered.count() // dup-carrying docs only — small; pin, then release
-    positions.unpersist(false)
-    val nn = n
-    val out = docs.join(covered, Seq("id"), "left")
-      .select(col("id"), col("text"), coalesce(col("starts"),
-        array().cast("array<int>")).as("starts"))
-      .as[(Long, String, Seq[Int])]
-      .mapPartitions(_.map { case (id, t, starts) =>
-        val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-        val cov = new Array[Boolean](toks.length)
-        starts.foreach { s =>
-          var j = s
-          val end = math.min(s + nn, toks.length)
-          while (j < end) { cov(j) = true; j += 1 }
-        }
-        val kept = new StringBuilder
-        var removed = 0L
-        var i = 0
-        while (i < toks.length) {
-          if (cov(i)) removed += 1
-          else {
-            if (kept.nonEmpty) kept.append(' ')
-            kept.append(toks(i))
-          }
-          i += 1
-        }
-        (id, kept.toString, toks.length.toLong, removed)
-      })
-      .toDF(idCol, "clean_text", "n_tokens", "n_removed")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    out.count() // pin the rewrite, then release the covered-starts cache
-    covered.unpersist(false)
-    out
+          (id, kept.toString, toks.length.toLong, removed)
+        })
+        .toDF(idCol, "clean_text", "n_tokens", "n_removed"))._1
+    }
   }
 
   /** BM25 top-k retrieval over the corpus (Robertson/Lucene form:
@@ -258,10 +249,9 @@ object TextOps {
     * Single-pass contract (the round-4 recompute fix): the token explode
     * has exactly ONE consumer — the (id, tok) count. Document length is
     * `sum(tf)` per id and document frequency is a count per tok, both
-    * derived from the persisted vocab-bounded tf table (materialized by
-    * an explicit count so no pair of downstream stages races to compute
-    * it), so the corpus text is scanned once. The k-row result is
-    * materialized before the cache releases, so nothing leaks. */
+    * derived from the pinned vocab-bounded tf table (so no pair of
+    * downstream stages races to compute it), and the corpus text is
+    * scanned once. The k-row result comes back pinned: see [[Pin]]. */
   def bm25TopK(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
                idCol: String, textCol: String, query: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -269,39 +259,35 @@ object TextOps {
     val docs = df.select(col(idCol).cast("long").as("id"), col(textCol))
     val toks = docs
       .select(col("id"), explode(tokenize(col(textCol))).as("tok"))
-    val tf = toks.groupBy("id", "tok").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    tf.count() // the single corpus scan; everything below reads the cache
-    val dl = tf.groupBy("id").agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
-    val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-    val qterms = query.toDF("tok")
-    val scored = tf
-      .join(org.apache.spark.sql.functions.broadcast(qterms), "tok")
-      .join(dfreq, "tok")
-      .join(dl, "id")
-      .crossJoin(org.apache.spark.sql.functions.broadcast(stats))
-      .withColumn("idf", log((col("n") - col("df") + lit(0.5)) /
-        (col("df") + lit(0.5)) + lit(1.0)))
-      .withColumn("contrib", col("idf") * col("tf") * lit(k1 + 1.0) /
-        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      // floor each term's contribution to integer micros BEFORE summing:
-      // float addition is order-dependent and the two engines (and even
-      // two Spark runs) gather a doc's terms in different orders — an
-      // integer sum is associative, so rank and score are exact
-      .withColumn("cmicro", floor(col("contrib") * 1e6).cast("long"))
-      .groupBy("id").agg(sum(col("cmicro")).as("smicro"))
-    val res = scored
-      .orderBy(col("smicro").desc, col("id"))
-      .limit(k)
-      .select(row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("smicro").desc, col("id"))).cast("long").as("rank"),
-        col("id").as(idCol),
-        floor(col("smicro") / 1000.0).cast("long").as("score_milli"))
-    res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      .count() // k rows — pin before releasing the tf cache
-    tf.unpersist(false)
-    res
+    Pin.scoped { pins =>
+      val (tf, _) = pins(toks.groupBy("id", "tok").agg(count(lit(1)).as("tf")))
+      val dl = tf.groupBy("id").agg(sum(col("tf")).as("dl"))
+      val stats = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
+      val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
+      val qterms = query.toDF("tok")
+      val scored = tf
+        .join(org.apache.spark.sql.functions.broadcast(qterms), "tok")
+        .join(dfreq, "tok")
+        .join(dl, "id")
+        .crossJoin(org.apache.spark.sql.functions.broadcast(stats))
+        .withColumn("idf", log((col("n") - col("df") + lit(0.5)) /
+          (col("df") + lit(0.5)) + lit(1.0)))
+        .withColumn("contrib", col("idf") * col("tf") * lit(k1 + 1.0) /
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+        // floor each term's contribution to integer micros BEFORE summing:
+        // float addition is order-dependent and the two engines (and even
+        // two Spark runs) gather a doc's terms in different orders — an
+        // integer sum is associative, so rank and score are exact
+        .withColumn("cmicro", floor(col("contrib") * 1e6).cast("long"))
+        .groupBy("id").agg(sum(col("cmicro")).as("smicro"))
+      Pin(scored
+        .orderBy(col("smicro").desc, col("id"))
+        .limit(k)
+        .select(row_number().over(org.apache.spark.sql.expressions.Window
+            .orderBy(col("smicro").desc, col("id"))).cast("long").as("rank"),
+          col("id").as(idCol),
+          floor(col("smicro") / 1000.0).cast("long").as("score_milli")))._1
+    }
   }
 
   /** CCNet-style language-model quality score: per-document mean
@@ -318,52 +304,47 @@ object TextOps {
     * one join of doc bigrams against the model with map-side combine.
     *
     * Single-pass contract (the round-4 recompute fix): the tokenize
-    * flatMap runs EXACTLY ONCE per document. One persisted pair stream
+    * flatMap runs EXACTLY ONCE per document. One pinned pair stream
     * (id, w1, w2·nullable — the last token of a doc carries a null w2)
     * feeds all three consumers: unigram counts come from the w1 column
     * (every token appears once as w1), bigram counts and the per-doc
-    * scoring join from the non-null-w2 rows. The pair cache materializes
-    * on the vocab count (one leaf stage — no concurrent-stage race), and
-    * is released before return; the corpus-sized RESULT is returned
-    * persisted+materialized instead (caller unpersists / Verify+Bench
-    * sweep `getPersistentRDDs`). */
+    * scoring join from the non-null-w2 rows. The pair stream is pinned
+    * (one leaf stage — no concurrent-stage race); the corpus-sized result
+    * comes back pinned: see [[Pin]]. */
   def lmScore(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
               idCol: String, textCol: String): DataFrame = {
     import spark.implicits._
     val docs = df.select(col(idCol).cast("long").as("id"), col(textCol))
-    val pairs = docs.as[(Long, String)]
-      .flatMap { case (id, t) =>
-        // the ASCII \s+ split of [[tokenize]] — NOT TextUtil.tokens
-        // (Unicode whitespace): the DuckDB oracle and the unigram side
-        // historically tokenize on \s+, and both sides of the model must
-        // use ONE tokenizer or NBSP-joined words count differently in
-        // U(w1) vs B(w1,w2)
-        val toks = AsciiWs.split(if (t == null) "" else t)
-          .filter(_.nonEmpty)
-        toks.indices.iterator.map(i =>
-          (id, toks(i), if (i + 1 < toks.length) toks(i + 1) else null))
-      }
-      .toDF("id", "w1", "w2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val uni = pairs.groupBy("w1").agg(count(lit(1)).as("u"))
-    val vocab = uni.count() // materializes the single tokenize pass
-    val big = pairs.filter(col("w2").isNotNull)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("b"))
-    val res = pairs.filter(col("w2").isNotNull)
-      .join(big, Seq("w1", "w2"))
-      .join(uni, Seq("w1"))
-      .withColumn("nllmicro",
-        floor(-log((col("b") + lit(1.0)) / (col("u") + lit(vocab.toDouble)))
-          * 1e6).cast("long"))
-      .groupBy("id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("nllmicro")).as("smicro"))
-      .select(col("id").as(idCol), col("n_bigrams"),
-        floor(col("smicro") / col("n_bigrams") / 1000.0).cast("long")
-          .as("nll_milli"))
-    res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      .count() // pin the result before releasing the pair cache
-    pairs.unpersist(false)
-    res
+    Pin.scoped { pins =>
+      val (pairs, _) = pins(docs.as[(Long, String)]
+        .flatMap { case (id, t) =>
+          // the ASCII \s+ split of [[tokenize]] — NOT TextUtil.tokens
+          // (Unicode whitespace): the DuckDB oracle and the unigram side
+          // historically tokenize on \s+, and both sides of the model must
+          // use ONE tokenizer or NBSP-joined words count differently in
+          // U(w1) vs B(w1,w2)
+          val toks = AsciiWs.split(if (t == null) "" else t)
+            .filter(_.nonEmpty)
+          toks.indices.iterator.map(i =>
+            (id, toks(i), if (i + 1 < toks.length) toks(i + 1) else null))
+        }
+        .toDF("id", "w1", "w2"))
+      val uni = pairs.groupBy("w1").agg(count(lit(1)).as("u"))
+      val vocab = uni.count()
+      val big = pairs.filter(col("w2").isNotNull)
+        .groupBy("w1", "w2").agg(count(lit(1)).as("b"))
+      Pin(pairs.filter(col("w2").isNotNull)
+        .join(big, Seq("w1", "w2"))
+        .join(uni, Seq("w1"))
+        .withColumn("nllmicro",
+          floor(-log((col("b") + lit(1.0)) / (col("u") + lit(vocab.toDouble)))
+            * 1e6).cast("long"))
+        .groupBy("id")
+        .agg(count(lit(1)).as("n_bigrams"), sum(col("nllmicro")).as("smicro"))
+        .select(col("id").as(idCol), col("n_bigrams"),
+          floor(col("smicro") / col("n_bigrams") / 1000.0).cast("long")
+            .as("nll_milli")))._1
+    }
   }
 
   /** Deterministic keep-predicate for hash sampling: md5 of (id ++ salt),
@@ -646,114 +627,111 @@ object TextOps {
       if (trainFraction >= 1.0) df
       else df.filter(sampleKeep(xxhash64(col(textCol)), sampleSalt,
         trainFraction))
-    val words = training
-      .select(explode(tokenize(col(textCol))).as("w"))
-      .select(lower(col("w")).as("w"))
-      .filter(col("w").rlike("^[a-z]+$"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .select(concat(trim(regexp_replace(col("w"), "(.)", "$1 ")),
-        lit(" </w>")).as("sym"), col("c"))
-      .persist()
-    val vocabN = words.count() // materialize once
-    // Driver-bounded fast path (r6, the connectedComponents pattern): the
-    // trainer is inherently driver-sequential — one tiny argmax job per
-    // merge over the vocab-bounded table — so a K-merge training is K
-    // scheduler round-trips (a measured ~0.25 s serial floor each)
-    // regardless of corpus size. Below `localVocabThreshold` distinct
-    // words the table is collected once (≤ ~50 MB at the default) and the
-    // SAME count→argmax→rewrite loop runs in memory: identical merge
-    // table (counts are partition-independent, the tie-break is total),
-    // one job instead of K+1. The distributed loop below remains the
-    // giant-vocab path; callers training 32k merges on real corpora
-    // bound the vocab with `trainFraction` anyway (see COST MODEL).
-    if (vocabN <= localVocabThreshold) {
-      val rows = words.as[(String, Long)].collect()
-      words.unpersist()
-      val syms = rows.map(_._1)
-      val cnts = rows.map(_._2)
+    Pin.scoped { pins =>
+      val (words, vocabN) = pins(training
+        .select(explode(tokenize(col(textCol))).as("w"))
+        .select(lower(col("w")).as("w"))
+        .filter(col("w").rlike("^[a-z]+$"))
+        .groupBy("w").agg(count(lit(1)).as("c"))
+        .select(concat(trim(regexp_replace(col("w"), "(.)", "$1 ")),
+          lit(" </w>")).as("sym"), col("c")))
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Long, String, String, Long)]
-      var step = 1
-      var exhausted = false
-      while (step <= merges && !exhausted) {
-        val pair = new java.util.HashMap[String, Long]()
-        var i = 0
-        while (i < syms.length) {
-          val parts = syms(i).split(" ")
-          var j = 0
-          while (j < parts.length - 1) {
-            pair.merge(parts(j) + " " + parts(j + 1), cnts(i), _ + _)
-            j += 1
-          }
-          i += 1
-        }
-        if (pair.isEmpty) exhausted = true
-        else {
-          // argmax with the distributed tie-break: count desc, then the
-          // "l asc, r asc" pair order == lexicographic on "l r" (symbols
-          // are space-free, so the joined compare is the column compare)
-          var bestKey: String = null
-          var bestCnt = -1L
-          val it = pair.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getValue > bestCnt ||
-                (e.getValue == bestCnt && e.getKey < bestKey)) {
-              bestKey = e.getKey; bestCnt = e.getValue
-            }
-          }
-          val sp = bestKey.indexOf(' ')
-          val l = bestKey.substring(0, sp)
-          val r = bestKey.substring(sp + 1)
-          out += ((step.toLong, l, r, bestCnt))
-          val from = " " + l + " " + r + " "
-          val to = " " + l + r + " "
-          i = 0
+      // Driver-bounded fast path (r6, the connectedComponents pattern): the
+      // trainer is inherently driver-sequential — one tiny argmax job per
+      // merge over the vocab-bounded table — so a K-merge training is K
+      // scheduler round-trips (a measured ~0.25 s serial floor each)
+      // regardless of corpus size. Below `localVocabThreshold` distinct
+      // words the table is collected once (≤ ~50 MB at the default) and the
+      // SAME count→argmax→rewrite loop runs in memory: identical merge
+      // table (counts are partition-independent, the tie-break is total),
+      // one job instead of K+1. The distributed loop below remains the
+      // giant-vocab path; callers training 32k merges on real corpora
+      // bound the vocab with `trainFraction` anyway (see COST MODEL).
+      if (vocabN <= localVocabThreshold) {
+        val rows = words.as[(String, Long)].collect()
+        words.unpersist(false)
+        val syms = rows.map(_._1)
+        val cnts = rows.map(_._2)
+        var step = 1
+        var exhausted = false
+        while (step <= merges && !exhausted) {
+          val pair = new java.util.HashMap[String, Long]()
+          var i = 0
           while (i < syms.length) {
-            syms(i) = (" " + syms(i) + " ").replace(from, to).trim
+            val parts = syms(i).split(" ")
+            var j = 0
+            while (j < parts.length - 1) {
+              pair.merge(parts(j) + " " + parts(j + 1), cnts(i), _ + _)
+              j += 1
+            }
             i += 1
           }
-          step += 1
+          if (pair.isEmpty) exhausted = true
+          else {
+            // argmax with the distributed tie-break: count desc, then the
+            // "l asc, r asc" pair order == lexicographic on "l r" (symbols
+            // are space-free, so the joined compare is the column compare)
+            var bestKey: String = null
+            var bestCnt = -1L
+            val it = pair.entrySet().iterator()
+            while (it.hasNext) {
+              val e = it.next()
+              if (e.getValue > bestCnt ||
+                  (e.getValue == bestCnt && e.getKey < bestKey)) {
+                bestKey = e.getKey; bestCnt = e.getValue
+              }
+            }
+            val sp = bestKey.indexOf(' ')
+            val l = bestKey.substring(0, sp)
+            val r = bestKey.substring(sp + 1)
+            out += ((step.toLong, l, r, bestCnt))
+            val from = " " + l + " " + r + " "
+            val to = " " + l + r + " "
+            i = 0
+            while (i < syms.length) {
+              syms(i) = (" " + syms(i) + " ").replace(from, to).trim
+              i += 1
+            }
+            step += 1
+          }
+        }
+      } else {
+        var cur = words
+        var step = 1
+        var exhausted = false
+        while (step <= merges && !exhausted) {
+          val pairs = cur
+            .select(split(col("sym"), " ").as("s"), col("c"))
+            .filter(size(col("s")) >= 2)
+            .select(explode(transform(sequence(lit(0), size(col("s")) - 2),
+              i => struct(element_at(col("s"), i + 1).as("l"),
+                element_at(col("s"), i + 2).as("r")))).as("p"), col("c"))
+            .select(col("p.l"), col("p.r"), col("c"))
+            .groupBy("l", "r").agg(sum(col("c")).as("cnt"))
+          val best = pairs.orderBy(col("cnt").desc, col("l").asc, col("r").asc)
+            .limit(1).collect()
+          if (best.isEmpty) exhausted = true
+          else {
+            val (l, r, cnt) =
+              (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+            out += ((step.toLong, l, r, cnt))
+            // symbols are /[a-z]|<\/w>/-composed: safe inside a SQL literal
+            cur = cur.select(
+              expr(s"trim(replace(concat(' ', sym, ' '), ' $l $r ', ' $l$r '))")
+                .as("sym"), col("c"))
+            // cut the replace-chain lineage periodically: the vocab table is
+            // tiny, but K stacked projections make Catalyst analysis O(K^2)
+            // across the loop — localCheckpoint keeps large-merge training
+            // (32k-vocab reality) linear
+            if (step % checkpointEvery == 0) cur = cur.localCheckpoint()
+            step += 1
+          }
         }
       }
-      return spark.createDataFrame(out.toSeq)
+      spark.createDataFrame(out.toSeq)
         .toDF("step", "lsym", "rsym", "pair_count")
     }
-    var cur = words
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= merges && !exhausted) {
-      val pairs = cur
-        .select(split(col("sym"), " ").as("s"), col("c"))
-        .filter(size(col("s")) >= 2)
-        .select(explode(transform(sequence(lit(0), size(col("s")) - 2),
-          i => struct(element_at(col("s"), i + 1).as("l"),
-            element_at(col("s"), i + 2).as("r")))).as("p"), col("c"))
-        .select(col("p.l"), col("p.r"), col("c"))
-        .groupBy("l", "r").agg(sum(col("c")).as("cnt"))
-      val best = pairs.orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (l, r, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        out += ((step.toLong, l, r, cnt))
-        // symbols are /[a-z]|<\/w>/-composed: safe inside a SQL literal
-        cur = cur.select(
-          expr(s"trim(replace(concat(' ', sym, ' '), ' $l $r ', ' $l$r '))")
-            .as("sym"), col("c"))
-        // cut the replace-chain lineage periodically: the vocab table is
-        // tiny, but K stacked projections make Catalyst analysis O(K^2)
-        // across the loop — localCheckpoint keeps large-merge training
-        // (32k-vocab reality) linear
-        if (step % checkpointEvery == 0) cur = cur.localCheckpoint()
-        step += 1
-      }
-    }
-    words.unpersist()
-    spark.createDataFrame(out.toSeq)
-      .toDF("step", "lsym", "rsym", "pair_count")
   }
 
   /** BPE tokenizer APPLICATION — encode a corpus with an already-trained
@@ -905,9 +883,9 @@ object TextOps {
     * sort), one tiny job to collect the per-partition token totals
     * (numPartitions longs to the driver), then a narrow mapPartitions
     * that seeds each partition with the exclusive prefix of those totals
-    * and emits segments with running offsets. The persist() pins the
-    * range partitioning so both passes see identical splits (range
-    * boundaries come from sampling; recomputation could resample).
+    * and emits segments with running offsets. A pin fixes the range
+    * partitioning so both passes see identical splits (range boundaries
+    * come from sampling; recomputation could resample).
     * Total cost: one range exchange + one narrow pass — the window
     * formulation's semantics at scan-like cost. */
   def packSequences(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
@@ -920,13 +898,9 @@ object TextOps {
     * [[graft.ops.SpanOps.packInterleaved]]: `df` is (id, n) per-doc
     * token counts; see packSequences for the shape rationale.
     *
-    * CONTRACT: the returned DataFrame is left persisted
-    * (MEMORY_AND_DISK_SER) — it must be, so the segment ids observed by
-    * the caller can never be recomputed against a resampled range
-    * partitioning. The CALLER must `unpersist(false)` it once consumed
-    * (Bench/Soak do; Verify sweeps `getPersistentRDDs` after each
-    * query); a long-lived session that drops the reference without
-    * unpersisting accumulates dead blocks in the block manager. */
+    * The result comes back pinned (see [[Pin]]), so the segment ids the
+    * caller observes are never recomputed against a resampled range
+    * partitioning. */
   private[ops] def packCounted(spark: org.apache.spark.sql.SparkSession,
                                df: DataFrame, contextLen: Int): DataFrame = {
     import spark.implicits._
@@ -938,48 +912,42 @@ object TextOps {
     // an O(text) projection) evaluates twice — caching the narrow rows
     // costs corpus-rows × 16 B and halves that (guide §2: don't compute
     // things twice feeding one exchange)
-    val input = df
-      .filter(col("n") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val counted = input
-      .repartitionByRange(col("id"))
-      .sortWithinPartitions("id")
-      .as[(Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // pass 1: per-partition token totals (numPartitions rows to driver);
-    // this also materializes `counted`, after which the pre-exchange
-    // input cache can release (lost shuffle partitions replay from
-    // shuffle files, not by resampling)
-    val partSums = counted
-      .mapPartitions { it =>
-        var s = 0L; it.foreach(s += _._2)
-        Iterator.single(
-          (org.apache.spark.TaskContext.getPartitionId(), s))
-      }
-      .collect().sortBy(_._1)
-    input.unpersist(false)
-    val offsets = new Array[Long](partSums.length + 1)
-    partSums.foreach { case (pid, s) => offsets(pid + 1) = s }
-    for (i <- 1 until offsets.length) offsets(i) += offsets(i - 1)
-    val bcast = spark.sparkContext.broadcast(offsets)
-    val L = contextLen.toLong
-    // pass 2: narrow segment emission with the seeded running offset
-    val segs = counted.mapPartitions { it =>
-      var off = bcast.value(org.apache.spark.TaskContext.getPartitionId())
-      it.flatMap { case (id, n) =>
-        val start = off
-        off += n
-        (start / L to (start + n - 1) / L).iterator.map { c =>
-          val from = math.max(0L, c * L - start)
-          val until = math.min(n, (c + 1) * L - start)
-          (c, id, from, until - from)
+    Pin.scoped { pins =>
+      val (input, _) = pins(df.filter(col("n") > 0))
+      val counted = pins(input
+        .repartitionByRange(col("id"))
+        .sortWithinPartitions("id"))._1
+        .as[(Long, Long)]
+      // the pre-exchange input pin can release now (lost shuffle
+      // partitions replay from shuffle files, not by resampling)
+      input.unpersist(false)
+      // pass 1: per-partition token totals (numPartitions rows to driver)
+      val partSums = counted
+        .mapPartitions { it =>
+          var s = 0L; it.foreach(s += _._2)
+          Iterator.single(
+            (org.apache.spark.TaskContext.getPartitionId(), s))
         }
-      }
-    }.toDF("chunk_id", "doc_id", "doc_from", "seg_len")
-    segs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      .count() // materialize before releasing the range-partitioned input
-    counted.unpersist(false)
-    segs
+        .collect().sortBy(_._1)
+      val offsets = new Array[Long](partSums.length + 1)
+      partSums.foreach { case (pid, s) => offsets(pid + 1) = s }
+      for (i <- 1 until offsets.length) offsets(i) += offsets(i - 1)
+      val bcast = spark.sparkContext.broadcast(offsets)
+      val L = contextLen.toLong
+      // pass 2: narrow segment emission with the seeded running offset
+      Pin(counted.mapPartitions { it =>
+        var off = bcast.value(org.apache.spark.TaskContext.getPartitionId())
+        it.flatMap { case (id, n) =>
+          val start = off
+          off += n
+          (start / L to (start + n - 1) / L).iterator.map { c =>
+            val from = math.max(0L, c * L - start)
+            val until = math.min(n, (c + 1) * L - start)
+            (c, id, from, until - from)
+          }
+        }
+      }.toDF("chunk_id", "doc_id", "doc_from", "seg_len"))._1
+    }
   }
 
   /** Token-budget corpus selection — the data-selection step a
@@ -1004,9 +972,9 @@ object TextOps {
     * at the first overflow — at scale the narrow work is proportional
     * to the SELECTED prefix, not the corpus.
     *
-    * CONTRACT: like [[packCounted]], the result is returned persisted
-    * (the kept set must never be recomputed against a resampled range
-    * partitioning); the caller unpersists once consumed. */
+    * Like [[packCounted]], the result comes back pinned (see [[Pin]]):
+    * the kept set is never recomputed against a resampled range
+    * partitioning. */
   def selectByBudget(spark: org.apache.spark.sql.SparkSession,
                      df: DataFrame, idCol: String, textCol: String,
                      scoreCol: Column, budgetTokens: Long): DataFrame = {
@@ -1015,43 +983,39 @@ object TextOps {
     // same pre-exchange pin as [[packCounted]]: the range partitioner's
     // sampling pass would otherwise evaluate the (score, tokenCount)
     // projection over the whole corpus a second time
-    val input = df.select(col(idCol).cast("long").as("id"),
-        scoreCol.cast("long").as("score"),
-        tokenCount(col(textCol)).cast("long").as("n"))
-      .filter(col("n") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val counted = input
-      .repartitionByRange(col("score").desc, col("id"))
-      .sortWithinPartitions(col("score").desc, col("id"))
-      .as[(Long, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val partSums = counted.mapPartitions { it =>
-      var s = 0L; it.foreach(s += _._3)
-      Iterator.single((org.apache.spark.TaskContext.getPartitionId(), s))
-    }.collect().sortBy(_._1)
-    input.unpersist(false)
-    val offsets = new Array[Long](partSums.length + 1)
-    partSums.foreach { case (pid, s) => offsets(pid + 1) = s }
-    for (i <- 1 until offsets.length) offsets(i) += offsets(i - 1)
-    val bcast = spark.sparkContext.broadcast(offsets)
-    val b = budgetTokens
-    val kept = counted.mapPartitions { it =>
-      var off = bcast.value(org.apache.spark.TaskContext.getPartitionId())
-      // off >= b: even a 1-token doc would overflow — skip the partition
-      // without reading it; takeWhile stops the scan at first overflow
-      // (n >= 1, so once off reaches b nothing later can fit)
-      if (off >= b) Iterator.empty
-      else it.takeWhile(_ => off < b).flatMap { case (id, sc, n) =>
-        val cum = off + n
-        off = cum
-        if (cum <= b) Iterator.single((id, sc, n, cum)) else Iterator.empty
-      }
-    }.toDF("id", "score", "n_tokens", "cum_tokens")
-    val out = kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    out.count() // materialize before releasing the range-partitioned input
-    counted.unpersist(false)
-    out
+    Pin.scoped { pins =>
+      val (input, _) = pins(df.select(col(idCol).cast("long").as("id"),
+          scoreCol.cast("long").as("score"),
+          tokenCount(col(textCol)).cast("long").as("n"))
+        .filter(col("n") > 0))
+      val counted = pins(input
+        .repartitionByRange(col("score").desc, col("id"))
+        .sortWithinPartitions(col("score").desc, col("id")))._1
+        .as[(Long, Long, Long)]
+      input.unpersist(false)
+      val partSums = counted.mapPartitions { it =>
+        var s = 0L; it.foreach(s += _._3)
+        Iterator.single((org.apache.spark.TaskContext.getPartitionId(), s))
+      }.collect().sortBy(_._1)
+      val offsets = new Array[Long](partSums.length + 1)
+      partSums.foreach { case (pid, s) => offsets(pid + 1) = s }
+      for (i <- 1 until offsets.length) offsets(i) += offsets(i - 1)
+      val bcast = spark.sparkContext.broadcast(offsets)
+      val b = budgetTokens
+      val kept = counted.mapPartitions { it =>
+        var off = bcast.value(org.apache.spark.TaskContext.getPartitionId())
+        // off >= b: even a 1-token doc would overflow — skip the partition
+        // without reading it; takeWhile stops the scan at first overflow
+        // (n >= 1, so once off reaches b nothing later can fit)
+        if (off >= b) Iterator.empty
+        else it.takeWhile(_ => off < b).flatMap { case (id, sc, n) =>
+          val cum = off + n
+          off = cum
+          if (cum <= b) Iterator.single((id, sc, n, cum)) else Iterator.empty
+        }
+      }.toDF("id", "score", "n_tokens", "cum_tokens")
+      Pin(kept)._1
+    }
   }
 
   /** Deterministic corpus shuffle + shard assignment — the writer step
@@ -1175,7 +1139,8 @@ object TextOps {
     * → 12 bits (engine-portable: both engines agree on md5), and λ(b) is
     * floored to integer micros before any per-doc summation, so sums are
     * integer-exact regardless of aggregation order. Output
-    * (doc_id, n_feats, w_milli = floor(Σ n_f·λmicro(f) / n_feats / 1000)).
+    * (doc_id, n_feats, w_milli = floor(Σ n_f·λmicro(f) / n_feats / 1000)),
+    * pinned: see [[Pin]].
     */
   def dsirWeights(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
                   idCol: String, textCol: String, targetPred: Column,
@@ -1184,50 +1149,46 @@ object TextOps {
     require(buckets == 4096, "bucket count is pinned by the 3-hex-char hash")
     val docs = df.select(col(idCol).cast("long").as("id"),
       col(textCol).as("t"), targetPred.as("is_target"))
-    val feats = docs.as[(Long, String, Boolean)]
-      .flatMap { case (id, t, tgt) =>
-        val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-        val unis = toks.iterator.map(w => (id, tgt, w))
-        val bis = (0 until toks.length - 1).iterator
-          .map(i => (id, tgt, toks(i) + " " + toks(i + 1)))
-        unis ++ bis
-      }
-      .toDF("id", "is_target", "f")
-      // 12-bit bucket from the first 3 hex chars of md5 — portable to any
-      // engine with md5 + instr (no hex-parse builtin needed)
-      .withColumn("b", expr(
-        "((instr('0123456789abcdef', substr(md5(f), 1, 1)) - 1) * 256 + " +
-        " (instr('0123456789abcdef', substr(md5(f), 2, 1)) - 1) * 16 + " +
-        " (instr('0123456789abcdef', substr(md5(f), 3, 1)) - 1))"))
-      .select(col("id"), col("is_target"), col("b"))
-      // single-pass contract (the round-4 recompute fix): the feature
-      // flatMap runs once — persisted, materialized by the totals collect
-      // below (one leaf stage), then read from cache by both the λ model
-      // aggregate and the per-doc aggregate; released before return
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // both distributions in ONE map-side-combined pass (B-row result)
-    val counts = feats.groupBy("b").agg(count(lit(1)).as("rc"),
-      sum(when(col("is_target"), 1L).otherwise(0L)).as("tc"))
-    val Array(totals, ttotals) = counts
-      .agg(sum(col("rc")), sum(col("tc"))).collect()(0)
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    val lam = counts
-      .select(col("b"), floor(
-        (log((col("tc") + lit(1.0)) / lit((ttotals + buckets).toDouble)) -
-         log((col("rc") + lit(1.0)) / lit((totals + buckets).toDouble)))
-          * lit(1e6)).cast("long").as("lmicro"))
-    val res = feats.groupBy("id", "b").agg(count(lit(1)).as("n"))
-      .join(broadcast(lam), Seq("b"))
-      .groupBy("id")
-      .agg(sum(col("n")).as("n_feats"),
-        sum(col("n") * col("lmicro")).as("smicro"))
-      .select(col("id").as(idCol), col("n_feats"),
-        floor(col("smicro") / col("n_feats") / 1000.0).cast("long")
-          .as("w_milli"))
-    res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      .count() // pin the per-doc result before releasing the feature cache
-    feats.unpersist(false)
-    res
+    Pin.scoped { pins =>
+      val (feats, _) = pins(docs.as[(Long, String, Boolean)]
+        .flatMap { case (id, t, tgt) =>
+          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
+          val unis = toks.iterator.map(w => (id, tgt, w))
+          val bis = (0 until toks.length - 1).iterator
+            .map(i => (id, tgt, toks(i) + " " + toks(i + 1)))
+          unis ++ bis
+        }
+        .toDF("id", "is_target", "f")
+        // 12-bit bucket from the first 3 hex chars of md5 — portable to any
+        // engine with md5 + instr (no hex-parse builtin needed)
+        .withColumn("b", expr(
+          "((instr('0123456789abcdef', substr(md5(f), 1, 1)) - 1) * 256 + " +
+          " (instr('0123456789abcdef', substr(md5(f), 2, 1)) - 1) * 16 + " +
+          " (instr('0123456789abcdef', substr(md5(f), 3, 1)) - 1))"))
+        // single-pass contract (the round-4 recompute fix): the feature
+        // flatMap runs once, pinned, then read from cache by both the λ
+        // model aggregate and the per-doc aggregate
+        .select(col("id"), col("is_target"), col("b")))
+      // both distributions in ONE map-side-combined pass (B-row result)
+      val counts = feats.groupBy("b").agg(count(lit(1)).as("rc"),
+        sum(when(col("is_target"), 1L).otherwise(0L)).as("tc"))
+      val Array(totals, ttotals) = counts
+        .agg(sum(col("rc")), sum(col("tc"))).collect()(0)
+        .toSeq.map(_.asInstanceOf[Long]).toArray
+      val lam = counts
+        .select(col("b"), floor(
+          (log((col("tc") + lit(1.0)) / lit((ttotals + buckets).toDouble)) -
+           log((col("rc") + lit(1.0)) / lit((totals + buckets).toDouble)))
+            * lit(1e6)).cast("long").as("lmicro"))
+      Pin(feats.groupBy("id", "b").agg(count(lit(1)).as("n"))
+        .join(broadcast(lam), Seq("b"))
+        .groupBy("id")
+        .agg(sum(col("n")).as("n_feats"),
+          sum(col("n") * col("lmicro")).as("smicro"))
+        .select(col("id").as(idCol), col("n_feats"),
+          floor(col("smicro") / col("n_feats") / 1000.0).cast("long")
+            .as("w_milli")))._1
+    }
   }
 
   /** Benchmark decontamination (the GPT-3-style 13-gram overlap rule,
@@ -1453,38 +1414,17 @@ object TextOps {
     * optimizer re-evaluates the opaque quality-gate mapPartitions and the
     * gram explode several times per action (exchange reuse cannot
     * deduplicate subtrees that sit above different parents). Instead the
-    * projected corpus is pinned for the duration of the call (released
-    * before return) and each verdict materializes as a SMALL persisted
-    * id-only frame. The returned frame is the LAZY final composition —
-    * one fresh corpus pass + four broadcast semi-joins against the cached
-    * verdict id-sets — so the caller's action never re-runs a stage. The
-    * verdict-id caches ride the returned plan (8 bytes per surviving
-    * doc); callers that sweep `getPersistentRDDs` (Verify, the Bench
-    * query loop) release them.
-    *
-    * `cutLineage` (r6): multi-action COMPOSED callers (the returned frame
-    * feeds further operators that each run several actions) should pass
-    * true — the final verdict is then materialized through an eager-by-
-    * count localCheckpoint, so the returned plan is `source scan -> one
-    * broadcast semi-join against a one-line LogicalRDD` instead of the
-    * recursively nested verdict lineage. JFR on the driver main thread
-    * showed ~45% of a composed caller's driver CPU going to building and
-    * redaction-scanning the physical-plan description string (the
-    * SQL-listener event, emitted per action even with the UI disabled) of
-    * that nested lineage; with the cut, t_web_pipeline dropped 10.7 ->
-    * 5.3-7.3 s (interleaved A/B). The internal stage verdicts also
-    * release PROMPTLY in this mode (nothing downstream references them).
-    * Results are bit-identical — the checkpoint stores the same id rows;
-    * the broadcast hint applies only below a measured 1M-row bound, so a
-    * 100 TB-scale verdict still takes the shuffle path. Default false =
-    * the exact pre-existing pin shape (single-action callers pay one
-    * plan print, and the extra checkpoint job is pure overhead there).*/
+    * projected corpus is pinned for the duration of the call and each
+    * verdict is pinned as a small id-only frame; the cache reports each
+    * verdict's materialized size, so the planner broadcasts the small
+    * ones on its own. The result comes back pinned (see [[Pin]]); every
+    * internal pin, the four verdicts included, is released before
+    * return. */
   def curateCorpus(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
                    idCol: String, textCol: String, stratumCol: String,
                    sourceCol: String, ordCol: String, bench: DataFrame,
                    cap: Int, rates: Map[String, Double],
-                   defaultRate: Double, salt: String,
-                   cutLineage: Boolean = false): DataFrame = {
+                   defaultRate: Double, salt: String): DataFrame = {
     val docs = df.select(col(idCol).cast("long").as("id"),
       col(textCol).as("text"), col(stratumCol).as("stratum"),
       col(sourceCol).as("source"), col(ordCol).as("ord"))
@@ -1496,79 +1436,30 @@ object TextOps {
     // the block manager
     val inputCached =
       df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val base =
-      if (inputCached) docs
-      else docs
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // Stage-pin strategy (r6, second iteration — both variants measured):
-    // the three INTERNAL verdicts pin with persist+count exactly as
-    // before (one job each; the cached frame exposes its ACTUAL size, so
-    // the planner broadcasts small verdicts on its own), and they are
-    // released promptly once the final verdict materializes. Only the
-    // FINAL verdict (`kept`, below) is lineage-cut with a localCheckpoint:
-    // that is the only frame the RETURNED composition references, and JFR
-    // on the driver main thread showed ~45% of a composed caller's driver
-    // CPU going to building + redaction-scanning the physical-plan
-    // description string (SQL-listener event, paid per action even with
-    // the UI disabled) of the recursively nested InMemoryRelation verdict
-    // lineage. Checkpointing ALL four verdicts was measured WORSE on the
-    // naked call (curate_tile 2.8 -> 4.5 s): each localCheckpoint pays an
-    // extra fix-up job at this host's ~0.25 s/job scheduling floor, and
-    // the internal verdicts' plans are only ever printed once per call.
-    def pinIds(v: DataFrame): DataFrame = {
-      val p = v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      p.count()
-      p
+    Pin.scoped { pins =>
+      val base = if (inputCached) docs else pins(docs)._1
+      def pinIds(v: DataFrame): DataFrame = pins(v.select("id"))._1
+      // 1. quality gate (narrow; verdict ids only)
+      val quality = pinIds(filterGopher(spark, base, "id", "text")
+        .filter(col("keep")))
+      val d1 = base.join(quality, Seq("id"), "left_semi")
+      // 2. exact dedup: min-id representative per identical text
+      val reps = pinIds(graft.ops.Dedup.exact(d1, "id", "text"))
+      val d2 = d1.join(reps, Seq("id"), "left_semi")
+      // 3. benchmark decontamination (13-gram GPT-3 rule); bench is any
+      // two-column (id, text)-shaped frame — rename to the internal names
+      val benchN = bench.toDF("id", "text")
+      val clean = pinIds(decontaminate(spark, d2, benchN, "id", "text", 13)
+        .filter(!col("contaminated")))
+      val d3 = d2.join(clean, Seq("id"), "left_semi")
+      // 4. per-source quota — `kept` ids are a subset of every prior verdict
+      val kept = pinIds(capPerSource(d3, "id", "source", "ord", cap))
+      val d4 = base.join(kept, Seq("id"), "left_semi")
+      // 5. deterministic stratified mixing
+      Pin(stratifiedSample(d4, "id", "stratum", rates, defaultRate, salt)
+        .select(col("id"), col("stratum"), col("source"),
+          tokenCount(col("text")).cast("long").as("n_tokens")))._1
     }
-    // 1. quality gate (narrow; verdict ids only)
-    val quality = pinIds(filterGopher(spark, base, "id", "text")
-      .filter(col("keep")).select("id"))
-    val d1 = base.join(quality, Seq("id"), "left_semi")
-    // 2. exact dedup: min-id representative per identical text
-    val reps = pinIds(graft.ops.Dedup.exact(d1, "id", "text").select("id"))
-    val d2 = d1.join(reps, Seq("id"), "left_semi")
-    // 3. benchmark decontamination (13-gram GPT-3 rule); bench is any
-    // two-column (id, text)-shaped frame — rename to the internal names
-    val benchN = bench.toDF("id", "text")
-    val clean = pinIds(decontaminate(spark, d2, benchN, "id", "text", 13)
-      .filter(!col("contaminated")).select("id"))
-    val d3 = d2.join(clean, Seq("id"), "left_semi")
-    // 4. per-source quota — the FINAL verdict. With cutLineage: a LAZY
-    // localCheckpoint whose count() materializes the checkpoint blocks
-    // AND returns the row count in one job, collapsing the returned plan
-    // to `source scan -> one semi-join against a one-line LogicalRDD`.
-    // The cached frame used to expose its actual size to the planner; a
-    // LogicalRDD only carries the origin plan's ESTIMATE (corpus-sized
-    // here, since the verdict lineage is an opaque mapPartitions gate) —
-    // measured un-hinted at tile 40, the final semi-join degraded to
-    // sort-merge and shuffled the corpus text, so the explicit broadcast
-    // hint reproduces the old adaptive decision below a measured 1M-row
-    // bound (~the default 10 MB auto-broadcast threshold for a long-keyed
-    // HashedRelation); a 100 TB-scale verdict still shuffles as before.
-    val keptV = capPerSource(d3, "id", "source", "ord", cap).select("id")
-    val kept =
-      if (cutLineage) {
-        val maxBroadcastIds = 1000000L
-        val cp = keptV.localCheckpoint(false)
-        if (cp.count() <= maxBroadcastIds) broadcast(cp) else cp
-      } else pinIds(keptV)
-    // every verdict is materialized — release the corpus pin. With
-    // cutLineage the internal stage verdicts release PROMPTLY too (the
-    // returned plan references only the checkpointed `kept`); otherwise
-    // `kept` ids are by construction a subset of every prior verdict, the
-    // returned plan carries only the cached-id semi-joins, and the
-    // verdict caches are swept by the callers (getPersistentRDDs).
-    if (!inputCached) base.unpersist(false)
-    if (cutLineage) {
-      quality.unpersist(false)
-      reps.unpersist(false)
-      clean.unpersist(false)
-    }
-    val d4 = docs.join(kept, Seq("id"), "left_semi")
-    // 5. deterministic stratified mixing
-    stratifiedSample(d4, "id", "stratum", rates, defaultRate, salt)
-      .select(col("id"), col("stratum"), col("source"),
-        tokenCount(col("text")).cast("long").as("n_tokens"))
   }
 
   /** Corpus text normalization: Unicode NFC composition (via the native

@@ -1109,38 +1109,42 @@ class OpsSpec extends AnyFunSuite {
     assert(out.subsetOf((1L to 30L).toSet))
   }
 
-  test("curateCorpus: cutLineage=true is row-identical and cuts the plan") {
-    // same fixture shape as the verdict test above; the lineage-cut path
-    // (r6: final verdict via lazy localCheckpoint + measured broadcast
-    // hint) must keep every surviving row identical to the default path,
-    // and the returned plan must reference the verdict as a lineage-free
-    // ExistingRDD scan instead of the nested verdict subtree
+  test("curateCorpus: returns exactly the expected survivors as a one-node pinned frame") {
+    // the verdict test's fixture shape, with the benchmark text planted in
+    // doc 2 only (every body shares 13-grams with every other, so a whole
+    // body as benchmark would contaminate them all). Expected survivors by
+    // the stage rules: 31 fails the quality gate, 32 is an exact dup of 1,
+    // 2 is contaminated; the cap then keeps the 3 highest n_chars
+    // (300 - id) per source, and rate 1.0 keeps every "en" doc
+    val planted = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar"
     val good = (1 to 30).map { i =>
       (i.toLong,
         s"the quick brown fox number $i jumps over the lazy dog and then " +
         "walks on to the river where it sits by the water for a while " +
         "and it is a calm day in the field as the sun sets over the hill " +
-        "and the birds are in the trees by the old stone wall tonight",
+        "and the birds are in the trees by the old stone wall tonight" +
+        (if (i == 2) s" $planted" else ""),
         "en", if (i % 2 == 0) "srcA" else "srcB", 300L - i)
     }
     val docs = (good ++ Seq((31L, "too short", "en", "srcA", 5L),
         (32L, good(0)._2, "en", "srcB", 1L)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val bench = Seq((99L, good(1)._2)).toDF("id", "text")
-    def run(cut: Boolean) =
-      TextOps.curateCorpus(spark, docs, "doc_id", "text", "lang",
-        "source", "n_chars", bench, cap = 3,
-        rates = Map("en" -> 1.0), defaultRate = 0.0, salt = "s",
-        cutLineage = cut)
-    val cut = run(true)
-    val plain = run(false).collect().map(r =>
+    val bench = Seq((99L, planted)).toDF("id", "text")
+    val out = TextOps.curateCorpus(spark, docs, "doc_id", "text", "lang",
+      "source", "n_chars", bench, cap = 3,
+      rates = Map("en" -> 1.0), defaultRate = 0.0, salt = "s")
+    assert(out.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      out.queryExecution.analyzed.treeString)
+    val expected = good.filter { case (id, _, _, _, _) =>
+        Set(4L, 6L, 8L, 1L, 3L, 5L).contains(id) }
+      .map { case (id, text, lang, src, _) =>
+        (id, lang, src, text.split("\\s+").count(_.nonEmpty).toLong) }.toSet
+    val got = out.collect().map(r =>
       (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    assert(cut.queryExecution.executedPlan.toString.contains("ExistingRDD"),
-      "lineage-cut verdict should surface as an ExistingRDD scan")
-    val cutRows = cut.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    assert(cutRows == plain)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    assert(got == expected)
+    out.unpersist(false)
   }
 
   test("corpusDiff emits churn only, with exact statuses") {

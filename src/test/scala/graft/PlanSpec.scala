@@ -20,6 +20,34 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Runs `body` and returns its result with the physical plans (AQE's
+    * final plans) of every SQL execution it ran. A pinning operator's
+    * returned plan is one node, so its shape lives in these plans. */
+  private def executedPlans[T](body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toVector)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The returned plan is a single `Scan ExistingRDD` (a pinned frame). */
+  private def assertOneNode(df: org.apache.spark.sql.DataFrame): Unit =
+    assert(df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      df.queryExecution.analyzed.treeString)
+
   test("t_token_count prunes documents to (doc_id, text) — lang/source/n_chars never read") {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val df = SparkEntry.queries("t_token_count")(spark, sfDir)
@@ -144,11 +172,16 @@ class PlanSpec extends AnyFunSuite {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("id"), col("text")).limit(200)
-    val out = graft.ops.Dedup.dedupCorpus(spark, docs, "id", "text", 0.8)
-    val plan = planOf(out)
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+    val (out, plans) = executedPlans(
+      graft.ops.Dedup.dedupCorpus(spark, docs, "id", "text", 0.8))
+    assertOneNode(out)
+    assert(plans.nonEmpty)
+    plans.foreach { plan =>
+      assert(!plan.contains("CartesianProduct"), plan.take(2000))
+      assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+    }
     assert(out.count() > 0)
+    out.unpersist(false)
   }
 
   test("vocab is the classic word-count exchange: partial agg below the token shuffle, top-k via TakeOrdered") {
@@ -213,16 +246,19 @@ class PlanSpec extends AnyFunSuite {
 
   test("bm25: query terms broadcast, token-count exchange has partial agg below it") {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
-    val df = graft.ops.TextOps.bm25TopK(spark,
+    val (df, plans) = executedPlans(graft.ops.TextOps.bm25TopK(spark,
       spark.read.parquet(s"$sfDir/documents.parquet"),
-      "doc_id", "text", Seq("scan", "merge"), 10)
-    val plan = planOf(df)
-    assert(plan.contains("BroadcastHashJoin"), plan.take(1500))
-    val lines = plan.linesIterator.toVector
-    val exchangeIdx = lines.indexWhere(_.contains("Exchange hashpartitioning"))
-    assert(exchangeIdx >= 0 &&
-      lines.drop(exchangeIdx).exists(_.contains("HashAggregate")),
-      "no partial aggregate below the token-count exchange")
+      "doc_id", "text", Seq("scan", "merge"), 10))
+    assertOneNode(df)
+    assert(plans.exists(_.contains("BroadcastHashJoin")),
+      plans.mkString("\n").take(1500))
+    assert(plans.exists { plan =>
+      val lines = plan.linesIterator.toVector
+      val exchangeIdx = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+      exchangeIdx >= 0 &&
+        lines.drop(exchangeIdx).exists(_.contains("HashAggregate"))
+    }, "no partial aggregate below the token-count exchange")
+    df.unpersist(false)
   }
 
   test("x_* renderPending stays a single narrow stage over the scan (no shuffle before extraction)") {
@@ -236,13 +272,17 @@ class PlanSpec extends AnyFunSuite {
 
   test("packSequences: one range exchange, no global-order window, text pruned from the exchange") {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
-    val segs = graft.ops.TextOps.packSequences(spark,
-      spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text", 512)
-    val plan = planOf(segs)
+    val (segs, plans) = executedPlans(graft.ops.TextOps.packSequences(spark,
+      spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text", 512))
+    assertOneNode(segs)
+    assert(plans.exists(_.contains("rangepartitioning")),
+      plans.mkString("\n").take(2000))
     // the whole point: the naive sum(n) OVER (ORDER BY id) would appear
     // as a Window over a SinglePartition exchange — must not exist
-    assert(!plan.contains("Window"), plan.take(2000))
-    assert(!plan.contains("SinglePartition"), plan.take(2000))
+    plans.foreach { plan =>
+      assert(!plan.contains("Window"), plan.take(2000))
+      assert(!plan.contains("SinglePartition"), plan.take(2000))
+    }
     segs.unpersist(false)
   }
 
@@ -251,16 +291,21 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bench = Seq((1L, "zz yy xx")).toDF("id", "text")
-    val out = graft.ops.TextOps.curateCorpus(spark, docs, "doc_id", "text",
-      "lang", "source", "n_chars", bench, 10,
-      Map("en" -> 0.5), 0.1, "s")
-    out.collect() // AQE finalizes join strategies at runtime
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-    // the id-only verdict sides are small: every semi join must broadcast
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      plan.take(2000))
+    // AQE finalizes join strategies at runtime: the captured plans are
+    // the final ones
+    val (out, plans) = executedPlans(graft.ops.TextOps.curateCorpus(spark,
+      docs, "doc_id", "text", "lang", "source", "n_chars", bench, 10,
+      Map("en" -> 0.5), 0.1, "s"))
+    assertOneNode(out)
+    plans.foreach { plan =>
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+    }
+    // the id-only verdict sides are small: the semi joins broadcast with
+    // no hint, because each pinned verdict reports its materialized size
+    assert(plans.exists(p => p.contains("BroadcastHashJoin") && p.contains("LeftSemi")),
+      plans.mkString("\n").take(2000))
+    out.unpersist(false)
   }
 
   test("minePairs: zero shuffle — the caption argmin never leaves the row") {
@@ -291,14 +336,18 @@ class PlanSpec extends AnyFunSuite {
 
   test("selectByBudget: range exchange only — no global-order window") {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
-    val out = graft.ops.TextOps.selectByBudget(spark,
+    val (out, plans) = executedPlans(graft.ops.TextOps.selectByBudget(spark,
       spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text",
-      length(col("text")).cast("long"), budgetTokens = 5000L)
-    val plan = planOf(out)
+      length(col("text")).cast("long"), budgetTokens = 5000L))
+    assertOneNode(out)
+    assert(plans.exists(_.contains("rangepartitioning")),
+      plans.mkString("\n").take(2000))
     // the naive sum(n) OVER (ORDER BY score DESC, id) would be a Window
     // over a SinglePartition exchange — the 100 TB non-starter
-    assert(!plan.contains("Window"), plan.take(2000))
-    assert(!plan.contains("SinglePartition"), plan.take(2000))
+    plans.foreach { plan =>
+      assert(!plan.contains("Window"), plan.take(2000))
+      assert(!plan.contains("SinglePartition"), plan.take(2000))
+    }
     out.unpersist(false)
   }
 }
