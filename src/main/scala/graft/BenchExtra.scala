@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   *   dedup_stages [tile]   — per-stage walls of Dedup.dedupCorpus over the
   *                           Bench tile corpus (exact collapse / signature
   *                           pass / banded pairs / verify / CC / final)
-  *   skewcap [rows]        — capPerSource plain window vs two-phase salted
-  *                           top-N on a corpus where ONE source owns ~70%
-  *                           of rows (the hot-crawl-domain shape)
   *   noop q1,q2,...        — declared queries timed with the noop sink
   *                           (computes every column, no count() pruning)
   */
@@ -254,27 +251,6 @@ object BenchExtra {
         time("count 1")(segs.count())
         time("count 2")(segs.count())
         time("count 3")(segs.count())
-
-      case "skewcap" =>
-        val n = if (args.length > 1) args(1).toLong else 2000000L
-        // one hot source owns ~70% of rows; 1000 cold sources share the rest
-        val docs = spark.range(n).select(col("id"),
-          when(pmod(col("id"), lit(10)) < 7, lit("hot.example"))
-            .otherwise(concat(lit("cold"), pmod(col("id"), lit(1000))))
-            .as("source"),
-          pmod(col("id") * 2654435761L, lit(1000003L)).as("ord"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        docs.count()
-        for (r <- 1 to 3) {
-          time(s"plain window (run $r)") {
-            graft.ops.TextOps.capPerSource(docs, "id", "source", "ord", 1000)
-              .count()
-          }
-          time(s"two-phase salted (run $r)") {
-            graft.ops.TextOps.capPerSource(docs, "id", "source", "ord", 1000,
-              hotSourceThreshold = 100000L).count()
-          }
-        }
 
       case "noop" =>
         val names = args(1).split(",").toSeq

@@ -110,8 +110,7 @@ object Dedup {
 
   /** k permutation approximations via (a*x+b) mod p over the shingle hash. */
   final case class MinHashParams(numHashes: Int = 128, bands: Int = 64,
-                                 shingleSize: Int = 3,
-                                 scheme: String = "kxh") {
+                                 shingleSize: Int = 3) {
     def rows: Int = numHashes / bands
   }
 
@@ -159,53 +158,6 @@ object Dedup {
         if (v < sig(i)) sig(i) = v
         i += 1
       }
-    }
-    sig
-  }
-
-  /** One-permutation minhash (Li, Owen & Zhang, "One Permutation Hashing",
-    * NIPS 2012) with rotation densification (Shrivastava & Li, ICML 2014):
-    * each shingle hash lands in ONE of k bins (bin = x mod k, value =
-    * x / k, so within-bin ordering equals full ordering), empty bins
-    * borrow cyclically from the next non-empty bin offset by a constant
-    * per step. O(|shingles| + k) per document instead of the k×hash
-    * scheme's O(|shingles| · k) — at web scale the signature pass is the
-    * dominant near-dup cost — in its design regime |shingles| >> k.
-    * Same E[collision] = Jaccard per component, so banding and the
-    * sig8 verifier are unchanged.
-    *
-    * Regime caveat (measured): with |shingles| ≈ k (short documents,
-    * e.g. this corpus's ~150 shingles into 128 bins) ~1/3 of bins are
-    * empty and densified runs make sparse documents' signatures nearly
-    * collinear — band-candidate volume exploded 3-4x on the bench corpus
-    * (t_minhash_lsh 3.2 s → 10.8 s) with recall unchanged (60/60 oracle
-    * still green). Hence scheme="kxh" stays the default; switch to "oph"
-    * for long-document corpora where shingles dominate k. */
-  def minhashSignatureOph(shingleHashes: IterableOnce[Long], k: Int): Array[Long] = {
-    val sig = Array.fill(k)(Long.MaxValue)
-    for (x0 <- shingleHashes.iterator) {
-      val x = (x0 & 0x7fffffffffffffffL) % P
-      val bin = (x % k).toInt
-      val v = x / k
-      if (v < sig(bin)) sig(bin) = v
-    }
-    // rotation densification: deterministic in the non-empty bins, so two
-    // documents sharing those bins densify identically
-    var j = 0
-    while (j < k) {
-      if (sig(j) == Long.MaxValue) {
-        var d = 1
-        while (d < k && sig((j + d) % k) == Long.MaxValue) d += 1
-        // mask the offset sum back into the non-negative range genuine
-        // minima occupy — the golden-ratio step overflows signed Long,
-        // and unmasked negative values would distort sig8 match-fraction
-        // estimates for sparse documents (band hashing itself is
-        // indifferent: densification is deterministic and shared)
-        if (d < k) sig(j) =
-          (sig((j + d) % k) + d * 0x9e3779b97f4a7c15L) & 0x7fffffffffffffffL
-        else sig(j) = 0L // no shingles at all (callers filter this case)
-      }
-      j += 1
     }
     sig
   }
@@ -267,13 +219,10 @@ object Dedup {
     // full signature per doc (narrow stage); bands derive from it below.
     // A function VAL (not a local def): defs lift into the enclosing
     // method's environment and drag the SparkSession into the closure.
-    val scheme = params.scheme
     val sigOf: String => Array[Long] = { text =>
       val toks = graft.core.TextUtil.tokens(text).toIndexedSeq
       val sh = TextOps.shingles(toks, shingleN)
       if (sh.isEmpty) null
-      else if (scheme == "oph")
-        minhashSignatureOph(sh.iterator.map(hashToken), k)
       else minhashSignature(sh.iterator.map(hashToken), k)
     }
     val sigRows = docs.mapPartitions(_.flatMap { case (id, text) =>
@@ -612,7 +561,7 @@ object Dedup {
     *  - the convergence check rides the label job itself: the previous
     *    label is carried through the same aggregation and an accumulator
     *    counts changes during the eager-checkpoint materialization —
-    *    exactly ONE Spark job per iteration (asserted in PlanSpec), not
+    *    exactly ONE Spark job per iteration (asserted in OpsSpec), not
     *    label-job + change-count-job.
     */
   def connectedComponents(spark: SparkSession, links: DataFrame,

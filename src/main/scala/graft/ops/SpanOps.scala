@@ -48,24 +48,31 @@ object SpanOps {
     * aggregation: a distinct-based df took 9-13 s at 2 cores on a 4.8M-
     * span tile, the pre-deduped count 4.5-5 s). Then one `left_anti`
     * join of the exploded spans against the (small) over-threshold hash
-    * set. Media spans get a null join key, which an equi-join never
-    * matches, so they are structurally un-droppable. */
+    * set. Media and null-text spans get a null join key, which an
+    * equi-join never matches, so they are structurally un-droppable
+    * (`xxhash64(null)` is the seed 42, not SQL null, so null text is
+    * excluded explicitly on both sides). */
   def stripBoilerplate(spark: SparkSession, docs: DataFrame, minDocs: Int = 5,
                        idCol: String = "doc_id",
                        spansCol: String = "spans"): DataFrame = {
     val ex = explodeSpans(docs, idCol, spansCol)
     val perDocHashes = docs.select(array_distinct(transform(
-      filter(col(spansCol), sp => sp.getField("kind") === "text"),
+      filter(col(spansCol),
+        sp => textWithBody(sp.getField("kind"), sp.getField("text"))),
       sp => xxhash64(sp.getField("text")))).as("hs"))
     val boiler = perDocHashes.select(explode(col("hs")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("ddf"))
       .filter(col("ddf") >= minDocs)
       .select("h")
     ex.withColumn("h",
-        when(col("kind") === "text", xxhash64(col("text"))))
+        when(textWithBody(col("kind"), col("text")), xxhash64(col("text"))))
       .join(boiler, Seq("h"), "left_anti")
       .drop("h")
   }
+
+  /** A boilerplate candidate: a text span whose text is not null. */
+  private def textWithBody(kind: Column, text: Column): Column =
+    kind === "text" && text.isNotNull
 
   /** [[stripBoilerplate]] preserving the NESTED (doc_id, spans[]) shape —
     * and, when the boilerplate set is broadcastable (it is, by
@@ -127,10 +134,9 @@ object SpanOps {
     Pin.scoped { pins =>
       val base = if (inputCached) projected else pins(projected)._1
       // null-text spans are never boilerplate candidates and never strip
-      // (parity with the exploded stripBoilerplate, where xxhash64(null)
-      // is SQL-null and drops out of both the df count and the match)
+      // (the exploded stripBoilerplate excludes them the same way)
       val isTextWithBody = (sp: Column) =>
-        sp.getField("kind") === "text" && sp.getField("text").isNotNull
+        textWithBody(sp.getField("kind"), sp.getField("text"))
       val hashes = base.select(explode(array_distinct(transform(
         filter(col(spansCol), isTextWithBody),
         sp => xxhash64(sp.getField("text"))))).as("h"))

@@ -37,12 +37,6 @@ object TextOps {
 
   def tokenCount(text: Column): Column = size(tokenize(text))
 
-  /** Subword-ish count: splits on punctuation boundaries too (a cheap BPE
-    * proxy: alpha runs, digit runs, single symbols). */
-  def subtokenCount(text: Column): Column =
-    size(filter(split(text, """(?=[^\p{L}\p{N}])|(?<=[^\p{L}\p{N}])"""),
-      t => length(trim(t)) > 0))
-
   /** Quality signals (length / punctuation / stopword ratios — the usual
     * web-corpus filters, cf. C4/Gopher rules). Integer-valued outputs so
     * the DuckDB oracle can reproduce them exactly. */
@@ -1264,54 +1258,15 @@ object TextOps {
     * (id, source, rk) for the kept rows.
     *
     * Scale shape: one hash exchange on the source + per-partition sort —
-    * the standard window top-N. A pathologically hot source (one crawl
-    * domain owning a visible fraction of the corpus) serializes the
-    * window into ONE task — AQE skew handling does not split windows —
-    * so `hotSourceThreshold > 0` enables the two-phase salted top-N
-    * (guide §2.5 skew treatment): per-source counts identify sources
-    * over the threshold; their rows salt into `pmod(xxhash64(id), S)`
-    * buckets, a per-(source, salt) local top-`cap` window runs in
-    * parallel, and the exact window then ranks only the ≤ S·cap
-    * survivors per hot source. Results are IDENTICAL to the plain window
-    * (top-N is a monotone filter: every row with global rank ≤ cap has
-    * local rank ≤ cap in its salt bucket), so the flag is pure
-    * performance. Default −1 = plain window (the threshold pass costs an
-    * extra count aggregation, not worth it on balanced sources). */
+    * the standard window top-N. */
   def capPerSource(df: DataFrame, idCol: String, sourceCol: String,
-                   orderCol: String, cap: Int,
-                   hotSourceThreshold: Long = -1L): DataFrame = {
+                   orderCol: String, cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(sourceCol))
       .orderBy(col(orderCol).desc, col(idCol).asc)
-    def plain(in: DataFrame): DataFrame =
-      in.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= cap)
-        .select(col(idCol), col(sourceCol), col("rk"))
-    if (hotSourceThreshold <= 0) plain(df)
-    else {
-      val spark = df.sparkSession
-      // sources over the threshold: bounded by corpus_rows/threshold, so
-      // the collect is enforceably small for any meaningful threshold
-      val hot = df.groupBy(col(sourceCol)).agg(count(lit(1)).as("_cnt"))
-        .filter(col("_cnt") > hotSourceThreshold)
-        .select(col(sourceCol)).collect().map(r => String.valueOf(r.get(0)))
-      if (hot.isEmpty) plain(df)
-      else {
-        // coalesce: a null source must take the cold path (a bare isin
-        // yields null, and filter(!null) would DROP the row)
-        val isHot = coalesce(
-          col(sourceCol).cast("string").isin(hot.toIndexedSeq: _*), lit(false))
-        val salts = math.max(32, spark.sparkContext.defaultParallelism * 2)
-        val wSalt = Window.partitionBy(col(sourceCol), col("_salt"))
-          .orderBy(col(orderCol).desc, col(idCol).asc)
-        val hotSurvivors = df.filter(isHot)
-          .withColumn("_salt", pmod(xxhash64(col(idCol)), lit(salts)))
-          .withColumn("_lrk", row_number().over(wSalt))
-          .filter(col("_lrk") <= cap)
-          .drop("_salt", "_lrk")
-        plain(df.filter(!isHot)).unionByName(plain(hotSurvivors))
-      }
-    }
+    df.withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= cap)
+      .select(col(idCol), col(sourceCol), col("rk"))
   }
 
   /** C4 cleaning rules (Raffel et al. 2020 §2.2, public): a line is kept

@@ -22,10 +22,11 @@ import org.apache.spark.storage.StorageLevel
   *   - partition count is derived from total payload bytes so the long-tail
   *     document-size distribution cannot concentrate bytes in few tasks
   *     (the skew treatment mandated by the north rule);
-  *   - each iteration is materialized (persist + count) — at production
-  *     scale this is the Iceberg snapshot commit per depth level, making a
-  *     killed job resumable from the last committed level (lineage rows
-  *     carry partition id + status for `left_anti` recovery).
+  *   - each iteration is materialized once, by one level step shared by
+  *     [[Pipeline.run]] and [[Pipeline.runDurable]] — in the durable loop
+  *     it is the snapshot commit per depth level, making a killed job
+  *     resumable from the last committed level (lineage rows carry
+  *     partition id + status for `left_anti` recovery).
   */
 object Pipeline {
 
@@ -35,20 +36,39 @@ object Pipeline {
                           scratchDir: String =
                             s"/tmp/graft-ckpt-${java.util.UUID.randomUUID()}")
 
+  /** @param levels the extracted depth levels the outputs read. */
   final case class Output(spans: Dataset[SpanOut],
                           meta: Dataset[DocMeta],
                           lineage: Dataset[LineageRow],
-                          checkpointed: Seq[Dataset[DocResult]]) {
-    /** Release the per-depth checkpoint blocks once the outputs have been
+                          levels: Seq[Level]) {
+    /** Release every level's cached rows once the outputs have been
       * consumed (written/aggregated). Long-lived sessions that run many
-      * pipelines must call this or the block manager fills up. A
-      * `localCheckpoint`ed Dataset is not in the cache manager, so
-      * `Dataset.unpersist` would not free it: the pinned blocks belong to
-      * the RDD its plan scans. */
-    def cleanup(): Unit =
-      checkpointed.foreach(_.queryExecution.logical.collect {
-        case r: LogicalRDD => r.rdd
-      }.foreach(_.unpersist(false)))
+      * pipelines must call this or the block manager fills up. */
+    def cleanup(): Unit = levels.foreach(_.release())
+  }
+
+  /** One extracted depth level: each row is `(extraction task partition,
+    * result)`, computed once and cut from its lineage as a row-serialized
+    * `localCheckpoint` (MEMORY_AND_DISK_SER), not a [[graft.ops.Pin]],
+    * because caching these byte-heavy rows through the columnar cache
+    * manager made [[run]] 10-15% slower. The counts are measured by
+    * accumulators on the one job that materializes the level.
+    *
+    * @param cut the checkpointed RDD behind `rows`, released by [[release]] */
+  final class Level private[Pipeline] (rows: Dataset[(Int, DocResult)],
+                                       cut: org.apache.spark.rdd.RDD[_],
+                                       val docs: Long, val inBytes: Long,
+                                       val childCount: Long,
+                                       val childBytes: Long) {
+    import rows.sparkSession.implicits._
+    def spans: Dataset[SpanOut] = rows.flatMap(_._2.spans)
+    def meta: Dataset[DocMeta] = rows.map(_._2.meta)
+    def lineage: Dataset[LineageRow] = rows.map { case (pid, r) =>
+      LineageRow(pid, r.meta.doc_id, r.meta.ingestor,
+        r.meta.processing_status, r.meta.depth)
+    }
+    def children: Dataset[PendingDoc] = rows.flatMap(_._2.children)
+    def release(): Unit = cut.unpersist(false)
   }
 
   /** Join the raw-span table with the blob store to form the initial work
@@ -126,6 +146,41 @@ object Pipeline {
     else pending.repartition(parts, $"doc_id")
   }
 
+  /** Extracts one depth level with one `mapPartitions` and materializes
+    * it with one job: the count of the checkpointed RDD. Accumulators on
+    * that job measure the level's input bytes and its children's count
+    * and bytes, so no stats scan runs. The plan cut is the local-mode
+    * stand-in for the per-depth snapshot commit: without it, iterative
+    * lineage makes the single-threaded driver re-analyze ever-growing
+    * Catalyst trees. Serialized storage keeps the old generation flat:
+    * deserialized object graphs at 32 threads made GC the bottleneck
+    * (measured 23 s of pauses vs 1.2 s at 8 threads). The level is
+    * released here if materializing it throws. */
+  private def extractLevel(spark: SparkSession, pending: Dataset[PendingDoc],
+                           depth: Int): Level = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val inBytes = sc.longAccumulator(s"inBytes_$depth")
+    val childCount = sc.longAccumulator(s"children_$depth")
+    val childBytes = sc.longAccumulator(s"childBytes_$depth")
+    val rows = pending.mapPartitions { it =>
+      val pid = TaskContext.getPartitionId()
+      it.map { p =>
+        inBytes.add(payloadBytes(p.bytes))
+        val r = processOne(p)
+        childCount.add(r.children.size)
+        r.children.foreach(c => childBytes.add(payloadBytes(c.bytes)))
+        (pid, r)
+      }
+    }.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_SER)
+    // a lazy localCheckpoint's plan is the one LogicalRDD over its rows
+    val cut = rows.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    try {
+      val docs = cut.count()
+      new Level(rows, cut, docs, inBytes.value, childCount.value, childBytes.value)
+    } catch { case t: Throwable => cut.unpersist(false); throw t }
+  }
+
   /** @param initialStats (rowCount, payloadBytes) of pending0 if the caller
     *  already knows them (e.g. from the ingest manifest) — skips the one
     *  stats scan the loop otherwise needs at depth 0. */
@@ -133,84 +188,32 @@ object Pipeline {
           cfg: Config = Config(),
           initialStats: Option[(Long, Long)] = None): Output = {
     import spark.implicits._
-    var pending = pending0
-    var depth = 0
-    var n = -1L
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[Dataset[DocResult]]
-    val spanParts = scala.collection.mutable.ArrayBuffer.empty[Dataset[SpanOut]]
-    val metaParts = scala.collection.mutable.ArrayBuffer.empty[Dataset[DocMeta]]
-    val linParts = scala.collection.mutable.ArrayBuffer.empty[Dataset[LineageRow]]
-
-    val debugTimes = sys.env.contains("SPARK_GRAFT_DEBUG")
-    def stamp(label: String, t0: Long): Long = {
-      val t = System.nanoTime()
-      if (debugTimes) println(f"[pipeline] $label: ${(t - t0) / 1e9}%.2f s")
-      t
-    }
-    // children stats come from accumulators on the producing extraction job,
-    // so each depth level is exactly ONE Spark job (no extra stat scans) —
-    // the driver-side serial floor per iteration is what limits scaling.
-    var cnt = initialStats.map(_._1).getOrElse(-1L)
-    var totalBytes = initialStats.map(_._2).getOrElse(-1L)
-    // only unpersist datasets this loop persisted — a caller-supplied cached
-    // pending0 (e.g. Bench's reused corpus) must survive run()
-    var persistedByUs = false
-    while (n != 0 && depth <= cfg.maxDepth) {
-      var t = System.nanoTime()
-      if (cnt < 0) { // depth 0: stats unknown, one aggregate scan
-        val cur = pending.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        persistedByUs = true
-        val agg = cur.select(count(lit(1)).as("c"),
-          coalesce(sum(length($"bytes")), lit(0L)).as("b")).as[(Long, Long)].head()
-        cnt = agg._1
-        totalBytes = agg._2
-        pending = cur
+    val levels = scala.collection.mutable.ArrayBuffer.empty[Level]
+    // stats unknown: one aggregate scan over a pin that depth 0 then reads
+    val statsPin = Option.when(initialStats.isEmpty)(
+      pending0.persist(StorageLevel.MEMORY_AND_DISK_SER))
+    try {
+      var pending = statsPin.getOrElse(pending0)
+      var (cnt, totalBytes) = initialStats.getOrElse(pending
+        .select(count(lit(1)), coalesce(sum(length($"bytes")), lit(0L)))
+        .as[(Long, Long)].head())
+      while (cnt > 0 && levels.size <= cfg.maxDepth) {
+        val level = extractLevel(spark,
+          rebalance(spark, pending, cnt, totalBytes, cfg), levels.size)
+        levels += level
+        if (levels.size == 1) statsPin.foreach(_.unpersist(false))
+        pending = level.children
+        cnt = level.childCount
+        totalBytes = level.childBytes
       }
-      n = cnt
-      if (n > 0) {
-        val balanced = rebalance(spark, pending, cnt, totalBytes, cfg)
-        t = stamp(s"depth=$depth rebalance(n=$cnt)", t)
-        val childCount = spark.sparkContext.longAccumulator(s"children_$depth")
-        val childBytes = spark.sparkContext.longAccumulator(s"childBytes_$depth")
-        val extracted = balanced.mapPartitions(_.map { p =>
-          val r = processOne(p)
-          childCount.add(r.children.size)
-          r.children.foreach(c => childBytes.add(payloadBytes(c.bytes)))
-          r
-        })
-        // Materialize AND truncate the logical plan — the local-mode
-        // stand-in for the per-depth Iceberg snapshot commit. Without the
-        // plan cut, iterative lineage makes the single-threaded driver
-        // re-analyze ever-growing Catalyst trees (observed: driver planning
-        // dominating wall time while executors idle). Serialized storage:
-        // cached byte-heavy rows as byte[] keep the old generation flat —
-        // deserialized object graphs at 32 threads made GC the bottleneck
-        // (measured 23s of pauses vs 1.2s at 8 threads).
-        val results = extracted.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        t = stamp(s"depth=$depth extract+checkpoint", t)
-        if (persistedByUs) { pending.unpersist(false); persistedByUs = false }
-        persisted += results
-        spanParts += results.flatMap(_.spans)
-        metaParts += results.map(_.meta)
-        linParts += results.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          it.map(r => LineageRow(pid, r.meta.doc_id, r.meta.ingestor,
-            r.meta.processing_status, r.meta.depth))
-        }
-        pending = results.flatMap(_.children)
-        cnt = childCount.value
-        totalBytes = childBytes.value
-        n = cnt
-        depth += 1
-      }
-    }
-    val empty = spark.emptyDataset[SpanOut]
-    val spans = if (spanParts.isEmpty) empty else spanParts.reduce(_ unionAll _)
-    val meta = if (metaParts.isEmpty) spark.emptyDataset[DocMeta]
-               else metaParts.reduce(_ unionAll _)
-    val lineage = if (linParts.isEmpty) spark.emptyDataset[LineageRow]
-                  else linParts.reduce(_ unionAll _)
-    Output(spans, meta, lineage, persisted.toSeq)
+    } catch { case t: Throwable => levels.foreach(_.release()); throw t }
+    finally statsPin.foreach(_.unpersist(false))
+    def union[T](parts: Seq[Dataset[T]], empty: => Dataset[T]): Dataset[T] =
+      parts.reduceOption(_ unionAll _).getOrElse(empty)
+    Output(union(levels.map(_.spans).toSeq, spark.emptyDataset[SpanOut]),
+      union(levels.map(_.meta).toSeq, spark.emptyDataset[DocMeta]),
+      union(levels.map(_.lineage).toSeq, spark.emptyDataset[LineageRow]),
+      levels.toSeq)
   }
 
   /** Durable variant of [[run]]: every depth level is committed as ONE
@@ -228,15 +231,15 @@ object Pipeline {
     * a kill between the four writes and the marker left half a level on
     * disk. Unlike localCheckpoint this survives executor AND driver loss.
     *
-    * Each level is extracted exactly once: the extraction is persisted
-    * and materialized by its one `count()` (the summary's `level-docs`),
-    * while accumulators on that pass measure the level's input bytes and
-    * its children's count and bytes. The four component writes then read
-    * the cache. Files are sized by bytes, not inherited from the input's
-    * partitioning — every write task pays a fixed cost (Hadoop conf
-    * deserialization, a parquet compressor buffer, permission calls), so
-    * a file per source partition made the commit, not extraction, the
-    * level's cost:
+    * Each level is extracted exactly once, by the level step [[run]]
+    * uses too: its one job gives the summary's `level-docs` and the
+    * level's input bytes and children's count and bytes, the four
+    * component writes read the cached level, and the level is released
+    * when its commit ends, committed or not. Files are sized by bytes,
+    * not inherited from the input's partitioning — every write task pays
+    * a fixed cost (Hadoop conf deserialization, a parquet compressor
+    * buffer, permission calls), so a file per source partition made the
+    * commit, not extraction, the level's cost:
     *   - spans, meta and lineage get `inputBytes / targetPartitionBytes + 1`
     *     files;
     *   - children get [[partitionCountFor]] files for their count and
@@ -272,36 +275,20 @@ object Pipeline {
     while (!done && depth <= maxDepth) {
       // a level a previous (possibly killed) run committed is not redone
       if (levelSnap(depth).isEmpty) {
-        val sc = spark.sparkContext
-        val inBytes = sc.longAccumulator(s"durableInBytes_$depth")
-        val childCount = sc.longAccumulator(s"durableChildren_$depth")
-        val childBytes = sc.longAccumulator(s"durableChildBytes_$depth")
-        val results = pending.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          it.map { p =>
-            inBytes.add(payloadBytes(p.bytes))
-            val r = processOne(p)
-            childCount.add(r.children.size)
-            r.children.foreach(c => childBytes.add(payloadBytes(c.bytes)))
-            (pid, r)
-          }
-        }.persist(StorageLevel.MEMORY_AND_DISK_SER)
+        val level = extractLevel(spark, pending, depth)
         try {
-          val n = results.count()
-          val files = (inBytes.value / cfg.targetPartitionBytes + 1).toInt
+          val files = (level.inBytes / cfg.targetPartitionBytes + 1).toInt
           val childFiles =
-            partitionCountFor(spark, childCount.value, childBytes.value, cfg)
+            partitionCountFor(spark, level.childCount, level.childBytes, cfg)
           snaps = SnapshotTable.append(spark, snapshotDir, Map(
-            "spans" -> results.flatMap(_._2.spans).toDF().coalesce(files),
-            "meta" -> results.map(_._2.meta).toDF().coalesce(files),
-            "lineage" -> results.map { case (pid, r) =>
-              LineageRow(pid, r.meta.doc_id, r.meta.ingestor,
-                r.meta.processing_status, r.meta.depth)
-            }.toDF().coalesce(files),
-            "children" -> results.flatMap(_._2.children).toDF().coalesce(childFiles)),
-            summary = Map("depth" -> depth.toString, "level-docs" -> n.toString))
+            "spans" -> level.spans.toDF().coalesce(files),
+            "meta" -> level.meta.toDF().coalesce(files),
+            "lineage" -> level.lineage.toDF().coalesce(files),
+            "children" -> level.children.toDF().coalesce(childFiles)),
+            summary = Map("depth" -> depth.toString,
+              "level-docs" -> level.docs.toString))
             .snapshots
-        } finally results.unpersist(false)
+        } finally level.release()
       }
       val s = levelSnap(depth).get
       if (SnapshotTable.addedRows(spark, snapshotDir, s, "children") == 0L) done = true

@@ -103,24 +103,17 @@ class OpsSpec extends AnyFunSuite {
     assert((brute & lsh).size >= 5, s"recall too low: ${(brute & lsh).size}/25")
   }
 
-  test("one-permutation minhash approximates jaccard like the kxh scheme") {
+  test("minhash signature collisions estimate a known set jaccard") {
     val rng = new graft.corpus.CorpusGen.Rng(31)
     def randSet(n: Int) = (0 until n).map(_ => rng.nextLong()).toArray
     // two sets with known overlap: J = 200/(500+500-200) = 0.25
     val shared = randSet(200)
     val a = (shared ++ randSet(300)).toSeq
     val b = (shared ++ randSet(300)).toSeq
-    def estimate(f: (Iterable[Long], Int) => Array[Long]): Double = {
-      val sa = f(a, 128); val sb = f(b, 128)
-      sa.zip(sb).count { case (x, y) => x == y } / 128.0
-    }
-    val kxh = estimate(Dedup.minhashSignature)
-    val oph = estimate(Dedup.minhashSignatureOph)
+    val sa = Dedup.minhashSignature(a, 128)
+    val sb = Dedup.minhashSignature(b, 128)
+    val kxh = sa.zip(sb).count { case (x, y) => x == y } / 128.0
     assert(math.abs(kxh - 0.25) < 0.12, s"kxh=$kxh")
-    assert(math.abs(oph - 0.25) < 0.12, s"oph=$oph")
-    // determinism
-    assert(Dedup.minhashSignatureOph(a, 128).sameElements(
-      Dedup.minhashSignatureOph(a, 128)))
   }
 
   test("minhash sig8 verify agrees with exact on planted near-dups") {
@@ -542,29 +535,6 @@ class OpsSpec extends AnyFunSuite {
     // src1 = odd ids; sz=100 at ids 7,21; sz=99 at ids 1,15 →
     // top-3 by (sz desc, id asc) = 7, 21, 1
     assert(got.filter(_._1 == "src1").sortBy(_._3).map(_._2).toSeq == Seq(7L, 21L, 1L))
-  }
-
-  test("capPerSource: two-phase salted top-N equals the plain window on a skewed corpus") {
-    // one pathologically hot source (80% of rows) + a null-source row —
-    // the salted path must reproduce the plain window bit-exactly,
-    // including rank ties broken by id and the null source riding the
-    // cold path
-    val rows = (1L to 4000L).map { i =>
-      val src = if (i % 5 != 0) "hot.example" else s"cold${i % 13}"
-      (i, src, (i * 31) % 97)
-    } :+ (4001L, null.asInstanceOf[String], 50L)
-    val docs = rows.toDF("doc_id", "source", "sz")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), Option(r.getString(1)), r.getLong(2))
-    val plain = TextOps.capPerSource(docs, "doc_id", "source", "sz", 25)
-      .collect().map(key).toSet
-    val salted = TextOps.capPerSource(docs, "doc_id", "source", "sz", 25,
-      hotSourceThreshold = 500L).collect().map(key).toSet
-    assert(salted == plain,
-      s"two-phase diverged: only-salted=${(salted -- plain).take(5)} " +
-        s"only-plain=${(plain -- salted).take(5)}")
-    // the hot source really took the salted path (threshold < its count)
-    assert(rows.count(_._2 == "hot.example") > 500)
   }
 
   test("repetition stats: hand-computed duplicate-line/ngram fractions") {
@@ -1084,24 +1054,31 @@ class OpsSpec extends AnyFunSuite {
 
   test("curateCorpus: each stage's verdict bites") {
     // 30 quality docs (long, stopword-y) + 1 short reject + 1 duplicate
-    // pair + 1 contaminated doc; two sources, capped at 3 per source.
+    // pair + 1 contaminated doc; two sources, capped at 3 per source. The
+    // three rejects have the highest n_chars in their sources, so only
+    // their own verdict keeps each out of the cap. The benchmark text is
+    // planted in doc 2 only: every body shares 13-grams with every other.
+    val planted = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar"
     val good = (1 to 30).map { i =>
       (i.toLong,
         s"the quick brown fox number $i jumps over the lazy dog and then " +
         "walks on to the river where it sits by the water for a while " +
         "and it is a calm day in the field as the sun sets over the hill " +
-        "and the birds are in the trees by the old stone wall tonight",
+        "and the birds are in the trees by the old stone wall tonight" +
+        (if (i == 2) s" $planted" else ""),
         "en", if (i % 2 == 0) "srcA" else "srcB", 300L - i)
     }
-    val short = Seq((31L, "too short", "en", "srcA", 5L))
-    val dup = Seq((32L, good(0)._2, "en", "srcB", 1L)) // exact dup of id 1
+    val short = Seq((31L, "too short", "en", "srcA", 1000L))
+    val dup = Seq((32L, good(0)._2, "en", "srcB", 1000L)) // exact dup of id 1
     val docs = (good ++ short ++ dup)
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val bench = Seq((99L, good(1)._2)).toDF("id", "text") // contaminates id 2
+    val bench = Seq((99L, planted)).toDF("id", "text") // contaminates id 2
     val out = TextOps.curateCorpus(spark, docs, "doc_id", "text", "lang",
         "source", "n_chars", bench, cap = 3,
         rates = Map("en" -> 1.0), defaultRate = 0.0, salt = "s")
       .collect().map(_.getLong(0)).toSet
+    assert(out.nonEmpty)
     assert(!out.contains(31L)) // quality gate
     assert(!out.contains(32L)) // exact dedup (id 1 is the min-id survivor)
     assert(!out.contains(2L))  // decontaminated
@@ -1277,8 +1254,8 @@ class OpsSpec extends AnyFunSuite {
     }
     nested.unpersist(false)
     // null-text spans: never boilerplate candidates, never stripped, no
-    // NPE (parity with the exploded form, where xxhash64(null) is
-    // SQL-null and drops out of both sides)
+    // NPE, in both forms (xxhash64(null) is 42, not SQL null, so both
+    // exclude null text explicitly)
     val withNull = (0L until 6L).map { id =>
       (id.toString, Seq(
         Span("text", null, "", 0),
@@ -1290,7 +1267,39 @@ class OpsSpec extends AnyFunSuite {
       r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)
         .map(x => Option(x.getString(1)))).toMap
     assert(kinds("2") == Seq(None)) // null span kept, shared chrome gone
+    val explodedNull = graft.ops.SpanOps.stripBoilerplate(spark, withNull, 5)
+      .select("doc_id", "text").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toSet
+    assert(explodedNull ==
+      kinds.toSeq.flatMap { case (id, texts) => texts.map(id -> _) }.toSet)
+    assert(explodedNull.size == 6)
     strippedNull.unpersist(false)
+  }
+
+  test("stripBoilerplateNested: the broadcast sorted-long[] probe keeps the in-set probe's rows") {
+    import graft.core.Span
+    // media and null-text spans ride with boilerplate and unique text;
+    // maxExprSet = 0 forces every non-empty verdict set onto the probe
+    val docs = (0L until 7L).map { id =>
+      (id.toString, Seq(
+        Span("text", "site nav", "", 0),
+        Span("image", "", s"m$id", 1),
+        Span("text", null, "", 2),
+        Span("text", s"unique body $id", "", 3),
+        Span("text", "shared footer notice", "", 4)))
+    }.toDF("doc_id", "spans")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(x =>
+        (x.getString(0), Option(x.getString(1)), x.getString(2)))).toMap
+    val inSet = graft.ops.SpanOps.stripBoilerplateNested(spark, docs, 5)
+    val probed = graft.ops.SpanOps.stripBoilerplateNested(spark, docs, 5,
+      maxExprSet = 0)
+    val got = rows(probed)
+    assert(got == rows(inSet))
+    assert(got("4") == Seq(("image", Some(""), "m4"), ("text", None, ""),
+      ("text", Some("unique body 4"), "")))
+    inSet.unpersist(false)
+    probed.unpersist(false)
   }
 
   test("packInterleavedPatches: planted dims change chunk boundaries; missing dims cost 1") {

@@ -280,6 +280,54 @@ class PipelineSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.keySet == before)
   }
 
+  test("a failed extraction or stats pass releases every pin it took") {
+    val sc = spark.sparkContext
+    val inner = CorpusGen.renderZip(Seq(("deep.txt", "deep text".getBytes)))
+    val outer = CorpusGen.renderZip(Seq(("nested.zip", inner)))
+    // the map runs inside the depth-0 stats pass, or, with the stats
+    // given, inside the depth-0 extraction job
+    val failing = {
+      import spark.implicits._
+      pending(("f1", "f1.zip", outer)).map { p =>
+        if (p.doc_id == "f1") throw new IllegalStateException("injected")
+        p
+      }
+    }
+    val before = sc.getPersistentRDDs.keySet
+    intercept[org.apache.spark.SparkException](Pipeline.run(spark, failing))
+    assert(sc.getPersistentRDDs.keySet == before, "run, stats pass")
+    intercept[org.apache.spark.SparkException](Pipeline.run(spark, failing,
+      initialStats = Some((1L, outer.length.toLong))))
+    assert(sc.getPersistentRDDs.keySet == before, "run, extraction")
+    val loc = "file:" + java.nio.file.Files.createTempDirectory("graft-fail")
+    intercept[org.apache.spark.SparkException](
+      Pipeline.runDurable(spark, failing, loc))
+    assert(sc.getPersistentRDDs.keySet == before, "runDurable")
+  }
+
+  test("run and runDurable extract the same spans, meta and lineage") {
+    import spark.implicits._
+    val inner = CorpusGen.renderZip(Seq(("deep.txt", "deep text".getBytes)))
+    val outer = CorpusGen.renderZip(Seq(("nested.zip", inner),
+      ("top.txt", "top text".getBytes)))
+    val p = pending(("e1", "e1.zip", outer),
+      ("e2", "e2.html", "<html><body><p>page</p></body></html>".getBytes))
+    // duration_ms is a wall-clock measurement, and lineage partition ids
+    // follow each loop's own partitioning
+    def metaRows(m: Seq[DocMeta]) = m.map(_.copy(duration_ms = 0L)).toSet
+    def linRows(l: Seq[LineageRow]) = l.map(_.copy(partition_id = 0)).toSet
+    val out = Pipeline.run(spark, p)
+    val (spans, meta, lineage) = (out.spans.collect().toSet,
+      metaRows(out.meta.collect().toSeq), linRows(out.lineage.collect().toSeq))
+    out.cleanup()
+    val loc = "file:" + java.nio.file.Files.createTempDirectory("graft-same")
+    val (ds, dm, dl) = Pipeline.runDurable(spark, p, loc)
+    assert(meta.size == 5)
+    assert(ds.as[SpanOut].collect().toSet == spans)
+    assert(metaRows(dm.as[DocMeta].collect().toSeq) == meta)
+    assert(linRows(dl.as[LineageRow].collect().toSeq) == lineage)
+  }
+
   test("resume: committed docs are skipped, failures are retried (left_anti recovery)") {
     import spark.implicits._
     val p = pending(
