@@ -22,11 +22,12 @@ import org.apache.spark.storage.StorageLevel
   *   - partition count is derived from total payload bytes so the long-tail
   *     document-size distribution cannot concentrate bytes in few tasks
   *     (the skew treatment mandated by the north rule);
-  *   - each iteration is materialized once, by one level step shared by
-  *     [[Pipeline.run]] and [[Pipeline.runDurable]] — in the durable loop
-  *     it is the snapshot commit per depth level, making a killed job
-  *     resumable from the last committed level (lineage rows carry
-  *     partition id + status for `left_anti` recovery).
+  *   - each iteration is materialized once: [[Pipeline.run]] pins it in
+  *     one level step; [[Pipeline.runDurable]] writes it, in the same
+  *     job that extracts it, as the snapshot commit of its depth level,
+  *     making a killed job resumable from the last committed level
+  *     (lineage rows carry partition id + status for `left_anti`
+  *     recovery).
   */
 object Pipeline {
 
@@ -51,13 +52,13 @@ object Pipeline {
     * result)`, computed once and cut from its lineage as a row-serialized
     * `localCheckpoint` (MEMORY_AND_DISK_SER), not a [[graft.ops.Pin]],
     * because caching these byte-heavy rows through the columnar cache
-    * manager made [[run]] 10-15% slower. The counts are measured by
-    * accumulators on the one job that materializes the level.
+    * manager made [[run]] 10-15% slower. The children's count and bytes
+    * are measured by accumulators on the one job that materializes the
+    * level.
     *
     * @param cut the checkpointed RDD behind `rows`, released by [[release]] */
   final class Level private[Pipeline] (rows: Dataset[(Int, DocResult)],
                                        cut: org.apache.spark.rdd.RDD[_],
-                                       val docs: Long, val inBytes: Long,
                                        val childCount: Long,
                                        val childBytes: Long) {
     import rows.sparkSession.implicits._
@@ -148,11 +149,11 @@ object Pipeline {
 
   /** Extracts one depth level with one `mapPartitions` and materializes
     * it with one job: the count of the checkpointed RDD. Accumulators on
-    * that job measure the level's input bytes and its children's count
-    * and bytes, so no stats scan runs. The plan cut is the local-mode
-    * stand-in for the per-depth snapshot commit: without it, iterative
-    * lineage makes the single-threaded driver re-analyze ever-growing
-    * Catalyst trees. Serialized storage keeps the old generation flat:
+    * that job measure its children's count and bytes, so no stats scan
+    * runs. The plan cut is the in-memory stand-in for the durable
+    * loop's per-depth snapshot commit: without it, iterative lineage
+    * makes the single-threaded driver re-analyze ever-growing Catalyst
+    * trees. Serialized storage keeps the old generation flat:
     * deserialized object graphs at 32 threads made GC the bottleneck
     * (measured 23 s of pauses vs 1.2 s at 8 threads). The level is
     * released here if materializing it throws. */
@@ -160,13 +161,11 @@ object Pipeline {
                            depth: Int): Level = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val inBytes = sc.longAccumulator(s"inBytes_$depth")
     val childCount = sc.longAccumulator(s"children_$depth")
     val childBytes = sc.longAccumulator(s"childBytes_$depth")
     val rows = pending.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       it.map { p =>
-        inBytes.add(payloadBytes(p.bytes))
         val r = processOne(p)
         childCount.add(r.children.size)
         r.children.foreach(c => childBytes.add(payloadBytes(c.bytes)))
@@ -176,8 +175,8 @@ object Pipeline {
     // a lazy localCheckpoint's plan is the one LogicalRDD over its rows
     val cut = rows.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
     try {
-      val docs = cut.count()
-      new Level(rows, cut, docs, inBytes.value, childCount.value, childBytes.value)
+      cut.count()
+      new Level(rows, cut, childCount.value, childBytes.value)
     } catch { case t: Throwable => cut.unpersist(false); throw t }
   }
 
@@ -231,31 +230,27 @@ object Pipeline {
     * a kill between the four writes and the marker left half a level on
     * disk. Unlike localCheckpoint this survives executor AND driver loss.
     *
-    * Each level is extracted exactly once, by the level step [[run]]
-    * uses too: its one job gives the summary's `level-docs` and the
-    * level's input bytes and children's count and bytes, the four
-    * component writes read the cached level, and the level is released
-    * when its commit ends, committed or not. Files are sized by bytes,
-    * not inherited from the input's partitioning — every write task pays
-    * a fixed cost (Hadoop conf deserialization, a parquet compressor
-    * buffer, permission calls), so a file per source partition made the
-    * commit, not extraction, the level's cost:
-    *   - spans, meta and lineage get `inputBytes / targetPartitionBytes + 1`
-    *     files;
-    *   - children get [[partitionCountFor]] files for their count and
-    *     bytes: the next level's extraction scans those files, one task
-    *     per file below the scan's split size, so sizing them for that
-    *     level keeps its parallelism (and its per-task payload bound)
-    *     without a shuffle.
-    * Lineage `partition_id` is the extraction task's partition.
+    * Each level is ONE Spark job, Iceberg's Spark write model: one
+    * `mapPartitions` over the pending documents extracts each one and
+    * writes its spans, meta, lineage and children rows through a
+    * [[graft.table.SnapshotTable.Writer]] — one file per component per
+    * task that emitted rows — and returns the file entries; the driver
+    * collects them and commits the list as the level's snapshot. Nothing
+    * is cached or re-read: the next level reads its children from the
+    * committed files. The attempt-unique file names keep the commit
+    * atomic: a retried or speculative task attempt's files are never
+    * listed, so they stay orphans. A component with no rows at a level
+    * writes no file, but its schema is recorded. The summary's
+    * `level-docs` is the level's meta row count; lineage `partition_id` is
+    * the extraction task's partition.
     *
     * All bookkeeping goes through `org.apache.hadoop.fs.FileSystem` — the
     * same layer the parquet data rides — so the snapshotDir may be local,
     * HDFS, or S3A.
     *
     * The terminal condition is data, not a sentinel: a committed level
-    * whose snapshot summary records zero children rows (footer stats at
-    * commit time, no extra job) ends both the first run and any resume.
+    * whose snapshot summary records zero children rows (counted by the
+    * writing tasks, no extra job) ends both the first run and any resume.
     *
     * @param maxDepthOverride stop early (used by tests to simulate a kill
     *   between levels). */
@@ -264,6 +259,11 @@ object Pipeline {
                  maxDepthOverride: Int = Int.MaxValue): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     import graft.table.SnapshotTable
+    import org.apache.spark.sql.catalyst.encoders.encoderFor
+    val (spanEnc, metaEnc, linEnc, childEnc) = (encoderFor[SpanOut],
+      encoderFor[DocMeta], encoderFor[LineageRow], encoderFor[PendingDoc])
+    val schemas = Map("spans" -> spanEnc.schema, "meta" -> metaEnc.schema,
+      "lineage" -> linEnc.schema, "children" -> childEnc.schema)
     var pending = pending0
     var depth = 0
     var done = false
@@ -275,20 +275,29 @@ object Pipeline {
     while (!done && depth <= maxDepth) {
       // a level a previous (possibly killed) run committed is not redone
       if (levelSnap(depth).isEmpty) {
-        val level = extractLevel(spark, pending, depth)
+        val writer = SnapshotTable.writer(spark, snapshotDir, schemas)
         try {
-          val files = (level.inBytes / cfg.targetPartitionBytes + 1).toInt
-          val childFiles =
-            partitionCountFor(spark, level.childCount, level.childBytes, cfg)
-          snaps = SnapshotTable.append(spark, snapshotDir, Map(
-            "spans" -> level.spans.toDF().coalesce(files),
-            "meta" -> level.meta.toDF().coalesce(files),
-            "lineage" -> level.lineage.toDF().coalesce(files),
-            "children" -> level.children.toDF().coalesce(childFiles)),
-            summary = Map("depth" -> depth.toString,
-              "level-docs" -> level.docs.toString))
+          val entries = pending.rdd.mapPartitions { docs =>
+            writer.inTask { out =>
+              val pid = TaskContext.getPartitionId()
+              val (span, meta, lin, child) = (spanEnc.createSerializer(),
+                metaEnc.createSerializer(), linEnc.createSerializer(),
+                childEnc.createSerializer())
+              docs.foreach { p =>
+                val r = processOne(p)
+                r.spans.foreach(s => out.write("spans", span(s)))
+                out.write("meta", meta(r.meta))
+                out.write("lineage", lin(LineageRow(pid, r.meta.doc_id,
+                  r.meta.ingestor, r.meta.processing_status, r.meta.depth)))
+                r.children.foreach(c => out.write("children", child(c)))
+              }
+            }
+          }.collect().toVector
+          snaps = SnapshotTable.commit(spark, snapshotDir, entries, schemas,
+            summary = Map("depth" -> depth.toString, "level-docs" ->
+              entries.filter(_.component == "meta").map(_.rows).sum.toString))
             .snapshots
-        } finally level.release()
+        } finally writer.release()
       }
       val s = levelSnap(depth).get
       if (SnapshotTable.addedRows(spark, snapshotDir, s, "children") == 0L) done = true

@@ -46,19 +46,20 @@ object StreamingIngest {
     import spark.implicits._
     val pending = batch.as[PendingDoc]
     val out = Pipeline.run(spark, pending)
-    out.spans.toDF()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(spansOut)
-    out.meta.toDF()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(metaOut)
-    out.cleanup()
+    try {
+      out.spans.toDF()
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(spansOut)
+      out.meta.toDF()
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(metaOut)
+    } finally out.cleanup()
   }
 
   /** Micro-batched extraction into a [[graft.table.SnapshotTable]] —
@@ -90,11 +91,11 @@ object StreamingIngest {
       .exists(_.summary.get("batch-id").contains(batchId.toString))
     if (already) return
     val out = Pipeline.run(spark, batch.as[PendingDoc])
-    SnapshotTable.append(spark, tableLoc, Map(
+    try SnapshotTable.append(spark, tableLoc, Map(
       "spans" -> out.spans.toDF().withColumn("batch_id", lit(batchId)),
       "meta" -> out.meta.toDF().withColumn("batch_id", lit(batchId))),
       summary = Map("batch-id" -> batchId.toString))
-    out.cleanup()
+    finally out.cleanup()
   }
 
   /** One email's threading facts as they stream out of extraction. */

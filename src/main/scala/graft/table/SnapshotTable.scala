@@ -1,7 +1,10 @@
 package graft.table
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, LineageCut, ParquetFiles, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** From-scratch snapshot-log table format, shaped after the public Apache
@@ -19,18 +22,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                                  HadoopTableOperations)
   *   metadata/manifest-<uuid>.json  immutable manifest: data files added
   *                                  by one snapshot, with per-file stats
-  *   data/<uuid>-<component>/       parquet data files — written under a
-  *                                  unique uncommitted dir, invisible
-  *                                  until a metadata version references
-  *                                  them
+  *   data/<uuid>-<component>/       parquet data files, one per writing
+  *                                  task, under attempt-unique names —
+  *                                  invisible until a metadata version
+  *                                  references them
   * }}}
   *
   * Semantics reproduced from the spec:
   *   - snapshots are immutable and form a parent chain; each snapshot
   *     carries the COMPLETE list of manifests live at that snapshot (the
   *     inlined manifest-list), so reads plan from one metadata file;
-  *   - a commit is: write data + manifest under fresh UUID names, then
-  *     atomically install `v(N+1).metadata.json`. Readers only ever see
+  *   - a commit is: Spark tasks write the data files and return their
+  *     entries ([[SnapshotTable.Writer]], Iceberg's Spark write model: no
+  *     Hadoop output committer), then the driver writes the manifest under
+  *     a fresh UUID name and atomically installs `v(N+1).metadata.json`
+  *     ([[SnapshotTable.commit]]). Readers only ever see
   *     fully-committed versions; a killed writer leaves orphan data files
   *     that no snapshot references (cleaned by `expireOrphans`, the
   *     remove-orphan-files action);
@@ -41,10 +47,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     caveat HadoopTableOperations documents applies to S3 without a
   *     lock manager);
   *   - time travel: `read(..., asOf=Some(snapshotId))` plans from that
-  *     snapshot's manifest list;
-  *   - per-file stats (row count, bytes) come from parquet footers at
-  *     commit time, driver-side, no Spark job — how Iceberg fills
-  *     manifest entry stats.
+  *     snapshot's manifest list, and a read plans from the manifest's
+  *     paths and lengths alone — no directory listing, no footer read;
+  *   - per-file stats (row count, bytes) are taken by the task that wrote
+  *     the file — rows counted as written, bytes from the file's status —
+  *     and travel to the driver with the file entry, as Iceberg's
+  *     `DataWriter` returns a `DataFile` with its metrics.
   *
   * Multiple named components (spans/meta/lineage/children) ride in ONE
   * table so a pipeline level commits all four ATOMICALLY in a single
@@ -65,7 +73,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - CONFORMS in protocol: version-chained `metadata/v<N>.metadata.json`
   *    with atomic create-no-overwrite install, `version-hint.text`,
   *    immutable snapshots with parent ids and sequence numbers,
-  *    uniquely-named uncommitted data files, orphan expiry, optimistic
+  *    uniquely-named uncommitted data files written by tasks and committed
+  *    as a list by the driver, file-level orphan expiry, optimistic
   *    rebase-and-retry — the HadoopTableOperations commit protocol and
   *    its S3 caveat, faithfully.
   *  - DIVERGES in serialization, deliberately: manifests are JSON, not
@@ -81,8 +90,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    `v<N>.metadata.json` but reject it at field validation. Manifests
   *    written before schemas were recorded carry none; reads of those
   *    fall back to inferring the schema from the parquet footers.
-  *  - DIVERGES in stats: per-file row/byte counts only (from parquet
-  *    footers at commit time); no per-column bounds/null counts, so a
+  *  - DIVERGES in stats: per-file row/byte counts only (taken by the
+  *    writing task); no per-column bounds/null counts, so a
   *    scan here prunes by component + snapshot, not by column range.
   *
   * If the target ever becomes "real Iceberg", the migration is contained:
@@ -239,33 +248,103 @@ object SnapshotTable {
   def snapshots(spark: SparkSession, location: String): Vector[Snapshot] =
     load(spark, location).map(_.snapshots).getOrElse(Vector.empty)
 
-  /** Parquet footer row count — driver-side stat read, no Spark job. */
-  private def footerRows(conf: org.apache.hadoop.conf.Configuration,
-                         p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
   /** Summary key of a snapshot's exact row total for `component`, recorded
-    * at commit from the footer stats (Iceberg's `added-records`). */
+    * at commit from the manifest entries (Iceberg's `added-records`). */
   def rowsKey(component: String): String = s"$component-rows"
 
   /** Rows `snap` added to `component`: its summary total, or — for
     * snapshots committed before totals were recorded — the sum of its
-    * manifest's footer stats. */
+    * manifest's per-file stats. */
   def addedRows(spark: SparkSession, location: String, snap: Snapshot,
                 component: String): Long =
     snap.summary.get(rowsKey(component)).map(_.toLong).getOrElse(
       addedFiles(spark, location, snap.id, component).map(_.rows).sum)
 
-  /** Append `parts` (component name → DataFrame) as ONE atomic snapshot.
-    * Each component's schema goes into the manifest and its row total into
-    * the summary under [[rowsKey]]. Returns the committed metadata.
-    * Retries `maxAttempts` times on version conflicts, rebasing onto the
-    * winner's snapshot chain. */
+  /** The one writer of this table's data files, shipped to Spark tasks:
+    * each task writes its own files and returns their entries, and the
+    * driver [[commit]]s the entries it collected — the Iceberg Spark write
+    * model. A task opens one file per component lazily, on that
+    * component's first row, at `data/<uuid>-<component>/part-<partition
+    * id>-<task attempt id><ext>`. The attempt-unique name is what keeps
+    * the commit atomic without an output committer: a failed, retried or
+    * speculative attempt never overwrites the file of the attempt whose
+    * result the driver collected, so its files are left unlisted — orphans
+    * for [[expireOrphans]] — and only the commit's metadata swap publishes
+    * anything. Release with [[release]] once the call's jobs end. */
+  final class Writer private[SnapshotTable] (location: String, uuid: String,
+                                             files: ParquetFiles.Writers)
+      extends Serializable {
+
+    /** Task side: runs `body` over a [[TaskFiles]] and returns the entries
+      * of the files it wrote, with rows counted while writing and bytes
+      * from each file's status. If `body` throws, the files it opened are
+      * closed and left unlisted. */
+    def inTask(body: TaskFiles => Unit): Iterator[DataFileEntry] = {
+      val out = new TaskFiles
+      try body(out) catch { case t: Throwable => out.abort(); throw t }
+      out.close().iterator
+    }
+
+    final class TaskFiles private[Writer] {
+      private final class Open(val writer: OutputWriter) { var rows = 0L }
+      private val task = TaskContext.get()
+      private val name =
+        s"part-${task.partitionId()}-${task.taskAttemptId()}${files.extension}"
+      private val open = scala.collection.mutable.LinkedHashMap.empty[String, Open]
+
+      private def rel(component: String) = s"data/$uuid-$component/$name"
+
+      def write(component: String, row: InternalRow): Unit = {
+        val f = open.getOrElseUpdate(component,
+          new Open(files.open(component, s"$location/${rel(component)}")))
+        f.writer.write(row)
+        f.rows += 1
+      }
+
+      private[Writer] def close(): Vector[DataFileEntry] =
+        open.toVector.map { case (c, f) =>
+          DataFileEntry(rel(c), c, f.rows, files.close(c, f.writer))
+        }
+
+      private[Writer] def abort(): Unit = open.values.foreach { f =>
+        try f.writer.close() catch { case _: Throwable => () }
+      }
+    }
+
+    def release(): Unit = files.destroy()
+  }
+
+  /** A [[Writer]] of `schemas` (component → schema) into `location`. */
+  def writer(spark: SparkSession, location: String,
+             schemas: Map[String, StructType]): Writer =
+    new Writer(location, java.util.UUID.randomUUID().toString,
+      ParquetFiles.writers(spark, schemas))
+
+  /** Append `parts` (component name → DataFrame) as ONE atomic snapshot:
+    * each frame's plan runs once, its tasks write through one [[Writer]],
+    * then [[commit]]. Returns the committed metadata. */
   def append(spark: SparkSession, location: String,
              parts: Map[String, DataFrame],
+             summary: Map[String, String] = Map.empty,
+             maxAttempts: Int = 5,
+             beforeInstall: () => Unit = () => ()): Meta = {
+    val schemas = parts.map { case (c, df) => c -> df.schema }
+    val w = writer(spark, location, schemas)
+    val entries = try parts.toVector.sortBy(_._1).flatMap { case (c, df) =>
+      LineageCut.rows(df, "append")(_.mapPartitions(rows =>
+        w.inTask(out => rows.foreach(out.write(c, _)))).collect())
+    } finally w.release()
+    commit(spark, location, entries, schemas, summary, maxAttempts, beforeInstall)
+  }
+
+  /** Commit `entries` (data files already written, e.g. by a [[Writer]])
+    * as ONE atomic snapshot. Each component of `schemas` gets its schema in
+    * the manifest and its row total in the summary under [[rowsKey]]; a
+    * component with no entries reads as an empty frame of its schema.
+    * Retries `maxAttempts` times on version conflicts, rebasing onto the
+    * winner's snapshot chain. Returns the committed metadata. */
+  def commit(spark: SparkSession, location: String,
+             entries: Seq[DataFileEntry], schemas: Map[String, StructType],
              summary: Map[String, String] = Map.empty,
              maxAttempts: Int = 5,
              /* test seam: runs between base-version read and install, so a
@@ -273,33 +352,19 @@ object SnapshotTable {
               * rebase-retry path */
              beforeInstall: () => Unit = () => ()): Meta = {
     val (fs, root) = fsFor(spark, location)
-    val conf = spark.sparkContext.hadoopConfiguration
     fs.mkdirs(new Path(root, "metadata"))
-
-    // 1. write data files under fresh UUID dirs (invisible until commit)
     val uuid = java.util.UUID.randomUUID().toString
-    val components = parts.toVector.sortBy(_._1)
-    val entries = components.flatMap { case (component, df) =>
-      val rel = s"data/$uuid-$component"
-      df.write.mode("errorifexists").parquet(s"$location/$rel")
-      val files = fs.listStatus(new Path(root, rel))
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      files.map { st =>
-        DataFileEntry(s"$rel/${st.getPath.getName}", component,
-          footerRows(conf, st.getPath), st.getLen)
-      }
-    }
 
-    // 2. immutable manifest for this snapshot's added files
+    // 1. immutable manifest for this snapshot's added files
     val manifestRel = s"metadata/manifest-$uuid.json"
-    val schemas = components.map { case (c, df) => c -> df.schema.json }.toMap
     writeText(fs, new Path(root, manifestRel),
-      manifestJson(Manifest(entries, schemas)), overwrite = false)
-    val fullSummary = summary ++ components.map { case (c, _) =>
+      manifestJson(Manifest(entries.toVector, schemas.map { case (c, st) => c -> st.json })),
+      overwrite = false)
+    val fullSummary = summary ++ schemas.keys.map { c =>
       rowsKey(c) -> entries.filter(_.component == c).map(_.rows).sum.toString
     }
 
-    // 3. optimistic metadata swap
+    // 2. optimistic metadata swap
     var attempt = 0
     while (true) {
       attempt += 1
@@ -369,13 +434,22 @@ object SnapshotTable {
        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
   }
 
+  /** Plans from the manifest's paths and lengths, so no listing job runs;
+    * a component with a schema but no files reads as an empty frame of it.
+    * Schema-less (older) manifests read through inference. */
   private def scan(spark: SparkSession, location: String,
                    planned: (Vector[DataFileEntry], Option[StructType]),
                    missing: => String): DataFrame = {
     val (entries, schema) = planned
-    require(entries.nonEmpty, missing)
-    schema.fold(spark.read)(spark.read.schema(_))
-      .parquet(entries.map(e => s"$location/${e.path}"): _*)
+    schema match {
+      case Some(st) =>
+        val (fs, root) = fsFor(spark, location)
+        ParquetFiles.scan(spark, st,
+          entries.map(e => (fs.makeQualified(new Path(root, e.path)), e.bytes)))
+      case None =>
+        require(entries.nonEmpty, missing)
+        spark.read.parquet(entries.map(e => s"$location/${e.path}"): _*)
+    }
   }
 
   /** All data files of `component` live at the given (default: current)
@@ -416,25 +490,28 @@ object SnapshotTable {
   def currentSummary(spark: SparkSession, location: String): Map[String, String] =
     load(spark, location).flatMap(_.current).map(_.summary).getOrElse(Map.empty)
 
-  /** Delete data dirs no committed snapshot references — the
-    * remove-orphan-files maintenance action; safe because writers only
-    * publish files by committing metadata. */
+  /** Delete every data file no manifest lists — the remove-orphan-files
+    * maintenance action; safe because writers only publish files by
+    * committing metadata. A dir no manifest lists a file of goes whole (a
+    * writer killed before its commit); in a committed dir, each unlisted
+    * file goes (a failed or speculative task attempt). Returns the number
+    * of dirs and files removed. */
   def expireOrphans(spark: SparkSession, location: String): Int = {
     val (fs, root) = fsFor(spark, location)
     val dataDir = new Path(root, "data")
     if (!fs.exists(dataDir)) return 0
-    val meta = load(spark, location)
-    val live: Set[String] = meta match {
-      case None => Set.empty
-      case Some(m) =>
-        m.snapshots.flatMap(_.manifests).distinct
-          .flatMap(mp => parseManifest(readText(fs, new Path(root, mp))).entries)
-          .map(e => e.path.split('/')(1)).toSet // data/<dir>/<file>
-    }
+    val live: Set[String] = load(spark, location).toVector
+      .flatMap(_.snapshots.flatMap(_.manifests).distinct)
+      .flatMap(mp => parseManifest(readText(fs, new Path(root, mp))).entries)
+      .map(_.path).toSet // data/<dir>/<file>
+    val liveDirs = live.map(_.split('/')(1))
     var removed = 0
+    def drop(p: Path): Unit = { fs.delete(p, true); removed += 1 }
     fs.listStatus(dataDir).foreach { st =>
-      if (st.isDirectory && !live.contains(st.getPath.getName)) {
-        fs.delete(st.getPath, true); removed += 1
+      val dir = st.getPath.getName
+      if (!liveDirs.contains(dir)) drop(st.getPath)
+      else fs.listStatus(st.getPath).foreach { f =>
+        if (!live.contains(s"data/$dir/${f.getPath.getName}")) drop(f.getPath)
       }
     }
     removed

@@ -1,9 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** A frame made straight from a one-node `LogicalRDD` plan over a frame's
-  * computed rows. `Dataset.ofRows` and `LogicalRDD.fromDataset` are
+  * computed rows, and a frame's computed rows run under one SQL
+  * execution. `Dataset.ofRows` and `LogicalRDD.fromDataset` are
   * package-private to Spark SQL, hence this shim in Spark's package. */
 object LineageCut {
 
@@ -18,8 +21,12 @@ object LineageCut {
   }
 
   /** Counts `df`'s rows with one job under its own SQL execution. */
-  def count(df: DataFrame): Long = {
+  def count(df: DataFrame): Long = rows(df, "pin")(_.count())
+
+  /** Runs `f` over the rows of `df`'s executed plan inside one SQL
+    * execution named `name`. */
+  def rows[A](df: DataFrame, name: String)(f: RDD[InternalRow] => A): A = {
     val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("pin"))(qe.executedPlan.execute().count())
+    SQLExecution.withNewExecutionId(qe, Some(name))(f(qe.executedPlan.execute()))
   }
 }

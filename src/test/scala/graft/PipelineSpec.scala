@@ -228,10 +228,9 @@ class PipelineSpec extends AnyFunSuite {
       .count() == 1)
   }
 
-  test("durable layout: one spans/meta/lineage file per level, children sized for the next level") {
+  test("durable layout: one job per level writes at most one file per component per extraction task") {
     import spark.implicits._
     import graft.table.SnapshotTable
-    import org.apache.spark.sql.functions.{coalesce, count, length, lit, sum}
     val inner = CorpusGen.renderZip(Seq(("deep.txt", "deepest body".getBytes)))
     val zip = CorpusGen.renderZip(Seq(("in.txt", "zipped body".getBytes),
       ("nested.zip", inner)))
@@ -242,30 +241,46 @@ class PipelineSpec extends AnyFunSuite {
     val snaps = SnapshotTable.snapshots(spark, loc)
     assert(snaps.map(_.summary("depth")) == Vector("0", "1", "2"))
     assert(snaps.map(_.summary("level-docs")) == Vector("2", "2", "1"))
-    snaps.foreach { s =>
-      Seq("spans", "meta", "lineage").foreach { c =>
-        assert(SnapshotTable.addedFiles(spark, loc, s.id, c).size == 1,
-          s"depth ${s.summary("depth")} $c")
-      }
-      val children = SnapshotTable.readAdded(spark, loc, s.id, "children").as[PendingDoc]
-      val (childRows, childBytes) = children
-        .select(count(lit(1)), coalesce(sum(length($"bytes")), lit(0L)))
-        .as[(Long, Long)].head()
-      assert(SnapshotTable.addedFiles(spark, loc, s.id, "children").size <=
-        Pipeline.partitionCountFor(spark, childRows, childBytes, Pipeline.Config()))
+    val lineage = SnapshotTable.read(spark, loc, "lineage").as[LineageRow].collect()
+    snaps.zipWithIndex.foreach { case (s, d) =>
+      // a level's extraction tasks are the partitions of its input
+      val tasks = if (d == 0) p.rdd.getNumPartitions
+        else SnapshotTable.readAdded(spark, loc, snaps(d - 1).id, "children")
+          .rdd.getNumPartitions
+      val busyTasks = lineage.filter(_.depth == d).map(_.partition_id).distinct.length
       Seq("spans", "meta", "lineage", "children").foreach { c =>
+        val files = SnapshotTable.addedFiles(spark, loc, s.id, c)
+        assert(files.size <= tasks, s"depth $d $c")
+        assert(files.forall(_.rows > 0), s"depth $d $c")
         assert(s.summary(SnapshotTable.rowsKey(c)).toLong ==
-          SnapshotTable.readAdded(spark, loc, s.id, c).count(), s"depth ${s.summary("depth")} $c")
+          SnapshotTable.readAdded(spark, loc, s.id, c).count(), s"depth $d $c")
+      }
+      // every task that extracted a document wrote one meta and one lineage file
+      Seq("meta", "lineage").foreach { c =>
+        assert(SnapshotTable.addedFiles(spark, loc, s.id, c).size == busyTasks, s"depth $d $c")
       }
     }
     // lineage keeps the extraction task's partition, not the file's
-    val pids = SnapshotTable.read(spark, loc, "lineage").as[LineageRow]
-      .collect().filter(_.depth == 0).map(_.partition_id).toSet
+    val pids = lineage.filter(_.depth == 0).map(_.partition_id).toSet
     val expected = p.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       it.map(_ => pid)
     }.collect().toSet
     assert(pids == expected)
+  }
+
+  test("runDurable over a document with no spans reads back empty spans of the SpanOut schema") {
+    import spark.implicits._
+    val loc = "file:" + java.nio.file.Files.createTempDirectory("graft-nospans")
+    val (spans, meta, _) = Pipeline.runDurable(spark,
+      pending(("g1", "g1.bin", Array[Byte](1, 2, 3, 0, 9, 9))), loc)
+    assert(meta.as[DocMeta].collect().map(_.processing_status).toSeq ==
+      Seq(ExtractionResult.Failure))
+    def fields(st: org.apache.spark.sql.types.StructType) = st.map(f => (f.name, f.dataType))
+    assert(fields(spans.schema) ==
+      fields(org.apache.spark.sql.Encoders.product[SpanOut].schema))
+    assert(spans.as[SpanOut].collect().isEmpty)
+    assert(graft.table.SnapshotTable.read(spark, loc, "spans").count() == 0)
   }
 
   test("cleanup releases every RDD the in-memory run pinned") {
@@ -303,6 +318,7 @@ class PipelineSpec extends AnyFunSuite {
     intercept[org.apache.spark.SparkException](
       Pipeline.runDurable(spark, failing, loc))
     assert(sc.getPersistentRDDs.keySet == before, "runDurable")
+    assert(graft.table.SnapshotTable.snapshots(spark, loc).isEmpty, "runDurable committed")
   }
 
   test("run and runDurable extract the same spans, meta and lineage") {

@@ -110,6 +110,25 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.expireOrphans(spark, loc) == 0)
   }
 
+  test("expireOrphans removes an unlisted file from a committed dir, keeps every listed one") {
+    val loc = freshLoc()
+    val m = SnapshotTable.append(spark, loc, Map("rows" -> df(1 to 20: _*).repartition(2)))
+    val listed = SnapshotTable.addedFiles(spark, loc, m.currentSnapshotId, "rows")
+    val root = new org.apache.hadoop.fs.Path(loc)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    // a failed task attempt's file, next to the files its retry committed
+    val first = new org.apache.hadoop.fs.Path(root, listed.head.path)
+    val planted = new org.apache.hadoop.fs.Path(first.getParent, "part-0-999999.snappy.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, first, fs, planted, false, conf)
+    assert(SnapshotTable.expireOrphans(spark, loc) == 1)
+    assert(!fs.exists(planted))
+    assert(listed.forall(e => fs.exists(new org.apache.hadoop.fs.Path(root, e.path))))
+    assert(SnapshotTable.read(spark, loc, "rows").collect().map(_.getInt(0)).sorted.toVector ==
+      (1 to 20).toVector)
+    assert(SnapshotTable.expireOrphans(spark, loc) == 0)
+  }
+
   test("corrupt current metadata fails with a clear parse error, not a hang or garbage read") {
     val loc = freshLoc()
     SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2)))
@@ -204,5 +223,14 @@ class SnapshotTableSpec extends AnyFunSuite {
     val (all, j) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
     assert(j == 0)
     assert(all.collect().map(_.getInt(0)).sorted.toVector == Vector(7, 8, 9))
+  }
+
+  test("a read over many files plans from the manifest: no listing job before the action") {
+    val loc = freshLoc()
+    SnapshotTable.append(spark, loc, Map("rows" -> spark.range(0L, 400L, 1L, 40).toDF("id")))
+    assert(SnapshotTable.dataFiles(spark, loc, "rows").size == 40)
+    val (rows, jobs) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    assert(jobs == 0)
+    assert(rows.collect().map(_.getLong(0)).sorted.toVector == (0L until 400L).toVector)
   }
 }

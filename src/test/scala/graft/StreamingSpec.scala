@@ -99,6 +99,25 @@ class StreamingSpec extends AnyFunSuite {
       asOf = Some(snaps.head.id)).count() == n1)
   }
 
+  test("a failed sink write still releases every pin the batch's extraction took") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val base = java.nio.file.Files.createTempDirectory("graft-sinkfail")
+    // a regular file where each sink expects a directory
+    val blocker = java.nio.file.Files.createFile(base.resolve("not-a-dir")).toString
+    val inner = CorpusGen.renderZip(Seq(("deep.txt", "deep text".getBytes)))
+    val batch = spark.createDataset(Seq(
+      PendingDoc("f1", "", Seq.empty, 0, "f1.zip", "",
+        CorpusGen.renderZip(Seq(("nested.zip", inner)))))).toDF()
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception](
+      StreamingIngest.writeBatch(spark, batch, 1L, blocker, s"$base/meta"))
+    assert(sc.getPersistentRDDs.keySet == before, "writeBatch")
+    intercept[Exception](
+      StreamingIngest.writeBatchToTable(spark, batch, 1L, s"file:$blocker"))
+    assert(sc.getPersistentRDDs.keySet == before, "writeBatchToTable")
+  }
+
   test("streaming WARC ingest: crawl files -> record explode -> atomic snapshot per batch, incremental resume") {
     import graft.table.SnapshotTable
     val base = java.nio.file.Files.createTempDirectory("graft-wstream")
