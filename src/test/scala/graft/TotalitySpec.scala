@@ -9,7 +9,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 /** Parser total-ness (SURVEY §5): random bytes never throw — every input
   * yields a success or a failure row. Property-based via scalacheck
   * (driven directly; the scalatest bridge artifact is not on the
-  * offline classpath). */
+  * offline classpath). The mutation fuzz seeds from formats synthesised
+  * in-process, plus the reference's Jet3 database (`Books_be.mdb`) only
+  * where the reference fixtures are present. */
 class TotalitySpec extends AnyFunSuite {
 
   private def check(name: String, prop: Prop, n: Int = 200): Unit = {
@@ -64,6 +66,14 @@ class TotalitySpec extends AnyFunSuite {
     })
   }
 
+  /** The reference's Jet3 database, the one seed not synthesised here;
+    * empty where the fixture directory is absent. */
+  private def jet3Seed: Seq[Array[Byte]] = {
+    val p = java.nio.file.Paths.get("/root/reference/tests/fixtures/Books_be.mdb")
+    if (java.nio.file.Files.exists(p)) Seq(java.nio.file.Files.readAllBytes(p))
+    else Nil
+  }
+
   test("structured bytes with flipped bits stay total (mutation fuzz)") {
     val seedDocs: Seq[Array[Byte]] = {
       val g = graft.corpus.CorpusGen
@@ -80,9 +90,8 @@ class TotalitySpec extends AnyFunSuite {
         g.renderMp3("t", 1234L),
         graft.extract.Bzip2.compress("bz2 payload for the fuzz".getBytes),
         graft.extract.SevenZipWriter.write("a.txt", "seven zip member".getBytes),
-        graft.extract.Sqlite.write("t", Seq("a", "b"), Seq(Seq("x", "y"))),
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-          "/root/reference/tests/fixtures/Books_be.mdb")),
+        graft.extract.Sqlite.write("t", Seq("a", "b"), Seq(Seq("x", "y")))
+      ) ++ jet3Seed ++ Seq(
         // round-3 binary readers: Jet4, PST, RAR
         graft.extract.Jet4Writer.write("docs", 2,
           Seq(Seq("alpha", "beta"), Seq("gamma", "delta"))),
