@@ -226,28 +226,4 @@ object Analyze {
         $"e.doc_id" =!= $"t.target_doc")
       .select($"e.doc_id", $"t.target_doc".as("in_reply_to_doc"))
   }
-
-  /** Language detection over span text (`analysis/language.py:10-26`):
-    * the from-scratch fastText lid.176 inference when the public model file
-    * is present (176 languages, 0.6 threshold — full reference parity),
-    * falling back to the 29-language trigram scorer otherwise. The model is
-    * an executor-JVM singleton; this stage is one narrow mapPartitions. */
-  def detectLanguages(spark: SparkSession, spans: DataFrame): DataFrame = {
-    import spark.implicits._
-    spans.select(col("doc_id"), col("text")).as[(String, String)]
-      .mapPartitions { it =>
-        val lid = FastTextLid.get
-        it.map { case (id, text0) =>
-          val text = if (text0 == null) "" else text0
-          val lang = lid match {
-            case Some(m) => m.detect(text).map(_._1).getOrElse("und")
-            case None => graft.ops.TextOps.detectLanguage(text)
-          }
-          (id, lang)
-        }
-      }
-      .toDF("doc_id", "detected_language")
-      .groupBy("doc_id")
-      .agg(first(col("detected_language")).as("detected_language"))
-  }
 }

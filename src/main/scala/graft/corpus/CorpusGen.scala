@@ -807,10 +807,6 @@ object CorpusGen {
     (docs, blobs)
   }
 
-  /** Docs-per-scale-factor convention: SF=1.0 ≡ 1M synthetic docs, so the
-    * bench corpora are sf0.001→1k, sf0.01→10k, sf0.1→100k. */
-  def docsForSf(sf: Double): Long = math.max(100L, (sf * 1000000L).toLong)
-
   def sfFromDir(sfDir: String): Double = {
     val m = """sf([0-9.]+)""".r.findFirstMatchIn(sfDir)
     m.map(_.group(1).toDouble).getOrElse(0.01)

@@ -81,8 +81,6 @@ object Lzma {
       }
       sym
     }
-
-    def isFinished: Boolean = code == 0
   }
 
   /** Length coder: choice + choice2 + low/mid trees per posState + high. */

@@ -4,9 +4,9 @@ import graft.core._
 
 /** OLE property-set metadata and legacy-binary-Office text.
   *
-  *  - `summaryProps`: the \x05SummaryInformation / \x05DocumentSummary-
-  *    Information property-set streams ([MS-OLEPS]) mapped to FtM-ish
-  *    properties exactly as the reference does via olefile
+  *  - `summaryPropsFromEntries`: the \x05SummaryInformation /
+  *    \x05DocumentSummaryInformation property-set streams ([MS-OLEPS])
+  *    mapped to FtM-ish properties exactly as the reference does via olefile
   *    (`/root/reference/ingestors/support/ole.py:38-58`): title, author
   *    (+ last-saved-by + company), summary, generator, authoredAt,
   *    modifiedAt.
@@ -111,11 +111,6 @@ object OleMeta {
       "modifiedAt" -> s.get(13).toSeq
     ).filter(_._2.nonEmpty).toMap
   }
-
-  def summaryProps(bytes: Array[Byte]): Map[String, Seq[String]] =
-    if (!Cfbf.isCfbf(bytes)) Map.empty
-    else try summaryPropsFromEntries(Cfbf.parse(bytes))
-    catch { case _: Exception => Map.empty }
 
   // ---- Word 97 binary text ---------------------------------------------
 

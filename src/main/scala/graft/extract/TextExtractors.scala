@@ -38,19 +38,6 @@ object HtmlExtractor extends Extractor {
   val name = "HTMLIngestor"
   val schema = "HyperText"
 
-  /** get_meta: property= then name=, first element with non-empty collapsed
-    * content (`support/html.py:21-26`). */
-  def getMeta(root: HElem, field: String): Option[String] = {
-    for (attr <- Seq("property", "name")) {
-      val it = findAll(root, "meta")
-        .filter(_.attrs.get(attr).contains(field))
-        .flatMap(e => e.attrs.get("content").map(collapseSpaces))
-        .filter(_.nonEmpty)
-      if (it.hasNext) return Some(it.next())
-    }
-    None
-  }
-
   /** Document-order text walk skipping script/style/head subtrees, joined
     * with spaces, collapsed (`support/html.py:46-63`). */
   def extractText(root: HElem): String = {
@@ -69,14 +56,14 @@ object HtmlExtractor extends Extractor {
 
   /** Header metadata per `support/html.py:28-44` (multi-valued adds).
     * One DOM walk collects the meta/title elements; every field lookup is
-    * over that vector (the per-field getMeta re-walk was 7 full traversals
+    * over that vector (a per-field re-walk was 7 full traversals
     * per document — the measured HTML hot spot). */
   def headerProps(root: HElem): Map[String, Seq[String]] = {
     val all = HtmlDom.allElements(root).toVector
     val metas = all.filter(_.tag == "meta")
     def metaOf(field: String): Option[String] = {
-      // same precedence as getMeta: property= first, then name=, document
-      // order within each, first nonempty collapsed content wins
+      // get_meta (`support/html.py:21-26`): property= first, then name=,
+      // document order within each, first nonempty collapsed content wins
       for (attr <- Seq("property", "name")) {
         val it = metas.iterator
           .filter(_.attrs.get(attr).contains(field))

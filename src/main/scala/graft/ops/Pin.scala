@@ -46,6 +46,13 @@ object Pin {
       p
     }
 
+    /** `projection` of `input`, pinned unless `input` is already cached:
+      * re-deriving a narrow projection from the caller's cache is cheaper
+      * than writing a second copy of it into the block manager. */
+    def unlessCached(input: DataFrame, projection: DataFrame): DataFrame =
+      if (input.storageLevel != StorageLevel.NONE) projection
+      else apply(projection)._1
+
     /** Takes over the release of a frame another operator returned pinned. */
     def hold(pinned: DataFrame): DataFrame = { held += pinned; pinned }
   }

@@ -54,131 +54,98 @@ object SpanOps {
     * excluded explicitly on both sides). */
   def stripBoilerplate(spark: SparkSession, docs: DataFrame, minDocs: Int = 5,
                        idCol: String = "doc_id",
-                       spansCol: String = "spans"): DataFrame = {
-    val ex = explodeSpans(docs, idCol, spansCol)
-    val perDocHashes = docs.select(array_distinct(transform(
-      filter(col(spansCol),
-        sp => textWithBody(sp.getField("kind"), sp.getField("text"))),
-      sp => xxhash64(sp.getField("text")))).as("hs"))
-    val boiler = perDocHashes.select(explode(col("hs")).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("ddf"))
-      .filter(col("ddf") >= minDocs)
-      .select("h")
-    ex.withColumn("h",
+                       spansCol: String = "spans"): DataFrame =
+    explodeSpans(docs, idCol, spansCol)
+      .withColumn("h",
         when(textWithBody(col("kind"), col("text")), xxhash64(col("text"))))
-      .join(boiler, Seq("h"), "left_anti")
+      .join(boilerVerdict(docs, spansCol, minDocs), Seq("h"), "left_anti")
       .drop("h")
-  }
 
   /** A boilerplate candidate: a text span whose text is not null. */
   private def textWithBody(kind: Column, text: Column): Column =
     kind === "text" && text.isNotNull
 
-  /** [[stripBoilerplate]] preserving the NESTED (doc_id, spans[]) shape —
-    * and, when the boilerplate set is broadcastable (it is, by
-    * construction: spans repeated across ≥ minDocs documents are nav
-    * bars/footers/notices, a corpus-frequency head), with ZERO text
-    * exchange end to end: per-doc distinct 64-bit span hashes explode
-    * narrowly (8-byte rows are the only shuffle), the over-threshold set
-    * collects to the driver under an enforced bound and broadcasts, and
-    * the strip itself is a narrow per-row filter of the nested array.
-    * Downstream consumers (body reassembly, rendering, packing) then stay
-    * narrow too — the exploded form forces an explode → groupBy(doc)
-    * regroup that shuffles the full span TEXT, which at 100 TB is the
-    * difference between a scan and a corpus-sized exchange (measured: the
-    * tile-40 web composition dropped ~50 s of its wall when reassembly
-    * stopped regrouping exploded rows).
+  private def isCandidate(sp: Column): Column =
+    textWithBody(sp.getField("kind"), sp.getField("text"))
+
+  /** Each document's distinct candidate hashes, deduplicated narrowly on
+    * the nested array. */
+  private def docHashes(spans: Column): Column =
+    array_distinct(transform(filter(spans, sp => isCandidate(sp)),
+      sp => xxhash64(sp.getField("text"))))
+
+  /** The boilerplate verdict of both strips: the candidate hashes `h`
+    * found in ≥ `minDocs` documents. */
+  private def boilerVerdict(docs: DataFrame, spansCol: String,
+                            minDocs: Int): DataFrame =
+    docs.select(explode(docHashes(col(spansCol))).as("h"))
+      .groupBy("h").agg(count(lit(1)).as("ddf"))
+      .filter(col("ddf") >= minDocs)
+      .select("h")
+
+  /** [[stripBoilerplate]] preserving the NESTED (doc_id, spans[]) shape,
+    * with the same verdict and no regroup of span text: the exploded
+    * form forces an explode → groupBy(doc) regroup that shuffles the full
+    * span TEXT, which at 100 TB is the difference between a scan and a
+    * corpus-sized exchange (measured: the tile-40 web composition dropped
+    * ~50 s of its wall when reassembly stopped regrouping exploded rows).
+    * Downstream consumers (body reassembly, rendering, packing) stay
+    * narrow too.
     *
-    * `maxBoilerHashes` is the explicit scale guard (the ivfPqTopK
-    * pattern): if the over-threshold set exceeds it, this op REFUSES
-    * (use [[stripBoilerplate]], whose anti-join handles an unbounded
-    * verdict side) rather than silently ballooning the driver. Hashing is
-    * fnv64 on both sides of the comparison (same function, executor and
-    * driver), so no SQL/Scala hash-parity assumption exists; a 64-bit
-    * collision can only over-strip a span at ~1e-19 per pair, the
-    * line-dedup trade documented on [[graft.ops.TextOps.lineDedupStats]].
-    * `spans` must be the north-rule Span shape (kind, text, media_ref,
-    * offset) — the fixed input-table schema. Output doc_id is cast to
-    * string (the shape's id type).
+    * The strip probes the verdict one of two ways, both codegen'd column
+    * expressions, so the span structs never round-trip through Java
+    * objects:
+    *   - up to `maxExprSet` hashes (spans repeated across ≥ minDocs
+    *     documents are nav bars, footers and notices, a corpus-frequency
+    *     head): the driver collects the verdict and the strip is a narrow
+    *     nested-array `filter` with an in-set probe (the optimizer turns
+    *     the in-list into an InSet hash probe). The driver never collects
+    *     more than `maxExprSet + 1` hashes.
+    *   - above it: a hash semi-join. The `(doc_id, h)` rows of each
+    *     document's candidate hashes semi-join the verdict, collect per
+    *     document into the hashes to drop, and left-join back onto the
+    *     documents (null-safe on the id), whose arrays then drop those
+    *     hashes. Only ids and 8-byte hashes are aggregated; dropping by
+    *     hash, not by position, keeps a repeated `doc_id` correct.
     *
-    * Single-pass contract: the input is consumed by two jobs (boiler
-    * discovery, strip), so the projected input is pinned across them —
-    * UNLESS the caller's frame is already cached (`docs.storageLevel`
-    * probe), in which case re-deriving the narrow projection from the
-    * caller's cache is cheaper than writing a second full copy of the
-    * span table into the block manager (r6; the Bench tile passes a
-    * persisted table and paid the double-cache). The stripped result
-    * comes back pinned: see [[Pin]] for the contract.
+    * Hashing is `xxhash64` of the span text in discovery and strip alike;
+    * a 64-bit collision can only over-strip a span at ~1e-19 per pair,
+    * the line-dedup trade documented on
+    * [[graft.ops.TextOps.lineDedupStats]]. `spans` must be the north-rule
+    * Span shape (kind, text, media_ref, offset) — the fixed input-table
+    * schema. Output doc_id is cast to string (the shape's id type).
     *
-    * Execution paths (r6): BOTH discovery and strip are pure codegen'd
-    * column expressions — per-doc distinct `xxhash64` hashes explode for
-    * the doc-frequency count, and the strip is a nested-array `filter`
-    * probing the broadcast verdict set — so the span structs never
-    * round-trip through Java objects (the previous typed
-    * Dataset[(String, Seq[Span])] formulation paid a full
-    * deserialize/re-serialize of every span in BOTH passes). When the
-    * verdict set outgrows `maxExprSet`, the strip probe switches from an
-    * in-list expression to the broadcast sorted-long[] binary search
-    * inside one typed map (the r5 shape) — same result, bounded plan. */
+    * The input is consumed by two jobs (discovery, strip), so the
+    * projected input is pinned across them unless the caller's frame is
+    * already cached (see [[Pin.Scope.unlessCached]]). The stripped result
+    * comes back pinned: see [[Pin]] for the contract. */
   def stripBoilerplateNested(spark: SparkSession, docs: DataFrame,
                              minDocs: Int = 5, idCol: String = "doc_id",
                              spansCol: String = "spans",
-                             maxBoilerHashes: Int = 5000000,
                              maxExprSet: Int = 10000): DataFrame = {
     import spark.implicits._
-    import graft.core.{Span, TextUtil}
     val projected = docs
       .select(col(idCol).cast("string").as(idCol), col(spansCol).as(spansCol))
-    val inputCached =
-      docs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     Pin.scoped { pins =>
-      val base = if (inputCached) projected else pins(projected)._1
-      // null-text spans are never boilerplate candidates and never strip
-      // (the exploded stripBoilerplate excludes them the same way)
-      val isTextWithBody = (sp: Column) =>
-        textWithBody(sp.getField("kind"), sp.getField("text"))
-      val hashes = base.select(explode(array_distinct(transform(
-        filter(col(spansCol), isTextWithBody),
-        sp => xxhash64(sp.getField("text"))))).as("h"))
-      val boiler = hashes.groupBy("h").agg(count(lit(1)).as("ddf"))
-        .filter(col("ddf") >= minDocs)
-        .select("h").as[Long]
-        .head(maxBoilerHashes + 1)
-      require(boiler.length <= maxBoilerHashes,
-        s"boilerplate set exceeds $maxBoilerHashes hashes — this corpus " +
-          "needs the join-based stripBoilerplate (unbounded verdict side)")
+      val base = pins.unlessCached(docs, projected)
+      val verdict = boilerVerdict(base, spansCol, minDocs)
+      val boiler = verdict.as[Long].head(maxExprSet + 1)
       val stripped =
         if (boiler.isEmpty) base.select(col(idCol), col(spansCol))
         else if (boiler.length <= maxExprSet) {
-          // codegen'd in-set probe (the optimizer converts the in-list to
-          // an InSet hash probe past its conversion threshold); realistic
-          // boilerplate heads are tens-to-thousands of spans
-          val keep = (sp: Column) => !(isTextWithBody(sp) &&
+          val keep = (sp: Column) => !(isCandidate(sp) &&
             xxhash64(sp.getField("text")).isin(boiler.toIndexedSeq: _*))
           base.select(col(idCol), filter(col(spansCol), keep).as(spansCol))
         } else {
-          // giant verdict set: broadcast a sorted primitive array probed by
-          // binary search, not an immutable Set[Long] — at the 5M-hash
-          // bound the boxed set costs hundreds of MB on the driver and
-          // every executor copy, the long[] 40 MB flat. Hash parity with
-          // the discovery pass: the candidate hashes are computed by the
-          // SAME SQL xxhash64 in a companion column, zipped back to the
-          // spans in one typed map (Long.MinValue = not-a-candidate
-          // sentinel — a genuine hash landing on it is kept, the same
-          // 2^-64-class trade the hash identity already makes).
-          val sorted = boiler.sorted
-          val bc = spark.sparkContext.broadcast(sorted)
-          base.select(col(idCol), col(spansCol),
-              transform(col(spansCol), sp =>
-                coalesce(when(isTextWithBody(sp),
-                  xxhash64(sp.getField("text"))), lit(Long.MinValue))).as("_hs"))
-            .as[(String, Seq[Span], Seq[Long])]
-            .map { case (id, spans, hs) =>
-              (id, spans.iterator.zip(hs.iterator).filter { case (_, h) =>
-                h == Long.MinValue ||
-                  java.util.Arrays.binarySearch(bc.value, h) < 0
-              }.map(_._1).toSeq)
-            }.toDF(idCol, spansCol)
+          val drops = base.select(col(idCol).as("_id"),
+              explode(docHashes(col(spansCol))).as("h"))
+            .join(verdict, Seq("h"), "left_semi")
+            .groupBy("_id").agg(collect_set(col("h")).as("_drop"))
+          val keep = (sp: Column) => !(isCandidate(sp) && coalesce(
+            array_contains(col("_drop"), xxhash64(sp.getField("text"))),
+            lit(false)))
+          base.join(drops, col(idCol) <=> col("_id"), "left")
+            .select(col(idCol), filter(col(spansCol), keep).as(spansCol))
         }
       Pin(stripped)._1
     }

@@ -132,6 +132,37 @@ object TextOps {
         sum(when(col("nd") > 1, 1L).otherwise(0L)).as("shared_grams"))
   }
 
+  /** The hash of the `n`-token gram at every start position of `text`'s
+    * tokens (none when it has fewer than `n`): a polynomial rolling hash
+    * over per-token `fnv64`, O(tokens) instead of materializing an
+    * n-token string per position. Wrapping Long arithmetic is
+    * deterministic everywhere. */
+  private def gramHashes(text: String, n: Int): Array[Long] = {
+    val toks = graft.core.TextUtil.tokens(if (text == null) "" else text)
+    if (toks.length < n) return Array.emptyLongArray
+    val B = 0x100000001b3L
+    var bPow = 1L // B^(n-1)
+    var j = 1
+    while (j < n) { bPow *= B; j += 1 }
+    val th = new Array[Long](toks.length)
+    var i = 0
+    while (i < toks.length) {
+      th(i) = graft.core.TextUtil.fnv64(toks(i)); i += 1
+    }
+    val out = new Array[Long](toks.length - n + 1)
+    var h = 0L
+    i = 0
+    while (i < n) { h = h * B + th(i); i += 1 }
+    out(0) = h
+    var s = 1
+    while (s < out.length) {
+      h = (h - th(s - 1) * bPow) * B + th(s + n - 1)
+      out(s) = h
+      s += 1
+    }
+    out
+  }
+
   /** The REMOVAL transform of Lee et al. 2021 (ExactSubstr dedup): every
     * token covered by an n-token gram that occurs in ≥2 distinct
     * documents is cut; the survivors rejoin in order. Complements
@@ -159,32 +190,7 @@ object TextOps {
     Pin.scoped { pins =>
       val (positions, _) = pins(docs.as[(Long, String)]
         .flatMap { case (id, t) =>
-          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-          if (toks.length < n) Iterator.empty
-          else {
-            // polynomial rolling hash over per-token hashes: O(tokens)
-            // instead of materializing a 20-token string per position
-            // (O(tokens × n) char churn); wrapping Long arithmetic is
-            // deterministic everywhere
-            val B = 0x100000001b3L
-            var bPow = 1L // B^(n-1)
-            var j = 1
-            while (j < n) { bPow *= B; j += 1 }
-            val th = new Array[Long](toks.length)
-            var i = 0
-            while (i < toks.length) {
-              th(i) = graft.core.TextUtil.fnv64(toks(i)); i += 1
-            }
-            var h = 0L
-            i = 0
-            while (i < n) { h = h * B + th(i); i += 1 }
-            val first = (id, 0, h)
-            val rest = (1 to toks.length - n).iterator.map { s =>
-              h = (h - th(s - 1) * bPow) * B + th(s + n - 1)
-              (id, s, h)
-            }
-            Iterator(first) ++ rest
-          }
+          gramHashes(t, n).iterator.zipWithIndex.map { case (h, s) => (id, s, h) }
         }
         .toDF("id", "s", "h"))
       val dup = positions.select("id", "h").distinct()
@@ -1196,8 +1202,8 @@ object TextOps {
     * documents, not billions), so Catalyst broadcasts it and the
     * "contaminated" semi-join never shuffles the train side. Grams are
     * collapsed to 64-bit polynomial rolling hashes IN the narrow flatMap
-    * (the [[stripDupSubstrings]] scheme — O(tokens) per doc instead of
-    * O(tokens × n) string churn), so only (id, 8-byte hash) rows ever
+    * ([[gramHashes]], shared with [[stripDupSubstrings]] so both key
+    * grams identically), so only (id, 8-byte hash) rows ever
     * enter the exchange and the broadcast verdict side is a long set —
     * the same hash≡gram-identity trade every line/gram-dedup stage here
     * makes (a 64-bit collision could flag a clean doc at ~1e-12 per
@@ -1210,34 +1216,7 @@ object TextOps {
       df.select(col(idCol).cast("long"), col(textCol))
         .as[(Long, String)]
         .flatMap { case (id, t) =>
-          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-          if (toks.length < n) Iterator.empty
-          else {
-            // polynomial rolling hash over per-token fnv64 hashes — the
-            // stripDupSubstrings discovery hash, reused verbatim so both
-            // sides of the semi-join key identically
-            val B = 0x100000001b3L
-            var bPow = 1L
-            var j = 1
-            while (j < n) { bPow *= B; j += 1 }
-            val th = new Array[Long](toks.length)
-            var i = 0
-            while (i < toks.length) {
-              th(i) = graft.core.TextUtil.fnv64(toks(i)); i += 1
-            }
-            var h = 0L
-            i = 0
-            while (i < n) { h = h * B + th(i); i += 1 }
-            val seen = scala.collection.mutable.HashSet.empty[Long]
-            seen += h
-            var s = 1
-            while (s <= toks.length - n) {
-              h = (h - th(s - 1) * bPow) * B + th(s + n - 1)
-              seen += h
-              s += 1
-            }
-            seen.iterator.map(g => (id, g))
-          }
+          gramHashes(t, n).distinct.iterator.map(g => (id, g))
         }
         .toDF("id", "gram")
     val benchGrams = gramsOf(bench).select(col("gram")).distinct()
@@ -1383,16 +1362,10 @@ object TextOps {
     val docs = df.select(col(idCol).cast("long").as("id"),
       col(textCol).as("text"), col(stratumCol).as("stratum"),
       col(sourceCol).as("source"), col(ordCol).as("ord"))
-    // pin the projected corpus so every verdict stage below reads a cache
-    // instead of re-running the (possibly expensive) upstream subtree —
-    // UNLESS the caller's frame is already cached, in which case
-    // re-deriving the narrow projection from the caller's cache per stage
-    // is cheaper than writing a second full copy of the corpus text into
-    // the block manager
-    val inputCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     Pin.scoped { pins =>
-      val base = if (inputCached) docs else pins(docs)._1
+      // every verdict stage below reads the pinned (or caller-cached)
+      // corpus instead of re-running the upstream subtree
+      val base = pins.unlessCached(df, docs)
       def pinIds(v: DataFrame): DataFrame = pins(v.select("id"))._1
       // 1. quality gate (narrow; verdict ids only)
       val quality = pinIds(filterGopher(spark, base, "id", "text")

@@ -31,11 +31,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pipeline {
 
-  final case class Config(maxDepth: Int = 6,
-                          targetPartitionBytes: Long = 64L * 1024 * 1024,
-                          minPartitions: Int = 0,
-                          scratchDir: String =
-                            s"/tmp/graft-ckpt-${java.util.UUID.randomUUID()}")
+  final case class Config(maxDepth: Int = 6)
+
+  /** Payload bytes one extraction task aims at (see [[partitionCountFor]]). */
+  val TargetPartitionBytes: Long = 64L * 1024 * 1024
 
   /** @param levels the extracted depth levels the outputs read. */
   final case class Output(spans: Dataset[SpanOut],
@@ -124,23 +123,22 @@ object Pipeline {
 
   /** Size-aware rebalance: partition count from total payload bytes
     * (capped), rows spread by doc_id hash; keeps every task under
-    * ~targetPartitionBytes of payload even under the long-tail size
+    * ~[[TargetPartitionBytes]] of payload even under the long-tail size
     * distribution. Stats (cnt, bytes) are passed in — measured by
     * accumulators on the producing job, so no extra scan runs. */
-  def partitionCountFor(spark: SparkSession, cnt: Long, totalBytes: Long,
-                        cfg: Config): Int = {
+  def partitionCountFor(spark: SparkSession, cnt: Long,
+                        totalBytes: Long): Int = {
     // 3 waves per core smooths the long-tail size skew (a giant doc pins one
     // task; its siblings steal the rest of that wave)
-    val parallelism = math.max(cfg.minPartitions,
-      spark.sparkContext.defaultParallelism * 3)
-    val byBytes = (totalBytes / cfg.targetPartitionBytes + 1).toInt
+    val parallelism = spark.sparkContext.defaultParallelism * 3
+    val byBytes = (totalBytes / TargetPartitionBytes + 1).toInt
     math.max(math.min(parallelism, math.max(cnt, 1L).toInt), byBytes)
   }
 
   def rebalance(spark: SparkSession, pending: Dataset[PendingDoc],
-                cnt: Long, totalBytes: Long, cfg: Config): Dataset[PendingDoc] = {
+                cnt: Long, totalBytes: Long): Dataset[PendingDoc] = {
     import spark.implicits._
-    val parts = partitionCountFor(spark, cnt, totalBytes, cfg)
+    val parts = partitionCountFor(spark, cnt, totalBytes)
     // skip the byte-heavy shuffle when the queue is already split at least
     // that fine — hash-partitioned parents hand children down well-spread
     if (pending.rdd.getNumPartitions >= parts) pending
@@ -198,7 +196,7 @@ object Pipeline {
         .as[(Long, Long)].head())
       while (cnt > 0 && levels.size <= cfg.maxDepth) {
         val level = extractLevel(spark,
-          rebalance(spark, pending, cnt, totalBytes, cfg), levels.size)
+          rebalance(spark, pending, cnt, totalBytes), levels.size)
         levels += level
         if (levels.size == 1) statsPin.foreach(_.unpersist(false))
         pending = level.children

@@ -486,10 +486,6 @@ object SnapshotTable {
       plan(spark, location, addedManifest(spark, location, snapshotId), component),
       s"snapshot $snapshotId added no '$component' files at $location")
 
-  /** Summary of the current snapshot (resume bookkeeping reads this). */
-  def currentSummary(spark: SparkSession, location: String): Map[String, String] =
-    load(spark, location).flatMap(_.current).map(_.summary).getOrElse(Map.empty)
-
   /** Delete every data file no manifest lists — the remove-orphan-files
     * maintenance action; safe because writers only publish files by
     * committing metadata. A dir no manifest lists a file of goes whole (a

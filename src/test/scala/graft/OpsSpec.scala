@@ -1222,7 +1222,7 @@ class OpsSpec extends AnyFunSuite {
     assert(dist(1.0, 0.0) == Map("train" -> 4096L))
   }
 
-  test("stripBoilerplateNested: same verdicts as the exploded form, zero text exchange, bounded-set guard") {
+  test("stripBoilerplateNested: same verdicts as the exploded form on the in-set and semi-join paths") {
     import graft.core.Span
     // 8 docs sharing a footer span (df=8 >= 5); unique bodies; media spans
     val docs = (0L until 8L).map { id =>
@@ -1242,17 +1242,17 @@ class OpsSpec extends AnyFunSuite {
       .select("doc_id", "kind", "text").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     import org.apache.spark.sql.functions.{col => fcol, explode => fexplode}
-    val flatNested = nested.select(fcol("doc_id"),
+    def flat(df: org.apache.spark.sql.DataFrame) = df.select(fcol("doc_id"),
         fexplode(fcol("spans")).as("sp"))
       .select(fcol("doc_id"), fcol("sp.kind"), fcol("sp.text")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    assert(flatNested == exploded)
-    // the enforced driver bound refuses oversized boilerplate sets
-    intercept[IllegalArgumentException] {
-      graft.ops.SpanOps.stripBoilerplateNested(spark, docs, minDocs = 5,
-        maxBoilerHashes = 0)
-    }
+    assert(flat(nested) == exploded)
+    // a verdict over maxExprSet takes the hash semi-join: same verdicts
+    val joined = graft.ops.SpanOps.stripBoilerplateNested(spark, docs,
+      minDocs = 5, maxExprSet = 0)
+    assert(flat(joined) == exploded)
     nested.unpersist(false)
+    joined.unpersist(false)
     // null-text spans: never boilerplate candidates, never stripped, no
     // NPE, in both forms (xxhash64(null) is 42, not SQL null, so both
     // exclude null text explicitly)
@@ -1276,30 +1276,40 @@ class OpsSpec extends AnyFunSuite {
     strippedNull.unpersist(false)
   }
 
-  test("stripBoilerplateNested: the broadcast sorted-long[] probe keeps the in-set probe's rows") {
+  test("stripBoilerplateNested: the hash semi-join keeps the in-set probe's rows, repeated and null doc_id included") {
     import graft.core.Span
     // media and null-text spans ride with boilerplate and unique text;
-    // maxExprSet = 0 forces every non-empty verdict set onto the probe
-    val docs = (0L until 7L).map { id =>
+    // doc_id 4 repeats with other spans and one row has a null doc_id;
+    // maxExprSet = 0 forces every non-empty verdict set onto the semi-join
+    val docs = ((0L until 7L).map { id =>
       (id.toString, Seq(
         Span("text", "site nav", "", 0),
         Span("image", "", s"m$id", 1),
         Span("text", null, "", 2),
         Span("text", s"unique body $id", "", 3),
         Span("text", "shared footer notice", "", 4)))
-    }.toDF("doc_id", "spans")
+    } ++ Seq(
+      ("4", Seq(Span("text", "shared footer notice", "", 0),
+        Span("text", "second copy body", "", 1))),
+      (null, Seq(Span("text", "site nav", "", 0),
+        Span("text", "null id body", "", 1))))).toDF("doc_id", "spans")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(x =>
-        (x.getString(0), Option(x.getString(1)), x.getString(2)))).toMap
+      Option(r.getString(0)) -> r.getSeq[org.apache.spark.sql.Row](1).map(x =>
+        (x.getString(0), Option(x.getString(1)), x.getString(2))))
+      .toSeq.sortBy(_.toString)
     val inSet = graft.ops.SpanOps.stripBoilerplateNested(spark, docs, 5)
-    val probed = graft.ops.SpanOps.stripBoilerplateNested(spark, docs, 5,
+    val joined = graft.ops.SpanOps.stripBoilerplateNested(spark, docs, 5,
       maxExprSet = 0)
-    val got = rows(probed)
+    val got = rows(joined)
     assert(got == rows(inSet))
-    assert(got("4") == Seq(("image", Some(""), "m4"), ("text", None, ""),
-      ("text", Some("unique body 4"), "")))
+    assert(got.filter(_._1.contains("4")).map(_._2).toSet == Set(
+      Seq(("image", Some(""), "m4"), ("text", None, ""),
+        ("text", Some("unique body 4"), "")),
+      Seq(("text", Some("second copy body"), ""))))
+    assert(got.filter(_._1.isEmpty).map(_._2) ==
+      Seq(Seq(("text", Some("null id body"), ""))))
     inSet.unpersist(false)
-    probed.unpersist(false)
+    joined.unpersist(false)
   }
 
   test("packInterleavedPatches: planted dims change chunk boundaries; missing dims cost 1") {

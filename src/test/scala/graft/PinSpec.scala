@@ -74,6 +74,8 @@ class PinSpec extends AnyFunSuite {
         Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"))),
       "stripBoilerplateNested" -> (() =>
         SpanOps.stripBoilerplateNested(spark, spans, 5)),
+      "stripBoilerplateNested semi-join" -> (() =>
+        SpanOps.stripBoilerplateNested(spark, spans, 5, maxExprSet = 0)),
       "stripDupSubstrings" -> (() =>
         TextOps.stripDupSubstrings(spark, docs, "doc_id", "text", n = 5)),
       "bm25TopK" -> (() =>

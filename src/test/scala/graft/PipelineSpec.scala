@@ -156,16 +156,15 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("size-aware partitioning: byte-derived counts bound per-task payload") {
-    val cfg = Pipeline.Config()
     // 10 GiB across few rows: the bytes term must dominate parallelism
     val byBytes = Pipeline.partitionCountFor(spark, cnt = 200,
-      totalBytes = 10L * 1024 * 1024 * 1024, cfg)
-    assert(byBytes >= (10L * 1024 * 1024 * 1024 / cfg.targetPartitionBytes).toInt,
+      totalBytes = 10L * 1024 * 1024 * 1024)
+    assert(byBytes >= (10L * 1024 * 1024 * 1024 / Pipeline.TargetPartitionBytes).toInt,
       byBytes)
     // tiny queue: never more partitions than rows
-    assert(Pipeline.partitionCountFor(spark, cnt = 3, totalBytes = 100, cfg) == 3)
+    assert(Pipeline.partitionCountFor(spark, cnt = 3, totalBytes = 100) == 3)
     // normal queue: 3 waves per core smooths the long tail
-    val waves = Pipeline.partitionCountFor(spark, cnt = 1000000, totalBytes = 1000, cfg)
+    val waves = Pipeline.partitionCountFor(spark, cnt = 1000000, totalBytes = 1000)
     assert(waves >= spark.sparkContext.defaultParallelism * 3)
   }
 

@@ -244,6 +244,23 @@ class PlanSpec extends AnyFunSuite {
       plan.take(2000))
   }
 
+  test("nested boilerplate strip, semi-join path: no aggregate carries the spans column") {
+    import spark.implicits._
+    val docs = (0L until 40L).map { id =>
+      (id.toString, Seq(
+        graft.core.Span("text", "shared header", "", 0),
+        graft.core.Span("text", s"body $id", "", 1),
+        graft.core.Span("image", "", s"blob-$id", 2)))
+    }.toDF("doc_id", "spans")
+    val (df, plans) = executedPlans(graft.ops.SpanOps.stripBoilerplateNested(
+      spark, docs, 5, maxExprSet = 0))
+    assertOneNode(df)
+    assert(plans.exists(_.contains("LeftSemi")), plans.mkString("\n").take(3000))
+    val aggs = plans.flatMap(_.linesIterator.filter(_.contains("Aggregate")))
+    assert(aggs.nonEmpty && aggs.forall(!_.contains("spans")), aggs.mkString("\n"))
+    df.unpersist(false)
+  }
+
   test("bm25: query terms broadcast, token-count exchange has partial agg below it") {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val (df, plans) = executedPlans(graft.ops.TextOps.bm25TopK(spark,
