@@ -1031,8 +1031,10 @@ object SparkEntry {
       // each site's bytes are a pure function of (id, text) and land in a
       // distinct file, so the render + gzip + write loop (~5k gzip+write
       // calls per invocation) spreads across a bounded pool — a driver-
-      // serial term that grows linearly with the fixture corpus; .get()
-      // propagates the first failure exactly like the sequential loop did
+      // serial term that grows linearly with the fixture corpus. The first
+      // failure is rethrown as itself, as the sequential loop did, after
+      // the pool's other writers are stopped, so none of them can race the
+      // next run's deleteRec
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.max(2, math.min(Runtime.getRuntime.availableProcessors(), 16)))
       try {
@@ -1046,7 +1048,14 @@ object SparkEntry {
               ()
             }
           })
-        }.foreach(_.get())
+        }.foreach { f =>
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      } catch { case t: Throwable =>
+        pool.shutdownNow()
+        pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+        throw t
       } finally pool.shutdown()
       // 2. crawl source -> extraction
       val out = QueryLib.run(s,

@@ -533,8 +533,8 @@ object Dedup {
       val pairs = minhashLsh(spark, reps, "id", "text", threshold, params,
         maxBucket = maxBucket, verify = verify, pairing = pairing)
       val pinned = if (verify == "sig8") pins.hold(pairs) else pins(pairs)._1
-      val comp = connectedComponents(spark,
-        pinned.select(col("id_a"), col("id_b")))
+      val comp = pins.hold(connectedComponents(spark,
+        pinned.select(col("id_a"), col("id_b"))))
       Pin(idToRep
         .join(comp.withColumnRenamed("id", "rep"), Seq("rep"), "left")
         .select(col("id"),
@@ -555,15 +555,17 @@ object Dedup {
     *    combined map-side (groupBy min is partial-aggregated);
     *  - converges in O(component diameter) iterations — star pairing
     *    keeps diameters small by construction (every bucket is a star);
-    *  - per-iteration `localCheckpoint` truncates the growing plan
-    *    lineage (driver-side planning is the scale hazard in iterative
-    *    DataFrame jobs, same trick as Pipeline.run's per-depth cut);
+    *  - each iteration's labels are a [[Pin]], which cuts the growing
+    *    plan (driver-side planning is the scale hazard in iterative
+    *    DataFrame jobs) and releases the superseded labels;
     *  - the convergence check rides the label job itself: the previous
     *    label is carried through the same aggregation and an accumulator
-    *    counts changes during the eager-checkpoint materialization —
-    *    exactly ONE Spark job per iteration (asserted in OpsSpec), not
-    *    label-job + change-count-job.
-    */
+    *    counts changes while the pin materializes — exactly ONE Spark job
+    *    per iteration (asserted in OpsSpec), not label-job +
+    *    change-count-job.
+    *
+    * The driver fast path returns a local frame; the iterative path's
+    * labels come back pinned (see [[Pin]]). */
   def connectedComponents(spark: SparkSession, links: DataFrame,
                           maxIter: Int = 25,
                           localThreshold: Long = 2000000L): DataFrame = {
@@ -604,52 +606,51 @@ object Dedup {
       return nodes.toSeq.map(id => (id, find(id)))
         .toDF("id", "component")
     }
-    val undirected = edges.unionByName(
-        edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = undirected.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val viaNeighbor = undirected
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("component"),
-          lit(Long.MaxValue).as("old"))
-      // Every id has exactly one row in `labels`, so min(old) over the
-      // union recovers its previous label; neighbor rows carry the
-      // MaxValue sentinel. Change detection is an accumulator bump in the
-      // row pass the eager checkpoint materializes anyway. Accumulator
-      // updates in a transformation can over-count on task retry — that
-      // only delays convergence detection by one (correct) iteration,
-      // never falsely declares it.
-      val acc = spark.sparkContext.longAccumulator("cc_changed")
-      val next = labels
-        .select(col("id"), col("component"), col("component").as("old"))
-        .unionByName(viaNeighbor)
-        .groupBy("id").agg(min(col("component")).as("component"),
-          min(col("old")).as("old"))
-        .as[(Long, Long, Long)]
-        .map { case (id, comp, old) =>
-          if (comp != old) acc.add(1L)
-          (id, comp)
-        }
-        .toDF("id", "component")
-        .localCheckpoint(true) // eager: the one job per iteration
-      converged = acc.value == 0L
-      labels = next
-      iter += 1
+    Pin.scoped { pins =>
+      val undirected = pins(edges.unionByName(
+          edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())._1
+      var labels = pins(undirected.select(col("src").as("id"))
+        .distinct()
+        .withColumn("component", col("id")))._1
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val viaNeighbor = undirected
+          .join(labels.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), col("component"),
+            lit(Long.MaxValue).as("old"))
+        // Every id has exactly one row in `labels`, so min(old) over the
+        // union recovers its previous label; neighbor rows carry the
+        // MaxValue sentinel. Change detection is an accumulator bump in the
+        // row pass the pin materializes anyway. Accumulator updates in a
+        // transformation can over-count on task retry — that only delays
+        // convergence detection by one (correct) iteration, never falsely
+        // declares it.
+        val acc = spark.sparkContext.longAccumulator("cc_changed")
+        // the one job per iteration; the superseded labels are released
+        labels = pins.step(labels, labels
+          .select(col("id"), col("component"), col("component").as("old"))
+          .unionByName(viaNeighbor)
+          .groupBy("id").agg(min(col("component")).as("component"),
+            min(col("old")).as("old"))
+          .as[(Long, Long, Long)]
+          .map { case (id, comp, old) =>
+            if (comp != old) acc.add(1L)
+            (id, comp)
+          }
+          .toDF("id", "component"))
+        converged = acc.value == 0L
+        iter += 1
+      }
+      if (!converged)
+        // non-converged labels are still a valid coarsening (every labeled
+        // pair IS connected) but long chains may not have fully merged —
+        // surface it instead of silently returning partial clusters
+        System.err.println(s"[graft] connectedComponents did NOT converge " +
+          s"within maxIter=$maxIter (labels were still changing); component " +
+          s"diameter exceeds the iteration budget — raise maxIter")
+      pins.handOff(labels)
     }
-    if (!converged)
-      // non-converged labels are still a valid coarsening (every labeled
-      // pair IS connected) but long chains may not have fully merged —
-      // surface it instead of silently returning partial clusters
-      System.err.println(s"[graft] connectedComponents did NOT converge " +
-        s"within maxIter=$maxIter (labels were still changing); component " +
-        s"diameter exceeds the iteration budget — raise maxIter")
-    labels
   }
 }

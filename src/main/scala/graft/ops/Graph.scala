@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * exchange is the groupBy(dst) over (8-byte dst, 8-byte partial sum)
   * with map-side combine, and the rank vector re-attaches to the node
   * set with a left join (AQE picks broadcast when the contribution sums
-  * are sparse). Lineage is cut every few iterations exactly like the
-  * connected-components loop. */
+  * are sparse). Lineage is cut every few iterations by a [[Pin]], like
+  * the connected-components loop; the distributed path's ranks come back
+  * pinned. */
 object Graph {
 
   /** Fixed-iteration PageRank. `edges` needs (src, dst) columns
@@ -93,6 +94,7 @@ object Graph {
         val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
         val base = math.floor((100L - dampingPct) * sc.toDouble / (100L * n)).toLong
         var ranks = nodes.withColumn("r", lit(math.floor(sc.toDouble / n).toLong))
+        var cut = ranks
         var i = 1
         while (i <= iterations) {
           // per-edge contribution floor(r/d); floor of a long/long double
@@ -108,11 +110,12 @@ object Graph {
             .select(col("id"),
               (lit(base) + floor(lit(dampingPct.toLong) * coalesce(col("s"), lit(0L))
                 / lit(100.0)).cast("long")).as("r"))
-          // cut the growing plan the same way connectedComponents does
-          if (i % 3 == 0 || i == iterations) ranks = ranks.localCheckpoint()
+          // cut the growing plan with a pin, as connectedComponents does;
+          // the superseded cut is released
+          if (i % 3 == 0 || i == iterations) { ranks = pins.step(cut, ranks); cut = ranks }
           i += 1
         }
-        ranks
+        pins.handOff(ranks)
       }
     }
   }

@@ -55,5 +55,17 @@ object Pin {
 
     /** Takes over the release of a frame another operator returned pinned. */
     def hold(pinned: DataFrame): DataFrame = { held += pinned; pinned }
+
+    /** [[apply]] for a frame that supersedes `prev` (the next value of a
+      * loop-carried frame, or a pin that reads `prev` and is its only
+      * reader): pins `df`, then releases `prev` if this scope holds it. */
+    def step(prev: DataFrame, df: DataFrame): DataFrame = {
+      val next = apply(df)._1
+      if (held.contains(prev)) { held -= prev; prev.unpersist(false) }
+      next
+    }
+
+    /** Hands a frame this scope holds to the caller, who releases it. */
+    def handOff(pinned: DataFrame): DataFrame = { held -= pinned; pinned }
   }
 }

@@ -198,10 +198,9 @@ object TextOps {
         .filter(col("nd") >= 2)
         .select("h")
       // dup-carrying docs only — small; the position pin releases early
-      val (covered, _) = pins(positions.join(dup, "h")
+      val covered = pins.step(positions, positions.join(dup, "h")
         .groupBy("id")
         .agg(collect_list(col("s")).as("starts")))
-      positions.unpersist(false)
       val nn = n
       Pin(docs.join(covered, Seq("id"), "left")
         .select(col("id"), col("text"), coalesce(col("starts"),
@@ -610,7 +609,7 @@ object TextOps {
     * the per-merge rewrite drops symbol strings that can no longer pair
     * from the working table is NOT done (counts must stay exact), but
     * the growing replace-expression lineage IS cut every
-    * `checkpointEvery` merges (localCheckpoint over the tiny vocab
+    * `checkpointEvery` merges (a [[Pin]] of the tiny vocab
     * table), keeping Catalyst analysis time linear in `merges` instead
     * of quadratic. Defaults (`trainFraction = 1.0`) reproduce the
     * round-3 oracle exactly. */
@@ -698,6 +697,7 @@ object TextOps {
         }
       } else {
         var cur = words
+        var cut = words
         var step = 1
         var exhausted = false
         while (step <= merges && !exhausted) {
@@ -722,9 +722,9 @@ object TextOps {
                 .as("sym"), col("c"))
             // cut the replace-chain lineage periodically: the vocab table is
             // tiny, but K stacked projections make Catalyst analysis O(K^2)
-            // across the loop — localCheckpoint keeps large-merge training
-            // (32k-vocab reality) linear
-            if (step % checkpointEvery == 0) cur = cur.localCheckpoint()
+            // across the loop — a pin keeps large-merge training (32k-vocab
+            // reality) linear and releases the superseded cut
+            if (step % checkpointEvery == 0) { cur = pins.step(cut, cur); cut = cur }
             step += 1
           }
         }
@@ -913,14 +913,13 @@ object TextOps {
     // costs corpus-rows × 16 B and halves that (guide §2: don't compute
     // things twice feeding one exchange)
     Pin.scoped { pins =>
+      // the pre-exchange input pin releases once the range pin holds (lost
+      // shuffle partitions replay from shuffle files, not by resampling)
       val (input, _) = pins(df.filter(col("n") > 0))
-      val counted = pins(input
+      val counted = pins.step(input, input
         .repartitionByRange(col("id"))
-        .sortWithinPartitions("id"))._1
+        .sortWithinPartitions("id"))
         .as[(Long, Long)]
-      // the pre-exchange input pin can release now (lost shuffle
-      // partitions replay from shuffle files, not by resampling)
-      input.unpersist(false)
       // pass 1: per-partition token totals (numPartitions rows to driver)
       val partSums = counted
         .mapPartitions { it =>
@@ -988,11 +987,10 @@ object TextOps {
           scoreCol.cast("long").as("score"),
           tokenCount(col(textCol)).cast("long").as("n"))
         .filter(col("n") > 0))
-      val counted = pins(input
+      val counted = pins.step(input, input
         .repartitionByRange(col("score").desc, col("id"))
-        .sortWithinPartitions(col("score").desc, col("id")))._1
+        .sortWithinPartitions(col("score").desc, col("id")))
         .as[(Long, Long, Long)]
-      input.unpersist(false)
       val partSums = counted.mapPartitions { it =>
         var s = 0L; it.foreach(s += _._3)
         Iterator.single((org.apache.spark.TaskContext.getPartitionId(), s))

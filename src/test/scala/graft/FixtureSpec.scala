@@ -24,6 +24,27 @@ class FixtureSpec extends AnyFunSuite {
   private def assume_(name: String): Unit =
     assume(Files.exists(dir.resolve(name)), s"fixture $name missing")
 
+  /** The fixture `name`'s bytes, or, where the fixture is absent, a
+    * synthesized input of the same format; None for formats nothing here
+    * writes. */
+  private def input(name: String): Option[Array[Byte]] =
+    if (Files.exists(dir.resolve(name))) Some(bytes(name))
+    else name.substring(name.lastIndexOf('.') + 1) match {
+      case "gif" =>
+        val out = new java.io.ByteArrayOutputStream()
+        val img = new java.awt.image.BufferedImage(7, 5,
+          java.awt.image.BufferedImage.TYPE_INT_RGB)
+        assert(javax.imageio.ImageIO.write(img, "gif", out))
+        Some(out.toByteArray)
+      case "jpg" => Some(graft.queries.QueryLib.render("jpg_exif", 1, "")._2)
+      case "tif" => Some(graft.queries.QueryLib.render("tiff_exif", 1, "")._2)
+      case ext @ ("html" | "pdf" | "csv" | "xls" | "xlsx" | "docx" | "ods" | "eml" |
+                  "zip" | "svg" | "json" | "txt" | "vcf" | "ics" | "dbf") =>
+        Some(graft.queries.QueryLib.render(ext, 1,
+          "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu")._2)
+      case _ => None
+    }
+
   /** Files in the fixture directory; empty where the directory is absent. */
   private def fixtureFiles: Array[java.io.File] =
     Option(new java.io.File(dir.toFile.getPath).listFiles())
@@ -317,23 +338,27 @@ class FixtureSpec extends AnyFunSuite {
   test("image fixtures: dimensions decoded from png/gif/jpg/webp headers") {
     val cases = Seq("regression_jpg.jpg", "regression_gif.gif",
       "regression_webp.webp")
-    for (n <- cases if Files.exists(dir.resolve(n))) {
-      val r = ImageExtractor.extract(RawDoc("d", n, "", bytes(n)))
+    val checked = for (n <- cases; b <- input(n)) yield {
+      val r = ImageExtractor.extract(RawDoc("d", n, "", b))
       assert(r.status == ExtractionResult.Success, s"$n: ${r.error}")
       val w = r.properties.getOrElse("width", Nil).headOption.flatMap(_.toIntOption)
       val h = r.properties.getOrElse("height", Nil).headOption.flatMap(_.toIntOption)
       assert(w.exists(_ > 0) && h.exists(_ > 0), s"$n dims: $w x $h")
+      n
     }
+    assert(checked.nonEmpty)
   }
 
   test("tiff fixtures: success with image span + contentHash (test_tiff.py shape)") {
-    for (n <- Seq("multipage_tiff_example.tif", "hello_world_tiff.tif")
-         if Files.exists(dir.resolve(n))) {
-      val r = TiffExtractor.extract(RawDoc("d", n, "image/tiff", bytes(n)))
+    val checked = for (n <- Seq("multipage_tiff_example.tif", "hello_world_tiff.tif");
+                       b <- input(n)) yield {
+      val r = TiffExtractor.extract(RawDoc("d", n, "image/tiff", b))
       assert(r.status == ExtractionResult.Success, s"$n: ${r.error}")
       assert(r.spans.exists(_.kind == SpanKinds.Image))
       assert(r.properties.contains("contentHash"))
+      n
     }
+    assert(checked.nonEmpty)
   }
 
   // ---- email (tests/test_msg.py, test_outlookmsg.py, test_emlx.py) --------
@@ -532,9 +557,11 @@ class FixtureSpec extends AnyFunSuite {
       "image.svg" -> "SVGIngestor",
       "example_2.json" -> "JSONIngestor",
       "PAK_adm1.dbf" -> "DBFIngestor")
-    for ((name, ing) <- expect if Files.exists(dir.resolve(name))) {
-      val got = ingest(name).ingestor
+    val checked = for ((name, ing) <- expect; b <- input(name)) yield {
+      val got = Dispatch.ingest(name, "", b).ingestor
       assert(got == ing, s"$name -> $got (expected $ing)")
+      name
     }
+    assert(checked.nonEmpty)
   }
 }

@@ -72,6 +72,8 @@ class PinSpec extends AnyFunSuite {
         "text", verify = "exact", pairing = "all")),
       "pageRank" -> (() => Graph.pageRank(spark,
         Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"))),
+      "connectedComponents distributed" -> (() => Dedup.connectedComponents(spark,
+        Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b"), localThreshold = 0)),
       "stripBoilerplateNested" -> (() =>
         SpanOps.stripBoilerplateNested(spark, spans, 5)),
       "stripBoilerplateNested semi-join" -> (() =>
@@ -82,6 +84,8 @@ class PinSpec extends AnyFunSuite {
         TextOps.bm25TopK(spark, docs, "doc_id", "text", Seq("body", "tok1"), 5)),
       "lmScore" -> (() => TextOps.lmScore(spark, docs, "doc_id", "text")),
       "bpeMerges" -> (() => TextOps.bpeMerges(spark, docs, "text", 4)),
+      "bpeMerges distributed" -> (() => TextOps.bpeMerges(spark, docs, "text", 5,
+        checkpointEvery = 2, localVocabThreshold = 0)),
       "packSequences" -> (() =>
         TextOps.packSequences(spark, docs, "doc_id", "text", 16)),
       "selectByBudget" -> (() => TextOps.selectByBudget(spark, docs, "doc_id",
@@ -99,16 +103,15 @@ class PinSpec extends AnyFunSuite {
   }
 
   test("pageRank's distributed path releases its edge and node pins") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
     val before = pins
-    val out = Graph.pageRank(spark,
-      Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst"),
-      iterations = 3, maxLocalEdges = 0L)
-    assert(out.collect().length == 4)
-    // the loop-carried rank cuts are local checkpoints, not pins
-    val left = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before.contains(id) }.values
-    assert(left.forall(_.isCheckpointed), left.mkString(", "))
-    left.foreach(_.unpersist(false))
+    val out = Graph.pageRank(spark, edges, iterations = 7, maxLocalEdges = 0L)
+    // three rank cuts (iterations 3, 6 and 7); only the last is left
+    assert(pins.size == before.size + 1)
+    assert(out.collect().toSet ==
+      Graph.pageRank(spark, edges, iterations = 7).collect().toSet)
+    out.unpersist(false)
+    assert(pins == before)
   }
 
   test("curateCorpus failing at its decontamination pin leaves no pins behind") {
@@ -152,5 +155,42 @@ class PinSpec extends AnyFunSuite {
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(e => String.valueOf(e.getMessage).contains("injected")), err)
     assert(pins == before)
+  }
+
+  test("connectedComponents and pageRank failing mid-loop leave no pins behind") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    val experimental =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    // a planner hook that fails the k-th aggregate planned once the loop
+    // holds `minHeld` pins (CC: its edges and labels; pageRank: its edges,
+    // nodes and a rank cut)
+    def failMidLoop(k: Int, minHeld: Int)(run: => DataFrame): Unit = {
+      val before = pins
+      var seen = 0
+      var heldAtFailure = 0
+      object FailMidLoop extends org.apache.spark.sql.execution.SparkStrategy {
+        def apply(plan: LogicalPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+          if (plan.isInstanceOf[Aggregate]) {
+            seen += 1
+            heldAtFailure = (pins -- before).size
+            if (seen >= k && heldAtFailure >= minHeld) throw new IllegalStateException("injected")
+          }
+          Nil
+        }
+      }
+      experimental.extraStrategies = Seq(FailMidLoop)
+      val err =
+        try intercept[Exception](run.collect())
+        finally experimental.extraStrategies = Nil
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("injected")), err)
+      assert(heldAtFailure >= minHeld)
+      assert(pins == before)
+    }
+    val chain = (1L to 8L).sliding(2).map(s => (s.head, s.last)).toSeq
+    failMidLoop(6, 2)(Dedup.connectedComponents(spark, chain.toDF("id_a", "id_b"),
+      localThreshold = 0))
+    failMidLoop(6, 3)(Graph.pageRank(spark, chain.toDF("src", "dst"), iterations = 7,
+      maxLocalEdges = 0L))
   }
 }

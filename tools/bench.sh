@@ -11,6 +11,8 @@
 #   tools/bench.sh scaling         # pipeline + shuffle-stage tiles (the
 #                                  #   N-vs-4N evidence mode; pair runs at
 #                                  #   SPARK_GRAFT_CPUS=2 and 8)
+#   tools/bench.sh probe <args…>   # graft.Probe <args…> in the same JVM set-up
+#                                  #   (e.g. `probe ops <sfDir> 40`)
 # Env overrides (all optional):
 #   SPARK_GRAFT_CPUS       cores for local[N]           (default 32)
 #   SPARK_GRAFT_SF_DIR     testdata dir                 (default /root/testdata/sf0.1)
@@ -28,12 +30,14 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 MODE="${1:-full}"
+MAIN=graft.Bench
 case "$MODE" in
   full)     ;;
   pipeline) export SPARK_GRAFT_PIPELINE_ONLY=1 ;;
   scaling)  export SPARK_GRAFT_PIPELINE_ONLY=1 SPARK_GRAFT_SHUFFLE_STAGES=1
             export SPARK_GRAFT_DEDUP_TILE="${SPARK_GRAFT_DEDUP_TILE:-200}" ;;
-  *) echo "usage: $0 [full|pipeline|scaling]" >&2; exit 2 ;;
+  probe)    shift; MAIN=graft.Probe ;;
+  *) echo "usage: $0 [full|pipeline|scaling|probe <args…>]" >&2; exit 2 ;;
 esac
 
 JAR=target/scala-2.13/ingestfilespark_2.13-0.1.0.jar
@@ -57,5 +61,6 @@ export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 export SPARK_GRAFT_BENCH_OUT="${SPARK_GRAFT_BENCH_OUT:-bench_out.json}"
 
+if [ "$MAIN" = graft.Bench ]; then set --; fi  # graft.Bench reads no arguments
 exec java $ADDOPENS -Xmx"${BENCH_XMX:-24g}" -Xmn"${BENCH_XMN:-4g}" \
-  -cp "$JAR:/opt/spark/jars/*" graft.Bench
+  -cp "$JAR:/opt/spark/jars/*" "$MAIN" "$@"
