@@ -1,10 +1,13 @@
 package graft.pipeline
 
 import graft.core._
+import graft.table.SnapshotTable
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** The extraction dataflow (SURVEY §3 lifecycle mapping):
@@ -23,11 +26,12 @@ import org.apache.spark.storage.StorageLevel
   *     document-size distribution cannot concentrate bytes in few tasks
   *     (the skew treatment mandated by the north rule);
   *   - each iteration is materialized once: [[Pipeline.run]] pins it in
-  *     one level step; [[Pipeline.runDurable]] writes it, in the same
-  *     job that extracts it, as the snapshot commit of its depth level,
-  *     making a killed job resumable from the last committed level
-  *     (lineage rows carry partition id + status for `left_anti`
-  *     recovery).
+  *     one level step; the durable level loop ([[Pipeline.extractLevels]])
+  *     writes it to a snapshot table in the same job that extracts it.
+  *     [[Pipeline.runDurable]] commits each depth level as its own
+  *     snapshot, making a killed job resumable from the last committed
+  *     level (lineage rows carry partition id + status for `left_anti`
+  *     recovery); a streaming batch commits all its levels as one.
   */
 object Pipeline {
 
@@ -186,8 +190,11 @@ object Pipeline {
           initialStats: Option[(Long, Long)] = None): Output = {
     import spark.implicits._
     val levels = scala.collection.mutable.ArrayBuffer.empty[Level]
-    // stats unknown: one aggregate scan over a pin that depth 0 then reads
-    val statsPin = Option.when(initialStats.isEmpty)(
+    // stats unknown: one aggregate scan over a pin that depth 0 then reads,
+    // unless the caller cached pending0 already (`persist` would return
+    // that cache, and releasing it would drop the caller's rows)
+    val statsPin = Option.when(initialStats.isEmpty &&
+      pending0.storageLevel == StorageLevel.NONE)(
       pending0.persist(StorageLevel.MEMORY_AND_DISK_SER))
     try {
       var pending = statsPin.getOrElse(pending0)
@@ -213,95 +220,116 @@ object Pipeline {
       levels.toSeq)
   }
 
+  /** The four components one durable level writes, by name: the spans,
+    * meta and lineage outputs, and the `children` the next level reads. */
+  private[graft] val LevelSchemas: Map[String, StructType] = Map(
+    "spans" -> ExpressionEncoder[SpanOut]().schema,
+    "meta" -> ExpressionEncoder[DocMeta]().schema,
+    "lineage" -> ExpressionEncoder[LineageRow]().schema,
+    "children" -> ExpressionEncoder[PendingDoc]().schema)
+
+  /** Extracts one depth level with ONE Spark job, Iceberg's Spark write
+    * model: one `mapPartitions` over the pending documents extracts each
+    * one and writes its spans, meta, lineage and children rows through a
+    * [[SnapshotTable.Writer]] (one file per component per task that
+    * emitted rows), and the driver collects the file entries. Nothing is
+    * cached. Lineage `partition_id` is the extraction task's partition. */
+  private def writeLevel(spark: SparkSession, pending: Dataset[PendingDoc],
+                         location: String): Vector[SnapshotTable.DataFileEntry] = {
+    val (spanEnc, metaEnc, linEnc, childEnc) = (ExpressionEncoder[SpanOut](),
+      ExpressionEncoder[DocMeta](), ExpressionEncoder[LineageRow](),
+      ExpressionEncoder[PendingDoc]())
+    val writer = SnapshotTable.writer(spark, location, LevelSchemas)
+    try pending.rdd.mapPartitions { docs =>
+      writer.inTask { out =>
+        val pid = TaskContext.getPartitionId()
+        val (span, meta, lin, child) = (spanEnc.createSerializer(),
+          metaEnc.createSerializer(), linEnc.createSerializer(),
+          childEnc.createSerializer())
+        docs.foreach { p =>
+          val r = processOne(p)
+          r.spans.foreach(s => out.write("spans", span(s)))
+          out.write("meta", meta(r.meta))
+          out.write("lineage", lin(LineageRow(pid, r.meta.doc_id,
+            r.meta.ingestor, r.meta.processing_status, r.meta.depth)))
+          r.children.foreach(c => out.write("children", child(c)))
+        }
+      }
+    }.collect().toVector
+    finally writer.release()
+  }
+
+  /** The level loop of the durable entry points, [[runDurable]] and
+    * [[graft.streaming.StreamingIngest.writeBatchToTable]]. For each depth
+    * up to `maxDepth`, `level(depth, write)` returns that level's file
+    * entries: `write()` extracts the level with one job ([[writeLevel]]),
+    * and the caller commits the entries when it chooses, or returns the
+    * entries of a level it committed before instead of calling `write`.
+    * The next level's documents are a scan of the level's `children`
+    * entries, planned from their paths and lengths whether committed or
+    * not, so no job runs between levels. The terminal condition is data:
+    * a level whose children entries hold no rows (counted by the writing
+    * tasks) ends the loop. */
+  private[graft] def extractLevels(spark: SparkSession,
+                                   pending0: Dataset[PendingDoc],
+                                   location: String, maxDepth: Int)(
+      level: (Int, () => Vector[SnapshotTable.DataFileEntry]) =>
+        Seq[SnapshotTable.DataFileEntry]): Unit = {
+    import spark.implicits._
+    var pending = pending0
+    var depth = 0
+    var done = false
+    while (!done && depth <= maxDepth) {
+      val children = level(depth, () => writeLevel(spark, pending, location))
+        .filter(_.component == "children")
+      if (children.map(_.rows).sum == 0L) done = true
+      else pending = SnapshotTable
+        .scan(spark, location, children, LevelSchemas("children")).as[PendingDoc]
+      depth += 1
+    }
+  }
+
   /** Durable variant of [[run]]: every depth level is committed as ONE
     * atomic snapshot (spans + meta + lineage + children in a single
     * metadata swap) to a [[graft.table.SnapshotTable]] at `snapshotDir` —
     * the Iceberg-snapshot-checkpoint commit the north rule requires
-    * (reference commit point: `ingestors/manager.py:120-123`). A killed
-    * job re-invoked with the same snapshotDir skips every committed level
-    * (children are planned from that level's own manifest — an
-    * incremental scan — instead of recomputed), so work lost is bounded
-    * by one level, and a kill ANYWHERE mid-level leaves only orphan data
-    * files that no snapshot references (reclaimed by
+    * (reference commit point: `ingestors/manager.py:120-123`). Each level
+    * is one job of [[extractLevels]], committed as soon as its entries
+    * are collected, with summary `depth` and `level-docs` (the level's
+    * meta row count). A killed job re-invoked with the same snapshotDir
+    * skips every committed level (children are planned from that level's
+    * own manifest — an incremental scan — instead of recomputed), so work
+    * lost is bounded by one level, and a kill ANYWHERE mid-level leaves
+    * only orphan data files that no snapshot references (reclaimed by
     * [[graft.table.SnapshotTable.expireOrphans]]) — there is no torn
-    * state, unlike the earlier per-dir `_COMPLETE` marker protocol where
-    * a kill between the four writes and the marker left half a level on
-    * disk. Unlike localCheckpoint this survives executor AND driver loss.
-    *
-    * Each level is ONE Spark job, Iceberg's Spark write model: one
-    * `mapPartitions` over the pending documents extracts each one and
-    * writes its spans, meta, lineage and children rows through a
-    * [[graft.table.SnapshotTable.Writer]] — one file per component per
-    * task that emitted rows — and returns the file entries; the driver
-    * collects them and commits the list as the level's snapshot. Nothing
-    * is cached or re-read: the next level reads its children from the
-    * committed files. The attempt-unique file names keep the commit
-    * atomic: a retried or speculative task attempt's files are never
-    * listed, so they stay orphans. A component with no rows at a level
-    * writes no file, but its schema is recorded. The summary's
-    * `level-docs` is the level's meta row count; lineage `partition_id` is
-    * the extraction task's partition.
+    * state. The attempt-unique file names keep the commit atomic: a
+    * retried or speculative task attempt's files are never listed, so
+    * they stay orphans. A component with no rows at a level writes no
+    * file, but its schema is recorded. Unlike localCheckpoint this
+    * survives executor AND driver loss.
     *
     * All bookkeeping goes through `org.apache.hadoop.fs.FileSystem` — the
     * same layer the parquet data rides — so the snapshotDir may be local,
     * HDFS, or S3A.
-    *
-    * The terminal condition is data, not a sentinel: a committed level
-    * whose snapshot summary records zero children rows (counted by the
-    * writing tasks, no extra job) ends both the first run and any resume.
     *
     * @param maxDepthOverride stop early (used by tests to simulate a kill
     *   between levels). */
   def runDurable(spark: SparkSession, pending0: Dataset[PendingDoc],
                  snapshotDir: String, cfg: Config = Config(),
                  maxDepthOverride: Int = Int.MaxValue): (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    import graft.table.SnapshotTable
-    import org.apache.spark.sql.catalyst.encoders.encoderFor
-    val (spanEnc, metaEnc, linEnc, childEnc) = (encoderFor[SpanOut],
-      encoderFor[DocMeta], encoderFor[LineageRow], encoderFor[PendingDoc])
-    val schemas = Map("spans" -> spanEnc.schema, "meta" -> metaEnc.schema,
-      "lineage" -> linEnc.schema, "children" -> childEnc.schema)
-    var pending = pending0
-    var depth = 0
-    var done = false
-    val maxDepth = math.min(cfg.maxDepth, maxDepthOverride)
-    // one metadata read up front; refreshed only after our own commits
-    var snaps = SnapshotTable.snapshots(spark, snapshotDir)
-    def levelSnap(d: Int): Option[SnapshotTable.Snapshot] =
-      snaps.find(_.summary.get("depth").contains(d.toString))
-    while (!done && depth <= maxDepth) {
-      // a level a previous (possibly killed) run committed is not redone
-      if (levelSnap(depth).isEmpty) {
-        val writer = SnapshotTable.writer(spark, snapshotDir, schemas)
-        try {
-          val entries = pending.rdd.mapPartitions { docs =>
-            writer.inTask { out =>
-              val pid = TaskContext.getPartitionId()
-              val (span, meta, lin, child) = (spanEnc.createSerializer(),
-                metaEnc.createSerializer(), linEnc.createSerializer(),
-                childEnc.createSerializer())
-              docs.foreach { p =>
-                val r = processOne(p)
-                r.spans.foreach(s => out.write("spans", span(s)))
-                out.write("meta", meta(r.meta))
-                out.write("lineage", lin(LineageRow(pid, r.meta.doc_id,
-                  r.meta.ingestor, r.meta.processing_status, r.meta.depth)))
-                r.children.foreach(c => out.write("children", child(c)))
-              }
-            }
-          }.collect().toVector
-          snaps = SnapshotTable.commit(spark, snapshotDir, entries, schemas,
+    // the levels a previous (possibly killed) run committed are not redone
+    val committed = SnapshotTable.snapshots(spark, snapshotDir)
+    extractLevels(spark, pending0, snapshotDir,
+        math.min(cfg.maxDepth, maxDepthOverride)) { (depth, write) =>
+      committed.find(_.summary.get("depth").contains(depth.toString)) match {
+        case Some(s) => SnapshotTable.addedFiles(spark, snapshotDir, s.id, "children")
+        case None =>
+          val entries = write()
+          SnapshotTable.commit(spark, snapshotDir, entries, LevelSchemas,
             summary = Map("depth" -> depth.toString, "level-docs" ->
               entries.filter(_.component == "meta").map(_.rows).sum.toString))
-            .snapshots
-        } finally writer.release()
+          entries
       }
-      val s = levelSnap(depth).get
-      if (SnapshotTable.addedRows(spark, snapshotDir, s, "children") == 0L) done = true
-      else pending = SnapshotTable
-        .readAdded(spark, snapshotDir, s.id, "children").as[PendingDoc]
-      depth += 1
     }
     // outputs = snapshot-scoped reads over every committed level's files
     (SnapshotTable.read(spark, snapshotDir, "spans"),

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.core._
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.table.SnapshotTable
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -11,64 +12,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * The reference consumes a RabbitMQ queue one file at a time
   * (`/root/reference/ingestors/worker.py:28-74`); the streaming-native
   * re-expression is a micro-batched source of raw documents where each
-  * batch runs the full iterative extraction DAG via foreachBatch — child
-  * documents recurse *within* the batch (bounded archive depth), so the
-  * stream never needs cyclic state. Sinks are batch_id-partitioned parquet
-  * tables written with dynamic partition overwrite: a batch replayed after
-  * a failure rewrites exactly its own partition, so the output is
-  * idempotent per batchId (effective exactly-once for downstream readers;
-  * with an Iceberg sink the same contract comes from the snapshot commit).
+  * batch runs the durable level loop of [[graft.pipeline.Pipeline]] via
+  * foreachBatch — child documents recurse *within* the batch (bounded
+  * archive depth), so the stream never needs cyclic state. The sink is a
+  * [[graft.table.SnapshotTable]]: each batch commits as ONE snapshot
+  * tagged with its batch id, and a replayed batch is skipped, so the
+  * output is exactly-once.
   */
 object StreamingIngest {
 
-  /** Wire a stream of pending documents through the extraction pipeline.
-    * `docs` must be a streaming Dataset[PendingDoc]-shaped frame. */
-  def extractionQuery(spark: SparkSession, docs: DataFrame,
-                      spansOut: String, metaOut: String,
-                      checkpointDir: String,
-                      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import spark.implicits._
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(spark, batch, batchId, spansOut, metaOut)
-      }
-      .start()
-  }
-
-  /** One micro-batch through the pipeline into the batch_id-partitioned
-    * sinks. Idempotent per batchId: dynamic partition overwrite rewrites
-    * exactly this batch's directory, so a checkpoint-recovery replay
-    * cannot duplicate rows. */
-  def writeBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                 spansOut: String, metaOut: String): Unit = {
-    import spark.implicits._
-    val pending = batch.as[PendingDoc]
-    val out = Pipeline.run(spark, pending)
-    try {
-      out.spans.toDF()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(spansOut)
-      out.meta.toDF()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(metaOut)
-    } finally out.cleanup()
-  }
-
   /** Micro-batched extraction into a [[graft.table.SnapshotTable]] —
-    * the Iceberg streaming-commit contract: spans + meta of each batch
-    * land as ONE atomic snapshot tagged with the batchId, so readers
-    * never see a partial batch, and a checkpoint-recovery replay of an
-    * already-committed batch is detected from the snapshot summaries and
-    * skipped (exactly-once into the table, not just per-partition
-    * idempotence like the parquet sink above). */
+    * the Iceberg streaming-commit contract, one snapshot per batch (see
+    * [[writeBatchToTable]]). */
   def extractionQueryToTable(spark: SparkSession, docs: DataFrame,
                              tableLoc: String, checkpointDir: String,
                              trigger: Trigger = Trigger.AvailableNow())
@@ -81,21 +36,29 @@ object StreamingIngest {
       }
       .start()
 
-  /** One micro-batch → one atomic snapshot; no-op if this batchId already
-    * committed (replay after checkpoint recovery). */
+  /** One micro-batch → one atomic snapshot. The batch runs the same level
+    * loop as the durable pipeline, one job per depth level, and nothing is
+    * cached; the spans, meta, lineage and children files of every level
+    * then commit together with summary `batch-id`, so readers never see a
+    * partial batch and one batch reads alone as `readAdded` / `asOf` on
+    * its snapshot. A checkpoint-recovery replay of a batch id already
+    * committed is detected from the snapshot summaries and skipped; a
+    * batch that fails commits nothing. */
   def writeBatchToTable(spark: SparkSession, batch: DataFrame, batchId: Long,
                         tableLoc: String): Unit = {
     import spark.implicits._
-    import graft.table.SnapshotTable
     val already = SnapshotTable.snapshots(spark, tableLoc)
       .exists(_.summary.get("batch-id").contains(batchId.toString))
     if (already) return
-    val out = Pipeline.run(spark, batch.as[PendingDoc])
-    try SnapshotTable.append(spark, tableLoc, Map(
-      "spans" -> out.spans.toDF().withColumn("batch_id", lit(batchId)),
-      "meta" -> out.meta.toDF().withColumn("batch_id", lit(batchId))),
+    val entries = Vector.newBuilder[SnapshotTable.DataFileEntry]
+    Pipeline.extractLevels(spark, batch.as[PendingDoc], tableLoc,
+        Pipeline.Config().maxDepth) { (_, write) =>
+      val level = write()
+      entries ++= level
+      level
+    }
+    SnapshotTable.commit(spark, tableLoc, entries.result(), Pipeline.LevelSchemas,
       summary = Map("batch-id" -> batchId.toString))
-    finally out.cleanup()
   }
 
   /** One email's threading facts as they stream out of extraction. */

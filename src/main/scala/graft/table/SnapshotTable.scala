@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, LineageCut, ParquetFiles, SparkSession}
+import org.apache.spark.sql.{DataFrame, ParquetFiles, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -320,23 +320,6 @@ object SnapshotTable {
     new Writer(location, java.util.UUID.randomUUID().toString,
       ParquetFiles.writers(spark, schemas))
 
-  /** Append `parts` (component name → DataFrame) as ONE atomic snapshot:
-    * each frame's plan runs once, its tasks write through one [[Writer]],
-    * then [[commit]]. Returns the committed metadata. */
-  def append(spark: SparkSession, location: String,
-             parts: Map[String, DataFrame],
-             summary: Map[String, String] = Map.empty,
-             maxAttempts: Int = 5,
-             beforeInstall: () => Unit = () => ()): Meta = {
-    val schemas = parts.map { case (c, df) => c -> df.schema }
-    val w = writer(spark, location, schemas)
-    val entries = try parts.toVector.sortBy(_._1).flatMap { case (c, df) =>
-      LineageCut.rows(df, "append")(_.mapPartitions(rows =>
-        w.inTask(out => rows.foreach(out.write(c, _)))).collect())
-    } finally w.release()
-    commit(spark, location, entries, schemas, summary, maxAttempts, beforeInstall)
-  }
-
   /** Commit `entries` (data files already written, e.g. by a [[Writer]])
     * as ONE atomic snapshot. Each component of `schemas` gets its schema in
     * the manifest and its row total in the summary under [[rowsKey]]; a
@@ -434,22 +417,26 @@ object SnapshotTable {
        .map(j => DataType.fromJson(j).asInstanceOf[StructType]))
   }
 
-  /** Plans from the manifest's paths and lengths, so no listing job runs;
-    * a component with a schema but no files reads as an empty frame of it.
-    * Schema-less (older) manifests read through inference. */
-  private def scan(spark: SparkSession, location: String,
-                   planned: (Vector[DataFileEntry], Option[StructType]),
-                   missing: => String): DataFrame = {
-    val (entries, schema) = planned
-    schema match {
-      case Some(st) =>
-        val (fs, root) = fsFor(spark, location)
-        ParquetFiles.scan(spark, st,
-          entries.map(e => (fs.makeQualified(new Path(root, e.path)), e.bytes)))
-      case None =>
-        require(entries.nonEmpty, missing)
-        spark.read.parquet(entries.map(e => s"$location/${e.path}"): _*)
-    }
+  /** The rows of the listed `entries` under `schema`, planned from their
+    * paths and lengths alone, so no listing or footer-read job runs; no
+    * entries read as an empty frame of `schema`. The entries may be a
+    * snapshot's or a [[Writer]]'s not yet committed. */
+  def scan(spark: SparkSession, location: String, entries: Seq[DataFileEntry],
+           schema: StructType): DataFrame = {
+    val (fs, root) = fsFor(spark, location)
+    ParquetFiles.scan(spark, schema,
+      entries.map(e => (fs.makeQualified(new Path(root, e.path)), e.bytes)))
+  }
+
+  /** [[scan]] of planned files; schema-less (older) manifests read
+    * through inference. */
+  private def scanPlanned(spark: SparkSession, location: String,
+                          planned: (Vector[DataFileEntry], Option[StructType]),
+                          missing: => String): DataFrame = planned match {
+    case (entries, Some(st)) => scan(spark, location, entries, st)
+    case (entries, None) =>
+      require(entries.nonEmpty, missing)
+      spark.read.parquet(entries.map(e => s"$location/${e.path}"): _*)
   }
 
   /** All data files of `component` live at the given (default: current)
@@ -464,7 +451,7 @@ object SnapshotTable {
     * Spark job runs until the caller's action. */
   def read(spark: SparkSession, location: String, component: String,
            asOf: Option[Long] = None): DataFrame =
-    scan(spark, location,
+    scanPlanned(spark, location,
       plan(spark, location, snapshotOf(spark, location, asOf).manifests, component),
       s"component '$component' has no data files at $location" +
         asOf.map(id => s" snapshot $id").getOrElse(""))
@@ -482,7 +469,7 @@ object SnapshotTable {
   /** Incremental read: only the rows one snapshot appended. */
   def readAdded(spark: SparkSession, location: String, snapshotId: Long,
                 component: String): DataFrame =
-    scan(spark, location,
+    scanPlanned(spark, location,
       plan(spark, location, addedManifest(spark, location, snapshotId), component),
       s"snapshot $snapshotId added no '$component' files at $location")
 

@@ -236,7 +236,14 @@ class PipelineSpec extends AnyFunSuite {
     val p = pending(("d1", "a.html", "<html><body><p>web</p></body></html>".getBytes),
       ("d2", "b.zip", zip)).repartition(4)
     val loc = "file:" + java.nio.file.Files.createTempDirectory("graft-layout")
-    Pipeline.runDurable(spark, p, loc)
+    val sc = spark.sparkContext
+    val rec = new graft.obs.Recorder(sc, _ => ())
+    sc.addSparkListener(rec)
+    try rec.record("runDurable")(Pipeline.runDurable(spark, p, loc))
+    finally sc.removeSparkListener(rec)
+    // AQE runs the input's repartition as its own shuffle job; then one
+    // job per level (3)
+    assert(rec.records.map(_.jobs) == Seq(1 + 3), rec.records)
     val snaps = SnapshotTable.snapshots(spark, loc)
     assert(snaps.map(_.summary("depth")) == Vector("0", "1", "2"))
     assert(snaps.map(_.summary("level-docs")) == Vector("2", "2", "1"))
@@ -292,6 +299,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.keySet != before, "the run pinned nothing")
     out.cleanup()
     assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("run keeps the caller's cache of its input") {
+    val sc = spark.sparkContext
+    val zip = CorpusGen.renderZip(Seq(("in.txt", "zipped body".getBytes)))
+    val p = pending(("c1", "c1.zip", zip), ("c2", "c2.txt", "plain".getBytes)).persist()
+    try {
+      assert(p.count() == 2)
+      val cached = sc.getPersistentRDDs.keySet
+      val out = Pipeline.run(spark, p)
+      assert(out.meta.count() == 3)
+      out.cleanup()
+      assert(sc.getPersistentRDDs.keySet == cached)
+      assert(p.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally p.unpersist(false)
   }
 
   test("a failed extraction or stats pass releases every pin it took") {

@@ -65,13 +65,30 @@ class ProbeSpec extends AnyFunSuite {
       sc.addSparkListener(rec)
       try Probe.ops(spark, rec, sf, 2)
       finally sc.removeSparkListener(rec)
-      assert(rec.records.map(_.tag) ==
-        Seq("dedupCorpus", "stripBoilerplateNested", "curateCorpus", "packSequences"))
+      // job budgets: each operator's job count on this corpus, the same in
+      // three runs (job counts do not drift between runs as wall time does)
+      val budget = Seq("dedupCorpus" -> 14, "stripBoilerplateNested" -> 5,
+        "curateCorpus" -> 21, "packSequences" -> 7)
+      assert(rec.records.map(_.tag) == budget.map(_._1))
       rec.records.foreach { r =>
         assert(r.jobs > 0 && r.tasks > 0, r)
+        assert(r.jobs <= budget.toMap.apply(r.tag), r)
         assert(r.cachedDelta == 0, r)
       }
       assert(sc.getPersistentRDDs.keySet == before)
     }
+  }
+
+  test("ingest records one warm Pipeline.run that keeps the pending cache") {
+    val sc = spark.sparkContext
+    val rec = new graft.obs.Recorder(sc, _ => ())
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(rec)
+    try Probe.ingest(spark, rec, 200)
+    finally sc.removeSparkListener(rec)
+    assert(rec.records.map(_.tag) == Seq("Pipeline.run"))
+    assert(rec.records.head.jobs > 0, rec.records.head)
+    assert(rec.records.head.cachedDelta == 0, rec.records.head)
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 }

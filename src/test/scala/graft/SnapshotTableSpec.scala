@@ -1,7 +1,7 @@
 package graft
 
 import graft.table.SnapshotTable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The snapshot-log table format: atomic append, time travel, incremental
@@ -19,6 +19,19 @@ class SnapshotTableSpec extends AnyFunSuite {
   private def freshLoc(): String =
     "file:" + java.nio.file.Files.createTempDirectory("graft-table").toString
 
+  /** Writes each frame through one [[SnapshotTable.Writer]] and commits
+    * the entries as one snapshot. */
+  private def append(loc: String, parts: Map[String, DataFrame],
+                     summary: Map[String, String] = Map.empty,
+                     beforeInstall: () => Unit = () => ()): SnapshotTable.Meta = {
+    val schemas = parts.map { case (c, d) => c -> d.schema }
+    val w = SnapshotTable.writer(spark, loc, schemas)
+    val entries = try parts.toVector.flatMap { case (c, d) => LineageCut.rows(d, "append")(_
+      .mapPartitions(rows => w.inTask(out => rows.foreach(out.write(c, _)))).collect())
+    } finally w.release()
+    SnapshotTable.commit(spark, loc, entries, schemas, summary, beforeInstall = beforeInstall)
+  }
+
   private def df(ids: Int*) = {
     import spark.implicits._
     ids.toDF("id")
@@ -26,8 +39,8 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("append + read roundtrip; snapshots chain with increasing sequence numbers") {
     val loc = freshLoc()
-    SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2, 3)))
-    SnapshotTable.append(spark, loc, Map("rows" -> df(4, 5)))
+    append(loc, Map("rows" -> df(1, 2, 3)))
+    append(loc, Map("rows" -> df(4, 5)))
     val snaps = SnapshotTable.snapshots(spark, loc)
     assert(snaps.map(_.seq) == Vector(1L, 2L))
     assert(snaps(1).parentId == snaps(0).id)
@@ -38,8 +51,8 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("time travel: asOf an earlier snapshot sees only its files") {
     val loc = freshLoc()
-    val m1 = SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2, 3)))
-    SnapshotTable.append(spark, loc, Map("rows" -> df(4, 5)))
+    val m1 = append(loc, Map("rows" -> df(1, 2, 3)))
+    append(loc, Map("rows" -> df(4, 5)))
     val atFirst = SnapshotTable.read(spark, loc, "rows",
       asOf = Some(m1.currentSnapshotId))
       .collect().map(_.getInt(0)).sorted.toVector
@@ -48,8 +61,8 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("incremental scan: readAdded returns exactly one snapshot's appended rows") {
     val loc = freshLoc()
-    SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2, 3)))
-    val m2 = SnapshotTable.append(spark, loc, Map("rows" -> df(4, 5)))
+    append(loc, Map("rows" -> df(1, 2, 3)))
+    val m2 = append(loc, Map("rows" -> df(4, 5)))
     val added = SnapshotTable.readAdded(spark, loc, m2.currentSnapshotId, "rows")
       .collect().map(_.getInt(0)).sorted.toVector
     assert(added == Vector(4, 5))
@@ -58,7 +71,7 @@ class SnapshotTableSpec extends AnyFunSuite {
   test("multi-component append is one atomic snapshot") {
     val loc = freshLoc()
     import spark.implicits._
-    SnapshotTable.append(spark, loc, Map(
+    append(loc, Map(
       "a" -> df(1), "b" -> Seq("x", "y").toDF("s")))
     val snaps = SnapshotTable.snapshots(spark, loc)
     assert(snaps.size == 1)
@@ -71,7 +84,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("manifest stats carry parquet-footer row counts and byte sizes") {
     val loc = freshLoc()
-    val m = SnapshotTable.append(spark, loc,
+    val m = append(loc,
       Map("rows" -> df(1 to 100: _*).coalesce(2)))
     val files = SnapshotTable.addedFiles(spark, loc, m.currentSnapshotId, "rows")
     assert(files.map(_.rows).sum == 100L)
@@ -80,13 +93,13 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("commit conflict: loser detects the winner, rebases, and both snapshots survive") {
     val loc = freshLoc()
-    SnapshotTable.append(spark, loc, Map("rows" -> df(1)))
+    append(loc, Map("rows" -> df(1)))
     // the hook commits a competing snapshot between the loser's base-read
     // and install — a deterministic lost race
-    SnapshotTable.append(spark, loc, Map("rows" -> df(3, 4)),
+    append(loc, Map("rows" -> df(3, 4)),
       summary = Map("who" -> "loser"),
       beforeInstall =
-        () => SnapshotTable.append(spark, loc, Map("rows" -> df(2)),
+        () => append(loc, Map("rows" -> df(2)),
           summary = Map("who" -> "winner")): Unit)
     val snaps = SnapshotTable.snapshots(spark, loc)
     assert(snaps.size == 3)
@@ -102,7 +115,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("expireOrphans removes uncommitted data dirs, keeps committed ones") {
     val loc = freshLoc()
-    SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2)))
+    append(loc, Map("rows" -> df(1, 2)))
     // simulate a writer killed after its data write but before commit
     df(9).write.parquet(s"$loc/data/deadbeef-orphan")
     assert(SnapshotTable.expireOrphans(spark, loc) == 1)
@@ -112,7 +125,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("expireOrphans removes an unlisted file from a committed dir, keeps every listed one") {
     val loc = freshLoc()
-    val m = SnapshotTable.append(spark, loc, Map("rows" -> df(1 to 20: _*).repartition(2)))
+    val m = append(loc, Map("rows" -> df(1 to 20: _*).repartition(2)))
     val listed = SnapshotTable.addedFiles(spark, loc, m.currentSnapshotId, "rows")
     val root = new org.apache.hadoop.fs.Path(loc)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -131,7 +144,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("corrupt current metadata fails with a clear parse error, not a hang or garbage read") {
     val loc = freshLoc()
-    SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2)))
+    append(loc, Map("rows" -> df(1, 2)))
     // clobber v1 with truncated JSON (simulates a torn non-atomic write on
     // a filesystem without atomic rename — the documented caveat)
     val root = new org.apache.hadoop.fs.Path(loc)
@@ -146,8 +159,8 @@ class SnapshotTableSpec extends AnyFunSuite {
   test("version-hint and metadata versions are discoverable; load of empty dir is None") {
     val loc = freshLoc()
     assert(SnapshotTable.load(spark, loc).isEmpty)
-    SnapshotTable.append(spark, loc, Map("rows" -> df(1)))
-    SnapshotTable.append(spark, loc, Map("rows" -> df(2)))
+    append(loc, Map("rows" -> df(1)))
+    append(loc, Map("rows" -> df(2)))
     val meta = SnapshotTable.load(spark, loc).get
     assert(meta.currentSnapshotId == meta.snapshots.last.id)
     assert(meta.lastSeq == 2L)
@@ -173,8 +186,8 @@ class SnapshotTableSpec extends AnyFunSuite {
   test("schemas ride in manifests: planning a read starts no Spark job, time travel keeps its schema") {
     import spark.implicits._
     val loc = freshLoc()
-    val m1 = SnapshotTable.append(spark, loc, Map("rows" -> df(1, 2)))
-    val m2 = SnapshotTable.append(spark, loc,
+    val m1 = append(loc, Map("rows" -> df(1, 2)))
+    val m2 = append(loc,
       Map("rows" -> Seq((3, "c")).toDF("id", "tag")))
     val (cur, j1) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
     val (old, j2) = jobsStartedBy(
@@ -219,7 +232,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val snap = SnapshotTable.snapshots(spark, loc).head
     assert(SnapshotTable.addedRows(spark, loc, snap, "rows") == 2L)
     // a later append on top of the old layout records its schema again
-    SnapshotTable.append(spark, loc, Map("rows" -> df(9)))
+    append(loc, Map("rows" -> df(9)))
     val (all, j) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
     assert(j == 0)
     assert(all.collect().map(_.getInt(0)).sorted.toVector == Vector(7, 8, 9))
@@ -227,7 +240,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("a read over many files plans from the manifest: no listing job before the action") {
     val loc = freshLoc()
-    SnapshotTable.append(spark, loc, Map("rows" -> spark.range(0L, 400L, 1L, 40).toDF("id")))
+    append(loc, Map("rows" -> spark.range(0L, 400L, 1L, 40).toDF("id")))
     assert(SnapshotTable.dataFiles(spark, loc, "rows").size == 40)
     val (rows, jobs) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
     assert(jobs == 0)

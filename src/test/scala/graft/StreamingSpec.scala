@@ -16,63 +16,6 @@ class StreamingSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  test("streaming extraction: file source -> foreachBatch pipeline -> parquet sinks") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val srcDir = s"$base/src"
-    // stage two micro-batch files of pending docs
-    val batch1 = Seq(
-      PendingDoc("s1", "", Seq.empty, 0, "s1.html",
-        "", "<html><body><p>streamed html</p></body></html>".getBytes),
-      PendingDoc("s2", "", Seq.empty, 0, "s2.zip",
-        "", CorpusGen.renderZip(Seq(("in.txt", "zipped stream member".getBytes)))))
-    spark.createDataset(batch1).write.parquet(srcDir)
-
-    val stream = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .parquet(srcDir)
-    val q = StreamingIngest.extractionQuery(spark, stream,
-      s"$base/spans", s"$base/meta", s"$base/ckpt")
-    q.awaitTermination(120000)
-
-    val spans = spark.read.parquet(s"$base/spans")
-      .collect().map(r => (r.getString(0), r.getString(3))).toSet
-    assert(spans.contains(("s1", "streamed html")))
-    assert(spans.contains(("s2/0", "zipped stream member")))
-    val meta = spark.read.parquet(s"$base/meta")
-    assert(meta.count() == 3) // s1, s2, s2/0
-
-    // second batch arrives; checkpoint resumes without reprocessing batch 1
-    spark.createDataset(Seq(
-      PendingDoc("s3", "", Seq.empty, 0, "s3.txt", "", "late doc".getBytes)))
-      .write.mode("append").parquet(srcDir)
-    val q2 = StreamingIngest.extractionQuery(spark, spark.readStream
-        .schema(spark.read.parquet(srcDir).schema).parquet(srcDir),
-      s"$base/spans", s"$base/meta", s"$base/ckpt")
-    q2.awaitTermination(120000)
-    val meta2 = spark.read.parquet(s"$base/meta")
-    assert(meta2.count() == 4)
-    assert(meta2.filter(col("doc_id") === "s1").count() == 1) // no reprocessing
-  }
-
-  test("batch replay is idempotent: same batchId rewrites, never duplicates") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-replay").toString
-    val batch = spark.createDataset(Seq(
-      PendingDoc("r1", "", Seq.empty, 0, "r1.txt", "", "replayed doc".getBytes)))
-      .toDF()
-    StreamingIngest.writeBatch(spark, batch, 7L, s"$base/spans", s"$base/meta")
-    val n1 = spark.read.parquet(s"$base/meta").count()
-    // simulate a post-failure replay of the SAME micro-batch
-    StreamingIngest.writeBatch(spark, batch, 7L, s"$base/spans", s"$base/meta")
-    assert(spark.read.parquet(s"$base/meta").count() == n1)
-    assert(spark.read.parquet(s"$base/spans")
-      .filter(col("text") === "replayed doc").count() == 1)
-    // a different batchId appends alongside
-    StreamingIngest.writeBatch(spark, batch, 8L, s"$base/spans", s"$base/meta")
-    assert(spark.read.parquet(s"$base/meta").count() == 2 * n1)
-  }
-
   test("snapshot-table sink: one atomic snapshot per batch, replay skipped, never torn") {
     import spark.implicits._
     import graft.table.SnapshotTable
@@ -111,11 +54,40 @@ class StreamingSpec extends AnyFunSuite {
         CorpusGen.renderZip(Seq(("nested.zip", inner)))))).toDF()
     val before = sc.getPersistentRDDs.keySet
     intercept[Exception](
-      StreamingIngest.writeBatch(spark, batch, 1L, blocker, s"$base/meta"))
-    assert(sc.getPersistentRDDs.keySet == before, "writeBatch")
-    intercept[Exception](
       StreamingIngest.writeBatchToTable(spark, batch, 1L, s"file:$blocker"))
     assert(sc.getPersistentRDDs.keySet == before, "writeBatchToTable")
+    assert(graft.table.SnapshotTable.snapshots(spark, s"file:$blocker").isEmpty)
+  }
+
+  test("table sink: one job per depth level, nothing cached, one snapshot; a replay runs no job") {
+    import spark.implicits._
+    import graft.table.SnapshotTable
+    val sc = spark.sparkContext
+    val loc = "file:" + java.nio.file.Files.createTempDirectory("graft-tjobs").toString
+    val inner = CorpusGen.renderZip(Seq(("deep.txt", "deepest streamed body".getBytes)))
+    val batch = spark.createDataset(Seq(
+      PendingDoc("z1", "", Seq.empty, 0, "z1.zip", "",
+        CorpusGen.renderZip(Seq(("nested.zip", inner)))))).toDF()
+    val rec = new graft.obs.Recorder(sc, _ => ())
+    sc.addSparkListener(rec)
+    try {
+      rec.record("batch")(StreamingIngest.writeBatchToTable(spark, batch, 3L, loc))
+      rec.record("replay")(StreamingIngest.writeBatchToTable(spark, batch, 3L, loc))
+    } finally sc.removeSparkListener(rec)
+    val Seq(first, replay) = rec.records.toSeq
+    assert(first.jobs == 3, first) // depths 0, 1 and 2
+    assert(first.cachedDelta == 0, first)
+    assert(replay.jobs == 0, replay)
+    val snaps = SnapshotTable.snapshots(spark, loc)
+    assert(snaps.size == 1)
+    assert(snaps.head.summary.get("batch-id").contains("3"))
+    assert(!snaps.head.summary.contains("depth"))
+    assert(SnapshotTable.readAdded(spark, loc, snaps.head.id, "meta")
+      .select("doc_id").as[String].collect().sorted.toSeq == Seq("z1", "z1/0", "z1/0/0"))
+    val deep = SnapshotTable.read(spark, loc, "spans", asOf = Some(snaps.head.id))
+      .filter(col("doc_id") === "z1/0/0").select("text").as[String].collect()
+    assert(deep.toSeq == Seq("deepest streamed body"))
+    assert(!SnapshotTable.read(spark, loc, "meta").columns.contains("batch_id"))
   }
 
   test("streaming WARC ingest: crawl files -> record explode -> atomic snapshot per batch, incremental resume") {
