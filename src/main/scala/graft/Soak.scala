@@ -3,6 +3,7 @@ package graft
 import graft.corpus.CorpusGen
 import graft.ops.Dedup
 import graft.pipeline.Pipeline
+import graft.queries.QueryLib
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -91,12 +92,8 @@ object Soak {
     // boilerplate buckets among the survivors.
     var distinctBodies = 0L
     val pairCount = phase("minhash_lsh") {
-      val spans = graft.table.SnapshotTable.read(spark, snapDir, "spans")
-      val bodies = spans.filter($"kind" === "text")
-        .groupBy($"doc_id")
-        .agg(concat_ws(" ", transform(
-          array_sort(collect_list(struct($"seq", $"text"))),
-          s => s.getField("text"))).as("body"))
+      val bodies = QueryLib.body(
+        graft.table.SnapshotTable.read(spark, snapDir, "spans"), "text")
       val reps = bodies
         .groupBy(xxhash64($"body").as("id"))
         .agg(first($"body").as("body"))
@@ -139,22 +136,14 @@ object Soak {
     // is O(total tokens) rows and this host's disk, not the operator,
     // is the constraint at the full 4.4M-body set).
     val dupsubCount = phase("strip_dupsub") {
-      val spans = graft.table.SnapshotTable.read(spark, snapDir, "spans")
-      val bodies = spans.filter($"kind" === "text")
-        .groupBy($"doc_id")
-        .agg(concat_ws(" ", transform(
-          array_sort(collect_list(struct($"seq", $"text"))),
-          s => s.getField("text"))).as("body"))
+      val bodies = QueryLib.body(
+          graft.table.SnapshotTable.read(spark, snapDir, "spans"), "text")
         .select(xxhash64($"doc_id").as("id"), $"body")
         .filter(pmod($"id", lit(4)) === 0)
       // the corpus's natural cross-doc duplicate bodies are short (<20
       // tokens — archive members), so plant half-copies the way the
       // oracle corpus does: the removal path must actually fire at scale
-      import spark.implicits._
-      val halves = bodies.as[(Long, String)].map { case (id, b) =>
-        val toks = graft.core.TextUtil.tokens(b)
-        (id + 1L, toks.take(math.max(toks.length / 2, 21)).mkString(" "))
-      }.toDF("id", "body")
+      val halves = QueryLib.halfCopies(spark, bodies, 1L)
       // returns persisted (caller-release contract)
       val cleaned = graft.ops.TextOps.stripDupSubstrings(spark,
         bodies.unionByName(halves), "id", "body")
@@ -186,20 +175,14 @@ object Soak {
     // that matter), sequence packing (the range exchange + prefix-sum
     // collect), and incremental dedup vs a half-corpus prior snapshot
     // (bloom build + broadcast + verify semi-join).
-    val soakBodies = {
-      val spans = graft.table.SnapshotTable.read(spark, snapDir, "spans")
-      spans.filter($"kind" === "text")
-        .groupBy($"doc_id")
-        .agg(concat_ws(" ", transform(
-          array_sort(collect_list(struct($"seq", $"text"))),
-          s => s.getField("text"))).as("body"))
+    val soakBodies =
+      QueryLib.body(graft.table.SnapshotTable.read(spark, snapDir, "spans"), "text")
         .select(xxhash64($"doc_id").as("id"), $"body",
           pmod(xxhash64($"doc_id"), lit(3)).cast("string").as("stratum"),
           pmod(xxhash64(concat($"doc_id", lit("s"))), lit(1000))
             .cast("string").as("source"),
           length($"body").cast("long").as("ord"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }
     val curateKept = phase("curate_corpus") {
       // orderBy before limit: LIMIT on an unsorted distributed frame is
       // partition-order dependent, and the decontamination input must be

@@ -1,14 +1,13 @@
 package graft
 
-import graft.analysis.Analyze
 import graft.corpus.CorpusGen
-import graft.ops.{Dedup, Similarity, TextOps, Multimodal}
 import graft.pipeline.Pipeline
-import graft.queries.QueryLib
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7): `queries` is the union of the
+  * per-domain query maps under `graft.queries`; `oracleSql` holds the
+  * DuckDB text each query's output is checked against.
   *
   * Query naming: x_* are end-to-end extraction roundtrips (render → classify
   * → extract → project, DuckDB-oracle-verified); t_* are training-data text
@@ -16,54 +15,8 @@ import org.apache.spark.sql.functions._
   * analysis stage; pipeline_* full-corpus runs (rows-only checks). */
 object SparkEntry {
 
-  /** Seq-ordered concatenation of a document's text spans. */
-  private def joinedBody(out: Pipeline.Output): DataFrame =
-    out.spans.toDF().filter(col("kind") === "text")
-      .groupBy(col("doc_id"))
-      .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-        .getField("text")).as("body"))
-
-  /** render → pipeline → (doc_id, body) for formats whose whole text
-    * roundtrips verbatim. */
-  private def bodyRoundtrip(s: SparkSession, dir: String,
-                            renderer: String): DataFrame = {
-    val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), renderer))
-    joinedBody(out)
-      .select(col("doc_id").cast("long").as("doc_id"), col("body"))
-      .orderBy("doc_id")
-  }
-
-  /** Deterministic multi-line "web page" per document for the line-level
-    * ops (C4 filter, boilerplate line dedup): the flat testdata text has
-    * no lines or sentences, so both engines synthesize the same page —
-    * a shared header line, token-decade body lines with terminal
-    * punctuation on (id+i)%3!=0, a footer on id%4, a lorem-ipsum line on
-    * id%17, a brace line on id%23. The DuckDB oracles rebuild it with the
-    * identical arithmetic (the planted-structure pattern of
-    * t_decontaminate). */
-  private def pagedDocs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    QueryLib.documents(s, dir)
-      .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = graft.core.TextUtil.tokens(if (text == null) "" else text)
-        val nBody = (toks.length + 9) / 10
-        val sb = new StringBuilder("subscribe to our newsletter today.")
-        var i = 0
-        while (i < nBody) {
-          sb.append('\n').append(toks.slice(10 * i, 10 * i + 10).mkString(" "))
-          if ((id + i) % 3 != 0) sb.append('.')
-          i += 1
-        }
-        if (id % 4 == 0) sb.append("\ncopyright example site all rights reserved")
-        if (id % 17 == 0) sb.append("\nlorem ipsum dolor sit amet.")
-        if (id % 23 == 0) sb.append("\nenable javascript { window.load }")
-        (id, sb.toString)
-      }.toDF("doc_id", "page")
-  }
-
   /** The page-synthesis CTE shared by the line-op oracles — must stay in
-    * lockstep with [[pagedDocs]]. */
+    * lockstep with [[graft.queries.TextQueries]]' pagedDocs. */
   private val PagedCte: String =
     """WITH tk AS (
       |  SELECT CAST(doc_id AS BIGINT) AS id,
@@ -83,40 +36,11 @@ object SparkEntry {
       |    AS page
       |  FROM tk)""".stripMargin
 
-  /** Deterministic interleaved SPANS table per document — the exact input
-    * shape the north rule names: (doc_id, spans: array<struct<kind,text,
-    * media_ref,offset>>). Per doc: a shared boilerplate header span,
-    * 8-token body text spans, an image span after body group i when
-    * (id+i)%5==0 (media_ref = blob-id-i), a shared footer span on id%4.
-    * The i_spans_* oracles rebuild the exploded rows with identical
-    * arithmetic (the pagedDocs pattern, lifted to the nested shape). */
-  private def spanDocs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    QueryLib.documents(s, dir)
-      .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = graft.core.TextUtil.tokens(if (text == null) "" else text)
-        val n = (toks.length + 7) / 8
-        val buf = scala.collection.mutable.ArrayBuffer.empty[graft.core.Span]
-        buf += graft.core.Span("text", "subscribe to our newsletter today.", "", 0)
-        var i = 0
-        while (i < n) {
-          buf += graft.core.Span("text", toks.slice(8 * i, 8 * i + 8).mkString(" "), "", 8 * i)
-          if ((id + i) % 5 == 0)
-            buf += graft.core.Span("image", "", s"blob-$id-$i", 8 * i)
-          i += 1
-        }
-        if (id % 4 == 0)
-          buf += graft.core.Span("text",
-            "copyright example site all rights reserved", "", 8 * n)
-        (id, buf.toSeq)
-      }.toDF("doc_id", "spans")
-  }
-
   /** Exploded-rows synthesis CTE shared by the i_spans_* oracles — must
-    * stay in lockstep with [[spanDocs]] (pos = array index: header 0,
-    * body group i at 1+i+m(i) where m(i) = media spans before group i,
-    * media after group i at 2+i+m(i), footer at 1+n+m(n)). */
+    * stay in lockstep with [[graft.queries.SpanQueries]]' spanDocs (pos =
+    * array index: header 0, body group i at 1+i+m(i) where m(i) = media
+    * spans before group i, media after group i at 2+i+m(i), footer at
+    * 1+n+m(n)). */
   private val SpanCte: String =
     """WITH tk AS (
       |  SELECT CAST(doc_id AS BIGINT) AS id,
@@ -150,1468 +74,10 @@ object SparkEntry {
     Pipeline.run(spark, pending).spans.toDF()
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- extraction roundtrips (oracle-verified end-to-end) ----------
-    "x_html" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "html"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("title").as("title"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id"), col("text").as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("title"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_csv" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "csv"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_json" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "json"))
-      out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-        .select(col("doc_id").cast("long").as("doc_id"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_eml" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "eml"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("subject").as("subject"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id"),
-          regexp_replace(col("text"), """^\s+|\s+$""", "").as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("subject"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_rtf" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "rtf"))
-      out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text").as("body"))
-        .orderBy("doc_id")
-    }),
-    // 7z roundtrip: Copy-codec container written Spark-side → pipeline
-    // (SevenZipIngestor header+folder decode → PlainText child)
-    // RAR roundtrip: RAR4 store-method writer → pipeline (RARIngestor
-    // header parse + member extraction → PlainText children)
-    "x_rar" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "rar"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name"),
-          col("processing_status").as("status"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      // left join: the compressed member (c.bin) has a failure child row
-      // with no body — the reference's warn-and-skip made observable
-      children.join(body, Seq("child_id"), "left")
-        .select(col("doc_id"), col("file_name"), col("body"), col("status"))
-        .orderBy("doc_id", "file_name")
-    }),
-    "x_7z" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "7z"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("file_name"), col("body"))
-        .orderBy("doc_id")
-    }),
-    // bz2 roundtrip: Spark-side bzip2 encoder → pipeline (BZ2Ingestor
-    // decode → PlainText child) → body equals the original text
-    "x_bz2" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "bz2"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("file_name"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_targz" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "targz"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("file_name"), col("body"))
-        .orderBy("doc_id", "file_name")
-    }),
-    // WARC roundtrip (beyond the reference's formats: the Common Crawl
-    // container): even ids plain .warc, odd ids member-per-record
-    // .warc.gz; the 200 html + chunked 200 text responses become children
-    // named by target URI, the warcinfo/request/404/revisit/metadata
-    // records must not
-    "x_warc" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "warc"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name").as("uri"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("uri"), col("body"))
-        .orderBy("doc_id", "uri")
-    }),
-    "x_zip_children" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "zip"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("file_name"), col("body"))
-        .orderBy("doc_id", "file_name")
-    }),
-    "x_pdf" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "pdf"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("title").as("title"),
-        QueryLib.prop("pageCount").cast("long").as("page_count"))
-      val body = out.spans.toDF().filter(col("kind") === "page")
-        .groupBy(col("doc_id"))
-        .agg(regexp_replace(
-          concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-            .getField("text")), "\n", " ").as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("title"),
-          col("page_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_docx" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "docx"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("title").as("title"),
-        QueryLib.prop("authoredAt").as("authored_at"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("title"),
-          col("authored_at"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_xlsx" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "xlsx"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"),
-        QueryLib.prop("sheets").as("sheet"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("sheet"),
-          col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_sqlite" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "sqlite"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"),
-        QueryLib.prop("sheets").as("table_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("table_name"),
-          col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    // Jet4 .mdb roundtrip: from-scratch writer (Jet4Writer) -> Jet reader
-    // -> AccessIngestor rows; pins the Jet4 page/row/TDEF layout the same
-    // way x_pst pins [MS-PST] (no public Jet4 fixture; Books_be.mdb is
-    // Jet3 and covered by FixtureSpec).
-    "x_mdb" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "mdb"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"),
-        QueryLib.prop("sheets").as("table_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("table_name"),
-          col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_xls" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "xls"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"),
-        QueryLib.prop("sheets").as("sheet"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .groupBy(col("doc_id"))
-        .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
-          .getField("text")).as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("sheet"),
-          col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_mbox" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "mbox"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"),
-          QueryLib.prop("subject").as("subject"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"),
-          regexp_replace(col("text"), """^\s+|\s+$""", "").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("subject"), col("body"))
-        .orderBy("doc_id", "subject")
-    }),
-    // Boilerplate strip: nav/sidebar/footer chrome must vanish, the
-    // article text must survive verbatim (text-density main-content
-    // heuristic of the north star).
-    "x_html_main" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "html_boiler"))
-      out.meta.toDF()
-        .select(col("doc_id").cast("long").as("doc_id"),
-          QueryLib.prop("mainText").as("main_text"))
-        .orderBy("doc_id")
-    }),
-    // ---- simple body roundtrips: render → extract → body == text -------
-    // §2.1 directory source end-to-end: a rendered on-disk tree through
-    // the binaryFile DSv2 scan (SKIP_ENTRIES observable: .git/__MACOSX
-    // files exist on disk but must never become rows). The fixture tree
-    // is written driver-side because the operator under test IS the
-    // filesystem scan; bounded by the verify corpus size.
-    "x_dir" -> ((s, dir) => {
-      import s.implicits._
-      val docs = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect()
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_xdir_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      def deleteRec(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(deleteRec)
-        f.delete(); ()
-      }
-      if (root.exists()) deleteRec(root)
-      for ((id, text) <- docs) {
-        val sub = new java.io.File(root, s"sub${id % 10}")
-        sub.mkdirs()
-        java.nio.file.Files.write(new java.io.File(sub, s"doc$id.txt").toPath,
-          (if (text == null) "" else text).getBytes("UTF-8"))
-      }
-      val git = new java.io.File(root, ".git"); git.mkdirs()
-      java.nio.file.Files.write(new java.io.File(git, "config").toPath,
-        "skip me".getBytes("UTF-8"))
-      val mac = new java.io.File(root, "__MACOSX"); mac.mkdirs()
-      java.nio.file.Files.write(new java.io.File(mac, "._doc0.txt").toPath,
-        "skip me".getBytes("UTF-8"))
-      val out = QueryLib.run(s,
-        graft.sources.Sources.fromDirectory(s, root.getAbsolutePath))
-      out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("path"), col("text").as("body"))
-        .orderBy("path")
-    }),
-    "x_txt" -> ((s, dir) => bodyRoundtrip(s, dir, "txt")),
-    "x_xml" -> ((s, dir) => bodyRoundtrip(s, dir, "xml")),
-    "x_svg" -> ((s, dir) => bodyRoundtrip(s, dir, "svg")),
-    "x_odt" -> ((s, dir) => bodyRoundtrip(s, dir, "odt")),
-    "x_ods" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "ods"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"),
-        QueryLib.prop("sheets").as("sheet"))
-      meta.join(joinedBody(out), "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("sheet"),
-          col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_dbf" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "dbf"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("rowCount").cast("long").as("row_count"))
-      meta.join(joinedBody(out), "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("row_count"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_msg" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "msg"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("subject").as("subject"),
-        QueryLib.prop("emitters").as("sender"))
-      meta.join(joinedBody(out), "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("subject"),
-          col("sender"), col("body"))
-        .orderBy("doc_id")
-    }),
-    // .msg attachments become children re-ingested at depth 1
-    "x_msg_attach" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "msg_attach"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"), col("file_name"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("att_body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("file_name"), col("att_body"))
-        .orderBy("doc_id")
-    }),
-    "x_emlx" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "emlx"))
-      val meta = out.meta.toDF().select(col("doc_id"),
-        QueryLib.prop("subject").as("subject"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id"),
-          regexp_replace(col("text"), """^\s+|\s+$""", "").as("body"))
-      meta.join(body, "doc_id")
-        .select(col("doc_id").cast("long").as("doc_id"), col("subject"), col("body"))
-        .orderBy("doc_id")
-    }),
-    // OLM archive: zip → message XML child (depth 1) → subject/body
-    "x_olm" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "olm"))
-      val children = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("parent_id").cast("long").as("doc_id"),
-          col("doc_id").as("child_id"),
-          QueryLib.prop("subject").as("subject"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("child_id"), col("text").as("body"))
-      children.join(body, "child_id")
-        .select(col("doc_id"), col("subject"), col("body"))
-        .orderBy("doc_id")
-    }),
-    "x_vcf" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "vcf"))
-      out.meta.toDF()
-        .select(col("doc_id").cast("long").as("doc_id"),
-          QueryLib.prop("peopleMentioned").as("person"),
-          QueryLib.prop("emailMentioned").as("email"))
-        .orderBy("doc_id")
-    }),
-    "x_ics" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "ics"))
-      out.meta.toDF()
-        .select(col("doc_id").cast("long").as("doc_id"),
-          QueryLib.prop("eventsMentioned").as("event"),
-          QueryLib.prop("emailMentioned").as("email"))
-        .orderBy("doc_id")
-    }),
-    "x_classify" -> ((s, dir) => {
-      import s.implicits._
-      val pending = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          val fmt = (id % 9) match {
-            case 0 => "html"; case 1 => "csv"; case 2 => "json"
-            case 3 => "eml"; case 4 => "txt"; case 5 => "zip"
-            case 6 => "pdf"; case 7 => "docx"; case 8 => "xlsx"
-          }
-          val (fn, bytes) = QueryLib.render(fmt, id, if (text == null) "" else text)
-          graft.core.PendingDoc(id.toString, "", Seq.empty, 0, fn, "", bytes)
-        })
-      QueryLib.run(s, pending).meta.toDF().filter(col("depth") === 0)
-        .select(col("doc_id").cast("long").as("doc_id"), col("ingestor"),
-          col("mime_type"), col("processing_status").as("status"))
-        .orderBy("doc_id")
-    }),
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    ExtractionQueries.queries ++ TextQueries.queries ++ WebQueries.queries ++
+      SpanQueries.queries ++ VectorQueries.queries ++ AnalysisQueries.queries
 
-    // ---- training-data text ops --------------------------------------
-    "t_dedup_exact" -> ((s, dir) =>
-      Dedup.exact(QueryLib.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id").cast("long").as("doc_id"), col("n_dups"))
-        .orderBy("doc_id")),
-    "t_token_count" -> ((s, dir) =>
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")),
-    // Incremental dedup vs a prior corpus snapshot (bloom prefilter +
-    // exact verify; bloom is performance-only so the oracle is the plain
-    // text-equality join). Prior = every third document.
-    "t_dedup_incr" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-      val prior = docs.filter(col("doc_id") % 3 === 0)
-      Dedup.dedupAgainst(s, prior, docs, "doc_id", "text")
-        .orderBy("id")
-    }),
-    // Snapshot diff between two corpus versions — churn-only output
-    // (added / removed / changed), id+hash exchange, text never shuffles.
-    // Prior = all docs; current drops id%11==3, rewrites id%7==0, and
-    // adds +1M-offset copies of id%5==0.
-    "t_corpus_diff" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-      val id = col("doc_id").cast("long")
-      val prior = docs.select(id.as("id"), col("text"))
-      val current = docs.filter(id % 11 =!= 3)
-        .select(id.as("id"),
-          when(id % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(id % 5 === 0)
-          .select((id + 1000000L).as("id"), col("text")))
-      Dedup.corpusDiff(prior, current, "id", "text").orderBy("id")
-    }),
-    // End-to-end corpus dedup (exact collapse -> star LSH -> connected
-    // components -> survivor), exact-verified so the oracle is the
-    // ground-truth jaccard>=0.8 graph: exhaustive shingle-jaccard pairs +
-    // recursive-CTE reachability closure in DuckDB. Pins LSH recall,
-    // star-link connectivity, AND the CC labeling in one query.
-    "t_dedup_corpus" -> ((s, dir) => {
-      val base = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-      val dup = base.select((col("id") + 1000000L).as("id"), col("text"))
-      graft.ops.Dedup.dedupCorpus(s, base.unionByName(dup), "id", "text", 0.8,
-          verify = "exact")
-        .orderBy("id")
-    }),
-    // Duplicated-substring signal (Lee et al. 2021 hash-gram form):
-    // 20-token grams shared across docs; planted half-copies guarantee
-    // genuine shared runs
-    "t_shared_ngrams" -> ((s, dir) => {
-      import s.implicits._
-      val base = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-      // half-document copies (token-canonical so the oracle derives the
-      // identical token sequence): every gram of a copy occurs in its source
-      val halves = base.as[(Long, String)].map { case (id, t) =>
-        val toks = graft.core.TextUtil.tokens(t)
-        val l = math.max(toks.length / 2, 21)
-        (id + 1000000L, toks.take(l).mkString(" "))
-      }.toDF("id", "text")
-      TextOps.sharedNgramStats(s, base.unionByName(halves), "id", "text")
-        .orderBy("id")
-    }),
-    // the Lee et al. 2021 REMOVAL transform on the same planted
-    // half-copies: tokens covered by a cross-document 20-gram are cut,
-    // so each half-copy empties and each source keeps its unique tail
-    "t_strip_dupsub" -> ((s, dir) => {
-      import s.implicits._
-      val base = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("id"), col("text"))
-      val halves = base.as[(Long, String)].map { case (id, t) =>
-        val toks = graft.core.TextUtil.tokens(t)
-        val l = math.max(toks.length / 2, 21)
-        (id + 1000000L, toks.take(l).mkString(" "))
-      }.toDF("id", "text")
-      TextOps.stripDupSubstrings(s, base.unionByName(halves), "id", "text")
-        .orderBy("id")
-    }),
-    // PII redaction: planted email + phone per doc, the exact
-    // regexp_replace chain replayed by the DuckDB oracle
-    "t_redact" -> ((s, dir) => {
-      val aug = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          concat(col("text"), lit(" reach user"), col("doc_id"),
-            lit("@example.com or +1 555 01"),
-            lpad((col("doc_id") % 100).cast("string"), 2, "0"),
-            lit(" today")).as("aug"))
-      aug.select(col("doc_id"), TextOps.redactPii(col("aug")).as("redacted"))
-        .orderBy("doc_id")
-    }),
-    // LLM context-window chunking: 50-token windows, stride 25
-    "t_token_windows" -> ((s, dir) => {
-      TextOps.tokenWindows(s, QueryLib.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id", "win_idx")
-    }),
-    // Corpus data card: per-(source, lang) rollup — docs/tokens/chars/
-    // distinct content + milli tokens-per-doc
-    "t_stats" -> ((s, dir) => {
-      TextOps.corpusStats(QueryLib.documents(s, dir), "text",
-          Seq("source", "lang"))
-        .orderBy("source", "lang")
-    }),
-    // Data-mixing epoch assignment: per-stratum token budgets -> per-doc
-    // repetition factors (n_full epochs + deterministic fractional draw)
-    "t_mix" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-        .select(col("doc_id"), col("lang"),
-          TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-      TextOps.mixEpochs(s, docs, "doc_id", "lang", "n_tokens",
-          budgets = Map("en" -> 2000000L, "de" -> 500000L), salt = "mix")
-        .orderBy("id")
-    }),
-    // Sequence packing (GPT-style concat-and-chunk): documents in id
-    // order form one virtual token stream cut every 512 tokens; output =
-    // per-(chunk, doc) segment index. Spark runs the distributed
-    // two-phase prefix sum; the oracle is the equivalent single-node
-    // global window sum — same integers, opposite execution shape.
-    "t_pack" -> ((s, dir) => {
-      TextOps.packSequences(s, QueryLib.documents(s, dir), "doc_id", "text",
-          contextLen = 512)
-        .orderBy("chunk_id", "doc_id")
-    }),
-    // Deterministic stratified sampling (training-data mixing weights by
-    // language): md5-prefix threshold, portable to any engine with md5 —
-    // the oracle replicates the exact predicate.
-    "t_sample_stratified" -> ((s, dir) => {
-      TextOps.stratifiedSample(QueryLib.documents(s, dir), "doc_id", "lang",
-          Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1, salt = "graft")
-        .select(col("doc_id").cast("long").as("doc_id"), col("lang"))
-        .orderBy("doc_id")
-    }),
-    // Connected components over a deterministic chain graph (doc links to
-    // doc+1 except across decade boundaries): pins the iterative min-label
-    // propagation — chains need ~9 propagation rounds, so the loop (and its
-    // convergence early-exit) is genuinely exercised, not just one round.
-    "t_dedup_clusters" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("id"))
-      val links = docs.toDF("id_a")
-        .join(docs.toDF("id_b"), col("id_b") === col("id_a") + 1)
-        .filter(col("id_a") % 10 =!= 9)
-        .select(col("id_a"), col("id_b"))
-      val comp = graft.ops.Dedup.connectedComponents(s, links)
-      docs.join(comp, Seq("id"), "left")
-        .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-        .orderBy("id")
-    }),
-    // Gopher repetition filters (Rae et al. 2021): duplicate-line /
-    // duplicate-trigram / top-bigram fractions as integer milli-ratios
-    "t_repetition" -> ((s, dir) => {
-      TextOps.repetitionStats(s, QueryLib.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // benchmark decontamination: mark train docs sharing any exact
-    // 13-token gram with the eval set (every 20th doc, tokens 6..40 —
-    // a planted substring so overlap is real, not whole-doc identity)
-    "t_decontaminate" -> ((s, dir) => {
-      import s.implicits._
-      val docs = QueryLib.documents(s, dir)
-      val bench = docs.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-          (id, toks.slice(5, 40).mkString(" "))
-        }.toDF("doc_id", "text")
-      TextOps.decontaminate(s, docs, bench, "doc_id", "text", 13)
-        .orderBy("doc_id")
-    }),
-    // corpus text normalization: native codegen'd NFC (planted combining
-    // sequences must compose) + control strip, oracled against DuckDB's
-    // independent nfc_normalize implementation
-    "t_normalize" -> ((s, dir) => {
-      val planted = concat(lit("Cafe\u0301 nai\u0308ve \u0007"),
-        substring(col("text"), 1, 200))
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), planted.as("raw"))
-        .select(col("doc_id"), TextOps.normalizeText(col("raw")).as("text"))
-        .orderBy("doc_id")
-    }),
-    // ftfy-style mojibake repair: the corruption is applied in the query
-    // (UTF-8 bytes mis-decoded as cp1252), the repair must recover the
-    // EXACT clean string — which the oracle derives directly, without ever
-    // simulating the corruption (independent derivation); id%10==1 plants
-    // genuine high-byte text that must pass through untouched
-    "t_fix_mojibake" -> ((s, dir) => {
-      import s.implicits._
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, t0) =>
-          val t = if (t0 == null) "" else t0
-          val corrupted =
-            if (id % 10 == 1) "À la carte " + t.take(120)
-            else
-              TextOps.corruptAsMojibake(
-                "naïve café — “quoted” übermaß " + t.take(120))
-          (id, TextOps.fixMojibake(corrupted))
-        }).toDF("doc_id", "fixed")
-        .orderBy("doc_id")
-    }),
-    // crawl-grade URL canonicalization (scheme/host lowering, www +
-    // default-port strip, tracking-param drop, param sort, fragment drop,
-    // path normalization) + registrable domain — all one codegen'd
-    // expression chain over deterministically synthesized messy URLs
-    "t_url_canon" -> ((s, dir) => {
-      val id = col("doc_id").cast("long")
-      val host = graft.ops.UrlOps.hostOf(col("url"))
-      QueryLib.documents(s, dir)
-        .select(id.as("doc_id"), messyUrl(id).as("url"))
-        .select(col("doc_id"),
-          graft.ops.UrlOps.canonicalizeUrl(col("url")).as("canon"),
-          host.as("host"),
-          graft.ops.UrlOps.registrableDomain(host).as("domain"))
-        .orderBy("doc_id")
-    }),
-    // crawl blocklist filter over the same messy-URL corpus: one exact
-    // host rule (misses the :8080 variants — ports are part of the host
-    // key), one registrable-domain rule (port-insensitive), two path/query
-    // regexes, first-match-wins — all one codegen'd scan predicate
-    "t_url_filter" -> ((s, dir) => {
-      val id = col("doc_id").cast("long")
-      QueryLib.documents(s, dir)
-        .select(id.as("doc_id"), messyUrl(id).as("url"))
-        .select(col("doc_id"), col("url"),
-          graft.ops.UrlOps.urlFilter(col("url"),
-            blockedHosts = Seq("site2.example.com"),
-            blockedDomains = Seq("example.co.uk"),
-            blockedPatterns = Seq("""\?.*z=9""", "/Path2[0-9]")).as("verdict"))
-        .orderBy("doc_id")
-    }),
-    // robots.txt admission filter (RFC 9309): per-host robots — even
-    // sites carry a graftbot-specific group (so their '*' disallow-all
-    // must be IGNORED for graftbot: group selection), odd sites only a
-    // '*' group with a $-anchored rule and a mid-pattern wildcard —
-    // applied over the messy-URL corpus via broadcast join with a
-    // per-partition parse cache
-    "t_robots" -> ((s, dir) => {
-      import s.implicits._
-      val robotsA =
-        """User-agent: graftbot
-          |Disallow: /Path1
-          |Allow: /Path12
-          |User-agent: *
-          |Disallow: /
-          |""".stripMargin
-      val robotsB =
-        """User-agent: otherbot
-          |Disallow: /
-          |User-agent: *
-          |Disallow: /Path3$
-          |Disallow: /Path4*7
-          |""".stripMargin
-      val robots = (0 until 7).flatMap { k =>
-        val txt = if (k % 2 == 0) robotsA else robotsB
-        for (dom <- Seq(".example.com", ".example.co.uk");
-             port <- Seq("", ":8080"))
-          yield (s"site$k$dom$port", txt)
-      }.toDF("host", "robots_txt")
-      val id = col("doc_id").cast("long")
-      val urls = QueryLib.documents(s, dir)
-        .select(id.as("doc_id"), messyUrl(id).as("url"))
-      graft.ops.UrlOps.robotsFilter(urls, "url", robots,
-          "host", "robots_txt", "graftbot")
-        .orderBy("doc_id")
-    }),
-    // per-canonical-URL first-seen dedup (the crawl frontier collapse):
-    // 25 planted canonical groups, winner = min doc_id, dup count checked
-    // against a hand-written expected canonical (independent derivation,
-    // not mirrored code)
-    "t_url_dedup" -> ((s, dir) => {
-      val id = col("doc_id").cast("long")
-      val url = concat(lit("https://www.example.com/page"),
-        (id % 25).cast("string"),
-        when(id % 2 === 0, "?utm_source=x").otherwise(""))
-      val docs = QueryLib.documents(s, dir)
-        .select(id.as("doc_id"), url.as("url"))
-      graft.ops.UrlOps.dedupByCanonicalUrl(docs, "url", "doc_id")
-        .select(col("doc_id"), col("url"), col("canon_url"), col("n_dups"))
-        .orderBy("canon_url")
-    }),
-    // tumbling-window event metrics over the events table — the BATCH
-    // shape of the streaming watermarked aggregation (same shared
-    // function), value summed in integer cents so both engines agree
-    "m_events_window" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-      graft.streaming.StreamingIngest.windowedMetrics(ev, window_ = "1 hour")
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("window_start"),
-          col("event_type"), col("n"), col("value_cents"))
-        .orderBy("window_start", "event_type")
-    }),
-    // gap-based sessionization (30-min timeout) over the events table —
-    // one lag-window exchange on user_id, the session groupBy reuses it
-    // (single-shuffle plan); integer micros/cents end-to-end
-    "m_sessionize" -> ((s, dir) => {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-      graft.streaming.StreamingIngest.sessionize(ev, gapSecs = 1800L)
-        .orderBy("user_id", "session_seq")
-    }),
-    // fixed-iteration PageRank (10 rounds, damping 0.85) over a
-    // deterministic crawl-graph shape (ring + doubling + hub edges per
-    // doc id) in integer micro-units — floor'd at every step, so the
-    // DuckDB recursive-CTE oracle reproduces the rank vector EXACTLY
-    "t_pagerank" -> ((s, dir) => {
-      val ids = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("i"))
-      val n = ids.count()
-      val edges = ids.select(col("i").as("src"), ((col("i") + 1) % n).as("dst"))
-        .union(ids.select(col("i"), (col("i") * 2) % n))
-        .union(ids.select(col("i"), lit(0L)))
-      // explicit scale pins the oracle (auto would derive n * 1e6)
-      graft.ops.Graph.pageRank(s, edges, iterations = 10, scale = 1000000L)
-        .select(col("id").as("doc_id"), col("r").as("rank_micro"))
-        .orderBy("doc_id")
-    }),
-    // CCNet-style self-perplexity filter: mean NLL under the corpus's
-    // own add-one bigram LM, floored to integer micros per bigram so
-    // both engines agree exactly
-    "t_lm_score" -> ((s, dir) => {
-      TextOps.lmScore(s, QueryLib.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // DSIR importance weights: hashed unigram+bigram features, target
-    // distribution = every 10th doc, λ(bucket) floored to integer micros
-    // for engine-exact per-doc sums
-    "t_dsir" -> ((s, dir) => {
-      TextOps.dsirWeights(s, QueryLib.documents(s, dir), "doc_id", "text",
-          col("doc_id") % 10 === 0)
-        .orderBy("doc_id")
-    }),
-    // BM25 top-20 retrieval (Robertson idf, k1=1.2 b=0.75) for a fixed
-    // 3-term query; float-safe round+rank output (score_milli floor,
-    // doc-id tiebreak) — both engines evaluate the identical double
-    // formula
-    "t_bm25" -> ((s, dir) => {
-      TextOps.bm25TopK(s,
-        QueryLib.documents(s, dir).select(col("doc_id"), col("text")),
-        "doc_id", "text", Seq("scan", "merge", "query"), 20)
-        .orderBy("rank")
-    }),
-    // crawl-graph edge emitter: DOM-walk each page's <a href>s, resolve
-    // against the page URL (absolute / relative / ../ / root-relative /
-    // protocol-relative; fragment+javascript+mailto decoys dropped),
-    // canonicalize. Oracle = HAND-WRITTEN expected edges (independent
-    // derivation, nothing mirrored)
-    "t_outlinks" -> ((s, dir) => {
-      import s.implicits._
-      val pages = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val html =
-            s"""<html><body>
-               |<a href="http://Other.example.com/abs$id?utm_source=f&amp;b=2">absolute</a>
-               |<a href="sub/page$id.html">relative</a>
-               |<a href="../up$id.html">updir</a>
-               |<a href="/root$id.html">rootrel</a>
-               |<a href="//cdn.example.net/x$id">protorel</a>
-               |<a href="#frag">skip</a>
-               |<a href="javascript:void(0)">skip</a>
-               |<a href="mailto:a@b.c">skip</a>
-               |</body></html>""".stripMargin
-          (id, html, s"https://WWW.Example.com/dir/deep/page$id.html")
-        }.toDF("doc_id", "html", "page_url")
-      graft.ops.UrlOps.outlinks(s, pages, "doc_id", "html", "page_url")
-        .select(col("doc_id"),
-          graft.ops.UrlOps.canonicalizeUrl(col("dst")).as("dst"))
-        .orderBy("doc_id", "dst")
-    }),
-    // deterministic train/val/test split (98/1/1): stable md5-threshold
-    // buckets — a doc's split never changes as the corpus grows, which is
-    // what keeps eval sets uncontaminated across dataset versions
-    "t_split" -> ((s, dir) =>
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          TextOps.splitColumn(col("doc_id"), "graft", 0.98, 0.01)
-            .as("split"))
-        .orderBy("doc_id")),
-    // deterministic corpus shuffle + shard assignment (the training-data
-    // writer step): md5-salted shuffle key, 8 equal-width prefix shards,
-    // rank within shard — one id+key exchange, text never shuffles
-    "t_shard" -> ((s, dir) =>
-      TextOps.shardCorpus(QueryLib.documents(s, dir), "doc_id", 8, "s5")
-        .orderBy("id")),
-    // within-doc consecutive duplicate-line collapse (uniq): planted
-    // nav/content stutters; the oracle derives the cleaned page
-    // independently (no algorithm replay)
-    "t_uniq_lines" -> ((s, dir) => {
-      val id = col("doc_id").cast("long")
-      val s80 = substring(col("text"), 1, 80)
-      val synth = concat(lit("nav\nnav\n"),
-        when(id % 3 === 0, "nav\n").otherwise(""),
-        s80, lit("\n"), s80, lit("\nfooter"))
-      TextOps.collapseRepeatedLines(
-        QueryLib.documents(s, dir).select(id.as("doc_id"), synth.as("text")),
-        "doc_id", "text").orderBy("id")
-    }),
-    // release hygiene: the train split checked for 13-gram overlap with
-    // the test split — splitColumn ∘ decontaminate, the exact check a
-    // dataset release runs before shipping eval sets with the corpus
-    "t_split_decontam" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"),
-          TextOps.splitColumn(col("doc_id"), "graft", 0.98, 0.01).as("split"))
-      val train = docs.filter(col("split") === "train")
-        .select(col("doc_id"), col("text"))
-      val test = docs.filter(col("split") === "test")
-        .select(col("doc_id"), col("text"))
-      TextOps.decontaminate(s, train, test, "doc_id", "text", 13)
-        .orderBy("doc_id")
-    }),
-    // anchor-text corpus: per canonical link target, total references +
-    // dominant anchor (count desc, lexicographic tiebreak). The HTML
-    // parse + href resolution is the pinned surface; whitespace-collapse
-    // and the empty-anchor drop are observable (decoy <a>s)
-    "t_anchors" -> ((s, dir) => {
-      import s.implicits._
-      val pages = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .map { id =>
-          val html =
-            s"""<html><body>
-               |<a href="/p${id % 10}">Label  ${id % 3}</a>
-               |<a href="/p${id % 10}">Label ${id % 3}</a>
-               |<a href="http://ext.example.org/q">Go</a>
-               |<a href="/skip">   </a>
-               |<a href="#frag">Nope</a>
-               |</body></html>""".stripMargin
-          (id, html, s"https://host${id % 4}.example.com/dir/page.html")
-        }.toDF("doc_id", "html", "page_url")
-      graft.ops.UrlOps.anchorTexts(s, pages, "doc_id", "html", "page_url")
-        .orderBy("dst")
-    }),
-    // per-source quota: top-10 docs per source by size (window top-N)
-    "t_domain_cap" -> ((s, dir) => {
-      TextOps.capPerSource(QueryLib.documents(s, dir)
-          .select(col("doc_id").cast("long").as("doc_id"), col("source"),
-            col("n_chars")),
-        "doc_id", "source", "n_chars", 10)
-        .orderBy("source", "rk")
-    }),
-    // Gopher-rule keep/reject composition over the same signals (first
-    // failing rule is the reason; engine-portable integer milli math)
-    "t_filter_gopher" -> ((s, dir) => {
-      TextOps.filterGopher(s, QueryLib.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // End-to-end corpus curation recipe (quality gate -> exact dedup ->
-    // benchmark decontamination -> per-source cap -> stratified mixing),
-    // composed from the individually-oracled stages; the oracle replays
-    // the full five-stage SQL so the COMPOSITION (stage order, verdict
-    // semi-join semantics) is pinned, not just each stage.
-    "t_curate" -> ((s, dir) => {
-      import s.implicits._
-      val docs = QueryLib.documents(s, dir)
-      val bench = docs.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-          (id, toks.slice(5, 40).mkString(" "))
-        }.toDF("doc_id", "text")
-      TextOps.curateCorpus(s, docs, "doc_id", "text", "lang", "source",
-          "n_chars", bench, cap = 10,
-          rates = Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1,
-          salt = "graft")
-        .orderBy("id")
-    }),
-    // THE end-to-end web-ingestion composition (the LLM-data story the
-    // brief describes, as ONE oracled chain): real WARC files on disk ->
-    // fromWarcs record source -> full extraction pipeline -> per-site
-    // reassembly of the interleaved spans -> cross-site boilerplate strip
-    // (the shared footer page every site carries) -> five-stage curation
-    // -> sequence packing. The oracle replays the whole chain in SQL, so
-    // the COMPOSITION is pinned end-to-end: the packed segment table only
-    // matches if extraction bodies, the strip verdict, every curation
-    // stage, and the prefix-sum packing all agree.
-    "t_web_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      // 1. render the corpus into real .warc/.warc.gz files (each site =
-      // page + notes + the SHARED footer page)
-      val docs0 = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect()
-      // per-process dir: a concurrent Verify/Bench pair on the same
-      // corpus must not delete each other's WARC files mid-crawl
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_webpipe_" + ProcessHandle.current().pid() + "_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_"))
-      def deleteRec(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(deleteRec)
-        f.delete(); ()
-      }
-      if (root.exists()) deleteRec(root)
-      root.mkdirs()
-      // each site's bytes are a pure function of (id, text) and land in a
-      // distinct file, so the render + gzip + write loop (~5k gzip+write
-      // calls per invocation) spreads across a bounded pool — a driver-
-      // serial term that grows linearly with the fixture corpus. The first
-      // failure is rethrown as itself, as the sequential loop did, after
-      // the pool's other writers are stopped, so none of them can race the
-      // next run's deleteRec
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(2, math.min(Runtime.getRuntime.availableProcessors(), 16)))
-      try {
-        docs0.map { case (id, text) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = {
-              val (name, bytes) = QueryLib.render("warc_site", id,
-                if (text == null) "" else text)
-              java.nio.file.Files.write(
-                new java.io.File(root, name).toPath, bytes)
-              ()
-            }
-          })
-        }.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } catch { case t: Throwable =>
-        pool.shutdownNow()
-        pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
-        throw t
-      } finally pool.shutdown()
-      // 2. crawl source -> extraction
-      val out = QueryLib.run(s,
-        graft.sources.Sources.fromWarcs(s, root.getAbsolutePath))
-      val recs = out.meta.toDF()
-        .select(col("doc_id").as("rec_id"), col("file_name").as("uri"))
-      val recBodies = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id").as("rec_id"), col("text"))
-      // 3. reassemble the interleaved per-site documents (span order =
-      // URI order: footer < notes < page, deterministically)
-      val nested = recs.join(recBodies, "rec_id")
-        .select(regexp_extract(col("rec_id"), "^doc(\\d+)\\.warc", 1)
-          .cast("long").as("doc_id"), col("uri"), col("text"))
-        .groupBy("doc_id")
-        .agg(transform(
-          array_sort(collect_list(struct(col("uri"), col("text")))),
-          e => struct(lit("text").as("kind"), e.getField("text").as("text"),
-            lit("").as("media_ref"), lit(0).as("offset"))).as("spans"))
-      // 4. cross-site boilerplate strip in the NESTED shape (narrow strip
-      // + narrow body reassembly: the site-assembly groupBy above is the
-      // composition's ONLY text-carrying exchange)
-      val stripped = graft.ops.SpanOps.stripBoilerplateNested(s, nested,
-        minDocs = 5)
-      val body = stripped.select(col("doc_id").cast("long").as("doc_id"),
-        array_join(transform(
-          filter(col("spans"), sp => sp.getField("kind") === "text"),
-          sp => sp.getField("text")), " ").as("text"))
-      // 5. five-stage curation over the reassembled bodies
-      val meta = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
-          col("source"))
-      val corpus = body.join(meta, "doc_id")
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          length(col("text")).cast("long").as("n_chars"))
-      val bench = corpus.filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, t) =>
-          val toks = graft.core.TextUtil.tokens(if (t == null) "" else t)
-          (id, toks.slice(5, 40).mkString(" "))
-        }.toDF("doc_id", "text")
-      val kept = TextOps.curateCorpus(s, corpus, "doc_id", "text", "lang",
-        "source", "n_chars", bench, cap = 10,
-        rates = Map("en" -> 0.5, "de" -> 0.25), defaultRate = 0.1,
-        salt = "graft")
-      // 6. pack the survivors into 512-position training contexts
-      val survivors = corpus
-        .join(kept.select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")
-      TextOps.packSequences(s, survivors, "doc_id", "text", 512)
-        .orderBy("chunk_id", "doc_id")
-    }),
-    // C4 cleaning rules (Raffel et al. 2020) over synthesized multi-line
-    // pages (the flat testdata text carries no lines/sentences, so both
-    // engines derive the same page deterministically — the planted-
-    // structure pattern t_decontaminate uses)
-    "t_filter_c4" -> ((s, dir) => {
-      TextOps.filterC4(s, pagedDocs(s, dir), "doc_id", "page")
-        .orderBy("doc_id")
-    }),
-    // cross-document boilerplate line stats (CCNet/RefinedWeb line dedup):
-    // header/footer/notice lines planted across docs must be found by
-    // corpus-wide doc-frequency, never by per-doc inspection
-    "t_line_dedup" -> ((s, dir) => {
-      TextOps.lineDedupStats(s, pagedDocs(s, dir), "doc_id", "page", 5)
-        .orderBy("doc_id")
-    }),
-    // main-content extraction OVER the interleaved spans table (the north
-    // rule's input shape): corpus-frequency boilerplate strip — text spans
-    // in >=5 distinct docs drop, media spans and unique text survive with
-    // original positions (hash-only df exchange + one left_anti join)
-    "i_spans_strip" -> ((s, dir) => {
-      graft.ops.SpanOps.stripBoilerplate(s, spanDocs(s, dir), minDocs = 5)
-        .select(col("doc_id"), col("pos").cast("long").as("pos"), col("kind"),
-          col("text"), col("media_ref"), col("offset").cast("long").as("off"))
-        .orderBy("doc_id", "pos")
-    }),
-    // interleaved spans -> model-input text with media placeholder tokens
-    // (pure codegen'd transform/array_join over the nested array; no
-    // explode, no shuffle)
-    "i_spans_render" -> ((s, dir) => {
-      graft.ops.SpanOps.renderInterleaved(spanDocs(s, dir))
-        .orderBy("doc_id")
-    }),
-    // multimodal sequence packing over the interleaved shape: text spans
-    // count their tokens, media spans count one placeholder position;
-    // 512-position contexts via the shared two-phase prefix sum
-    "i_spans_pack" -> ((s, dir) => {
-      graft.ops.SpanOps.packInterleaved(s, spanDocs(s, dir),
-          contextLen = 512)
-        .orderBy("chunk_id", "doc_id")
-    }),
-    // patch-aware multimodal packing: media spans cost
-    // ceil(w/28)*ceil(h/28) ViT patch tokens read from a dims side table
-    // (synthesized per media_ref from md5 arithmetic both engines
-    // replay); refs with md5-digit4 == 0 are ABSENT from dims and fall
-    // back to cost 1 — exercising the unknown-dims path
-    "i_spans_pack_patches" -> ((s, dir) => {
-      val docs = spanDocs(s, dir)
-      def hx(n: Int) = expr(
-        s"(instr('0123456789abcdef', substr(md5(media_ref), $n, 1)) - 1)")
-      val refs = graft.ops.SpanOps.explodeSpans(docs)
-        .filter(col("kind") =!= "text").select("media_ref").distinct()
-      val dims = refs
-        .filter(hx(4) =!= 0)
-        .select(col("media_ref"),
-          (lit(28) * (lit(3) + hx(1) % 6) + hx(3) % 2).as("width"),
-          (lit(28) * (lit(2) + hx(2) % 5)).as("height"))
-      graft.ops.SpanOps.packInterleavedPatches(s, docs, dims,
-          patchSize = 28, contextLen = 512)
-        .orderBy("chunk_id", "doc_id")
-    }),
-    // caption-pair mining over the interleaved shape: each media span
-    // pairs with the nearest non-empty text span, distance ties broken
-    // toward the following span (figure-caption convention) — pure
-    // nested-array argmin, zero shuffle
-    "i_pairs" -> ((s, dir) => {
-      graft.ops.SpanOps.minePairs(spanDocs(s, dir))
-        .filter(col("caption_pos") >= 0)
-        .orderBy("doc_id", "media_pos")
-    }),
-    // token-budget corpus selection: rank by the stopword-ratio quality
-    // score (desc, id tiebreak), keep the strict order-prefix whose
-    // running token total fits the budget — the distributed prefix sum,
-    // never a global-order window
-    "t_select_budget" -> ((s, dir) => {
-      val score = TextOps.qualityColumns(col("text"))
-        .toMap.apply("stopword_ratio_milli")
-      TextOps.selectByBudget(s, QueryLib.documents(s, dir), "doc_id",
-          "text", score, budgetTokens = 12000L)
-        .orderBy("id")
-    }),
-    // corpus vocabulary: token -> (tf, df), top-100 by tf with
-    // deterministic tiebreak — the tokenizer-training word count
-    "t_vocab" -> ((s, dir) => {
-      TextOps.vocab(s, QueryLib.documents(s, dir), "doc_id", "text", 100)
-        .orderBy("rank")
-    }),
-    // BPE tokenizer training: first 12 learned merges over the corpus
-    // word-count table (Sennrich et al. 2016). The merge table IS the
-    // output artifact; oracle = 12 unrolled count→argmax→rewrite CTE
-    // steps in DuckDB (same convention as t_pagerank's unrolled rounds).
-    "t_bpe" -> ((s, dir) => {
-      TextOps.bpeMerges(s, QueryLib.documents(s, dir), "text", 12)
-        .orderBy("step")
-    }),
-    // BPE tokenizer APPLICATION: train 12 merges, then encode the corpus
-    // vocabulary with them. encode(trainCorpus) must equal the trainer's
-    // final symbol table — the oracle is the w12 CTE, so the Spark-side
-    // encode fold (space-bounded single-pass replaces in merge order) is
-    // pinned against an independent replay of the training rewrite.
-    "t_bpe_encode" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-      val merges = TextOps.bpeMerges(s, docs, "text", 12)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextOps.bpeEncode(s, docs, "text", merges).orderBy("word")
-    }),
-    // BPE DECODE as the full per-document roundtrip: encode every
-    // normalized word with the trained merges, decode the pieces back.
-    // decoded must equal the normalized token stream (decode∘encode is
-    // the identity — losslessness), and n_pieces pins that the merges
-    // actually applied (the oracle recomputes it from an independent
-    // replay of the training rewrite, so an unapplied or misordered
-    // merge fold shows up as a count mismatch).
-    "t_bpe_roundtrip" -> ((s, dir) => {
-      val docs = QueryLib.documents(s, dir)
-      val merges = TextOps.bpeMerges(s, docs, "text", 12)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      TextOps.bpeRoundtrip(docs, "doc_id", "text", merges).orderBy("doc_id")
-    }),
-    "t_quality" -> ((s, dir) => {
-      val cols = TextOps.qualityColumns(col("text"))
-        .map { case (n, c) => c.as(n) }
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id") +: cols: _*)
-        .orderBy("doc_id")
-    }),
-    // Accuracy gate for the 26-language detector: each doc carries a
-    // held-out sentence (disjoint from the trigram training paragraphs) in
-    // language ordered(doc_id % 26); the detector must name it exactly.
-    // Held-out gate for the from-scratch fastText lid.176 inference: 69
-    // languages / 20+ scripts, every sentence written for this gate and
-    // pinned to the model's confident top-1. Falls back to the trigram
-    // scorer's 29-language corpus when no model file is present (the
-    // oracle below assumes the model, like FixtureSpec assumes fixtures).
-    "t_lang_id" -> ((s, dir) => {
-      import s.implicits._
-      val useModel = graft.analysis.FastTextLid.get.isDefined
-      val corpus =
-        if (useModel) graft.analysis.FastTextLid.heldOut
-        else graft.ops.LangId.ordered.map(l => l -> graft.ops.LangId.testSentences(l))
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions { it =>
-          val lid = graft.analysis.FastTextLid.get
-          it.map { id =>
-            val text = corpus((id % corpus.size).toInt)._2
-            val detected = lid match {
-              case Some(m) => m.detect(text).map(_._1).getOrElse("und")
-              case None => TextOps.detectLanguage(text)
-            }
-            (id, detected)
-          }
-        }.toDF("doc_id", "detected_lang")
-        .orderBy("doc_id")
-    }),
-    "t_fingerprint" -> ((s, dir) => {
-      import s.implicits._
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, TextOps.fingerprint(
-            graft.core.TextUtil.tokens(if (t == null) "" else t).toIndexedSeq))
-        }).toDF("doc_id", "fingerprint")
-        .orderBy("doc_id")
-    }),
-    "t_minhash_lsh" -> ((s, dir) => {
-      val dd = QueryLib.withMutants(s, QueryLib.documents(s, dir), 30)
-      Dedup.minhashLsh(s, dd, "doc_id", "text", 0.35)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-    "t_ngram_jaccard" -> ((s, dir) => {
-      val dd = QueryLib.withMutants(s, QueryLib.documents(s, dir), 30)
-      Dedup.ngramJaccardExact(s, dd, "doc_id", "text", 0.35)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-    "t_simhash" -> ((s, dir) => {
-      val dd = QueryLib.withMutants(s, QueryLib.documents(s, dir), 50)
-      Dedup.simhashPairs(s, dd, "doc_id", "text", 3)
-        .select(col("id_a"), col("id_b"), col("dist")).orderBy("id_a", "id_b")
-    }),
-
-    // ---- similarity search -------------------------------------------
-    "s_ann_brute" -> ((s, dir) => {
-      val emb = QueryLib.embeddings(s, dir)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 20),
-          "vec_id", "embedding", 5)
-        .select(col("qid"), col("rank"), col("cid"))
-        .orderBy("qid", "rank")
-    }),
-    // Planted-neighbor gate: queries are exact-direction copies (×2.0f is
-    // lossless in float) of the first 100 corpus vectors, so each query's
-    // rank-1 neighbor MUST be its planted original (cosine 1.0, identical
-    // signatures in every LSH table) — an exact end-to-end check of the
-    // bucketing + candidate join + rescore path.
-    "s_ann_lsh" -> ((s, dir) => {
-      val emb = QueryLib.embeddings(s, dir)
-      val planted = emb.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), x => x * 2.0f).as("embedding"))
-      Similarity.lshTopK(s, emb, planted, "vec_id", "embedding", 5)
-        .filter(col("rank") === 1)
-        .select(col("qid"), col("cid"))
-        .orderBy("qid")
-    }),
-    // IVF variant, same planted-neighbor gate: spherical-k-means assignment
-    // is scaling-invariant, so each x2.0f query lands in its original's
-    // cell and rank-1 must be the planted original.
-    "s_ann_ivf" -> ((s, dir) => {
-      val emb = QueryLib.embeddings(s, dir)
-      val planted = emb.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), x => x * 2.0f).as("embedding"))
-      Similarity.ivfTopK(s, emb, planted, "vec_id", "embedding", 5)
-        .filter(col("rank") === 1)
-        .select(col("qid"), col("cid"))
-        .orderBy("qid")
-    }),
-    // IVF-PQ variant (Jégou et al. IVFADC): same planted gate — the ×2.0f
-    // query normalizes to the original's exact unit vector, so it shares
-    // the original's cell, the original tops the ADC shortlist, and the
-    // exact rescore pins rank-1 (sim 1.0) deterministically.
-    "s_ann_ivfpq" -> ((s, dir) => {
-      val emb = QueryLib.embeddings(s, dir)
-      val planted = emb.filter(col("vec_id") < 100)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), x => x * 2.0f).as("embedding"))
-      Similarity.ivfPqTopK(s, emb, planted, "vec_id", "embedding", 5)
-        .filter(col("rank") === 1)
-        .select(col("qid"), col("cid"))
-        .orderBy("qid")
-    }),
-    "e_embed_dups" -> ((s, dir) => {
-      // Plants BOTH exact-direction copies (×2 scale, cos = 1) and slightly
-      // perturbed near-dups (coord0 ×1.05 → cos ≥ 0.9997 at any vector
-      // scale) so the oracle pins the LSH recall contract, not just the
-      // trivial identical-signature case (see Dedup.embeddingDups scaladoc).
-      val emb = QueryLib.embeddings(s, dir)
-        .select(col("vec_id").cast("long"), col("embedding"))
-      val scaled = emb.select((col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), x => x * 2.0f).as("embedding"))
-      val perturbed = emb.select((col("vec_id") + 2000000L).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 0, x * 1.05f).otherwise(x)).as("embedding"))
-      Dedup.embeddingDups(s, emb.unionByName(scaled).unionByName(perturbed),
-          "vec_id", "embedding", 0.999)
-        .select(col("id_a"), col("id_b")).orderBy("id_a", "id_b")
-    }),
-    // SemDeDup (Abbas et al. 2023): k-means clusters bound the pairwise
-    // stage; within-cluster cosine ≥ τ removes all but the min-id
-    // exemplar. Planted ×2 / ×4 exact-direction copies co-cluster with
-    // their originals bit-deterministically (cosine assignment is
-    // scaling-invariant), so removed = exactly the copies: the oracle
-    // pins cluster-routing + exhaustive within-cluster recall (background
-    // max pairwise cosine on this table is 0.60 at every SF).
-    "e_semdedup" -> ((s, dir) => {
-      val emb = QueryLib.embeddings(s, dir)
-        .select(col("vec_id").cast("long"), col("embedding"))
-      val x2 = emb.select((col("vec_id") + 1000000L).as("vec_id"),
-        transform(col("embedding"), x => x * 2.0f).as("embedding"))
-      val x4 = emb.select((col("vec_id") + 2000000L).as("vec_id"),
-        transform(col("embedding"), x => x * 4.0f).as("embedding"))
-      Similarity.semDedup(s, emb.unionByName(x2).unionByName(x4),
-          "vec_id", "embedding", 0.999)
-        .orderBy("removed_id")
-    }),
-    // symmetric int8 vector quantization (the compression step before an
-    // embedding corpus rides a shuffle / lands in the ANN index):
-    // integer outputs so the oracle replays the identical float32→double
-    // widening and ties-away-from-zero rounding
-    "e_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(QueryLib.embeddings(s, dir),
-        "vec_id", "embedding").orderBy("id")),
-
-    // ---- multimodal ---------------------------------------------------
-    // EXIF roundtrip: JPEG APP1 IFD + SOF dims → ImageIngestor metadata
-    "x_image" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "jpg_exif"))
-      out.meta.toDF()
-        .select(col("doc_id").cast("long").as("doc_id"),
-          element_at(element_at(col("properties"), "generator"), 1).as("make"),
-          element_at(element_at(col("properties"), "generator"), 2).as("model"),
-          QueryLib.prop("authoredAt").as("authored_at"),
-          QueryLib.prop("width").cast("long").as("width"),
-          QueryLib.prop("height").cast("long").as("height"))
-        .orderBy("doc_id")
-    }),
-    // OCR end-to-end: BMP images + Type3-flagged PDFs through the pipeline
-    // (size window, Type3 text-layer suppression, engine, cache — see
-    // graft.ocr.Ocr; reference support/ocr.py + support/pdf.py:105-147)
-    "x_ocr" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "ocr"))
-      val meta = out.meta.toDF().select(col("doc_id"), col("ingestor"))
-      val texts = out.spans.toDF()
-        .filter(col("kind").isin("text", "page") && length(trim(col("text"))) > 0)
-        .select(col("doc_id"), trim(col("text")).as("ocr_text"))
-      meta.join(texts, Seq("doc_id"), "left")
-        .select(col("doc_id").cast("long").as("doc_id"), col("ingestor"),
-          col("ocr_text"))
-        .orderBy("doc_id")
-    }),
-    // the cluster-scale OCR cache shape: distinct-by-content-hash, OCR
-    // once per distinct image, join text back on the hash (ocr.py's Redis
-    // tag cache re-expressed as a dataflow)
-    "t_ocr_cache" -> ((s, dir) => {
-      import s.implicits._
-      val imgs = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          (id, graft.ocr.Raster.renderText("GROUP " + (id % 50),
-            scale = 2, minWidthChars = 30))
-        }).toDF("doc_id", "img")
-      graft.ocr.Ocr.ocrDataFrame(s, imgs, "doc_id", "img")
-        .orderBy("doc_id")
-    }),
-    "m_media_meta" -> ((s, dir) => {
-      import s.implicits._
-      val media = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          element_at(array(lit("image"), lit("audio"), lit("video")),
-            (col("doc_id") % 3 + 1).cast("int")).as("kind"),
-          encode(col("text"), "UTF-8").as("payload"))
-      Multimodal.decodeMedia(s, media, "doc_id", "kind", "payload")
-        .toDF()
-        .select(col("doc_id"), col("kind"), col("byte_len"))
-        .orderBy("doc_id")
-    }),
-
-    // Real media-extractor path end-to-end: classify + AudioIngestor over
-    // rendered WAV/MP3 containers; metadata (title/duration/samplingRate)
-    // must match the byte-exact values the renderers encoded.
-    "m_media_real" -> ((s, dir) => {
-      import s.implicits._
-      val pending = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .mapPartitions(_.map { id =>
-          val fmt = if (id % 2 == 0) "wav" else "mp3"
-          val (fn, bytes) = QueryLib.render(fmt, id, "")
-          graft.core.PendingDoc(id.toString, "", Seq.empty, 0, fn, "", bytes)
-        })
-      QueryLib.run(s, pending).meta.toDF()
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("ingestor"),
-          coalesce(QueryLib.prop("title"), lit("")).as("title"),
-          QueryLib.prop("duration").cast("long").as("duration"),
-          QueryLib.prop("samplingRate").cast("long").as("sampling_rate"))
-        .orderBy("doc_id")
-    }),
-
-    // TIFF EXIF roundtrip through TIFFIngestor (IFD walker on the container)
-    "x_tiff" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "tiff_exif"))
-      out.meta.toDF()
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("ingestor"),
-          element_at(element_at(col("properties"), "generator"), 1).as("make"),
-          element_at(element_at(col("properties"), "generator"), 2).as("model"),
-          QueryLib.prop("authoredAt").as("authored_at"))
-        .orderBy("doc_id")
-    }),
-
-    // ---- analysis stage ------------------------------------------------
-    "a_patterns" -> ((s, dir) => {
-      val spans = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          concat(col("text"), lit(" contact user"), col("doc_id"),
-            lit("@example.com and user"), col("doc_id") % 10,
-            lit("@example.com")).as("text"))
-      Analyze.extractPatterns(spans)
-        .filter(col("prop") === "emailMentioned")
-        .select(col("doc_id"), col("value").as("email"))
-        .orderBy("doc_id", "email")
-    }),
-    "a_tag_agg" -> ((s, dir) => {
-      val spans = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          concat(col("text"), lit(" contact user"), col("doc_id"),
-            lit("@example.com and user"), col("doc_id") % 10,
-            lit("@example.com")).as("text"))
-      Analyze.aggregateTags(Analyze.extractPatterns(spans)
-          .filter(col("prop") === "emailMentioned"))
-        .select(col("doc_id"), col("key"), col("freq"))
-        .orderBy("doc_id", "key")
-    }),
-    "a_chunks" -> ((s, dir) => {
-      // text_chunks (analysis/util.py:17-28) at a visible chunk size
-      import s.implicits._
-      QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
-        .flatMap { case (id, t) =>
-          graft.core.TextUtil.textChunks(Seq(if (t == null) "" else t), 100)
-            .zipWithIndex.map { case (c, i) => (id, i, c) }
-        }.toDF("doc_id", "chunk_idx", "chunk")
-        .orderBy("doc_id", "chunk_idx")
-    }),
-    // Mention synthesis with detectedSchema (analysis/__init__.py:70-79):
-    // planted PER/ORG values (including one per doc the clean_name gate
-    // must reject) -> cleanNameTags -> aggregate -> Mention rows.
-    "a_mentions" -> ((s, dir) => {
-      import s.implicits._
-      val people = QueryLib.MentionPeople
-      val companies = QueryLib.MentionCompanies
-      val tags = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          Seq(
-            (id, "peopleMentioned", people((id % people.size).toInt)),
-            (id, "companiesMentioned", companies((id % companies.size).toInt)),
-            (id, "peopleMentioned", "Cher"),          // no space -> rejected
-            (id, "companiesMentioned", "  A B  "))    // <=4 chars -> rejected
-        }.toDF("doc_id", "prop", "value")
-      val agg = Analyze.aggregateTags(Analyze.cleanNameTags(s, tags))
-      Analyze.mentions(agg)
-        .select(col("mention_id"), col("document").cast("long").as("document"),
-          col("detected_prop"), col("detected_schema"), col("resolved_key"))
-        .orderBy("document", "detected_prop", "resolved_key")
-    }),
-    // TagAggregatorFasttext gate: synthesized person/company/trash values
-    // per doc — the type model must keep exactly the person + company
-    // groups and drop the trash group (entropy-confidence >= 0.85 filter).
-    "a_typed_tags" -> ((s, dir) => {
-      import s.implicits._
-      val people = Vector("John Smith", "Maria Garcia", "Ivan Petrov",
-        "Fatima Hassan", "Chen Wei", "Anna Kowalski", "Ahmed Khan",
-        "Sofia Rossi", "David Cohen", "Yuki Tanaka")
-      val companies = Vector("Acme Holdings Ltd", "Globex GmbH",
-        "Initech LLC", "Umbrella Corp", "Stark Industries Inc",
-        "Wayne Enterprises Plc", "Cyberdyne Systems SA", "Tyrell BV")
-      val tags = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          Seq(
-            (id, "peopleMentioned", people((id % 10).toInt)),
-            (id, "companiesMentioned", companies((id % 8).toInt)),
-            (id, "peopleMentioned", s"zq9#x$id 77&&"))
-        }.toDF("doc_id", "prop", "value")
-      Analyze.aggregateTagsTyped(s, tags)
-        .select(col("doc_id"), col("prop"), col("key"))
-        .orderBy("doc_id", "prop", "key")
-    }),
-    // contextCountry resolution: mentions inherit the countries tagged from
-    // the doc's location values (analysis/country.py gazetteer path).
-    "a_mentions_country" -> ((s, dir) => {
-      import s.implicits._
-      val cities = Vector("Berlin", "Paris", "London", "Madrid", "Rome",
-        "Tokyo", "Toronto", "Mumbai", "Cairo", "Sydney")
-      val people = QueryLib.MentionPeople
-      val tags = QueryLib.documents(s, dir)
-        .select(col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          Seq(
-            (id, "peopleMentioned", people((id % people.size).toInt)),
-            (id, "locationMentioned", cities((id % 10).toInt)))
-        }.toDF("doc_id", "prop", "value")
-      Analyze.mentionsWithCountry(s, Analyze.aggregateTags(tags))
-        .select(col("document").cast("long").as("document"),
-          col("resolved_key"), col("detected_schema"),
-          concat_ws(",", col("context_country")).as("context_country"))
-        .orderBy("document", "resolved_key")
-    }),
-    "a_thread_join" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "eml"))
-      Analyze.threadEmails(s, out.meta)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("in_reply_to_doc").cast("long").as("in_reply_to_doc"))
-        .orderBy("doc_id")
-    }),
-    // PST roundtrip: from-scratch [MS-PST] writer (crypt none) -> NDB/LTP
-    // reader -> one eml child per message -> RFC822 pipeline. Matches the
-    // reference's readpst-export-then-delegate shape (outlookpst.py:13-39).
-    "x_pst" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "pst"))
-      val kids = out.meta.toDF().filter(col("depth") === 1)
-        .select(col("doc_id"), col("parent_id"), col("file_name"),
-          QueryLib.prop("subject").as("subject"))
-      val body = out.spans.toDF().filter(col("kind") === "text")
-        .select(col("doc_id"),
-          regexp_replace(col("text"), """^\s+|\s+$""", "").as("body"))
-      kids.join(body, "doc_id")
-        .select(col("parent_id").cast("long").as("doc_id"), col("file_name"),
-          col("subject"), col("body"))
-        .orderBy("doc_id", "file_name")
-    }),
-    // EmailIdentity -> Person rows (support/email.py:18-49): eml roundtrip
-    // through the pipeline, identities re-keyed per the reference's rules
-    // (valid email wins, else >10-char name; bare-email labels flip).
-    "x_eml_persons" -> ((s, dir) => {
-      val out = QueryLib.run(s, QueryLib.renderPending(s, QueryLib.documents(s, dir), "eml_ids"))
-      Analyze.emailPersons(s, out.meta)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("person_key"), col("name"), col("email"))
-        .orderBy("doc_id", "person_key")
-    }),
-
-    // ---- full corpus (rows-only smoke of every extractor family) -------
-    "pipeline_corpus" -> ((s, dir) => {
-      val n = math.max(500L, (CorpusGen.sfFromDir(dir) * 50000L).toLong)
-      val (docs, blobs) = CorpusGen.corpus(s, n)
-      val out = Pipeline.run(s, Pipeline.initialPending(s, docs, blobs))
-      // histogram serialized to JSON: the driver's pandas compare cannot
-      // sort raw array columns
-      Pipeline.metrics(out.meta)
-        .withColumn("duration_hist", to_json(col("duration_hist")))
-        .orderBy("ingestor")
-    })
-  )
 
   /** Exhaustive-jaccard ground truth for the near-dup operators: rebuilds
     * the doc+mutant corpus and computes every pair with shingle-jaccard
@@ -1648,23 +114,6 @@ object SparkEntry {
     * each w_i is consumed by BOTH p_{i+1} and w_{i+1}, so an inlining
     * planner expands the chain into a 2^K-leaf tree — measured 478 s vs
     * 0.8 s at sf0.001 in DuckDB. */
-  /** Deterministically messy URL per doc id — shared by t_url_canon and
-    * t_url_filter (scheme/www/port/path/query/fragment variants keyed on
-    * id residues; the oracle rebuilds the identical string in SQL). */
-  private def messyUrl(id: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = concat(
-    when(id % 3 === 0, "HTTP").otherwise("https"), lit("://"),
-    when(id % 2 === 0, "WWW.").otherwise(""),
-    lit("site"), (id % 7).cast("string"),
-    when(id % 3 === 0, ".example.co.uk").otherwise(".example.com"),
-    when(id % 5 === 0, when(id % 3 === 0, ":80").otherwise(":443"))
-      .when(id % 5 === 1, ":8080").otherwise(""),
-    lit("/Path"), (id % 50).cast("string"),
-    when(id % 4 === 0, "/").otherwise(""),
-    when(id % 2 === 0, "?utm_source=feed&b=2&a=1")
-      .when(id % 11 === 0, "?z=9").otherwise(""),
-    when(id % 6 === 0, concat(lit("#sec"), id.cast("string"))).otherwise(""))
-
   private def bpeCtes(k: Int): String = {
     val sb = new StringBuilder
     sb.append(

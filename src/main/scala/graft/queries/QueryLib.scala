@@ -3,10 +3,10 @@ package graft.queries
 import graft.core._
 import graft.corpus.CorpusGen
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared plumbing for SparkEntry.queries: renders the `documents` table
+/** Shared plumbing for the query domains: renders the `documents` table
   * into real file formats, runs the extraction pipeline, and exposes the
   * outputs for projection. Rendering is deterministic (pure function of
   * (doc_id, text)), which makes full extraction roundtrips expressible as
@@ -227,12 +227,99 @@ object QueryLib extends Serializable {
       case other => throw new IllegalArgumentException(s"renderer $other")
     }
 
-  def run(s: SparkSession, pending: Dataset[PendingDoc]): Pipeline.Output =
-    Pipeline.run(s, pending)
-
   /** properties["name"][0] as a column (FtM first-value). */
-  def prop(name: String): org.apache.spark.sql.Column =
+  def prop(name: String): Column =
     element_at(element_at(col("properties"), name), 1)
+
+  /** render → extraction: the pipeline output of a roundtrip query. */
+  private[queries] def extract(s: SparkSession, dir: String, renderer: String)
+      : Pipeline.Output =
+    Pipeline.run(s, renderPending(s, documents(s, dir), renderer))
+
+  /** Seq-ordered concatenation of each document's `kind` spans:
+    * (doc_id, body). */
+  private[graft] def body(spans: DataFrame, kind: String): DataFrame =
+    spans.filter(col("kind") === kind)
+      .groupBy(col("doc_id"))
+      .agg(concat_ws(" ", array_sort(collect_list(struct(col("seq"), col("text"))))
+        .getField("text")).as("body"))
+
+  /** A span's text with surrounding whitespace cut, as the email
+    * oracles read it. */
+  private[queries] def trimmed: Column =
+    regexp_replace(col("text"), """^\s+|\s+$""", "")
+
+  /** One `text` expression per text span: (doc_id, body). */
+  private[queries] def spanBody(out: Pipeline.Output, text: Column): DataFrame =
+    out.spans.toDF().filter(col("kind") === "text")
+      .select(col("doc_id"), text.as("body"))
+
+  /** Root meta `props` joined to a (doc_id, body) frame:
+    * (doc_id, props…, body) ordered by doc_id. */
+  private[queries] def metaBody(out: Pipeline.Output, body: DataFrame,
+                                props: Column*): DataFrame = {
+    val meta = out.meta.toDF().select(col("doc_id") +: props: _*)
+    meta.join(body, "doc_id")
+      .select(col("doc_id").cast("long").as("doc_id") +:
+        meta.columns.toSeq.tail.map(col) :+ col("body"): _*)
+      .orderBy("doc_id")
+  }
+
+  /** Depth-1 children keyed by their parent, joined to each child's text
+    * span: (doc_id, cols…, bodyName) ordered by doc_id then cols. */
+  private[queries] def childBodies(out: Pipeline.Output, joinType: String,
+                                   text: Column, bodyName: String,
+                                   cols: Column*): DataFrame = {
+    val children = out.meta.toDF().filter(col("depth") === 1)
+      .select(col("parent_id").cast("long").as("doc_id") +:
+        col("doc_id").as("child_id") +: cols: _*)
+    val bodies = spanBody(out, text).toDF("child_id", bodyName)
+    val keys = children.columns.toSeq.filter(_ != "child_id")
+    children.join(bodies, Seq("child_id"), joinType)
+      .select((keys :+ bodyName).map(col): _*)
+      .orderBy(keys.map(col): _*)
+  }
+
+  /** The decontamination bench: every 20th document, tokens 6..40 — a
+    * planted substring, so overlap is real, not whole-doc identity. */
+  private[queries] def benchSlice(s: SparkSession, docs: DataFrame): DataFrame = {
+    import s.implicits._
+    docs.filter(col("doc_id") % 20 === 0)
+      .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
+      .map { case (id, t) =>
+        val toks = TextUtil.tokens(if (t == null) "" else t)
+        (id, toks.slice(5, 40).mkString(" "))
+      }.toDF("doc_id", "text")
+  }
+
+  /** Token-canonical half copies of an (id, text) frame under id +
+    * `idOffset`: every 20-gram of a copy occurs in its source, so the
+    * duplicated-substring ops have genuine shared runs to find. */
+  private[graft] def halfCopies(s: SparkSession, base: DataFrame,
+                                idOffset: Long): DataFrame = {
+    import s.implicits._
+    base.as[(Long, String)].map { case (id, t) =>
+      val toks = TextUtil.tokens(t)
+      (id + idOffset, toks.take(math.max(toks.length / 2, 21)).mkString(" "))
+    }.toDF(base.columns.toSeq: _*)
+  }
+
+  /** An empty fixture directory under java.io.tmpdir for this process:
+    * concurrent runs on the same corpus never share one, and a rerun in
+    * the same process starts from nothing. */
+  private[queries] def freshDir(name: String, dir: String): java.io.File = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"${name}_${ProcessHandle.current().pid()}_" +
+        dir.replaceAll("[^A-Za-z0-9]", "_"))
+    def deleteRec(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(deleteRec)
+      f.delete(); ()
+    }
+    deleteRec(root)
+    root.mkdirs()
+    root
+  }
 
   /** Documents plus near-duplicate mutants (id + 10_000_000, every 10th
     * token dropped) for the near-dup operator oracles. Only docs with ≥

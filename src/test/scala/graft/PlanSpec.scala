@@ -367,4 +367,18 @@ class PlanSpec extends AnyFunSuite {
     }
     out.unpersist(false)
   }
+
+  // The oracle texts and the query names are the frozen driver surface:
+  // a refactor of the query bodies must leave both byte-identical. Each
+  // oracle entry is hashed as key, NUL, text, NUL in key order; each
+  // query name as name, newline, sorted.
+  test("frozen surface: oracleSql texts and queries key set hash to the pinned values") {
+    def sha256(s: String): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    val oracle = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (k, v) => k + "\u0000" + v + "\u0000" }.mkString
+    val keys = SparkEntry.queries.keys.toSeq.sorted.map(_ + "\n").mkString
+    assert(sha256(oracle) == "4056ee45cad186f99373129b1001713b1674bb901cc3459cc52d035fd3955fdf")
+    assert(sha256(keys) == "40a2d176150f7d0bd9000bf86012ab434c63a1fd9d2280f933b7cdc4d1020140")
+  }
 }
