@@ -188,7 +188,7 @@ object Dedup {
     * template cost C(m,2) verify pairs each carrying both full texts —
     * quadratic shuffle bytes the LSH cannot amortize. After the collapse
     * exact-duplicate pairs are implied by group multiplicity and the LSH
-    * only pays for genuinely-distinct near-duplicates (see graft.Soak).
+    * only pays for genuinely-distinct near-duplicates (see the soak in graft.Probe).
     *
     * `verify`: "exact" (default) joins texts back and computes true
     * Jaccard — the oracle-grade mode; "sig8" verifies from 8-bit minhash

@@ -306,19 +306,25 @@ object QueryLib extends Serializable {
 
   /** An empty fixture directory under java.io.tmpdir for this process:
     * concurrent runs on the same corpus never share one, and a rerun in
-    * the same process starts from nothing. */
+    * the same process starts from nothing. One shutdown hook per
+    * directory deletes it when the JVM exits; deleting it when the query
+    * is done would put thousands of file deletes inside a timed run. */
   private[queries] def freshDir(name: String, dir: String): java.io.File = {
     val root = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"${name}_${ProcessHandle.current().pid()}_" +
         dir.replaceAll("[^A-Za-z0-9]", "_"))
-    def deleteRec(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(deleteRec)
-      f.delete(); ()
-    }
     deleteRec(root)
     root.mkdirs()
+    if (hookedDirs.add(root)) sys.addShutdownHook(deleteRec(root))
     root
+  }
+
+  private val hookedDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+
+  private def deleteRec(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(deleteRec)
+    f.delete(); ()
   }
 
   /** Documents plus near-duplicate mutants (id + 10_000_000, every 10th

@@ -13,6 +13,9 @@
 #                                  #   SPARK_GRAFT_CPUS=2 and 8)
 #   tools/bench.sh probe <args…>   # graft.Probe <args…> in the same JVM set-up
 #                                  #   (e.g. `probe ops <sfDir> 40`)
+#   tools/bench.sh probe soak [nDocs] [snapshotDir]
+#                                  # the sf1 soak (defaults 4000000 docs,
+#                                  #   /tmp/graft_soak), one record per phase
 # Env overrides (all optional):
 #   SPARK_GRAFT_CPUS       cores for local[N]           (default 32)
 #   SPARK_GRAFT_SF_DIR     testdata dir                 (default /root/testdata/sf0.1)
