@@ -97,18 +97,20 @@ class ProbeSpec extends AnyFunSuite {
     val rec = new graft.obs.Recorder(sc, _ => ())
     val dir = Files.createTempDirectory("probe-soak")
     val before = sc.getPersistentRDDs.keySet
-    sc.addSparkListener(rec)
-    try Probe.soak(spark, rec, 300, dir.toString)
-    finally sc.removeSparkListener(rec)
-    val phases = Seq("pipeline_durable", "dedup_by_content", "minhash_lsh", "spans_strip",
-      "strip_dupsub", "pagerank_iterative", "curate_corpus", "pack_sequences",
-      "dedup_incremental", "robots_filter", "corpus_diff", "select_and_shard")
-    assert(rec.records.map(_.tag) == phases.take(6) ++ Seq("soak_bodies") ++ phases.drop(6))
-    rec.records.filter(_.tag != "soak_bodies").foreach { r =>
-      assert(r.jobs > 0, r)
-      assert(r.cachedDelta == 0, r)
-    }
-    assert(sc.getPersistentRDDs.keySet == before)
-    try assert(Files.list(dir).toArray.isEmpty) finally deleteRec(dir)
+    try {
+      sc.addSparkListener(rec)
+      try Probe.soak(spark, rec, 300, dir.toString)
+      finally sc.removeSparkListener(rec)
+      val phases = Seq("pipeline_durable", "dedup_by_content", "minhash_lsh", "spans_strip",
+        "strip_dupsub", "pagerank_iterative", "curate_corpus", "pack_sequences",
+        "dedup_incremental", "robots_filter", "corpus_diff", "select_and_shard")
+      assert(rec.records.map(_.tag) == phases.take(6) ++ Seq("soak_bodies") ++ phases.drop(6))
+      rec.records.filter(_.tag != "soak_bodies").foreach { r =>
+        assert(r.jobs > 0, r)
+        assert(r.cachedDelta == 0, r)
+      }
+      assert(sc.getPersistentRDDs.keySet == before)
+      assert(Files.list(dir).toArray.isEmpty)
+    } finally deleteRec(dir)
   }
 }
