@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 import graft.core.TextUtil.filterText
 
@@ -40,14 +41,6 @@ object Jet {
   final case class Table(name: String, cols: Vector[Col],
                          rows: Vector[Vector[String]])
 
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def i32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def i64(b: Array[Byte], o: Int): Long =
-    (i32(b, o).toLong & 0xffffffffL) | (i32(b, o + 4).toLong << 32)
-
   def isJet(b: Array[Byte]): Boolean =
     b.length > 128 && {
       val m = new String(b, 4, 15, "ISO-8859-1")
@@ -83,7 +76,7 @@ object Jet {
           if (i + 1 < raw.length && raw(i) == 0 && raw(i + 1) == 0) {
             wide = false; i += 2
           } else if (i + 1 < raw.length) {
-            sb += u16(raw, i).toChar; i += 2
+            sb += le16(raw, i).toChar; i += 2
           } else i += 1
         }
       }
@@ -113,7 +106,7 @@ object Jet {
           return out.toByteArray
         if (guard == 0) out.write(d, off, PageSize)
         else out.write(d, off + 8, PageSize - 8)
-        p = i32(d, off + 4)
+        p = leI32(d, off + 4)
         guard += 1
       }
       out.toByteArray
@@ -126,8 +119,8 @@ object Jet {
       // header by 10 bytes (num_cols 0x19→0x2d, num_real_idx 0x1f→0x33,
       // real-index entries 8→12 bytes, column defs 18→25 bytes)
       val (numCols, numRealIdx, colStart0, idxSz, colSz) =
-        if (jet4) (u16(t, 0x2d), i32(t, 0x33), 0x3f, 12, 25)
-        else (u16(t, 25), i32(t, 31), 35 + 8, 8, 18)
+        if (jet4) (le16(t, 0x2d), leI32(t, 0x33), 0x3f, 12, 25)
+        else (le16(t, 25), leI32(t, 31), 35 + 8, 8, 18)
       if (numCols <= 0 || numCols > 256 || numRealIdx < 0 || numRealIdx > 64)
         return Vector.empty
       val start = colStart0 + numRealIdx * idxSz
@@ -135,18 +128,18 @@ object Jet {
       val defs = (0 until numCols).map { c =>
         val co = start + c * colSz
         if (jet4)
-          Col("", t(co) & 0xff, u16(t, co + 5), u16(t, co + 7),
-            t(co + 15) & 0xff, u16(t, co + 21), u16(t, co + 23))
+          Col("", t(co) & 0xff, le16(t, co + 5), le16(t, co + 7),
+            t(co + 15) & 0xff, le16(t, co + 21), le16(t, co + 23))
         else
-          Col("", t(co) & 0xff, u16(t, co + 1), u16(t, co + 3),
-            t(co + 13) & 0xff, u16(t, co + 14), u16(t, co + 16))
+          Col("", t(co) & 0xff, le16(t, co + 1), le16(t, co + 3),
+            t(co + 13) & 0xff, le16(t, co + 14), le16(t, co + 16))
       }.toVector
       var p = start + numCols * colSz
       defs.map { c =>
         if (jet4) {
           if (p + 2 > t.length) c
           else {
-            val ln = u16(t, p) // byte length of the UCS-2 name
+            val ln = le16(t, p) // byte length of the UCS-2 name
             val name =
               if (p + 2 + ln <= t.length) new String(t, p + 2, ln, "UTF-16LE")
               else ""
@@ -170,7 +163,7 @@ object Jet {
     /** All data pages owned by the given TDEF page. */
     def dataPages(tdefPg: Int): Vector[Int] =
       (0 until nPages).filter { p =>
-        (d(p * PageSize) & 0xff) == 0x01 && i32(d, p * PageSize + 4) == tdefPg
+        (d(p * PageSize) & 0xff) == 0x01 && leI32(d, p * PageSize + 4) == tdefPg
       }.toVector
 
     /** Decode one Jet3 row against the column catalog. */
@@ -212,7 +205,7 @@ object Jet {
       * trailer = [var offsets u16 ×(nvar+1), reversed][nvar u16][null mask]. */
     def crackRow4(row: Array[Byte], cols: Vector[Col]): Vector[String] = {
       if (row.length < 2) return Vector.empty
-      val ncols = u16(row, 0)
+      val ncols = le16(row, 0)
       val maskSz = (ncols + 7) / 8
       if (ncols > 4096 || row.length < 2 + maskSz) return Vector.empty
       val maskOff = row.length - maskSz
@@ -220,11 +213,11 @@ object Jet {
         (row(maskOff + i / 8) >> (i % 8) & 1) != 0
       val nvarDeclared = cols.count(!_.isFixed)
       val nvar =
-        if (nvarDeclared > 0 && maskOff >= 2) u16(row, maskOff - 2) else 0
+        if (nvarDeclared > 0 && maskOff >= 2) le16(row, maskOff - 2) else 0
       // entry i sits 2 bytes below entry i-1; entry 0 is nearest the count
       def varOff(i: Int): Int = {
         val o = maskOff - 4 - 2 * i
-        if (o >= 0) u16(row, o) else -1
+        if (o >= 0) le16(row, o) else -1
       }
 
       cols.map { c =>
@@ -255,24 +248,24 @@ object Jet {
     def render(typ: Int, raw: Array[Byte]): String = typ match {
       case _ if raw.isEmpty => ""
       case 2 => (raw(0) & 0xff).toString
-      case 3 => if (raw.length >= 2) u16(raw, 0).toShort.toString else ""
-      case 4 => if (raw.length >= 4) i32(raw, 0).toString else ""
+      case 3 => if (raw.length >= 2) le16(raw, 0).toShort.toString else ""
+      case 4 => if (raw.length >= 4) leI32(raw, 0).toString else ""
       case 5 => // currency: scaled 1e4 int64
         if (raw.length >= 8) {
-          val v = i64(raw, 0)
+          val v = le64(raw, 0)
           val whole = v / 10000
           val frac = math.abs(v % 10000)
           if (frac == 0) whole.toString else s"$whole.${f"$frac%04d".reverse.dropWhile(_ == '0').reverse}"
         } else ""
       case 6 =>
         if (raw.length >= 4)
-          java.lang.Float.intBitsToFloat(i32(raw, 0)).toString else ""
+          java.lang.Float.intBitsToFloat(leI32(raw, 0)).toString else ""
       case 7 =>
         if (raw.length >= 8)
-          java.lang.Double.longBitsToDouble(i64(raw, 0)).toString else ""
+          java.lang.Double.longBitsToDouble(le64(raw, 0)).toString else ""
       case 8 => // datetime: fractional days since 1899-12-30
         if (raw.length >= 8) {
-          val days = java.lang.Double.longBitsToDouble(i64(raw, 0))
+          val days = java.lang.Double.longBitsToDouble(le64(raw, 0))
           val whole = math.floor(days).toLong
           val secs = math.round(math.abs(days - whole) * 86400)
           val date = java.time.LocalDate.of(1899, 12, 30).plusDays(whole)
@@ -291,11 +284,11 @@ object Jet {
       val rows = Vector.newBuilder[Vector[String]]
       for (p <- dataPages(tdefPg)) {
         val off = p * PageSize
-        val nRows = u16(d, off + rowsAt)
+        val nRows = le16(d, off + rowsAt)
         if (nRows > 0 && nRows < PageSize / 2) {
           var prevEnd = PageSize
           for (r <- 0 until nRows) {
-            val rawOff = u16(d, off + tblAt + 2 * r)
+            val rawOff = le16(d, off + tblAt + 2 * r)
             val start = rawOff & 0x1fff
             val deleted = (rawOff & 0x8000) != 0
             val overflow = (rawOff & 0x4000) != 0

@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core.ProcessingError
 
 import java.nio.{ByteBuffer, ByteOrder}
@@ -22,12 +23,6 @@ object Cfbf {
 
   final case class Entry(path: String, bytes: Array[Byte])
 
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def i32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   def isCfbf(bytes: Array[Byte]): Boolean =
     graft.classify.Classifier.isOleMagic(bytes)
 
@@ -35,22 +30,22 @@ object Cfbf {
   def parse(bytes: Array[Byte]): Vector[Entry] = {
     if (!isCfbf(bytes) || bytes.length < 512)
       throw new ProcessingError("Not an OLE compound file")
-    val sectorShift = u16(bytes, 30)
+    val sectorShift = le16(bytes, 30)
     val sectorSize = 1 << sectorShift
-    val miniShift = u16(bytes, 32)
+    val miniShift = le16(bytes, 32)
     val miniSize = 1 << miniShift
-    val firstDirSector = i32(bytes, 48)
-    val miniCutoff = i32(bytes, 56)
-    val firstMiniFat = i32(bytes, 60)
-    val firstDifat = i32(bytes, 68)
-    val numDifat = i32(bytes, 72)
+    val firstDirSector = leI32(bytes, 48)
+    val miniCutoff = leI32(bytes, 56)
+    val firstMiniFat = leI32(bytes, 60)
+    val firstDifat = leI32(bytes, 68)
+    val numDifat = leI32(bytes, 72)
 
     def sectorOffset(sid: Int): Int = 512 + sid * sectorSize
 
     // DIFAT: 109 header entries + chained DIFAT sectors
     val fatSectors = mutable.ArrayBuffer.empty[Int]
     for (k <- 0 until 109) {
-      val v = i32(bytes, 76 + 4 * k)
+      val v = leI32(bytes, 76 + 4 * k)
       if (v != FreeSect && v >= 0) fatSectors += v
     }
     var difatSid = firstDifat
@@ -61,10 +56,10 @@ object Cfbf {
       if (off + sectorSize > bytes.length)
         throw new ProcessingError("Corrupt OLE: DIFAT out of range")
       for (k <- 0 until (sectorSize / 4 - 1)) {
-        val v = i32(bytes, off + 4 * k)
+        val v = leI32(bytes, off + 4 * k)
         if (v != FreeSect && v >= 0) fatSectors += v
       }
-      difatSid = i32(bytes, off + sectorSize - 4)
+      difatSid = leI32(bytes, off + sectorSize - 4)
       difatGuard += 1
     }
 
@@ -74,7 +69,7 @@ object Cfbf {
       val off = sectorOffset(sid)
       if (off + sectorSize > bytes.length)
         throw new ProcessingError("Corrupt OLE: FAT out of range")
-      for (k <- 0 until sectorSize / 4) fat += i32(bytes, off + 4 * k)
+      for (k <- 0 until sectorSize / 4) fat += leI32(bytes, off + 4 * k)
     }
 
     def chain(start: Int): Vector[Int] = {
@@ -120,15 +115,15 @@ object Cfbf {
                          left: Int, right: Int, start: Int, size: Long)
     val dirs = (0 until numEntries).map { i =>
       val off = i * 128
-      val nameLen = u16(dirBytes, off + 64)
+      val nameLen = le16(dirBytes, off + 64)
       val name =
         if (nameLen >= 2)
           new String(dirBytes, off, math.min(nameLen - 2, 64), "UTF-16LE")
         else ""
       Dir(i, name, dirBytes(off + 66) & 0xff,
-        i32(dirBytes, off + 76), i32(dirBytes, off + 68),
-        i32(dirBytes, off + 72), i32(dirBytes, off + 116),
-        i32(dirBytes, off + 120).toLong & 0xffffffffL)
+        leI32(dirBytes, off + 76), leI32(dirBytes, off + 68),
+        leI32(dirBytes, off + 72), leI32(dirBytes, off + 116),
+        leI32(dirBytes, off + 120).toLong & 0xffffffffL)
     }.toVector
     if (dirs.isEmpty || dirs.head.typ != 5)
       throw new ProcessingError("Corrupt OLE: no root entry")
@@ -152,7 +147,7 @@ object Cfbf {
           seen.set(sid)
         }
         out += sid
-        sid = if (sid < n) i32(miniFatBytes, sid * 4) else EndOfChain
+        sid = if (sid < n) leI32(miniFatBytes, sid * 4) else EndOfChain
         cnt += 1
       }
       out.result()

@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 
 /** dBASE III/IV .dbf tables — fixed binary layout, parsed directly
@@ -12,11 +13,6 @@ object DbfExtractor extends Extractor {
   val name = "DBFIngestor"
   val schema = "Table"
 
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], off: Int): Long =
-    (u16(b, off).toLong) | (u16(b, off + 2).toLong << 16)
-
   final case class Field(fname: String, ftype: Char, flen: Int)
 
   protected def run(doc: RawDoc): ExtractionResult = {
@@ -26,9 +22,9 @@ object DbfExtractor extends Extractor {
     if (version != 3 && version != 4 && (b(0) & 0xff) != 0x8b &&
         (b(0) & 0xff) != 0x83 && (b(0) & 0xff) != 0x03)
       throw new ProcessingError("Invalid DBF file: unknown version")
-    val nRecords = u32(b, 4)
-    val headerSize = u16(b, 8)
-    val recordSize = u16(b, 10)
+    val nRecords = leU32(b, 4)
+    val headerSize = le16(b, 8)
+    val recordSize = le16(b, 10)
     if (headerSize < 33 || headerSize > b.length || recordSize <= 0)
       throw new ProcessingError("Invalid DBF file: bad header")
     val fields = Vector.newBuilder[Field]

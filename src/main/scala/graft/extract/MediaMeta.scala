@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 /** Container metadata for audio/video payloads — the reference reads these
   * via MediaInfo (`/root/reference/ingestors/media/audio.py:12-67`,
   * `media/video.py:12-55`); the MP4/QuickTime box tree, ID3v2 tags and
@@ -13,14 +14,6 @@ object MediaMeta {
   // per-timestamp fixup, precompiled (String.replaceAll recompiles per call)
   private val OffsetNoColon =
     java.util.regex.Pattern.compile("([+-]\\d{2})(\\d{2})$")
-
-  private def u16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def u32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  private def u64(b: Array[Byte], o: Int): Long =
-    (u32(b, o) << 32) | u32(b, o + 4)
 
   private def clean(s: String): Option[String] = {
     val t = s.takeWhile(_ != '\u0000').trim
@@ -94,7 +87,7 @@ object MediaMeta {
     if (b.length < 26) return None
     // PNG: 8-byte signature, IHDR at 16
     if ((b(0) & 0xff) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
-      return Some(((u32(b, 16) & 0x7fffffff).toInt, (u32(b, 20) & 0x7fffffff).toInt))
+      return Some(((beU32(b, 16) & 0x7fffffff).toInt, (beU32(b, 20) & 0x7fffffff).toInt))
     // GIF: logical screen descriptor at 6 (little-endian)
     if (b(0) == 'G' && b(1) == 'I' && b(2) == 'F')
       return Some(((b(6) & 0xff) | ((b(7) & 0xff) << 8),
@@ -105,10 +98,10 @@ object MediaMeta {
       while (p + 9 < b.length) {
         if ((b(p) & 0xff) != 0xff) return None
         val marker = b(p + 1) & 0xff
-        val len = u16(b, p + 2)
+        val len = be16(b, p + 2)
         if (marker >= 0xc0 && marker <= 0xcf &&
             marker != 0xc4 && marker != 0xc8 && marker != 0xcc)
-          return Some((u16(b, p + 7), u16(b, p + 5)))
+          return Some((be16(b, p + 7), be16(b, p + 5)))
         if (len < 2) return None
         p += 2 + len
       }
@@ -155,10 +148,10 @@ object MediaMeta {
       if (depth > 16) return
       var p = off
       while (p + 8 <= end) {
-        var size = u32(b, p.toInt)
+        var size = beU32(b, p.toInt)
         val typ = new String(b, p.toInt + 4, 4, "ISO-8859-1")
         var hdr = 8L
-        if (size == 1 && p + 16 <= end) { size = u64(b, p.toInt + 8); hdr = 16 }
+        if (size == 1 && p + 16 <= end) { size = be64(b, p.toInt + 8); hdr = 16 }
         else if (size == 0) size = end - p
         if (size < hdr || p + size > end) return
         val body = (p + hdr).toInt
@@ -170,16 +163,16 @@ object MediaMeta {
           case "mvhd" =>
             val v = b(body) & 0xff
             if (v == 1 && size >= 32 + 28) {
-              times ++= qtTimeIso(u64(b, body + 4))
-              times ++= qtTimeIso(u64(b, body + 12))
-              val ts = u32(b, body + 20)
-              val du = u64(b, body + 24)
+              times ++= qtTimeIso(be64(b, body + 4))
+              times ++= qtTimeIso(be64(b, body + 12))
+              val ts = beU32(b, body + 20)
+              val du = be64(b, body + 24)
               if (ts > 0) durMs = Some(du * 1000 / ts)
             } else if (size >= 8 + 20) {
-              times ++= qtTimeIso(u32(b, body + 4))
-              times ++= qtTimeIso(u32(b, body + 8))
-              val ts = u32(b, body + 12)
-              val du = u32(b, body + 16)
+              times ++= qtTimeIso(beU32(b, body + 4))
+              times ++= qtTimeIso(beU32(b, body + 8))
+              val ts = beU32(b, body + 12)
+              val du = beU32(b, body + 16)
               if (ts > 0) durMs = Some(du * 1000 / ts)
             }
           case "hdlr" =>
@@ -200,8 +193,8 @@ object MediaMeta {
           case "mdhd" =>
             val v = b(body) & 0xff
             val ts =
-              if (v == 1 && size >= 8 + 28) u32(b, body + 20)
-              else if (size >= 8 + 16) u32(b, body + 12)
+              if (v == 1 && size >= 8 + 28) beU32(b, body + 20)
+              else if (size >= 8 + 16) beU32(b, body + 12)
               else 0L
             if (curHandlerIsSound && ts > 0 && ts <= 192000)
               rate = rate.orElse(Some(ts.toInt))
@@ -218,7 +211,7 @@ object MediaMeta {
     def walkIlst(off: Int, end: Int): Unit = {
       var p = off
       while (p + 8 <= end) {
-        val size = u32(b, p)
+        val size = beU32(b, p)
         if (size < 8 || p + size > end) return
         val key = new String(b, p + 4, 4, "ISO-8859-1")
         // child 'data' box: 8 hdr + 4 type + 4 locale, then the value
@@ -247,10 +240,10 @@ object MediaMeta {
         if (depth > 16) return
         var q = off
         while (q + 8 <= end) {
-          var size = u32(b, q.toInt)
+          var size = beU32(b, q.toInt)
           val typ = new String(b, q.toInt + 4, 4, "ISO-8859-1")
           var hdr = 8L
-          if (size == 1 && q + 16 <= end) { size = u64(b, q.toInt + 8); hdr = 16 }
+          if (size == 1 && q + 16 <= end) { size = be64(b, q.toInt + 8); hdr = 16 }
           else if (size == 0) size = end - q
           if (size < hdr || q + size > end) return
           if (containers.contains(typ)) walk2(q + hdr, q + size, depth + 1)
@@ -258,8 +251,8 @@ object MediaMeta {
             val body = (q + hdr).toInt
             val v = b(body) & 0xff
             val ts =
-              if (v == 1 && size >= 8 + 28) u32(b, body + 20)
-              else if (size >= 8 + 16) u32(b, body + 12)
+              if (v == 1 && size >= 8 + 28) beU32(b, body + 20)
+              else if (size >= 8 + 16) beU32(b, body + 12)
               else 0L
             if (ts >= 8000 && ts <= 192000 && rate.isEmpty) rate = Some(ts.toInt)
           }
@@ -310,7 +303,7 @@ object MediaMeta {
         val id = new String(b, p, 4, "ISO-8859-1")
         if (!id.forall(c => c.isLetterOrDigit)) p = end // padding reached
         else {
-          val fsize = if (v >= 4) syncsafe(b, p + 4) else u32(b, p + 4).toInt
+          val fsize = if (v >= 4) syncsafe(b, p + 4) else beU32(b, p + 4).toInt
           if (fsize <= 0 || p + 10 + fsize > end) p = end
           else {
             id match {
@@ -354,20 +347,16 @@ object MediaMeta {
   // ---- WAV -----------------------------------------------------------------
 
   private def wav(b: Array[Byte]): Info = {
-    def le32(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    def le16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
     var rate: Option[Int] = None
     var byteRate = 0L
     var durMs: Option[Long] = None
     var p = 12
     while (p + 8 <= b.length) {
       val id = new String(b, p, 4, "ISO-8859-1")
-      val sz = le32(p + 4)
+      val sz = leU32(b, p + 4)
       if (id == "fmt " && p + 8 + 16 <= b.length) {
-        rate = Some(le32(p + 12).toInt)
-        byteRate = le32(p + 16)
+        rate = Some(leU32(b, p + 12).toInt)
+        byteRate = leU32(b, p + 16)
       } else if (id == "data" && byteRate > 0) {
         durMs = Some(sz * 1000 / byteRate)
       }

@@ -19,12 +19,11 @@ import graft.core._
   */
 object OleMeta {
 
+  // bounds-checked: a read past the end is 0, never an exception
   private def u16(b: Array[Byte], o: Int): Int =
-    if (o + 2 > b.length) 0 else (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
+    if (o + 2 > b.length) 0 else Endian.le16(b, o)
   private def i32(b: Array[Byte], o: Int): Int =
-    if (o + 4 > b.length) 0
-    else (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
+    if (o + 4 > b.length) 0 else Endian.leI32(b, o)
   private def i64(b: Array[Byte], o: Int): Long =
     (i32(b, o).toLong & 0xffffffffL) | (i32(b, o + 4).toLong << 32)
 

@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 
 /** From-scratch Outlook PST (Unicode) reader + minimal writer, built from
@@ -21,13 +22,6 @@ import graft.core._
   *    tolerant paths of readpst).
   */
 object Pst {
-
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], o: Int): Long =
-    (u16(b, o).toLong) | (u16(b, o + 2).toLong << 16)
-  private def u64(b: Array[Byte], o: Int): Long =
-    u32(b, o) | (u32(b, o + 4) << 32)
 
   final case class Node(nid: Long, bidData: Long, bidSub: Long, nidParent: Long)
   final case class Prop(id: Int, ptype: Int, inline: Long, bytes: Array[Byte]) {
@@ -55,8 +49,8 @@ object Pst {
 
   def parse(bytes: Array[Byte], maxNodes: Int = 100000): Parsed = {
     if (!isPst(bytes)) throw new ProcessingError("Not a PST file")
-    if (u16(bytes, 8) != 0x4d53) throw new ProcessingError("PST: bad client magic")
-    val wVer = u16(bytes, 10)
+    if (le16(bytes, 8) != 0x4d53) throw new ProcessingError("PST: bad client magic")
+    val wVer = le16(bytes, 10)
     if (wVer < 23)
       throw new ProcessingError("ANSI PST is not supported; Unicode only")
     val crypt = bytes(0x201) & 0xff
@@ -86,22 +80,22 @@ object Pst {
       while (i < cEnt) {
         val off = i * cbEnt
         if (cLevel > 0) {
-          walkPage(u64(page, off + 16), isNbt, depth + 1) // BTENTRY.BREF.ib
+          walkPage(le64(page, off + 16), isNbt, depth + 1) // BTENTRY.BREF.ib
         } else if (isNbt) {
           // NBTENTRY: nid(8) bidData(8) bidSub(8) nidParent(4)
-          nbt += Node(u64(page, off) & 0xffffffffL, u64(page, off + 8),
-            u64(page, off + 16), u32(page, off + 24))
+          nbt += Node(le64(page, off) & 0xffffffffL, le64(page, off + 8),
+            le64(page, off + 16), leU32(page, off + 24))
           nNodes += 1
           if (nNodes > maxNodes) throw new ProcessingError("PST: too many nodes")
         } else {
           // BBTENTRY: BREF(bid 8, ib 8) cb(2) cRef(2)
-          bbt.put(u64(page, off), (u64(page, off + 8), u16(page, off + 16)))
+          bbt.put(le64(page, off), (le64(page, off + 8), le16(page, off + 16)))
         }
         i += 1
       }
     }
-    walkPage(u64(bytes, 0xe8 + 8), isNbt = false, 0) // ROOT.BREFBBT.ib
-    walkPage(u64(bytes, 0xd8 + 8), isNbt = true, 0)  // ROOT.BREFNBT.ib
+    walkPage(le64(bytes, 0xe8 + 8), isNbt = false, 0) // ROOT.BREFBBT.ib
+    walkPage(le64(bytes, 0xd8 + 8), isNbt = true, 0)  // ROOT.BREFNBT.ib
 
     // ---- blocks ([MS-PST] §2.2.2.8) -------------------------------------
     val visitedBids = new java.util.HashSet[Long]()
@@ -119,9 +113,9 @@ object Pst {
       else {
         if (raw.length < 8 || raw(0) != 1)
           throw new ProcessingError("PST: bad xblock")
-        val cEnt = u16(raw, 2)
+        val cEnt = le16(raw, 2)
         if (8 + 8 * cEnt > raw.length) throw new ProcessingError("PST: xblock overflow")
-        (0 until cEnt).toVector.flatMap(k => dataBlocks(u64(raw, 8 + 8 * k), depth + 1))
+        (0 until cEnt).toVector.flatMap(k => dataBlocks(le64(raw, 8 + 8 * k), depth + 1))
       }
     }
 
@@ -135,16 +129,16 @@ object Pst {
       val raw = slice(ib, cb)
       if (raw.length < 8 || raw(0) != 2) throw new ProcessingError("PST: bad slblock")
       val cLevel = raw(1) & 0xff
-      val cEnt = u16(raw, 2)
+      val cEnt = le16(raw, 2)
       if (cLevel == 0) {
         if (8 + 24 * cEnt > raw.length) throw new ProcessingError("PST: slblock overflow")
         (0 until cEnt).map { k =>
           val off = 8 + 24 * k
-          (u64(raw, off) & 0xffffffffL) -> (u64(raw, off + 8), u64(raw, off + 16))
+          (le64(raw, off) & 0xffffffffL) -> (le64(raw, off + 8), le64(raw, off + 16))
         }.toMap
       } else {
         if (8 + 16 * cEnt > raw.length) throw new ProcessingError("PST: siblock overflow")
-        (0 until cEnt).flatMap(k => subnodeMap(u64(raw, 8 + 16 * k + 8), depth + 1)).toMap
+        (0 until cEnt).flatMap(k => subnodeMap(le64(raw, 8 + 16 * k + 8), depth + 1)).toMap
       }
     }
 
@@ -155,12 +149,12 @@ object Pst {
       if (hidIndex == 0) return Array.empty
       if (hidBlock >= blocks.length) throw new ProcessingError("PST: hid block range")
       val b = blocks(hidBlock)
-      val ibHnpm = u16(b, 0)
+      val ibHnpm = le16(b, 0)
       if (ibHnpm + 4 > b.length) throw new ProcessingError("PST: bad hnpagemap")
-      val cAlloc = u16(b, ibHnpm)
+      val cAlloc = le16(b, ibHnpm)
       if (hidIndex > cAlloc) throw new ProcessingError("PST: hid alloc range")
-      val start = u16(b, ibHnpm + 4 + 2 * (hidIndex - 1))
-      val end = u16(b, ibHnpm + 4 + 2 * hidIndex)
+      val start = le16(b, ibHnpm + 4 + 2 * (hidIndex - 1))
+      val end = le16(b, ibHnpm + 4 + 2 * hidIndex)
       if (start > end || end > b.length) throw new ProcessingError("PST: hid bounds")
       java.util.Arrays.copyOfRange(b, start, end)
     }
@@ -173,7 +167,7 @@ object Pst {
         throw new ProcessingError("PST: not a heap node")
       if ((b0(3) & 0xff) != 0xbc)
         throw new ProcessingError("PST: not a property context")
-      val hidUserRoot = u32(b0, 4)
+      val hidUserRoot = leU32(b0, 4)
       val hdr = heapItem(blocks, hidUserRoot)
       if (hdr.length < 8 || (hdr(0) & 0xff) != 0xb5)
         throw new ProcessingError("PST: bad bth header")
@@ -190,15 +184,15 @@ object Pst {
           val stride = cbKey + 4
           var o = 0
           while (o + stride <= data.length) {
-            leafRecords(u32(data, o + cbKey), level - 1)
+            leafRecords(leU32(data, o + cbKey), level - 1)
             o += stride
           }
         } else {
           var o = 0
           while (o + 8 <= data.length) {
-            val pid = u16(data, o)
-            val ptype = u16(data, o + 2)
-            val v = u32(data, o + 4)
+            val pid = le16(data, o)
+            val ptype = le16(data, o + 2)
+            val v = leU32(data, o + 4)
             val prop = ptype match {
               case 0x01 | 0x02 | 0x03 | 0x04 | 0x0a | 0x0b =>
                 Prop(pid, ptype, v, Array.empty)
@@ -221,7 +215,7 @@ object Pst {
           }
         }
       }
-      leafRecords(u32(hdr, 4), levels)
+      leafRecords(leU32(hdr, 4), levels)
       out.result()
     }
 

@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 
 import java.nio.charset.StandardCharsets
@@ -60,12 +61,6 @@ object Rar {
   final case class Archive(version: Int, volume: Boolean, firstVolume: Boolean,
                            encryptedHeaders: Boolean, members: Vector[Member])
 
-  private def u16(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-
   private def crc32(b: Array[Byte], from: Int, until: Int): Long = {
     val c = new CRC32
     c.update(b, from, until - from)
@@ -99,10 +94,10 @@ object Rar {
     var total = 0L
     var done = false
     while (!done && pos + 7 <= b.length) {
-      val crc = u16(b, pos)
+      val crc = le16(b, pos)
       val typ = b(pos + 2) & 0xff
-      val flags = u16(b, pos + 3)
-      val size = u16(b, pos + 5)
+      val flags = le16(b, pos + 3)
+      val size = le16(b, pos + 5)
       if (size < 7)
         throw new ProcessingError("Invalid RAR file: bad block size")
       val hdrEnd = math.min(pos + size, b.length)
@@ -118,15 +113,15 @@ object Rar {
         case 0x74 => // file header
           if (pos + 32 > b.length)
             throw new ProcessingError("Invalid RAR file: truncated file header")
-          val packSize0 = u32(b, pos + 7)
-          val unpSize0 = u32(b, pos + 11)
+          val packSize0 = leU32(b, pos + 7)
+          val unpSize0 = leU32(b, pos + 11)
           val hostOs = b(pos + 15) & 0xff
           val method = b(pos + 25) & 0xff
-          val nameSize = u16(b, pos + 26)
-          val attr = u32(b, pos + 28)
+          val nameSize = le16(b, pos + 26)
+          val attr = leU32(b, pos + 28)
           val large = (flags & 0x100) != 0
-          val packSize = if (large) packSize0 | (u32(b, pos + 32) << 32) else packSize0
-          val unpSize = if (large) unpSize0 | (u32(b, pos + 36) << 32) else unpSize0
+          val packSize = if (large) packSize0 | (leU32(b, pos + 32) << 32) else packSize0
+          val unpSize = if (large) unpSize0 | (leU32(b, pos + 36) << 32) else unpSize0
           val nameOff = pos + 32 + (if (large) 8 else 0)
           if (nameOff + nameSize > pos + size)
             throw new ProcessingError("Invalid RAR file: name exceeds header")
@@ -167,7 +162,7 @@ object Rar {
         case 0x7b => done = true // end of archive
         case _ =>
           if ((flags & 0x8000) != 0 && pos + 11 <= b.length)
-            addSize = u32(b, pos + 7)
+            addSize = leU32(b, pos + 7)
       }
       val next = pos + size + addSize
       if (next <= pos || next > Int.MaxValue) done = true else pos = next.toInt
@@ -195,7 +190,7 @@ object Rar {
     def u32le(): Long = {
       if (pos + 4 > limit)
         throw new ProcessingError("Invalid RAR file: truncated u32")
-      val v = u32(b, pos); pos += 4; v
+      val v = leU32(b, pos); pos += 4; v
     }
   }
 
@@ -211,7 +206,7 @@ object Rar {
     var total = 0L
     var done = false
     while (!done && pos + 5 <= b.length) {
-      val storedCrc = u32(b, pos)
+      val storedCrc = leU32(b, pos)
       val r = new VintReader(b, pos + 4, b.length)
       val sizeFieldStart = r.pos
       val headerSize = r.vint()

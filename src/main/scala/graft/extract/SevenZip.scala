@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 
 /** From-scratch 7-Zip container reader — the reference unpacks via py7zr
@@ -17,13 +18,6 @@ object SevenZip {
 
   def isSevenZip(b: Array[Byte]): Boolean =
     b.length > 32 && b.take(6).sameElements(Magic)
-
-  private def u64(b: Array[Byte], o: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(o + i) & 0xffL); i -= 1 }
-    v
-  }
 
   private final class Cursor(val d: Array[Byte], var p: Int, val end: Int) {
     def byte(): Int = {
@@ -225,8 +219,8 @@ object SevenZip {
   def parse(d: Array[Byte],
             cap: Long = PackageLimits.MaxMemberBytes): Vector[Entry] = {
     if (!isSevenZip(d)) throw new ProcessingError("Not a 7z archive")
-    val nextOff = u64(d, 12)
-    val nextSize = u64(d, 20)
+    val nextOff = le64(d, 12)
+    val nextSize = le64(d, 20)
     if (nextSize == 0) throw new ProcessingError("7z: empty header")
     if (nextOff < 0 || nextSize < 0 || 32 + nextOff + nextSize > d.length)
       throw new ProcessingError("7z: truncated archive (fragment?)")

@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 import graft.core.TextUtil.filterText
 
@@ -17,12 +18,6 @@ object Sqlite {
 
   final case class Table(name: String, columns: Vector[String],
                          rows: Vector[Vector[String]])
-
-  private def u16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def u32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
 
   /** (value, bytesRead) varint at offset. */
   private def varint(b: Array[Byte], o: Int): (Long, Int) = {
@@ -44,7 +39,7 @@ object Sqlite {
 
   def parse(bytes: Array[Byte], maxRows: Int = 2000000): Vector[Table] = {
     if (!isSqlite(bytes)) throw new ProcessingError("Not a SQLite database")
-    var pageSize = u16(bytes, 16)
+    var pageSize = be16(bytes, 16)
     if (pageSize == 1) pageSize = 65536
     if (pageSize < 512 || (pageSize & (pageSize - 1)) != 0)
       throw new ProcessingError("SQLite: bad page size")
@@ -78,7 +73,7 @@ object Sqlite {
           throw new ProcessingError("SQLite: oversized cell payload")
         val out = new java.io.ByteArrayOutputStream(math.min(total, 1 << 20).toInt)
         out.write(bytes, off, local)
-        var next = u32(bytes, off + local)
+        var next = beU32(bytes, off + local)
         var remaining = total - local
         val visited = new java.util.HashSet[Long]()
         while (next != 0 && remaining > 0) {
@@ -88,7 +83,7 @@ object Sqlite {
           val take = math.min(remaining, (usable - 4).toLong).toInt
           out.write(bytes, po + 4, take)
           remaining -= take
-          next = u32(bytes, po)
+          next = beU32(bytes, po)
         }
         out.toByteArray
       }
@@ -158,7 +153,7 @@ object Sqlite {
         val off = pageOff(pg)
         val hdrOff = if (pg == 1) off + 100 else off
         val typ = bytes(hdrOff) & 0xff
-        val nCells = u16(bytes, hdrOff + 3)
+        val nCells = be16(bytes, hdrOff + 3)
         val cellPtrBase = hdrOff + (if (typ == 5 || typ == 2) 12 else 8)
         typ match {
           case 0x0d => // table leaf
@@ -166,7 +161,7 @@ object Sqlite {
             val localMin = (usable - 12) * 32 / 255 - 23
             var i = 0
             while (i < nCells && count < maxRows) {
-              val cp = off + u16(bytes, cellPtrBase + 2 * i)
+              val cp = off + be16(bytes, cellPtrBase + 2 * i)
               val (plen, n1) = varint(bytes, cp)
               val (_, n2) = varint(bytes, cp + n1) // rowid
               f(record(payload(cp + n1 + n2, plen, localMax, localMin)))
@@ -176,10 +171,10 @@ object Sqlite {
           case 0x05 => // table interior
             var i = 0
             while (i < nCells) {
-              walk(u32(bytes, off + u16(bytes, cellPtrBase + 2 * i)), depth + 1)
+              walk(beU32(bytes, off + be16(bytes, cellPtrBase + 2 * i)), depth + 1)
               i += 1
             }
-            walk(u32(bytes, hdrOff + 8), depth + 1) // rightmost child
+            walk(beU32(bytes, hdrOff + 8), depth + 1) // rightmost child
           case _ => () // index/overflow/freelist: skip
         }
       }

@@ -18,7 +18,7 @@ import java.util.zip.GZIPInputStream
   * multi-member streams natively, and the per-member framing is what makes
   * record-granular splits possible on a cluster (an offset index maps
   * byte ranges to records; here we parallelize at file granularity via
-  * the binaryFile source, the standard Common Crawl shape of one task per
+  * `Sources.fromWarcs`, the standard Common Crawl shape of one task per
   * ~1 GB warc).
   *
   * Record routing (what a crawl pipeline keeps):

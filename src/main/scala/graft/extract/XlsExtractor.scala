@@ -1,5 +1,6 @@
 package graft.extract
 
+import Endian._
 import graft.core._
 import graft.core.TextUtil.filterText
 
@@ -38,11 +39,6 @@ object XlsExtractor extends Extractor {
   private val FORMAT = 0x041e
   private val XF = 0x00e0
 
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def i32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
   private def f64(b: Array[Byte], o: Int): Double = {
     var bits = 0L
     var k = 7
@@ -56,8 +52,8 @@ object XlsExtractor extends Extractor {
     val out = Vector.newBuilder[Rec]
     var p = 0
     while (p + 4 <= d.length) {
-      val id = u16(d, p)
-      val len = u16(d, p + 2)
+      val id = le16(d, p)
+      val len = le16(d, p + 2)
       if (p + 4 + len > d.length) return out.result()
       out += Rec(id, p + 4, len)
       p += 4 + len
@@ -115,7 +111,7 @@ object XlsExtractor extends Extractor {
           else {
             var k = 0
             while (k < take) {
-              sb.append(u16(d, segs(seg)._1 + pos + 2 * k).toChar); k += 1
+              sb.append(le16(d, segs(seg)._1 + pos + 2 * k).toChar); k += 1
             }
             pos += take * 2; left -= take
           }
@@ -149,7 +145,7 @@ object XlsExtractor extends Extractor {
       val n = math.min(cch, (d.length - off - 2) / 2)
       val sb = new StringBuilder(n)
       var k = 0
-      while (k < n) { sb.append(u16(d, off + 2 + 2 * k).toChar); k += 1 }
+      while (k < n) { sb.append(le16(d, off + 2 + 2 * k).toChar); k += 1 }
       sb.toString
     }
   }
@@ -243,28 +239,28 @@ object XlsExtractor extends Extractor {
       val r = recs(ri)
       r.id match {
         case FILEPASS => throw new ProcessingError(ProcessingError.EncryptedMsg)
-        case DATEMODE => date1904 = r.len >= 2 && u16(stream, r.off) == 1
+        case DATEMODE => date1904 = r.len >= 2 && le16(stream, r.off) == 1
         case BOUNDSHEET =>
-          val pos = i32(stream, r.off)
+          val pos = leI32(stream, r.off)
           val sheetType = stream(r.off + 5) & 0xff
           if (sheetType == 0) // worksheet (not chart/macro)
             sheets += ((shortString(stream, r.off + 6), pos))
         case FORMAT =>
           if (r.len >= 5) {
-            val ifmt = u16(stream, r.off)
-            val cch = u16(stream, r.off + 2)
+            val ifmt = le16(stream, r.off)
+            val cch = le16(stream, r.off + 2)
             val flags = stream(r.off + 4) & 0xff
             val s =
               if ((flags & 1) == 0)
                 new String(stream, r.off + 5, math.min(cch, r.len - 5), "ISO-8859-1")
               else {
                 val n = math.min(cch, (r.len - 5) / 2)
-                (0 until n).map(k => u16(stream, r.off + 5 + 2 * k).toChar).mkString
+                (0 until n).map(k => le16(stream, r.off + 5 + 2 * k).toChar).mkString
               }
             customFmts(ifmt) = s
           }
         case XF =>
-          xfFmt += (if (r.len >= 4) u16(stream, r.off + 2) else 0)
+          xfFmt += (if (r.len >= 4) le16(stream, r.off + 2) else 0)
         case SST =>
           // gather SST + following CONTINUEs
           val segs = Vector.newBuilder[(Int, Int)]
@@ -327,40 +323,40 @@ object XlsExtractor extends Extractor {
               case EOF_ => inSheet = false
               case BOF => inSheet = false
               case LABELSST =>
-                val row = u16(stream, r.off); val col = u16(stream, r.off + 2)
-                val isst = i32(stream, r.off + 6)
+                val row = le16(stream, r.off); val col = le16(stream, r.off + 2)
+                val isst = leI32(stream, r.off + 6)
                 put(row, col, sstStrings.lift(isst).getOrElse(""))
               case LABEL | RSTRING =>
                 if (r.len >= 9) {
-                  val row = u16(stream, r.off); val col = u16(stream, r.off + 2)
+                  val row = le16(stream, r.off); val col = le16(stream, r.off + 2)
                   val cur = new SegCursor(stream, Vector((r.off + 6, r.len - 6)))
                   val cch = cur.u16le(); val flags = cur.u8()
                   put(row, col, cur.chars(cch, (flags & 1) == 0))
                 }
               case NUMBER =>
-                val row = u16(stream, r.off); val col = u16(stream, r.off + 2)
-                numCell(row, col, u16(stream, r.off + 4), f64(stream, r.off + 6))
+                val row = le16(stream, r.off); val col = le16(stream, r.off + 2)
+                numCell(row, col, le16(stream, r.off + 4), f64(stream, r.off + 6))
               case RK =>
-                val row = u16(stream, r.off); val col = u16(stream, r.off + 2)
-                numCell(row, col, u16(stream, r.off + 4), rkValue(i32(stream, r.off + 6)))
+                val row = le16(stream, r.off); val col = le16(stream, r.off + 2)
+                numCell(row, col, le16(stream, r.off + 4), rkValue(leI32(stream, r.off + 6)))
               case MULRK =>
-                val row = u16(stream, r.off); val colFirst = u16(stream, r.off + 2)
+                val row = le16(stream, r.off); val colFirst = le16(stream, r.off + 2)
                 val n = (r.len - 6) / 6
                 for (k <- 0 until n) {
-                  val ixfe = u16(stream, r.off + 4 + 6 * k)
-                  val rk = i32(stream, r.off + 6 + 6 * k)
+                  val ixfe = le16(stream, r.off + 4 + 6 * k)
+                  val rk = leI32(stream, r.off + 6 + 6 * k)
                   numCell(row, colFirst + k, ixfe, rkValue(rk))
                 }
               case BOOLERR =>
-                val row = u16(stream, r.off); val col = u16(stream, r.off + 2)
+                val row = le16(stream, r.off); val col = le16(stream, r.off + 2)
                 val v = stream(r.off + 6) & 0xff
                 val isErr = (stream(r.off + 7) & 0xff) == 1
                 if (!isErr) put(row, col, if (v != 0) "TRUE" else "FALSE")
               case FORMULA =>
-                val row = u16(stream, r.off); val col = u16(stream, r.off + 2)
-                val ixfe = u16(stream, r.off + 4)
+                val row = le16(stream, r.off); val col = le16(stream, r.off + 2)
+                val ixfe = le16(stream, r.off + 4)
                 if (r.len >= 14) {
-                  if (u16(stream, r.off + 12) == 0xffff) {
+                  if (le16(stream, r.off + 12) == 0xffff) {
                     (stream(r.off + 6) & 0xff) match {
                       case 0 => // string result: next STRING record
                         var j = i + 1

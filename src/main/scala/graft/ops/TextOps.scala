@@ -420,6 +420,36 @@ object TextOps {
       .otherwise("test")
   }
 
+  /** One document's repetition signals as integer milli-ratios: its
+    * non-empty `\n` lines and the duplicate-line fraction, the
+    * duplicate-trigram fraction and the most-frequent-bigram fraction of
+    * its tokens `toks`. */
+  private final case class Repetition(lines: Long, dupLineMilli: Long,
+                                      dupTrigramMilli: Long, topBigramMilli: Long)
+
+  private def repetition(text: String, toks: Array[String]): Repetition = {
+    def milli(num: Long, den: Long): Long = if (den > 0) num * 1000L / den else 0L
+    // (count, distinct, maxFreq) over n-grams, one hash map per call
+    def ngramStats(n: Int): (Long, Long, Long) = {
+      val total = math.max(0, toks.length - n + 1)
+      val freq = new java.util.HashMap[String, Int]()
+      var maxF = 0
+      var i = 0
+      while (i < total) {
+        val f = freq.merge(toks.slice(i, i + n).mkString(" "), 1, (a, b) => a + b)
+        if (f > maxF) maxF = f
+        i += 1
+      }
+      (total.toLong, freq.size.toLong, maxF.toLong)
+    }
+    val lines = text.split('\n').iterator.filter(_.nonEmpty).toArray
+    val (tri, triDistinct, _) = ngramStats(3)
+    val (bi, _, biMax) = ngramStats(2)
+    Repetition(lines.length.toLong,
+      milli((lines.length - lines.distinct.length).toLong, lines.length.toLong),
+      milli(tri - triDistinct, tri), milli(biMax, bi))
+  }
+
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1 "repetitious
     * text" filters, public): duplicate-line fraction, duplicate-trigram
     * fraction, and the most-frequent-bigram fraction, as integer
@@ -440,35 +470,8 @@ object TextOps {
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text0) =>
         val text = if (text0 == null) "" else text0
-        val lines = text.split('\n').iterator.filter(_.nonEmpty).toArray
-        val nLines = lines.length
-        val dupLines = nLines - lines.distinct.length
-        val toks = AsciiWs.split(text).filter(_.nonEmpty)
-        def ngramStats(n: Int): (Int, Int, Int) = {
-          // (count, distinct, maxFreq) over n-grams
-          val total = math.max(0, toks.length - n + 1)
-          if (total == 0) (0, 0, 0)
-          else {
-            val freq = new java.util.HashMap[String, Int]()
-            var maxF = 0
-            var i = 0
-            while (i < total) {
-              val g = toks.slice(i, i + n).mkString(" ")
-              val f = freq.merge(g, 1, (a, b) => a + b)
-              if (f > maxF) maxF = f
-              i += 1
-            }
-            (total, freq.size, maxF)
-          }
-        }
-        val (tri, triDistinct, _) = ngramStats(3)
-        val (bi, _, biMax) = ngramStats(2)
-        def milli(num: Long, den: Long): Long =
-          if (den > 0) num * 1000L / den else 0L
-        (id, nLines.toLong,
-          milli(dupLines.toLong, nLines.toLong),
-          milli((tri - triDistinct).toLong, tri.toLong),
-          milli(biMax.toLong, bi.toLong))
+        val r = repetition(text, AsciiWs.split(text).filter(_.nonEmpty))
+        (id, r.lines, r.dupLineMilli, r.dupTrigramMilli, r.topBigramMilli)
       })
       .toDF(idCol, "n_lines", "dup_line_ratio_milli",
         "dup_trigram_ratio_milli", "top_bigram_ratio_milli")
@@ -508,38 +511,16 @@ object TextOps {
           (c >= '[' && c <= '`') || (c >= '{' && c <= '~')).toLong
         val avgTokLenMilli = if (nTok > 0) nChars * 1000L / nTok else 0L
         val punctMilli = if (nChars > 0) nPunct * 1000L / nChars else 0L
-        val lines = text.split('\n').iterator.filter(_.nonEmpty).toArray
-        val dupLineMilli =
-          if (lines.nonEmpty)
-            (lines.length - lines.distinct.length).toLong * 1000L / lines.length
-          else 0L
-        def dupAndTopMilli(n: Int): (Long, Long) = {
-          val total = math.max(0, toks.length - n + 1)
-          if (total == 0) (0L, 0L)
-          else {
-            val freq = new java.util.HashMap[String, Int]()
-            var maxF = 0
-            var i = 0
-            while (i < total) {
-              val f = freq.merge(toks.slice(i, i + n).mkString(" "), 1, (a, b) => a + b)
-              if (f > maxF) maxF = f
-              i += 1
-            }
-            ((total - freq.size).toLong * 1000L / total,
-              maxF.toLong * 1000L / total)
-          }
-        }
-        val (dupTriMilli, _) = dupAndTopMilli(3)
-        val (_, topBiMilli) = dupAndTopMilli(2)
+        val r = repetition(text, toks)
         val reason =
           if (nTok < minTokens) "too_few_tokens"
           else if (nTok > maxTokens) "too_many_tokens"
           else if (avgTokLenMilli < 3000L || avgTokLenMilli > 10000L) "bad_mean_word_len"
           else if (nStop < 2) "too_few_stopwords"
           else if (punctMilli > 300L) "high_punct_ratio"
-          else if (dupLineMilli > 300L) "high_dup_lines"
-          else if (dupTriMilli > 300L) "high_dup_trigrams"
-          else if (topBiMilli > 200L) "top_bigram_heavy"
+          else if (r.dupLineMilli > 300L) "high_dup_lines"
+          else if (r.dupTrigramMilli > 300L) "high_dup_trigrams"
+          else if (r.topBigramMilli > 200L) "top_bigram_heavy"
           else null
         (id, reason == null, reason)
       })

@@ -109,10 +109,10 @@ object ExtractionQueries {
         .orderBy("doc_id")),
     // ---- simple body roundtrips: render → extract → body == text -------
     // §2.1 directory source end-to-end: a rendered on-disk tree through
-    // the binaryFile DSv2 scan (SKIP_ENTRIES observable: .git/__MACOSX
+    // the source's own file listing (SKIP_ENTRIES observable: .git/__MACOSX
     // files exist on disk but must never become rows). The fixture tree
     // is written driver-side because the operator under test IS the
-    // filesystem scan; bounded by the verify corpus size. Row ids are
+    // filesystem walk; bounded by the verify corpus size. Row ids are
     // root-relative, so the directory's name never reaches the output.
     "x_dir" -> ((s, dir) => {
       import s.implicits._

@@ -1,55 +1,146 @@
 package graft.sources
 
 import graft.core.PendingDoc
+import graft.pipeline.Pipeline
+import java.net.URI
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Input sources for the extraction pipeline.
   *
   * `fromDirectory` is the DirectoryIngestor analogue
-  * (`/root/reference/ingestors/directory.py`): where the reference walks a
-  * filesystem tree and queues each file, the Spark-native source is the
-  * built-in `binaryFile` reader — a real DataSourceV2 scan that is
-  * partitioned, predicate-prunable on path/size/modificationTime, and
-  * works against any Hadoop-compatible filesystem (local, HDFS, S3A) —
-  * exactly what a 100 TB crawl root needs. Document ids are the paths
-  * relative to the root, matching the reference's Folder→child naming. */
+  * (`ingestors/directory.py`): like the reference's
+  * crawler, it walks the tree and queues every file but the junk entries.
+  * The walk goes through the Hadoop FileSystem (local, HDFS, S3A) one
+  * directory level at a time, pruning [[SkipEntries]] by name and keeping
+  * zero-byte files and names that start with `.` or `_` (Spark's
+  * `binaryFile` reader drops all three). A level with more directories
+  * than `spark.sql.sources.parallelPartitionDiscovery.threshold` is listed
+  * in one Spark job, as Spark's own file index does; below it, building a
+  * source runs no job. Tasks read the bytes, in as many slices as
+  * `Pipeline.partitionCountFor` picks from the listed count and sizes. A
+  * file over the source's byte cap is not read: it becomes an
+  * [[OversizeMime]] row. Document ids are the paths relative to the root,
+  * matching the reference's Folder→child naming. */
 object Sources {
 
   /** Junk entries the reference never queues (`directory.py:11`
-    * SKIP_ENTRIES); any path segment matching one is skipped, mirroring
-    * the recursive crawl pruning. */
+    * SKIP_ENTRIES): the walk prunes a file or directory of these names. */
   val SkipEntries: Set[String] = Set(".git", ".hg", "__MACOSX", ".gitignore")
 
-  def fromDirectory(spark: SparkSession, root: String,
-                    pathGlobFilter: Option[String] = None,
-                    maxBytesPerFile: Long = 512L * 1024 * 1024,
-                    skipEntries: Set[String] = SkipEntries): Dataset[PendingDoc] = {
-    import spark.implicits._
-    val reader = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-    val df = pathGlobFilter.fold(reader)(g => reader.option("pathGlobFilter", g))
-      .load(root)
-      .filter(col("length") <= maxBytesPerFile)
-    val prefixes = rootPrefixes(spark, root)
-    val skip = skipEntries
-    df.select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .map { case (path, bytes) =>
-        val rel = relativize(path, prefixes)
-        val name = rel.split('/').last
-        PendingDoc(rel, "", Seq.empty, 0, name, "", bytes)
-      }
-      .filter(d => !d.doc_id.split('/').exists(skip.contains))
+  /** Mime hint planted on the row of a listed file over the byte cap:
+    * [[graft.pipeline.Dispatch]] converts it into the reference's
+    * processingError failure row (`manager.py:229-234`) so an over-cap
+    * file surfaces in the lineage instead of vanishing. */
+  val OversizeMime = "application/x-graft-oversize"
+
+  /** One listed file: its root-relative id, its path URI and its length. */
+  private[graft] final case class Listed(id: String, path: String, length: Long) {
+    def name: String = id.substring(id.lastIndexOf('/') + 1)
   }
 
-  /** Resolve the root the same way the binaryFile scan reports row paths:
-    * through the Hadoop FileSystem, so HDFS/S3A/file: roots, trailing
-    * slashes, and relative local paths all relativize correctly.
+  def fromDirectory(spark: SparkSession, root: String): Dataset[PendingDoc] =
+    directoryDocs(spark, list(spark, root))
+
+  /** One document per listed file; the cap is 512 MiB. */
+  private[graft] def directoryDocs(spark: SparkSession,
+                                   files: Seq[Listed]): Dataset[PendingDoc] =
+    read(spark, files, 512L * 1024 * 1024) { (f, bytes) =>
+      Iterator.single(PendingDoc(f.id, "", Seq.empty, 0, f.name, "", bytes))
+    }
+
+  /** Record-level WARC source (beyond the reference: the Common Crawl
+    * input shape). Reads the files under `root` whose names contain
+    * `.warc` and emits one PendingDoc per kept payload (2xx HTTP
+    * responses and resource records — see [[graft.extract.Warc.payloads]]):
+    * doc_id = `<root-relative path>#<record index>` (stable,
+    * resume-friendly), file_name = the WARC-Target-URI (what the
+    * classifier routes on), mime_hint = the HTTP Content-Type.
+    * Parallelism is file-granular — the standard crawl shape of one task
+    * per ~1 GB warc; the flatMap is narrow, so payload bytes never
+    * shuffle. */
+  def fromWarcs(spark: SparkSession, root: String): Dataset[PendingDoc] =
+    warcDocs(spark, list(spark, root).filter(_.name.contains(".warc")))
+
+  /** The payloads of the listed WARC files; the cap is the JVM byte-array
+    * ceiling, as a WARC is read into one array. */
+  private[graft] def warcDocs(spark: SparkSession,
+                              files: Seq[Listed]): Dataset[PendingDoc] =
+    read(spark, files, Int.MaxValue.toLong - 8)((f, bytes) => warcPending(f.id, bytes))
+
+  /** The files under `root`, or `root` itself if it is a file, sorted by
+    * id. Each directory level is listed on the driver, or in one Spark
+    * job when it holds more directories than Spark's parallel discovery
+    * threshold. */
+  private[graft] def list(spark: SparkSession, root: String): Seq[Listed] = {
+    val sc = spark.sparkContext
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(sc.hadoopConfiguration)
+    val top = fs.getFileStatus(rootPath)
+    val topPath = top.getPath.toUri.toString
+    if (!top.isDirectory) return Seq(Listed(top.getPath.getName, topPath, top.getLen))
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val conf = new SerializableWritable(sc.hadoopConfiguration)
+    val files = Vector.newBuilder[Listed]
+    var dirs = Seq(Listed("", topPath, 0L))
+    while (dirs.nonEmpty) {
+      val entries =
+        if (dirs.size <= threshold) dirs.flatMap(entriesOf(fs, _))
+        else sc.parallelize(dirs, math.min(dirs.size, sc.defaultParallelism))
+          .flatMap(d => entriesOf(FileSystem.get(new URI(d.path), conf.value), d))
+          .collect().toSeq
+      files ++= entries.collect { case (f, false) => f }
+      dirs = entries.collect { case (d, true) => d }
+    }
+    files.result().sortBy(_.id)
+  }
+
+  /** The entries of one listed directory but [[SkipEntries]], each with
+    * whether it is a directory. */
+  private def entriesOf(fs: FileSystem, dir: Listed): Seq[(Listed, Boolean)] =
+    fs.listStatus(new Path(new URI(dir.path))).toSeq
+      .filterNot(s => SkipEntries.contains(s.getPath.getName))
+      .map { s =>
+        val name = s.getPath.getName
+        (Listed(if (dir.id.isEmpty) name else s"${dir.id}/$name",
+          s.getPath.toUri.toString, s.getLen), s.isDirectory)
+      }
+
+  /** Pending documents of the listed `files`: tasks read each file whole
+    * and `rows` turns it into documents, except that a file over `cap`
+    * becomes one unread [[OversizeMime]] row. The slice count comes from
+    * the listing, so building the dataset runs no job. */
+  private def read(spark: SparkSession, files: Seq[Listed], cap: Long)(
+      rows: (Listed, Array[Byte]) => Iterator[PendingDoc]): Dataset[PendingDoc] = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
+    val slices = Pipeline.partitionCountFor(spark, files.size,
+      files.iterator.map(_.length).filter(_ <= cap).sum)
+    spark.createDataset(sc.parallelize(files, slices).flatMap { f =>
+      if (f.length > cap)
+        Iterator.single(PendingDoc(f.id, "", Seq.empty, 0, f.name, OversizeMime,
+          Array.empty[Byte]))
+      else {
+        val path = new Path(new URI(f.path))
+        val in = path.getFileSystem(conf.value.value).open(path)
+        val bytes = new Array[Byte](f.length.toInt)
+        try in.readFully(0L, bytes) finally in.close()
+        rows(f, bytes)
+      }
+    })
+  }
+
+  /** Resolve the root the same way the streaming binaryFile source reports
+    * row paths: through the Hadoop FileSystem, so HDFS/S3A/file: roots,
+    * trailing slashes, and relative local paths all relativize correctly.
     * binaryFile reports Path.toString form (file:/x); also accept the URI
     * form (file:///x) in case a source reports that instead. */
   private def rootPrefixes(spark: SparkSession, root: String): Seq[String] = {
-    val hadoopRoot = new org.apache.hadoop.fs.Path(root)
+    val hadoopRoot = new Path(root)
     val fs = hadoopRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qualified = fs.makeQualified(hadoopRoot)
     Seq(qualified.toString, qualified.toUri.toString).map(_.stripSuffix("/"))
@@ -61,67 +152,8 @@ object Sources {
     if (p.isEmpty) path.split('/').last else p
   }
 
-  /** Record-level WARC source (beyond the reference: the Common Crawl
-    * input shape). Scans `*.warc` / `*.warc.gz` under `root` and emits
-    * one PendingDoc per kept payload (2xx HTTP responses and resource
-    * records — see [[graft.extract.Warc.payloads]]): doc_id =
-    * `<root-relative path>#<record index>` (stable, resume-friendly),
-    * file_name = the WARC-Target-URI (what the classifier routes on),
-    * mime_hint = the HTTP Content-Type. Parallelism is file-granular —
-    * the standard crawl shape of one task per ~1 GB warc; the flatMap is
-    * narrow, so payload bytes never shuffle. */
-  def fromWarcs(spark: SparkSession, root: String,
-                maxBytesPerFile: Long = Int.MaxValue.toLong)
-      : Dataset[PendingDoc] = {
-    val df = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.warc*")
-      .load(root)
-    fromWarcListing(spark, df, rootPrefixes(spark, root), maxBytesPerFile)
-  }
-
-  /** Mime hint planted on oversize listing rows: [[graft.pipeline.Dispatch]]
-    * converts it into the reference's processingError failure row
-    * (`manager.py:229-234`) so an over-cap file surfaces in the lineage
-    * instead of vanishing in a silent filter. */
-  val OversizeMime = "application/x-graft-oversize"
-
-  /** Listing → pending docs, split at the byte cap. Any requested cap is
-    * clamped to the JVM byte-array ceiling (`Int.MaxValue − 8`) rather
-    * than rejected — the previous 2 GiB (= 2^31) default admitted a file
-    * of exactly 2 GiB, which binaryFile cannot materialize and fails on
-    * opaquely, and callers written against that old default keep working.
-    * Oversize rows never touch `content` (the scan prunes the column), so
-    * listing them is free; they emit a zero-byte [[OversizeMime]] pending
-    * doc that becomes a per-file failure row downstream. */
-  private[graft] def fromWarcListing(spark: SparkSession,
-                                       listing: org.apache.spark.sql.DataFrame,
-                                       prefixes: Seq[String],
-                                       maxBytesPerFile: Long): Dataset[PendingDoc] = {
-    import spark.implicits._
-    require(maxBytesPerFile > 0,
-      s"maxBytesPerFile must be positive: $maxBytesPerFile")
-    // clamp rather than reject: a caller passing the old 2 GiB default
-    // (or anything larger) gets the JVM byte-array ceiling, which is the
-    // strictest cap binaryFile can materialize anyway
-    val cap = math.min(maxBytesPerFile, Int.MaxValue.toLong - 8)
-    val ok = listing.filter(col("length") <= cap)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap((warcPending(prefixes) _).tupled)
-    val over = listing.filter(col("length") > cap)
-      .select(col("path")).as[String]
-      .map { p =>
-        val rel = relativize(p, prefixes)
-        PendingDoc(rel, "", Seq.empty, 0, rel, OversizeMime,
-          Array.empty[Byte])
-      }
-    ok.union(over)
-  }
-
   /** One WARC file → its kept payloads as pending docs (narrow). */
-  private def warcPending(prefixes: Seq[String])(path: String,
-                          bytes: Array[Byte]): Iterator[PendingDoc] = {
-    val rel = relativize(path, prefixes)
+  private def warcPending(rel: String, bytes: Array[Byte]): Iterator[PendingDoc] =
     graft.extract.Warc.payloads(graft.extract.Warc.plainBytes(bytes))
       .iterator.zipWithIndex.map { case ((uri, mime, body), i) =>
         // the Content-Type header is attacker-controlled; a value that
@@ -134,7 +166,6 @@ object Sources {
           else mime
         PendingDoc(s"$rel#$i", "", Seq.empty, 0, uri, safeMime, body)
       }
-  }
 
   /** Streaming variant of [[fromWarcs]]: `.warc` / `.warc.gz` files
     * appearing under `root` become micro-batches of response payloads —
@@ -159,6 +190,6 @@ object Sources {
       .option("pathGlobFilter", "*.warc*")
       .load(root)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap((warcPending(prefixes) _).tupled)
+      .flatMap { case (path, bytes) => warcPending(relativize(path, prefixes), bytes) }
   }
 }

@@ -166,22 +166,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(meta.lastSeq == 2L)
   }
 
-  /** Spark jobs `f` starts, counted from the listener bus. */
-  private def jobsStartedBy[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val a = f
-      org.apache.spark.ListenerBusDrain(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsStartedBy[A](f: => A): (A, Int) =
+    org.apache.spark.ListenerBusDrain.jobsStartedBy(spark.sparkContext)(f)
 
   test("schemas ride in manifests: planning a read starts no Spark job, time travel keeps its schema") {
     import spark.implicits._

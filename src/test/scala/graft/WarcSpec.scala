@@ -87,40 +87,26 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("fromWarcs: oversize listing row becomes a failure pending doc, not a silent skip") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
     val dir = java.nio.file.Files.createTempDirectory("graft-warc-big")
     java.nio.file.Files.write(dir.resolve("small.warc"), sampleWarc(1, gz = false))
-    // synthetic listing: the real small file plus a fabricated 3 GiB row
-    // (content never read for over-cap rows — the scan prunes the column,
-    // which is the point: a >2^31-1 file cannot be a JVM byte array)
-    val real = spark.read.format("binaryFile").load(dir.toString)
-      .select(col("path"), col("length"), col("content"))
-    val fake = Seq(("file:" + dir.resolve("huge.warc").toString,
-      3L * 1024 * 1024 * 1024, Array.empty[Byte]))
-      .toDF("path", "length", "content")
-    val prefixes = Seq("file:" + dir.toString)
-    val docs = Sources.fromWarcListing(spark, real.union(fake), prefixes,
-      Int.MaxValue.toLong).collect().sortBy(_.doc_id)
-    assert(docs.map(_.doc_id).toSeq == Seq("huge.warc", "small.warc#0", "small.warc#1"))
-    val over = docs.head
-    assert(over.mime_hint == Sources.OversizeMime && over.bytes.isEmpty)
-    // dispatch turns the marker into the processingError failure contract
-    val ing = graft.pipeline.Dispatch.ingest(over.file_name, over.mime_hint,
-      over.bytes)
-    assert(ing.result.status == "failure" &&
-      ing.result.error.contains("exceeds the per-file size cap"), ing)
-    // exactly-2^31-byte listing row is over-cap under the corrected default
-    val edge = Seq(("file:" + dir.resolve("edge.warc").toString,
-      2147483648L, Array.empty[Byte])).toDF("path", "length", "content")
-    val e = Sources.fromWarcListing(spark, edge, prefixes,
-      Int.MaxValue.toLong).collect()
-    assert(e.length == 1 && e(0).mime_hint == Sources.OversizeMime)
-    // the old 2 GiB default clamps to the JVM array ceiling instead of
-    // throwing: the 2^31-byte row is still over-cap under the clamp
-    val clamped = Sources.fromWarcListing(spark, edge, prefixes, 2147483648L)
-      .collect()
-    assert(clamped.length == 1 && clamped(0).mime_hint == Sources.OversizeMime)
+    // the real small file plus made-up 3 GiB and exactly-2^31-byte entries
+    // at paths that do not exist: reading either would fail the job, and
+    // neither fits one JVM byte array
+    def madeUp(name: String, length: Long) =
+      Sources.Listed(name, dir.resolve(name).toUri.toString, length)
+    val listed = Sources.list(spark, dir.toString) ++
+      Seq(madeUp("huge.warc", 3L << 30), madeUp("edge.warc", 1L << 31))
+    val docs = Sources.warcDocs(spark, listed).collect().sortBy(_.doc_id)
+    assert(docs.map(_.doc_id).toSeq ==
+      Seq("edge.warc", "huge.warc", "small.warc#0", "small.warc#1"))
+    docs.take(2).foreach { over =>
+      assert(over.mime_hint == Sources.OversizeMime && over.bytes.isEmpty)
+      // dispatch turns the marker into the processingError failure contract
+      val ing = graft.pipeline.Dispatch.ingest(over.file_name, over.mime_hint,
+        over.bytes)
+      assert(ing.result.status == "failure" &&
+        ing.result.error.contains("exceeds the per-file size cap"), ing)
+    }
   }
 
   test("sentinel mimes cannot be spoofed by crawled content") {

@@ -5,4 +5,20 @@ package org.apache.spark
   * this shim in Spark's package. */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Spark jobs `f` starts, counted from the listener bus. */
+  def jobsStartedBy[A](sc: SparkContext)(f: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new scheduler.SparkListener {
+      override def onJobStart(e: scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    apply(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      apply(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
