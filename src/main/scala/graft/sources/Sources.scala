@@ -3,25 +3,24 @@ package graft.sources
 import graft.core.PendingDoc
 import graft.pipeline.Pipeline
 import java.net.URI
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Input sources for the extraction pipeline.
   *
   * `fromDirectory` is the DirectoryIngestor analogue
   * (`ingestors/directory.py`): like the reference's
   * crawler, it walks the tree and queues every file but the junk entries.
-  * The walk goes through the Hadoop FileSystem (local, HDFS, S3A) one
-  * directory level at a time, pruning [[SkipEntries]] by name and keeping
-  * zero-byte files and names that start with `.` or `_` (Spark's
-  * `binaryFile` reader drops all three). A level with more directories
-  * than `spark.sql.sources.parallelPartitionDiscovery.threshold` is listed
-  * in one Spark job, as Spark's own file index does; below it, building a
-  * source runs no job. Tasks read the bytes, in as many slices as
-  * `Pipeline.partitionCountFor` picks from the listed count and sizes. A
-  * file over the source's byte cap is not read: it becomes an
+  * The walk goes through the Hadoop FileSystem (local, HDFS, S3A) on the
+  * driver, pruning [[SkipEntries]] by name and keeping zero-byte files and
+  * names that start with `.` or `_` (Spark's `binaryFile` reader drops all
+  * three), so building a source runs no job. Tasks read the bytes in
+  * `Pipeline.partitionCountFor` slices (never more than there are files),
+  * packed by file size so no slice holds much more than its share of the
+  * bytes. A file over the source's byte cap is not read: it becomes an
   * [[OversizeMime]] row. Document ids are the paths relative to the root,
   * matching the reference's Folder→child naming. */
 object Sources {
@@ -71,43 +70,22 @@ object Sources {
     read(spark, files, Int.MaxValue.toLong - 8)((f, bytes) => warcPending(f.id, bytes))
 
   /** The files under `root`, or `root` itself if it is a file, sorted by
-    * id. Each directory level is listed on the driver, or in one Spark
-    * job when it holds more directories than Spark's parallel discovery
-    * threshold. */
+    * id, listed on the driver. */
   private[graft] def list(spark: SparkSession, root: String): Seq[Listed] = {
-    val sc = spark.sparkContext
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(sc.hadoopConfiguration)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val top = fs.getFileStatus(rootPath)
-    val topPath = top.getPath.toUri.toString
-    if (!top.isDirectory) return Seq(Listed(top.getPath.getName, topPath, top.getLen))
-    val threshold = spark.conf
-      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
-    val conf = new SerializableWritable(sc.hadoopConfiguration)
-    val files = Vector.newBuilder[Listed]
-    var dirs = Seq(Listed("", topPath, 0L))
-    while (dirs.nonEmpty) {
-      val entries =
-        if (dirs.size <= threshold) dirs.flatMap(entriesOf(fs, _))
-        else sc.parallelize(dirs, math.min(dirs.size, sc.defaultParallelism))
-          .flatMap(d => entriesOf(FileSystem.get(new URI(d.path), conf.value), d))
-          .collect().toSeq
-      files ++= entries.collect { case (f, false) => f }
-      dirs = entries.collect { case (d, true) => d }
-    }
-    files.result().sortBy(_.id)
+    if (!top.isDirectory)
+      return Seq(Listed(top.getPath.getName, top.getPath.toUri.toString, top.getLen))
+    def walk(dir: String, path: Path): Seq[Listed] =
+      fs.listStatus(path).toSeq.filterNot(s => SkipEntries.contains(s.getPath.getName))
+        .flatMap { s =>
+          val id = if (dir.isEmpty) s.getPath.getName else s"$dir/${s.getPath.getName}"
+          if (s.isDirectory) walk(id, s.getPath)
+          else Seq(Listed(id, s.getPath.toUri.toString, s.getLen))
+        }
+    walk("", top.getPath).sortBy(_.id)
   }
-
-  /** The entries of one listed directory but [[SkipEntries]], each with
-    * whether it is a directory. */
-  private def entriesOf(fs: FileSystem, dir: Listed): Seq[(Listed, Boolean)] =
-    fs.listStatus(new Path(new URI(dir.path))).toSeq
-      .filterNot(s => SkipEntries.contains(s.getPath.getName))
-      .map { s =>
-        val name = s.getPath.getName
-        (Listed(if (dir.id.isEmpty) name else s"${dir.id}/$name",
-          s.getPath.toUri.toString, s.getLen), s.isDirectory)
-      }
 
   /** Pending documents of the listed `files`: tasks read each file whole
     * and `rows` turns it into documents, except that a file over `cap`
@@ -118,9 +96,8 @@ object Sources {
     import spark.implicits._
     val sc = spark.sparkContext
     val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
-    val slices = Pipeline.partitionCountFor(spark, files.size,
-      files.iterator.map(_.length).filter(_ <= cap).sum)
-    spark.createDataset(sc.parallelize(files, slices).flatMap { f =>
+    val groups = pack(spark, files, cap)
+    spark.createDataset(sc.parallelize(groups, groups.size).flatMap(_.iterator.flatMap { f =>
       if (f.length > cap)
         Iterator.single(PendingDoc(f.id, "", Seq.empty, 0, f.name, OversizeMime,
           Array.empty[Byte]))
@@ -131,7 +108,28 @@ object Sources {
         try in.readFully(0L, bytes) finally in.close()
         rows(f, bytes)
       }
-    })
+    }))
+  }
+
+  /** `files` dealt into `Pipeline.partitionCountFor` groups, but no more
+    * groups than files: largest first, each onto the group with the fewest
+    * bytes so far. So a group holds about its share of the bytes, and a
+    * file larger than that share sits alone. A file over `cap` is not
+    * read, so it weighs nothing. */
+  private[graft] def pack(spark: SparkSession, files: Seq[Listed],
+                          cap: Long): Seq[Seq[Listed]] = {
+    def weight(f: Listed) = if (f.length > cap) 0L else f.length
+    val parts = math.min(math.max(files.size, 1),
+      Pipeline.partitionCountFor(spark, files.size, files.iterator.map(weight).sum))
+    val groups = Array.fill(parts)(Vector.newBuilder[Listed])
+    val lightest = mutable.PriorityQueue((0 until parts).map(i => (0L, i)): _*)(
+      Ordering[(Long, Int)].reverse)
+    files.sortBy(f => (-weight(f), f.id)).foreach { f =>
+      val (bytes, i) = lightest.dequeue()
+      groups(i) += f
+      lightest.enqueue((bytes + weight(f), i))
+    }
+    groups.toSeq.map(_.result())
   }
 
   /** Resolve the root the same way the streaming binaryFile source reports

@@ -1,6 +1,7 @@
 package graft
 
 import graft.table.SnapshotTable
+import org.apache.spark.ListenerBusDrain.jobsStartedBy
 import org.apache.spark.sql.{DataFrame, LineageCut, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -166,19 +167,16 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(meta.lastSeq == 2L)
   }
 
-  private def jobsStartedBy[A](f: => A): (A, Int) =
-    org.apache.spark.ListenerBusDrain.jobsStartedBy(spark.sparkContext)(f)
-
   test("schemas ride in manifests: planning a read starts no Spark job, time travel keeps its schema") {
     import spark.implicits._
     val loc = freshLoc()
     val m1 = append(loc, Map("rows" -> df(1, 2)))
     val m2 = append(loc,
       Map("rows" -> Seq((3, "c")).toDF("id", "tag")))
-    val (cur, j1) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
-    val (old, j2) = jobsStartedBy(
+    val (cur, j1) = jobsStartedBy(spark.sparkContext)(SnapshotTable.read(spark, loc, "rows"))
+    val (old, j2) = jobsStartedBy(spark.sparkContext)(
       SnapshotTable.read(spark, loc, "rows", asOf = Some(m1.currentSnapshotId)))
-    val (added, j3) = jobsStartedBy(
+    val (added, j3) = jobsStartedBy(spark.sparkContext)(
       SnapshotTable.readAdded(spark, loc, m2.currentSnapshotId, "rows"))
     assert((j1, j2, j3) == ((0, 0, 0)))
     assert(old.columns.toSeq == Seq("id"))
@@ -210,7 +208,7 @@ class SnapshotTableSpec extends AnyFunSuite {
         """"current-snapshot-id":1,"snapshots":[{"snapshot-id":1,""" +
         """"parent-snapshot-id":-1,"sequence-number":1,"operation":"append",""" +
         """"manifests":["metadata/manifest-legacy.json"],"summary":{}}]}""")
-    val (rows, jobs) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    val (rows, jobs) = jobsStartedBy(spark.sparkContext)(SnapshotTable.read(spark, loc, "rows"))
     assert(jobs >= 1, "a schema-less manifest should be read through inference")
     assert(rows.collect().map(_.getInt(0)).sorted.toVector == Vector(7, 8))
     assert(SnapshotTable.readAdded(spark, loc, 1L, "rows").count() == 2)
@@ -219,7 +217,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.addedRows(spark, loc, snap, "rows") == 2L)
     // a later append on top of the old layout records its schema again
     append(loc, Map("rows" -> df(9)))
-    val (all, j) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    val (all, j) = jobsStartedBy(spark.sparkContext)(SnapshotTable.read(spark, loc, "rows"))
     assert(j == 0)
     assert(all.collect().map(_.getInt(0)).sorted.toVector == Vector(7, 8, 9))
   }
@@ -228,7 +226,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val loc = freshLoc()
     append(loc, Map("rows" -> spark.range(0L, 400L, 1L, 40).toDF("id")))
     assert(SnapshotTable.dataFiles(spark, loc, "rows").size == 40)
-    val (rows, jobs) = jobsStartedBy(SnapshotTable.read(spark, loc, "rows"))
+    val (rows, jobs) = jobsStartedBy(spark.sparkContext)(SnapshotTable.read(spark, loc, "rows"))
     assert(jobs == 0)
     assert(rows.collect().map(_.getLong(0)).sorted.toVector == (0L until 400L).toVector)
   }

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The file listing and byte reader behind the directory and WARC
   * sources, on temp trees: a zero-byte file arrives, a single-file root
-  * lists as itself, a job lists only past the discovery threshold, and an
-  * over-cap file is never read. (PipelineSpec checks which names the
+  * lists as itself, slices are packed by file size, and an over-cap file
+  * is never read. (PipelineSpec checks which names the
   * walk keeps and prunes.) */
 class SourcesSpec extends AnyFunSuite {
 
@@ -49,20 +49,26 @@ class SourcesSpec extends AnyFunSuite {
       Seq(("one.txt", "one.txt", "hello")))
   }
 
-  test("listing: past the discovery threshold one job per level lists what the driver walk lists") {
-    val base = tree("top.txt" -> "t", "a/x.txt" -> "x", "a/b/y.txt" -> "y",
-      "c/z.txt" -> "z", "c/d/e/w.txt" -> "w", "c/d/.git/config" -> "junk",
-      "c/d/empty" -> "")
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val (driver, j0) = jobsStartedBy(spark.sparkContext)(Sources.list(spark, base.toString))
-    spark.conf.set(key, "1")
-    val (job, j1) = try jobsStartedBy(spark.sparkContext)(Sources.list(spark, base.toString))
-      finally spark.conf.unset(key)
-    // levels {a, c} and {a/b, c/d} exceed the threshold; {c/d/e} does not
-    assert((j0, j1) == ((0, 2)))
-    assert(job == driver)
-    assert(driver.map(_.id) ==
-      Seq("a/b/y.txt", "a/x.txt", "c/d/e/w.txt", "c/d/empty", "c/z.txt", "top.txt"))
+  test("reader: slices are packed by size, one large file to a slice") {
+    // made-up lengths: packing reads nothing
+    def listed(id: String, length: Long) = Sources.Listed(id, s"file:/nowhere/$id", length)
+    val big = (1 to 4).map(i => listed(s"big$i.bin", 200L << 20))
+    val files = big ++ (0 until 40).map(i => listed(f"s$i%02d.txt", 1024L))
+    val groups = Sources.pack(spark, files, 512L << 20)
+    // 800 MiB of payload asks for more slices than local[4]'s 12 waves
+    assert(groups.size ==
+      Pipeline.partitionCountFor(spark, files.size, files.map(_.length).sum), groups.size)
+    assert(groups.flatten.sortBy(_.id) == files.sortBy(_.id))
+    // slicing the id-sorted listing by position put big1..big4 in one slice
+    big.foreach(b => assert(groups.contains(Seq(b)), groups))
+    assert(groups.forall(_.nonEmpty))
+    // never more slices than files: ten 1 GiB WARCs are ten slices of one
+    val warcs = (0 until 10).map(i => listed(s"w$i.warc", 1L << 30))
+    assert(Sources.pack(spark, warcs, Int.MaxValue.toLong - 8).map(_.size) == Seq.fill(10)(1))
+    // an over-cap file weighs nothing; an empty listing is one empty slice
+    assert(Sources.pack(spark, Seq(listed("huge.bin", 1L << 40)), 512L << 20) ==
+      Seq(Seq(listed("huge.bin", 1L << 40))))
+    assert(Sources.pack(spark, Seq.empty, 512L << 20) == Seq(Seq.empty))
   }
 
   test("reader: an over-cap listed file becomes an unread OversizeMime row") {
